@@ -1,0 +1,1 @@
+"""The repository benchmark; run it with ``python3 perfbench/run.py``."""
