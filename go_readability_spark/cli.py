@@ -668,8 +668,10 @@ def main(argv=None) -> int:
                     help="run extraction on the fetched pages")
     cf.add_argument("--readerable-gate", action="store_true",
                     help="drop pages failing the cheap readerable Check "
-                         "between fetch and extraction (crawl fast path; "
-                         "gated pages would exit curation anyway)")
+                         "(crawl fast path; gated pages would exit curation "
+                         "anyway): with --extract inside the extraction "
+                         "stage, before scoring; without it, as a filter "
+                         "on the fetched pages")
     cf.add_argument("--buckets", type=int, default=64,
                     help="salt buckets for --extract")
     cf.add_argument("--atomic-sink", action="store_true",

@@ -4,7 +4,8 @@ Arrow-batched pandas UDFs so users can call it from Spark SQL directly:
     SELECT url, readability_text(html) FROM pages WHERE readerable(html)
 
 The heavy pipeline entry point remains plans.extract_pages (mapInPandas
-with lineage); these UDFs are the ad-hoc query surface.
+with lineage); these UDFs are the ad-hoc query surface over the same
+per-document kernel (plans/extract.py extract_record).
 """
 
 from __future__ import annotations
@@ -15,44 +16,40 @@ from pyspark.sql import functions as F, types as T
 
 @F.pandas_udf(T.BooleanType())
 def readerable(html: pd.Series) -> pd.Series:
-    """CheckDocument as a SQL boolean (parser-check.go:25-80)."""
+    """CheckDocument as a SQL boolean (parser-check.go:25-80); False when
+    the page cannot be parsed."""
     from ..dom import parse_html
+    from ..plans.extract import release_trees
     from ..readability import check_document
 
     def one(h):
+        doc = None
         try:
-            return bool(check_document(parse_html(h if h is not None else b"")))
+            doc = parse_html(h if h is not None else b"")
+            return bool(check_document(doc))
         except Exception:
             return False
+        finally:
+            release_trees(doc)
 
     return html.map(one)
+
+
+def _record_field(html: pd.Series, field: str) -> pd.Series:
+    from ..plans.extract import extract_record
+
+    return html.map(lambda h: extract_record(None, h)[field])
 
 
 @F.pandas_udf(T.StringType())
 def readability_text(html: pd.Series) -> pd.Series:
     """Extracted main text as a SQL string (Article.TextContent)."""
-    from ..readability import Parser
-
-    def one(h):
-        try:
-            return Parser().parse(h if h is not None else b"").text_content
-        except Exception:
-            return ""
-
-    return html.map(one)
+    return _record_field(html, "text_content")
 
 
 @F.pandas_udf(T.StringType())
 def readability_title(html: pd.Series) -> pd.Series:
-    from ..readability import Parser
-
-    def one(h):
-        try:
-            return Parser().parse(h if h is not None else b"").title
-        except Exception:
-            return ""
-
-    return html.map(one)
+    return _record_field(html, "title")
 
 
 def register_all(spark) -> None:

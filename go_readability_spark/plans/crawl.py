@@ -189,13 +189,8 @@ def run_crawl_fetch(
         seg_ckpt = (os.path.join(checkpoint_dir, f"seg={i}")
                     if (multi and checkpoint_dir) else checkpoint_dir)
         pages = pages_from_fetch_plan(seg_plan, warc_dir)
-        if readerable_gate:
-            # cheap Check (parser-check.go fast path) between fetch and
-            # the full pipeline: most real-crawl pages fail it, and it
-            # costs a parse + accumulator instead of candidate scoring
-            from ..functions.extraction_udfs import readerable
-
-            pages = pages.where(readerable(F.col("html")))
+        # the readerable gate (cheap Check: most real-crawl pages fail it)
+        # runs inside the extraction stage, on the parse it needs anyway
         if extract and atomic_sink:
             # the resumable leg: bucket-granular atomic publishes, so a
             # killed fetch+extract restarts from the checkpoint table
@@ -206,6 +201,7 @@ def run_crawl_fetch(
                 output_dir=seg_out,
                 checkpoint_dir=seg_ckpt,
                 n_buckets=n_buckets,
+                readerable_gate=readerable_gate,
             )
             tag = f" (seg {i}/{len(segments)})" if multi else ""
             print(f"atomic sink: {n} buckets written this run{tag}",
@@ -213,9 +209,15 @@ def run_crawl_fetch(
         elif extract:
             from .extract import extract_pages
 
-            extract_pages(pages, n_buckets=n_buckets).write.mode(
+            extract_pages(pages, n_buckets=n_buckets,
+                          readerable_gate=readerable_gate).write.mode(
                 "overwrite").parquet(seg_out)
         else:
+            if readerable_gate:
+                # fetch-only: no extraction stage to fold the gate into
+                from ..functions.extraction_udfs import readerable
+
+                pages = pages.where(readerable(F.col("html")))
             pages.write.mode("overwrite").parquet(seg_out)
         if record_seen_bloom:
             # record the PLAN's urls — everything this run ATTEMPTED —

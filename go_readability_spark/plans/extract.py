@@ -1,4 +1,4 @@
-"""The extraction pipeline: Iceberg/parquet scan → salted repartition →
+"""The extraction pipeline: Iceberg/parquet scan → salt → one exchange →
 Arrow-batched mapInPandas extraction → sink, with per-partition
 checkpoint/lineage rows for resumability (SURVEY.md §3 'Spark lifecycle').
 
@@ -6,14 +6,17 @@ Design notes for 10^12-row scale:
 
 * Column pruning is explicit: only (url, warc_ts, html) reach the shuffle;
   Catalyst pushes the projection into the parquet/Iceberg scan.
-* Skew (host/size concentration in Common-Crawl) is defused by salting on
-  ``pmod(xxhash64(url), n_buckets)`` and repartitioning on the salt — the
-  only shuffle in the job. Bucket→partition assignment is deterministic,
-  which is what makes bucket-level resume sound.
+* Skew (host/size concentration in Common-Crawl) is defused by one
+  deterministic hash exchange — the only shuffle in the job. With a
+  ``checkpoint_dir`` (and always in the atomic sink) it is keyed on the
+  salt ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly
+  one task, which is what makes bucket-level resume sound; without one it
+  is keyed on the full-width ``xxhash64(url)``, which spreads rows evenly.
 * The extraction itself is partition-local: one ``mapInPandas`` call per
   partition, iterator form, so the compiled regexes and parser setup
   amortize across all Arrow batches of the partition (no per-row Python
-  dispatch at the Spark boundary).
+  dispatch at the Spark boundary). The optional readerable gate runs in
+  the same stage: a page that fails Check is dropped before scoring.
 * Resume: completed salt buckets are recorded in a checkpoint table; a
   restart anti-joins pages against completed buckets. On a real cluster the
   checkpoint table is an Iceberg table with transactional appends; in this
@@ -31,9 +34,13 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, functions as F
 
-from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA
+from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA, SINK_STATS_SCHEMA
 
 DEFAULT_N_BUCKETS = 256
+
+_COLUMNS = ARTICLES_SCHEMA.names
+# per-bucket counters, in the order bucket_stats lists them
+_BUCKET_COUNTS = ("rows_in", "rows_out", "parse_errors", "bytes_in")
 
 
 def _output_codec() -> str:
@@ -44,6 +51,20 @@ def _output_codec() -> str:
     return os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy")
 
 
+def _arrow_schema(struct):
+    """pyarrow schema for a task-side parquet write of ``struct``.
+
+    Pinned to the on-disk format earlier outputs and checkpoints were
+    written in, so resume keeps reading them: naive ``timestamp[us]``
+    (pyspark's own Arrow mapping is UTC-zoned) and every field nullable."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "timestamp": pa.timestamp("us"),
+             "int": pa.int32(), "bigint": pa.int64(), "boolean": pa.bool_()}
+    return pa.schema([(f.name, types[f.dataType.simpleString()])
+                      for f in struct.fields])
+
+
 def _utc_naive(dt):
     if dt is None:
         return None
@@ -52,16 +73,37 @@ def _utc_naive(dt):
     return dt
 
 
-def extract_record(url, html_bytes):
+def release_trees(*nodes) -> None:
+    """Unlink every distinct tree the given nodes belong to (None skipped).
+
+    The DOM is reference-cyclic, and leaving ~10^5 dead cyclic nodes per
+    document to Python's generational GC caused repeated full collections
+    that dominated per-doc latency (a measured 740 ms pause inside one
+    clone). Unlinked trees free by refcount and the cyclic collector
+    stays idle."""
+    from ..dom import unlink_tree
+
+    roots = []
+    for node in nodes:
+        if node is None:
+            continue
+        while node.parent is not None:
+            node = node.parent
+        if all(node is not r for r in roots):
+            roots.append(node)
+    for root in roots:
+        unlink_tree(root)
+
+
+def extract_record(url, html_bytes, readerable_gate=False):
     """Run the full readability extraction for one page; never raises.
 
-    The parsed tree and the grab-attempt clone are torn down explicitly
-    (dom.unlink_tree) before returning: the DOM is reference-cyclic, and
-    leaving ~10^5 dead cyclic nodes per document to Python's generational
-    GC caused repeated full collections that dominated per-doc latency
-    (a measured 740 ms pause inside one clone). With explicit teardown
-    the trees free by refcount and the cyclic collector stays idle."""
-    from ..dom import parse_html, unlink_tree
+    With ``readerable_gate`` a page whose parse or Check fails (returns
+    False or raises) yields None straight after Check, before any
+    scoring; a page that passes Check keeps its record, error rows
+    included. The parsed tree and every grab-attempt clone are torn down
+    (release_trees) before returning."""
+    from ..dom import parse_html
     from ..readability import Parser, check_document
 
     out = {
@@ -76,6 +118,8 @@ def extract_record(url, html_bytes):
     try:
         doc = parse_html(html_bytes if html_bytes is not None else b"")
         out["readerable"] = check_document(doc)
+        if readerable_gate and not out["readerable"]:
+            return None
         art = ps.parse_document(doc, url)
         art_node = art.node
         out.update(
@@ -87,88 +131,87 @@ def extract_record(url, html_bytes):
             modified_time=_utc_naive(art.modified_time),
         )
     except Exception as exc:  # per-row error capture — never fail the task
+        if readerable_gate and not out["readerable"]:
+            return None
         out["error"] = f"{type(exc).__name__}: {exc}"
     finally:
         # losing retry-sieve attempts keep whole document clones alive
         # (parser.attempts holds their article nodes) — tear down every
         # distinct attempt tree plus the winning clone and the source doc
-        seen = []
-        for node in [art_node, *(a for a, _ in ps.attempts if a is not None)]:
-            if node is None:
-                continue
-            root = node
-            while root.parent is not None:
-                root = root.parent
-            if all(root is not r for r in seen):
-                seen.append(root)
-        for root in seen:
-            unlink_tree(root)
-        if doc is not None:
-            unlink_tree(doc)
+        release_trees(art_node, *(a for a, _ in ps.attempts), doc)
     return out
 
 
-def _maybe_end_of_task_collect():
-    """Amortized end-of-task cyclic collection (r7, guide §4.5).
+# Amortized end-of-task cyclic collection (r7, guide §4.5).
+# extract_record tears every tree down explicitly, so the only cyclic
+# garbage a task can leave is exception-path residue — small and
+# bounded.  The old per-task ``gc.collect()`` safety net cost a
+# measured 15-25 ms per task; one full sweep every _GC_EVERY_TASKS
+# tasks keeps the reused worker's residue bounded at ~1/8 the old
+# per-task frequency cost.  Module-level counter: Python workers are
+# single-threaded and reused across tasks (spark.python.worker.reuse),
+# and this module ships to executors, so the state persists.
+_GC_EVERY_TASKS = 8
+_GC_STATE = {"tasks": 0}
 
-    extract_record tears every tree down explicitly, so the only cyclic
-    garbage a task can leave is exception-path residue — small and
-    bounded.  The old per-task ``gc.collect()`` safety net cost a
-    measured 15-25 ms per task, which the finer r7 partitioning
-    (default_extract_partitions) multiplies by 4x tasks-per-core; one
-    full sweep every ``SPARK_GRAFT_GC_EVERY_PARTITIONS`` tasks (default
-    8) keeps the reused worker's residue bounded at ~1/8 the old
-    per-task frequency cost.  Module-level counter: Python workers are
-    single-threaded and reused across tasks (spark.python.worker.reuse),
-    and this module ships to executors, so the state persists."""
+
+def _extraction_task(batches, checkpoint_dir, readerable_gate, publish=None):
+    """The body of one extraction task, shared by both mapInPandas
+    functions. Yields article frames; with ``publish``, hands the frames
+    grouped per salt bucket to ``publish`` instead and yields nothing.
+    The task's checkpoint rows land last — for the sink, strictly after
+    ``publish`` has renamed its data files into place. Returns the
+    per-bucket stats (the generator's return value)."""
     import gc
 
-    _GC_STATE["tasks"] += 1
-    if _GC_STATE["tasks"] % _GC_STATE["every"] == 0:
-        gc.collect()
+    started = datetime.now(timezone.utc).replace(tzinfo=None)
+    t0 = time.time()
+    bucket_stats: dict[str, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
+    per_bucket_frames: dict[int, list] = {}
+
+    # extract_record tears its trees down explicitly, so the cyclic
+    # collector has nothing useful to do mid-partition — its full
+    # gen-2 sweeps (triggered purely by allocation counts at this
+    # node rate) were the single largest per-doc latency source.
+    gc_was_enabled = gc.isenabled()
+    gc.disable()
+    try:
+        for pdf in _extract_frames(batches, bucket_stats, readerable_gate):
+            if publish is None:
+                yield pdf.drop(columns=["_salt"])
+                continue
+            for salt_val, group in pdf.groupby("_salt", sort=False):
+                per_bucket_frames.setdefault(int(salt_val), []).append(
+                    group.drop(columns=["_salt"])
+                )
+    finally:
+        if gc_was_enabled:
+            gc.enable()
+            _GC_STATE["tasks"] += 1
+            if _GC_STATE["tasks"] % _GC_EVERY_TASKS == 0:
+                gc.collect()
+
+    if publish is not None:
+        publish(per_bucket_frames)
+    if checkpoint_dir and bucket_stats:
+        _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, time.time() - t0)
+    return bucket_stats
 
 
-_GC_STATE = {
-    "tasks": 0,
-    "every": max(1, int(os.environ.get("SPARK_GRAFT_GC_EVERY_PARTITIONS", "8"))),
-}
-
-
-def make_extractor(checkpoint_dir: str | None = None):
+def make_extractor(checkpoint_dir: str | None = None, readerable_gate: bool = False):
     """Build the mapInPandas function. Iterator form: per-partition setup
     runs once, then every Arrow batch streams through."""
-    import pandas as pd
-
-    columns = [f.name for f in ARTICLES_SCHEMA.fields]
 
     def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import gc
-
-        started = datetime.now(timezone.utc).replace(tzinfo=None)
-        t0 = time.time()
-        bucket_stats: dict[str, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
-
-        # extract_record tears its trees down explicitly, so the cyclic
-        # collector has nothing useful to do mid-partition — its full
-        # gen-2 sweeps (triggered purely by allocation counts at this
-        # node rate) were the single largest per-doc latency source.
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            yield from _extract_loop(batches, bucket_stats)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-                _maybe_end_of_task_collect()
-
-        if checkpoint_dir and bucket_stats:
-            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, time.time() - t0)
-
-    def _extract_loop(batches, bucket_stats):
-        for pdf in _extract_frames(batches, columns, bucket_stats):
-            yield pdf.drop(columns=["_salt"])
+        return _extraction_task(batches, checkpoint_dir, readerable_gate)
 
     return extract_batches
+
+
+def _bucket_columns(bucket_stats) -> dict[str, list]:
+    """bucket_stats as one int column per _BUCKET_COUNTS name."""
+    return {name: [int(v[i]) for v in bucket_stats.values()]
+            for i, name in enumerate(_BUCKET_COUNTS)}
 
 
 def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, elapsed):
@@ -187,29 +230,18 @@ def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, elapsed):
         attempt = 1
 
     finished = datetime.now(timezone.utc).replace(tzinfo=None)
+    n = len(bucket_stats)
     rows = {
         "partition_key": list(bucket_stats.keys()),
-        "attempt": [attempt] * len(bucket_stats),
-        "status": ["done"] * len(bucket_stats),
-        "rows_in": [int(v[0]) for v in bucket_stats.values()],
-        "rows_out": [int(v[1]) for v in bucket_stats.values()],
-        "parse_errors": [int(v[2]) for v in bucket_stats.values()],
-        "bytes_in": [int(v[3]) for v in bucket_stats.values()],
-        "started_at": [started] * len(bucket_stats),
-        "finished_at": [finished] * len(bucket_stats),
+        "attempt": [attempt] * n,
+        "status": ["done"] * n,
+        **_bucket_columns(bucket_stats),
+        "started_at": [started] * n,
+        "finished_at": [finished] * n,
     }
-    schema = pa.schema(
-        [
-            ("partition_key", pa.string()), ("attempt", pa.int32()),
-            ("status", pa.string()), ("rows_in", pa.int64()),
-            ("rows_out", pa.int64()), ("parse_errors", pa.int64()),
-            ("bytes_in", pa.int64()), ("started_at", pa.timestamp("us")),
-            ("finished_at", pa.timestamp("us")),
-        ]
-    )
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = os.path.join(checkpoint_dir, f"ckpt-{uuid.uuid4().hex}.parquet")
-    pq.write_table(pa.table(rows, schema=schema), path,
+    pq.write_table(pa.table(rows, schema=_arrow_schema(CHECKPOINT_SCHEMA)), path,
                    compression=_output_codec())
 
 
@@ -230,16 +262,12 @@ def default_extract_partitions(spark, n_buckets: int) -> int:
     active, so it is per-task handshake, not fork).  Finer partitions
     therefore LOSE below ~100 docs/task: the interleaved A/B measured
     32 partitions beating 128 by ~2x on all three extraction benches.
-    The default stays the session's shuffle-partition setting, capped
-    at ``n_buckets`` (the salt has only that many distinct values, so
-    extra partitions sit empty).  ``SPARK_GRAFT_EXTRACT_TASKS_PER_CORE``
-    (default 1) raises the floor for real clusters, where executors
-    run long enough that per-task overhead amortizes and the 20x
-    per-doc skew tail does dominate a wave."""
+    The default is the session's shuffle-partition setting, floored at
+    one task per core and capped at ``n_buckets`` (the salt has only
+    that many distinct values, so extra partitions sit empty)."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     par = max(1, spark.sparkContext.defaultParallelism)
-    factor = int(os.environ.get("SPARK_GRAFT_EXTRACT_TASKS_PER_CORE", "1"))
-    return max(1, min(int(n_buckets), max(shuffle, factor * par)))
+    return max(1, min(int(n_buckets), max(shuffle, par)))
 
 
 def completed_buckets(spark, checkpoint_dir: str,
@@ -272,8 +300,9 @@ def completed_buckets(spark, checkpoint_dir: str,
     try:
         out = spark.read.parquet(verify_output_dir)
     except Exception:
-        # no output at all -> nothing is truly done
-        return None
+        # no output at all -> only buckets that owe no rows (every page
+        # errored or was gated out) are truly done
+        return done.where(F.col("rows_out") == 0).select("salt")
     actual = (
         out.where(F.col("error").isNull())
         .groupBy(F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).alias("salt"))
@@ -289,25 +318,14 @@ def completed_buckets(spark, checkpoint_dir: str,
     )
 
 
-def extract_pages(
-    pages: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-    resume: bool = True,
-    verify_output_dir: str | None = None,
-) -> DataFrame:
-    """The extraction plan:
-
-    pages → select(url, warc_ts, html)          # column pruning to the scan
-          → withColumn(salt, pmod(xxhash64(url), B))
-          → [left_anti join completed buckets]  # resume (broadcast — tiny)
-          → repartition(P, salt)                # the one shuffle; defuses skew
-          → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
-    """
+def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | None,
+                     checkpoint_dir: str | None, resume: bool,
+                     verify_output_dir: str | None, salt_key: bool) -> DataFrame:
+    """The plan prelude both extraction jobs share: prune to
+    (url, warc_ts, html), salt, anti-join completed buckets on resume,
+    and run the one exchange — keyed on the salt when ``salt_key``."""
     spark = pages.sparkSession
-    df = pages.select("url", "warc_ts", "html")
-    df = with_salt(df, n_buckets)
+    df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
 
     if resume and checkpoint_dir:
         done = completed_buckets(spark, checkpoint_dir,
@@ -318,26 +336,51 @@ def extract_pages(
 
     if num_partitions is None:
         num_partitions = default_extract_partitions(spark, n_buckets)
-    if checkpoint_dir:
+    if salt_key:
         # bucket-level resume requires each salt bucket to live in exactly
         # one task: the checkpoint marks whole buckets done, so a bucket
         # split across tasks could be half-recorded as complete
-        df = df.repartition(num_partitions, "salt")
-    else:
-        # no resume semantics on this plan: same single exchange, same
-        # deterministic skew defense, but keyed on the full-width hash.
-        # n_buckets salt values hashed into P partitions leave measured
-        # row-count imbalance (guide §2.5: use 20-100x more distinct keys
-        # than partitions; at n_buckets/P = 8 the per-task row counts
-        # ranged 15-69 around a mean of 31 on the fixture bench, max task
-        # 1.8s vs 0.97s mean). xxhash64(url) spreads counts multinomially
-        # and stays retry-safe (deterministic key, not rand()).
-        df = df.repartition(num_partitions, F.xxhash64(F.col("url")))
-
-    return df.mapInPandas(make_extractor(checkpoint_dir), schema=ARTICLES_SCHEMA)
+        return df.repartition(num_partitions, "salt")
+    # no resume semantics on this plan: same single exchange, same
+    # deterministic skew defense, but keyed on the full-width hash.
+    # n_buckets salt values hashed into P partitions leave measured
+    # row-count imbalance (guide §2.5: use 20-100x more distinct keys
+    # than partitions; at n_buckets/P = 8 the per-task row counts
+    # ranged 15-69 around a mean of 31 on the fixture bench, max task
+    # 1.8s vs 0.97s mean). xxhash64(url) spreads counts multinomially
+    # and stays retry-safe (deterministic key, not rand()).
+    return df.repartition(num_partitions, F.xxhash64(F.col("url")))
 
 
-def make_sink_extractor(output_dir: str, checkpoint_dir: str | None):
+def extract_pages(
+    pages: DataFrame,
+    n_buckets: int = DEFAULT_N_BUCKETS,
+    num_partitions: int | None = None,
+    checkpoint_dir: str | None = None,
+    resume: bool = True,
+    verify_output_dir: str | None = None,
+    readerable_gate: bool = False,
+) -> DataFrame:
+    """The extraction plan:
+
+    pages → select(url, warc_ts, html)          # column pruning to the scan
+          → withColumn(salt, pmod(xxhash64(url), B))
+          → [left_anti join completed buckets]  # resume (broadcast — tiny)
+          → repartition(P, salt)                # with checkpoint_dir: whole buckets per task
+            | repartition(P, xxhash64(url))     # otherwise: the even full-width key
+          → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
+
+    ``readerable_gate`` drops pages that fail Check inside that one
+    mapInPandas stage, before scoring.
+    """
+    df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
+                          resume, verify_output_dir, salt_key=bool(checkpoint_dir))
+    return df.mapInPandas(make_extractor(checkpoint_dir, readerable_gate),
+                          schema=ARTICLES_SCHEMA)
+
+
+def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
+                        readerable_gate: bool = False):
     """mapInPandas function for the ATOMIC task-committed sink: the
     extraction output is written per salt bucket straight into the
     articles table from inside the task, and the mapInPandas result is
@@ -358,55 +401,17 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None):
       rename: a crash between the two leaves an orphan data file that
       the next attempt simply overwrites, never a 'done' row without
       visible data (the silent-loss window the verifier guards).
+
+    A bucket whose every page is gated out gets a lineage row with
+    rows_out = 0 and no data file.
     """
     import pandas as pd
 
-    columns = [f.name for f in ARTICLES_SCHEMA.fields]
-
-    def _bucket_table(frames):
+    def publish(per_bucket_frames):
         import pyarrow as pa
-
-        pdf = pd.concat(frames, ignore_index=True)
-        schema = pa.schema(
-            [
-                ("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-                ("title", pa.string()), ("byline", pa.string()),
-                ("content", pa.string()), ("text_content", pa.string()),
-                ("length", pa.int32()), ("excerpt", pa.string()),
-                ("site_name", pa.string()), ("image", pa.string()),
-                ("favicon", pa.string()), ("lang", pa.string()),
-                ("published_time", pa.timestamp("us")),
-                ("modified_time", pa.timestamp("us")),
-                ("readerable", pa.bool_()), ("error", pa.string()),
-            ]
-        )
-        return pa.Table.from_pandas(pdf[columns], schema=schema,
-                                    preserve_index=False)
-
-    def sink_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import gc
-
         import pyarrow.parquet as pq
 
-        started = datetime.now(timezone.utc).replace(tzinfo=None)
-        t0 = time.time()
-        per_bucket_frames: dict[int, list] = {}
-        bucket_stats: dict[str, list] = {}
-
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for pdf in _extract_frames(batches, columns, bucket_stats):
-                for salt_val, group in pdf.groupby("_salt", sort=False):
-                    per_bucket_frames.setdefault(int(salt_val), []).append(
-                        group.drop(columns=["_salt"])
-                    )
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-                _maybe_end_of_task_collect()
-
-        written = []
+        schema = _arrow_schema(ARTICLES_SCHEMA)
         for salt_val, frames in per_bucket_frames.items():
             bucket_dir = os.path.join(output_dir, f"salt={salt_val}")
             os.makedirs(bucket_dir, exist_ok=True)
@@ -435,56 +440,54 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None):
             tmp = os.path.join(
                 bucket_dir,
                 f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
-            pq.write_table(_bucket_table(frames), tmp,
-                           compression=_output_codec())
+            table = pa.Table.from_pandas(
+                pd.concat(frames, ignore_index=True)[_COLUMNS],
+                schema=schema, preserve_index=False)
+            pq.write_table(table, tmp, compression=_output_codec())
             os.replace(tmp, final)  # atomic publish
-            written.append(salt_val)
 
-        if checkpoint_dir and bucket_stats:
-            # strictly after the data renames (see docstring)
-            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started,
-                                   time.time() - t0)
-
-        stats = {
-            "salt": [], "rows_in": [], "rows_out": [], "parse_errors": [],
-            "bytes_in": [],
-        }
-        for key, v in bucket_stats.items():
-            stats["salt"].append(int(key))
-            stats["rows_in"].append(int(v[0]))
-            stats["rows_out"].append(int(v[1]))
-            stats["parse_errors"].append(int(v[2]))
-            stats["bytes_in"].append(int(v[3]))
-        yield pd.DataFrame(stats)
+    def sink_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        bucket_stats = yield from _extraction_task(
+            batches, checkpoint_dir, readerable_gate, publish)
+        yield pd.DataFrame({"salt": [int(k) for k in bucket_stats],
+                            **_bucket_columns(bucket_stats)})
 
     return sink_batches
 
 
-def _extract_frames(batches, columns, bucket_stats):
+def _extract_frames(batches, bucket_stats, readerable_gate=False):
     """Shared extraction loop: yields article DataFrames with a `_salt`
     helper column; per-bucket stats accumulate only when the input
     carries a salt column (unsalted inputs get no checkpoint rows,
-    matching the Spark-sink path's behavior)."""
+    matching the Spark-sink path's behavior). Gated-out pages count
+    only in rows_in and bytes_in."""
     import pandas as pd
 
     for pdf in batches:
-        data: dict[str, list] = {c: [] for c in columns}
+        data: dict[str, list] = {c: [] for c in _COLUMNS}
         urls = pdf["url"].tolist()
         htmls = pdf["html"].tolist()
         warc = pdf["warc_ts"].tolist() if "warc_ts" in pdf.columns else [None] * len(urls)
         has_salt = "salt" in pdf.columns
         salts = pdf["salt"].tolist() if has_salt else [0] * len(urls)
-        for i, (url, html) in enumerate(zip(urls, htmls)):
-            rec = extract_record(url, html)
-            rec["warc_ts"] = warc[i]
-            for c in columns:
-                data[c].append(rec[c])
+        kept_salts = []
+        for url, html, ts, salt in zip(urls, htmls, warc, salts):
+            rec = extract_record(url, html, readerable_gate)
             if has_salt:
-                st = bucket_stats.setdefault(str(salts[i]), [0, 0, 0, 0])
+                st = bucket_stats.setdefault(str(salt), [0, 0, 0, 0])
                 st[0] += 1
+                st[3] += len(html) if html is not None else 0
+            if rec is None:
+                continue
+            rec["warc_ts"] = ts
+            for c in _COLUMNS:
+                data[c].append(rec[c])
+            kept_salts.append(salt)
+            if has_salt:
                 st[1] += 0 if rec["error"] else 1
                 st[2] += 1 if rec["error"] else 0
-                st[3] += len(html) if html is not None else 0
+        if not kept_salts:
+            continue
         out = pd.DataFrame(
             {
                 c: (
@@ -494,10 +497,10 @@ def _extract_frames(batches, columns, bucket_stats):
                     if c == "length"
                     else data[c]
                 )
-                for c in columns
+                for c in _COLUMNS
             }
         )
-        out["_salt"] = pd.Series(salts, dtype="int64")
+        out["_salt"] = pd.Series(kept_salts, dtype="int64")
         yield out
 
 
@@ -508,6 +511,7 @@ def run_extraction_job_atomic(
     n_buckets: int = DEFAULT_N_BUCKETS,
     num_partitions: int | None = None,
     resume: bool = True,
+    readerable_gate: bool = False,
 ) -> int:
     """Task-committed variant of run_extraction_job: bucket data files
     publish atomically DURING the job, so a mid-job kill resumes at
@@ -516,28 +520,13 @@ def run_extraction_job_atomic(
     BENCH/BASELINE.md round 3). This is the shape an Iceberg sink gives
     for free; here the atomicity unit is one bucket file + rename.
 
-    Returns the number of buckets written this run (0 on a no-op
+    Returns the number of buckets processed this run (0 on a no-op
     resume)."""
-    spark = pages.sparkSession
-    df = pages.select("url", "warc_ts", "html")
-    df = with_salt(df, n_buckets)
-
-    if resume and checkpoint_dir:
-        done = completed_buckets(spark, checkpoint_dir,
-                                 verify_output_dir=output_dir,
-                                 n_buckets=n_buckets)
-        if done is not None:
-            df = df.join(F.broadcast(done), "salt", "left_anti")
-
-    if num_partitions is None:
-        num_partitions = default_extract_partitions(spark, n_buckets)
-    df = df.repartition(num_partitions, "salt")
-
-    from .schema import SINK_STATS_SCHEMA
-
+    df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
+                          resume, output_dir, salt_key=True)
     os.makedirs(output_dir, exist_ok=True)
     stats = df.mapInPandas(
-        make_sink_extractor(output_dir, checkpoint_dir),
+        make_sink_extractor(output_dir, checkpoint_dir, readerable_gate),
         schema=SINK_STATS_SCHEMA,
     )
     return stats.count()

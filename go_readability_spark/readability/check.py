@@ -1,7 +1,8 @@
 """Cheap readability pre-filter (parser-check.go:25-80).
 
-Used both as the `readerable` output column and as an optional DataFrame
-filter stage before the expensive extraction UDF (SURVEY.md §2a).
+Used both as the `readerable` output column and as the optional readerable
+gate, which runs inside the extraction stage and drops a page that fails
+Check before the expensive scoring (SURVEY.md §2a).
 """
 
 from __future__ import annotations

@@ -45,11 +45,14 @@ def read_pages_stream_warc(
     )
 
 
-def extract_pages_stream(pages_stream: DataFrame, n_buckets: int = 64) -> DataFrame:
+def extract_pages_stream(pages_stream: DataFrame, n_buckets: int = 64,
+                         readerable_gate: bool = False) -> DataFrame:
     """Streaming extraction: stateless mapInPandas, so it composes with any
-    sink; watermarks aren't needed (per-row transform, no event-time agg)."""
+    sink; watermarks aren't needed (per-row transform, no event-time agg).
+    ``readerable_gate`` drops pages that fail Check inside that stage."""
     df = with_salt(pages_stream.select("url", "warc_ts", "html"), n_buckets)
-    return df.mapInPandas(make_extractor(None), schema=ARTICLES_SCHEMA)
+    return df.mapInPandas(make_extractor(None, readerable_gate),
+                          schema=ARTICLES_SCHEMA)
 
 
 def run_discovery_stream(
@@ -70,15 +73,16 @@ def run_discovery_stream(
     byte-range fetch -> extraction — the streaming composition of the
     batch crawl loop (crawl-plan + crawl-fetch CLIs).
 
-    `readerable_gate=True` inserts the cheap Check boolean
+    `readerable_gate=True` runs the cheap Check
     (readability/check.py check_document, the reference's
-    parser-check.go fast path) as a filter BETWEEN fetch and full
-    extraction: on real crawls most fetched pages are link farms,
-    stubs, and boilerplate shells that Check rejects for a fraction of
-    the cost of running the full candidate-scoring pipeline on them.
-    Gated pages are dropped entirely (they would exit curation at the
-    `readerable` gate anyway); leave the flag off to keep the
-    every-page extraction record.
+    parser-check.go fast path) inside the extraction stage and drops a
+    page that fails it before any scoring: on real crawls most fetched
+    pages are link farms, stubs, and boilerplate shells that Check
+    rejects for a fraction of the cost of running the full
+    candidate-scoring pipeline on them. Gated pages are dropped
+    entirely (they would exit curation at the `readerable` gate
+    anyway); leave the flag off to keep the every-page extraction
+    record.
 
     `seen_bloom_dir` points at a persistent sharded Bloom store
     (operators/bloom.py bloom_store_*): each micro-batch drops urls the
@@ -98,7 +102,6 @@ def run_discovery_stream(
     downstream snapshot dedup (operators/snapshots.py latest_snapshot)
     or the Bloom seen-filter (operators/bloom.py), both batch
     operators over the accumulated output."""
-    from ..plans.extract import make_extractor, with_salt
     from ..sources.cdx import cdx_fetch_plan, parse_cdxj
     from ..sources.warc import pages_from_fetch_plan
 
@@ -129,14 +132,7 @@ def run_discovery_stream(
                     plan, filt, key_col="url", n_shards=meta["n_shards"],
                     bits_per_shard=meta["bits_per_shard"], k=meta["k"])
         pages = pages_from_fetch_plan(plan, warc_base_dir)
-        if readerable_gate:
-            from pyspark.sql import functions as F
-
-            from ..functions.extraction_udfs import readerable
-
-            pages = pages.where(readerable(F.col("html")))
-        arts = with_salt(pages.select("url", "warc_ts", "html"), 64) \
-            .mapInPandas(make_extractor(None), schema=ARTICLES_SCHEMA)
+        arts = extract_pages_stream(pages, readerable_gate=readerable_gate)
         arts.write.mode("overwrite").parquet(
             f"{output_dir}/batch={batch_id}")
         if seen_bloom_dir is not None:

@@ -112,15 +112,35 @@ def test_sql_registered_extraction_udfs(spark, tmp_path):
     from go_readability_spark.plans.schema import PAGES_SCHEMA
     from go_readability_spark.sources import synth_corpus_rows
 
+    from go_readability_spark.plans import extract_pages
+
     register_all(spark)
     rows = synth_corpus_rows(6, seed=21, skew=False)
-    spark.createDataFrame(rows, schema=PAGES_SCHEMA).createOrReplaceTempView("pages_v")
+    # stub pages that fail Check, as on a real crawl
+    rows += [{"url": f"https://stub.example.org/{i}", "warc_ts": None,
+              "html": html, "text": None, "lang": None}
+             for i, html in enumerate([
+                 b"<html><head><title>J0</title></head><body><p>hi</p></body></html>",
+                 b"<html><body><p>stub</p></body></html>", b"\xff\xfe<div>", None])]
+    pages = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
+    pages.createOrReplaceTempView("pages_v")
     out = spark.sql(
         "SELECT url, readability_title(html) AS t, length(readability_text(html)) AS n "
         "FROM pages_v WHERE readerable(html)"
     ).collect()
     assert len(out) == 6
     assert all(r["t"] and r["n"] > 200 for r in out)
+
+    # the UDFs are the same kernel as the batch plan: identical per url
+    udf = {r["url"]: r for r in spark.sql(
+        "SELECT url, readerable(html) AS ok, readability_title(html) AS title, "
+        "readability_text(html) AS text_content FROM pages_v").collect()}
+    batch = {r["url"]: r for r in extract_pages(pages, num_partitions=2).collect()}
+    assert set(udf) == set(batch) and len(udf) == len(rows)
+    for url, rec in batch.items():
+        assert udf[url]["ok"] == (rec["readerable"] is True), url
+        assert udf[url]["title"] == rec["title"], url
+        assert udf[url]["text_content"] == rec["text_content"], url
 
 
 def test_streaming_windowed_metrics(spark, tmp_path):

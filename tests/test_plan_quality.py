@@ -78,8 +78,23 @@ def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp
     ckpt = str(tmp_path / "ckpt_key")
     resumable = _plan(extract_pages(pages, n_buckets=16, num_partitions=4,
                                     checkpoint_dir=ckpt))
-    m = re.search(r"hashpartitioning\(salt", resumable)
-    assert m, resumable
+    m = re.search(r"hashpartitioning\(([^)]*)", resumable)
+    assert m and m.group(1).startswith("salt"), resumable
+    assert "xxhash64(url" not in m.group(1), resumable
+    assert resumable.count("Exchange") == 1, resumable
+
+
+def test_gated_extract_is_one_python_stage(spark, pages_parquet):
+    """The readerable gate runs inside the extraction stage: the gated plan
+    has exactly one Python node (the MapInPandas) — no separate Arrow or
+    row-at-a-time UDF stage that parses every page a second time."""
+    from go_readability_spark.plans import extract_pages
+
+    pages = spark.read.parquet(pages_parquet)
+    plan = _plan(extract_pages(pages, num_partitions=4, readerable_gate=True))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
 
 
 def test_filter_pushdown_to_scan(spark, pages_parquet):

@@ -34,6 +34,12 @@ def test_extract_record_never_raises_and_keeps_schema(html):
     assert not missing
     rec2 = extract_record("https://example.org/x", html.encode("utf-8", "ignore"))
     assert rec == rec2  # deterministic
+    # the readerable gate drops exactly the pages whose Check did not pass,
+    # and leaves every other record untouched
+    gated = extract_record("https://example.org/x", html.encode("utf-8", "ignore"),
+                           readerable_gate=True)
+    assert (gated is None) == (rec["readerable"] is not True)
+    assert gated is None or gated == rec
 
 
 @SET

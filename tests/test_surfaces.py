@@ -1,0 +1,177 @@
+"""Every extraction surface runs the same per-document kernel: the batch
+plan, the atomic sink (read back), and the streaming plan over a static
+frame give identical records per url, and each surface's readerable-gated
+run equals its ungated output filtered to ``readerable = true``.  The
+corpus is built in the repository: synthetic readable pages mixed with
+stub pages that fail Check."""
+
+import glob
+import os
+
+import pytest
+
+N_BUCKETS = 16
+
+
+def _corpus_rows():
+    from go_readability_spark.sources import synth_corpus_rows
+
+    rows = synth_corpus_rows(8, seed=31, skew=False)
+    stubs = [b"<html><head><title>J%d</title></head><body><p>hi</p></body></html>" % i
+             for i in range(14)]
+    stubs += [b"<html><body><div>nav</div></body></html>", b"\xff\xfe<div>", b"", None]
+    rows += [{"url": f"https://stub.example.org/{i}.html", "warc_ts": None,
+              "html": html, "text": None, "lang": None}
+             for i, html in enumerate(stubs)]
+    return rows
+
+
+def _by_url(rows):
+    from go_readability_spark.plans.schema import ARTICLES_SCHEMA
+
+    return {r["url"]: {c: r[c] for c in ARTICLES_SCHEMA.names} for r in rows}
+
+
+@pytest.fixture(scope="module")
+def surfaces(spark, tmp_path_factory):
+    """{surface: {"plain": records, "gated": records}} plus the atomic
+    sink's directories and its gated restart's bucket count."""
+    from go_readability_spark.plans import extract_pages, run_extraction_job_atomic
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+    from go_readability_spark.streaming import extract_pages_stream
+
+    tmp = tmp_path_factory.mktemp("surfaces")
+    pages = spark.createDataFrame(_corpus_rows(), schema=PAGES_SCHEMA)
+    got = {"batch": {}, "atomic": {}, "stream": {}}
+    dirs = {}
+    for gate in (False, True):
+        leg = "gated" if gate else "plain"
+        got["batch"][leg] = _by_url(extract_pages(
+            pages, n_buckets=N_BUCKETS, num_partitions=4,
+            readerable_gate=gate).collect())
+        got["stream"][leg] = _by_url(extract_pages_stream(
+            pages, n_buckets=N_BUCKETS, readerable_gate=gate).collect())
+        out, ckpt = str(tmp / f"out_{leg}"), str(tmp / f"ckpt_{leg}")
+        dirs[leg] = (out, ckpt)
+        run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
+                                  n_buckets=N_BUCKETS, num_partitions=4,
+                                  readerable_gate=gate)
+        got["atomic"][leg] = _by_url(spark.read.parquet(out).collect())
+    restart = run_extraction_job_atomic(pages, dirs["gated"][0],
+                                        checkpoint_dir=dirs["gated"][1],
+                                        n_buckets=N_BUCKETS, num_partitions=4,
+                                        readerable_gate=True)
+    return got, dirs, restart
+
+
+def test_surfaces_agree_per_url(surfaces):
+    got, _, _ = surfaces
+    urls = {r["url"] for r in _corpus_rows()}
+    batch = got["batch"]["plain"]
+    assert set(batch) == urls
+    assert got["atomic"]["plain"] == batch
+    assert got["stream"]["plain"] == batch
+    # the corpus exercises both sides of the gate
+    assert 0 < sum(r["readerable"] is True for r in batch.values()) < len(batch)
+
+
+@pytest.mark.parametrize("surface", ["batch", "atomic", "stream"])
+def test_gated_equals_ungated_filtered(surfaces, surface):
+    got, _, _ = surfaces
+    plain = got[surface]["plain"]
+    want = {u: r for u, r in plain.items() if r["readerable"] is True}
+    assert got[surface]["gated"] == want
+
+
+def test_gated_atomic_restart_writes_nothing(spark, surfaces):
+    """Gated-out rows count in rows_in/bytes_in only, so rows_out matches
+    the bucket's data file; a bucket whose every page was gated gets a
+    lineage row with rows_out = 0 and no data file, and still counts as
+    done on restart."""
+    from pyspark.sql import functions as F
+
+    from go_readability_spark.plans.extract import completed_buckets
+
+    _, dirs, restart = surfaces
+    out, ckpt = dirs["gated"]
+    assert restart == 0
+    lineage = spark.read.parquet(ckpt).groupBy("partition_key").agg(
+        F.max("rows_in").alias("rows_in"), F.max("rows_out").alias("rows_out"))
+    rows = {int(r["partition_key"]): r for r in lineage.collect()}
+    assert sum(r["rows_in"] for r in rows.values()) == len(_corpus_rows())
+    all_gated = {s for s, r in rows.items() if r["rows_out"] == 0}
+    assert all_gated  # the case this test exists for
+    for s in all_gated:
+        assert not os.path.exists(os.path.join(out, f"salt={s}"))
+    done = {r["salt"] for r in completed_buckets(
+        spark, ckpt, verify_output_dir=out, n_buckets=N_BUCKETS).collect()}
+    assert done == set(rows)
+
+
+def test_all_gated_job_resumes_without_output(spark, tmp_path):
+    """When every page is gated out no data file exists at all; the
+    restart must still see every bucket as done."""
+    from go_readability_spark.plans import run_extraction_job_atomic
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+
+    stubs = [r for r in _corpus_rows() if r["url"].startswith("https://stub.")]
+    pages = spark.createDataFrame(stubs, schema=PAGES_SCHEMA)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    first = run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
+                                      n_buckets=N_BUCKETS, num_partitions=2,
+                                      readerable_gate=True)
+    assert first > 0
+    assert not glob.glob(os.path.join(out, "salt=*"))
+    assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
+                                     n_buckets=N_BUCKETS, num_partitions=2,
+                                     readerable_gate=True) == 0
+
+
+def test_on_disk_format(surfaces):
+    """Task-side parquet writes keep the format earlier outputs and
+    checkpoints were written in (resume reads both): naive timestamp[us],
+    int32 length/attempt, int64 counts, bool readerable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, dirs, _ = surfaces
+    out, ckpt = dirs["plain"]
+    art = pq.read_schema(sorted(glob.glob(os.path.join(out, "salt=*", "part-*.parquet")))[0])
+    for name in ("warc_ts", "published_time", "modified_time"):
+        assert art.field(name).type == pa.timestamp("us"), name
+    assert art.field("length").type == pa.int32()
+    assert art.field("readerable").type == pa.bool_()
+    assert art.field("url").type == pa.string()
+    assert art.names == [
+        "url", "warc_ts", "title", "byline", "content", "text_content",
+        "length", "excerpt", "site_name", "image", "favicon", "lang",
+        "published_time", "modified_time", "readerable", "error"]
+
+    ck = pq.read_schema(sorted(glob.glob(os.path.join(ckpt, "ckpt-*.parquet")))[0])
+    assert ck.field("attempt").type == pa.int32()
+    for name in ("rows_in", "rows_out", "parse_errors", "bytes_in"):
+        assert ck.field(name).type == pa.int64(), name
+    for name in ("started_at", "finished_at"):
+        assert ck.field(name).type == pa.timestamp("us"), name
+    assert ck.names == [
+        "partition_key", "attempt", "status", "rows_in", "rows_out",
+        "parse_errors", "bytes_in", "started_at", "finished_at"]
+
+
+def test_gate_keeps_error_rows_that_passed_check(monkeypatch):
+    """A page that passes Check but fails scoring keeps its error row
+    under the gate, identical to the ungated record."""
+    from go_readability_spark.plans.extract import extract_record
+    from go_readability_spark.readability import Parser
+    from go_readability_spark.sources import synth_corpus_rows
+
+    html = synth_corpus_rows(1, seed=31, skew=False)[0]["html"]
+
+    def boom(self, doc, url):
+        raise RuntimeError("scoring failed")
+
+    monkeypatch.setattr(Parser, "parse_document", boom)
+    plain = extract_record("https://x/a.html", html)
+    assert plain["readerable"] is True
+    assert plain["error"] == "RuntimeError: scoring failed"
+    assert extract_record("https://x/a.html", html, readerable_gate=True) == plain
