@@ -16,6 +16,11 @@ spark-submit:
   python -m go_readability_spark extract \
       --input /path/pages_parquet --output /path/articles \
       --checkpoint /path/ckpt --buckets 256 [--partitions P] [--no-resume]
+
+With --checkpoint the extraction (extract, crawl-fetch --extract) is
+resumable: it writes task-committed per-bucket files, so a killed job
+restarts at bucket granularity. Without it the output is written by
+Spark's parquet writer.
 """
 
 from __future__ import annotations
@@ -235,29 +240,17 @@ def cmd_extract(args) -> int:
             from .sources.pages_table import read_pages
 
             pages = read_pages(spark, args.input, format=args.input_format)
-        if args.atomic_sink:
-            from .plans import run_extraction_job_atomic
-
-            n = run_extraction_job_atomic(
-                pages,
-                output_dir=args.output,
-                checkpoint_dir=args.checkpoint,
-                n_buckets=args.buckets,
-                num_partitions=args.partitions,
-                resume=not args.no_resume,
-            )
+        n = run_extraction_job(
+            pages,
+            output_dir=args.output,
+            checkpoint_dir=args.checkpoint,
+            n_buckets=args.buckets,
+            num_partitions=args.partitions,
+            resume=not args.no_resume,
+            partition_by=tuple(args.partition_by.split(",")) if args.partition_by else None,
+        )
+        if n is not None:
             print(f"atomic sink: {n} buckets written this run", file=sys.stderr)
-        else:
-            run_extraction_job(
-                pages,
-                output_dir=args.output,
-                checkpoint_dir=args.checkpoint,
-                n_buckets=args.buckets,
-                num_partitions=args.partitions,
-                resume=not args.no_resume,
-                verify_output=not args.no_verify_output,
-                partition_by=tuple(args.partition_by.split(",")) if args.partition_by else None,
-            )
     finally:
         spark.stop()
     return 0
@@ -313,24 +306,16 @@ def _cmd_extract_segmented(args) -> int:
             seg_out = os.path.join(args.output, f"seg={i}")
             seg_ckpt = (os.path.join(args.checkpoint, f"seg={i}")
                         if args.checkpoint else None)
-            if args.atomic_sink:
-                from .plans import run_extraction_job_atomic
-
-                n = run_extraction_job_atomic(
-                    pages, output_dir=seg_out, checkpoint_dir=seg_ckpt,
-                    n_buckets=args.buckets, num_partitions=args.partitions,
-                    resume=not args.no_resume)
+            n = run_extraction_job(
+                pages, output_dir=seg_out, checkpoint_dir=seg_ckpt,
+                n_buckets=args.buckets, num_partitions=args.partitions,
+                resume=not args.no_resume,
+                partition_by=(tuple(args.partition_by.split(","))
+                              if args.partition_by else None))
+            if n is not None:
                 print(f"atomic sink: {n} buckets written this run "
                       f"(seg {i}/{len(groups)}, {len(files)} files)",
                       file=sys.stderr)
-            else:
-                run_extraction_job(
-                    pages, output_dir=seg_out, checkpoint_dir=seg_ckpt,
-                    n_buckets=args.buckets, num_partitions=args.partitions,
-                    resume=not args.no_resume,
-                    verify_output=not args.no_verify_output,
-                    partition_by=(tuple(args.partition_by.split(","))
-                                  if args.partition_by else None))
             _release_job_state(spark)
     finally:
         spark.stop()
@@ -517,7 +502,6 @@ def cmd_crawl_fetch(args) -> int:
             spark, plan, args.warc_dir, args.output,
             extract=args.extract,
             readerable_gate=getattr(args, "readerable_gate", False),
-            atomic_sink=args.atomic_sink,
             checkpoint_dir=args.checkpoint,
             n_buckets=args.buckets,
             record_seen_bloom=getattr(args, "record_seen_bloom", None),
@@ -557,20 +541,16 @@ def main(argv=None) -> int:
                    help="input source: pages parquet (default) or raw "
                         ".warc/.warc.gz archives (Common Crawl layout)")
     e.add_argument("--output", required=True, help="articles output path")
-    e.add_argument("--checkpoint", default=None, help="checkpoint table dir")
+    e.add_argument("--checkpoint", default=None,
+                   help="checkpoint table dir: makes the job resumable "
+                        "(task-committed per-bucket files, atomic rename), "
+                        "so a killed job resumes at bucket granularity")
     e.add_argument("--buckets", type=int, default=256, help="salt buckets")
     e.add_argument("--partitions", type=int, default=None)
     e.add_argument("--master", default=None, help="override spark master")
     e.add_argument("--no-resume", action="store_true")
-    e.add_argument("--atomic-sink", action="store_true",
-                   help="task-committed per-bucket data files (atomic "
-                        "rename): mid-job kills resume at bucket "
-                        "granularity on plain filesystems")
     e.add_argument("--partition-by", default=None,
                    help="comma-separated output partition columns (e.g. lang)")
-    e.add_argument("--no-verify-output", action="store_true",
-                   help="trust checkpoint rows without verifying the output "
-                        "(unsafe if a prior run died mid-commit)")
     e.add_argument("--resolve-revisits", action="store_true",
                    help="with --input-format warc: resolve body-less "
                         "revisit records (dedup pointers) to their stored "
@@ -674,11 +654,10 @@ def main(argv=None) -> int:
                          "on the fetched pages")
     cf.add_argument("--buckets", type=int, default=64,
                     help="salt buckets for --extract")
-    cf.add_argument("--atomic-sink", action="store_true",
-                    help="with --extract: bucket-granular atomic sink "
-                         "(kill+restart resumes from --checkpoint)")
     cf.add_argument("--checkpoint", default=None,
-                    help="checkpoint table dir for --atomic-sink")
+                    help="with --extract: checkpoint table dir; makes the "
+                         "extraction resumable at bucket granularity "
+                         "(kill+restart skips the buckets already written)")
     cf.add_argument("--record-seen-bloom", default=None,
                     help="merge this run's fetched urls into a sharded "
                          "Bloom store dir (consulted by crawl-plan "

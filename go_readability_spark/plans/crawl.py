@@ -163,13 +163,17 @@ def run_crawl_fetch(
     *,
     extract: bool = False,
     readerable_gate: bool = False,
-    atomic_sink: bool = False,
     checkpoint_dir: str | None = None,
     n_buckets: int = 64,
     record_seen_bloom: str | None = None,
     n_segments: int = 1,
 ) -> int:
     """Execute a crawl-plan worklist; returns total output rows.
+
+    With ``extract`` and a ``checkpoint_dir`` the extraction runs through
+    the resumable bucket sink (run_extraction_job_atomic), so a rerun
+    skips the buckets already written; without a checkpoint each run
+    overwrites the output.
 
     With ``n_segments > 1`` the plan is split archive-aligned and the
     segments run as sequential Spark jobs, each writing
@@ -191,7 +195,7 @@ def run_crawl_fetch(
         pages = pages_from_fetch_plan(seg_plan, warc_dir)
         # the readerable gate (cheap Check: most real-crawl pages fail it)
         # runs inside the extraction stage, on the parse it needs anyway
-        if extract and atomic_sink:
+        if extract and checkpoint_dir:
             # the resumable leg: bucket-granular atomic publishes, so a
             # killed fetch+extract restarts from the checkpoint table
             from .extract import run_extraction_job_atomic

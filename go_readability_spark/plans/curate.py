@@ -46,7 +46,6 @@ def curate_corpus(
     near_dup_threshold: float = 0.7,
     n_buckets: int = 256,
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
     gopher_gate: bool = False,
     redact_pii: bool = False,
     max_lm_nll_per_bigram: float | None = None,
@@ -81,16 +80,9 @@ def curate_corpus(
     the mega-host skew the same way host_stats' groupBy does); the graph
     build adds one groupBy to the pipeline, nothing else.
 
-    checkpoint_dir records per-bucket lineage/metrics only — resume is
-    deliberately OFF here: skip-completed-buckets semantics are only sound
-    when paired with an appendable output that already holds those
-    buckets' rows (run_extraction_job). curate_corpus returns a DataFrame
-    with no such output, so resuming would silently drop every
-    previously-'done' bucket from the corpus.
-
     extract=False takes a PRE-EXTRACTED corpus instead of raw pages
     (articles_from_texts over WET docs — Common Crawl's text sidecar):
-    the extraction UDF, its salt shuffle, and n_buckets/checkpoint_dir
+    the extraction UDF, its salt shuffle, and n_buckets
     are all skipped; every downstream gate (lang/quality/Gopher/LM/PII,
     exact + near dedup) applies unchanged. host_rank_floor without a
     `host_ranks` table is refused — it needs the raw html's anchors,
@@ -147,8 +139,6 @@ def curate_corpus(
             pages,
             n_buckets=n_buckets,
             num_partitions=num_partitions,
-            checkpoint_dir=checkpoint_dir,
-            resume=False,
         )
     else:
         articles = pages  # already article-shaped (articles_from_texts)

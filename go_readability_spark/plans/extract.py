@@ -7,20 +7,23 @@ Design notes for 10^12-row scale:
 * Column pruning is explicit: only (url, warc_ts, html) reach the shuffle;
   Catalyst pushes the projection into the parquet/Iceberg scan.
 * Skew (host/size concentration in Common-Crawl) is defused by one
-  deterministic hash exchange — the only shuffle in the job. With a
-  ``checkpoint_dir`` (and always in the atomic sink) it is keyed on the
-  salt ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly
-  one task, which is what makes bucket-level resume sound; without one it
-  is keyed on the full-width ``xxhash64(url)``, which spreads rows evenly.
+  deterministic hash exchange — the only shuffle in the job.
+  ``extract_pages`` keys it on the full-width ``xxhash64(url)``, which
+  spreads rows evenly; the resumable sink keys it on the salt
+  ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly one
+  task, which is what makes bucket-level resume sound.
 * The extraction itself is partition-local: one ``mapInPandas`` call per
   partition, iterator form, so the compiled regexes and parser setup
   amortize across all Arrow batches of the partition (no per-row Python
   dispatch at the Spark boundary). The optional readerable gate runs in
   the same stage: a page that fails Check is dropped before scoring.
-* Resume: completed salt buckets are recorded in a checkpoint table; a
-  restart anti-joins pages against completed buckets. On a real cluster the
-  checkpoint table is an Iceberg table with transactional appends; in this
-  sandbox it is a parquet directory written atomically per task.
+* Resume: a job with a ``checkpoint_dir`` runs through the task-committed
+  bucket sink (``run_extraction_job_atomic``), the one resumable writer.
+  Each task publishes its bucket files by atomic rename and then records
+  the buckets in the checkpoint table; a restart anti-joins pages against
+  the buckets whose output verifies. The checkpoint table is a parquet
+  directory written atomically per task (on a cluster with a remote
+  filesystem, an Iceberg table with transactional appends takes its place).
 """
 
 from __future__ import annotations
@@ -155,17 +158,13 @@ _GC_EVERY_TASKS = 8
 _GC_STATE = {"tasks": 0}
 
 
-def _extraction_task(batches, checkpoint_dir, readerable_gate, publish=None):
+def _extraction_task(batches, readerable_gate, publish=None):
     """The body of one extraction task, shared by both mapInPandas
     functions. Yields article frames; with ``publish``, hands the frames
     grouped per salt bucket to ``publish`` instead and yields nothing.
-    The task's checkpoint rows land last — for the sink, strictly after
-    ``publish`` has renamed its data files into place. Returns the
-    per-bucket stats (the generator's return value)."""
+    Returns the per-bucket stats (the generator's return value)."""
     import gc
 
-    started = datetime.now(timezone.utc).replace(tzinfo=None)
-    t0 = time.time()
     bucket_stats: dict[str, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
     per_bucket_frames: dict[int, list] = {}
 
@@ -193,17 +192,15 @@ def _extraction_task(batches, checkpoint_dir, readerable_gate, publish=None):
 
     if publish is not None:
         publish(per_bucket_frames)
-    if checkpoint_dir and bucket_stats:
-        _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, time.time() - t0)
     return bucket_stats
 
 
-def make_extractor(checkpoint_dir: str | None = None, readerable_gate: bool = False):
+def make_extractor(readerable_gate: bool = False):
     """Build the mapInPandas function. Iterator form: per-partition setup
     runs once, then every Arrow batch streams through."""
 
     def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        return _extraction_task(batches, checkpoint_dir, readerable_gate)
+        return _extraction_task(batches, readerable_gate)
 
     return extract_batches
 
@@ -214,7 +211,7 @@ def _bucket_columns(bucket_stats) -> dict[str, list]:
             for i, name in enumerate(_BUCKET_COUNTS)}
 
 
-def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, elapsed):
+def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started):
     """Append one lineage row per completed salt bucket. Atomic per task:
     written to a unique file name, so concurrent tasks never collide.
     (Production: Iceberg transactional append — same rows, same schema.)"""
@@ -270,16 +267,15 @@ def default_extract_partitions(spark, n_buckets: int) -> int:
     return max(1, min(int(n_buckets), max(shuffle, par)))
 
 
-def completed_buckets(spark, checkpoint_dir: str,
-                      verify_output_dir: str | None = None,
+def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str,
                       n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame | None:
     """Salt buckets safe to skip on resume.
 
-    With `verify_output_dir`, a bucket only counts as done if the articles
-    actually present in the output agree with the checkpoint's rows_out —
-    closing the failure window where a task wrote its lineage row but died
-    before its output committed. The bucket is recomputed from the output's
-    url column (xxhash64 is deterministic), so no schema change is needed.
+    A bucket only counts as done if the articles actually present in
+    `verify_output_dir` agree with the checkpoint's rows_out — closing the
+    failure window where a task wrote its lineage row but died before its
+    output landed. The bucket is recomputed from the output's url column
+    (xxhash64 is deterministic), so no schema change is needed.
     (Iceberg: both writes share one transaction and this check is free.)"""
     if not checkpoint_dir or not os.path.isdir(checkpoint_dir):
         return None
@@ -295,8 +291,6 @@ def completed_buckets(spark, checkpoint_dir: str,
         .groupBy(F.col("partition_key").cast("long").alias("salt"))
         .agg(F.max("rows_out").alias("rows_out"))
     )
-    if not verify_output_dir:
-        return done.select("salt")
     try:
         out = spark.read.parquet(verify_output_dir)
     except Exception:
@@ -320,67 +314,82 @@ def completed_buckets(spark, checkpoint_dir: str,
 
 def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | None,
                      checkpoint_dir: str | None, resume: bool,
-                     verify_output_dir: str | None, salt_key: bool) -> DataFrame:
-    """The plan prelude both extraction jobs share: prune to
-    (url, warc_ts, html), salt, anti-join completed buckets on resume,
-    and run the one exchange — keyed on the salt when ``salt_key``."""
+                     output_dir: str) -> DataFrame:
+    """The sink's plan prelude: prune to (url, warc_ts, html), salt,
+    anti-join the buckets completed in ``output_dir`` on resume, and run
+    the one exchange keyed on the salt."""
     spark = pages.sparkSession
     df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
 
     if resume and checkpoint_dir:
-        done = completed_buckets(spark, checkpoint_dir,
-                                 verify_output_dir=verify_output_dir,
+        done = completed_buckets(spark, checkpoint_dir, verify_output_dir=output_dir,
                                  n_buckets=n_buckets)
         if done is not None:
             df = df.join(F.broadcast(done), "salt", "left_anti")
 
-    if num_partitions is None:
-        num_partitions = default_extract_partitions(spark, n_buckets)
-    if salt_key:
-        # bucket-level resume requires each salt bucket to live in exactly
-        # one task: the checkpoint marks whole buckets done, so a bucket
-        # split across tasks could be half-recorded as complete
-        return df.repartition(num_partitions, "salt")
-    # no resume semantics on this plan: same single exchange, same
-    # deterministic skew defense, but keyed on the full-width hash.
-    # n_buckets salt values hashed into P partitions leave measured
-    # row-count imbalance (guide §2.5: use 20-100x more distinct keys
-    # than partitions; at n_buckets/P = 8 the per-task row counts
-    # ranged 15-69 around a mean of 31 on the fixture bench, max task
-    # 1.8s vs 0.97s mean). xxhash64(url) spreads counts multinomially
-    # and stays retry-safe (deterministic key, not rand()).
-    return df.repartition(num_partitions, F.xxhash64(F.col("url")))
+    # bucket-level resume requires each salt bucket to live in exactly
+    # one task: the checkpoint marks whole buckets done, so a bucket
+    # split across tasks could be half-recorded as complete
+    return df.repartition(num_partitions or default_extract_partitions(spark, n_buckets),
+                          "salt")
 
 
 def extract_pages(
     pages: DataFrame,
     n_buckets: int = DEFAULT_N_BUCKETS,
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-    resume: bool = True,
-    verify_output_dir: str | None = None,
     readerable_gate: bool = False,
 ) -> DataFrame:
     """The extraction plan:
 
     pages → select(url, warc_ts, html)          # column pruning to the scan
           → withColumn(salt, pmod(xxhash64(url), B))
-          → [left_anti join completed buckets]  # resume (broadcast — tiny)
-          → repartition(P, salt)                # with checkpoint_dir: whole buckets per task
-            | repartition(P, xxhash64(url))     # otherwise: the even full-width key
+          → repartition(P, xxhash64(url))       # the even full-width key
           → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
 
     ``readerable_gate`` drops pages that fail Check inside that one
-    mapInPandas stage, before scoring.
+    mapInPandas stage, before scoring. A pure transform: resumable jobs
+    go through ``run_extraction_job`` with a ``checkpoint_dir``.
     """
-    df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
-                          resume, verify_output_dir, salt_key=bool(checkpoint_dir))
-    return df.mapInPandas(make_extractor(checkpoint_dir, readerable_gate),
-                          schema=ARTICLES_SCHEMA)
+    spark = pages.sparkSession
+    df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
+    # no resume semantics on this plan, so the exchange is keyed on the
+    # full-width hash: n_buckets salt values hashed into P partitions
+    # leave measured row-count imbalance (guide §2.5: use 20-100x more
+    # distinct keys than partitions; at n_buckets/P = 8 the per-task row
+    # counts ranged 15-69 around a mean of 31 on the fixture bench, max
+    # task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
+    # multinomially and stays retry-safe (deterministic key, not rand()).
+    df = df.repartition(num_partitions or default_extract_partitions(spark, n_buckets),
+                        F.xxhash64(F.col("url")))
+    return df.mapInPandas(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
+
+
+# chars Spark's writer %XX-escapes in a hive partition value
+# (ExternalCatalogUtils.escapePathName, non-Windows set)
+_HIVE_ESCAPE = frozenset([*map(chr, range(1, 32)), *"\"#%'*/:=?\\{[]^", "\x7f"])
+_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _hive_dirs(frame, partition_by) -> list[str]:
+    """Per-row hive partition path ``col=<value>/...`` for ``partition_by``,
+    escaped the way Spark's writer escapes it: null and empty values map
+    to the default partition, and every char that could end the path
+    component ('/' included) is %XX-encoded, so no value names a path
+    outside the table. Spark's partition discovery reads it back."""
+    def component(col, v):
+        if v is None or v == "":
+            return f"{col}={_HIVE_DEFAULT_PARTITION}"
+        return col + "=" + "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE else ch
+                                   for ch in v)
+
+    return [os.path.join(*(component(c, v) for c, v in zip(partition_by, vals)))
+            for vals in zip(*(frame[c].tolist() for c in partition_by))]
 
 
 def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
-                        readerable_gate: bool = False):
+                        readerable_gate: bool = False,
+                        partition_by: tuple[str, ...] = ()):
     """mapInPandas function for the ATOMIC task-committed sink: the
     extraction output is written per salt bucket straight into the
     articles table from inside the task, and the mapInPandas result is
@@ -402,53 +411,66 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
       the next attempt simply overwrites, never a 'done' row without
       visible data (the silent-loss window the verifier guards).
 
+    With ``partition_by`` the hive partition directories go outermost
+    (`lang=<v>/salt=<n>/part-<n>.parquet`, one file per bucket and value)
+    and the partition columns leave the data files, as in Spark's
+    ``partitionBy`` writer.
+
     A bucket whose every page is gated out gets a lineage row with
     rows_out = 0 and no data file.
     """
     import pandas as pd
 
+    columns = [c for c in _COLUMNS if c not in partition_by]
+
     def publish(per_bucket_frames):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        schema = _arrow_schema(ARTICLES_SCHEMA)
+        schema = pa.schema([f for f in _arrow_schema(ARTICLES_SCHEMA) if f.name in columns])
         for salt_val, frames in per_bucket_frames.items():
-            bucket_dir = os.path.join(output_dir, f"salt={salt_val}")
-            os.makedirs(bucket_dir, exist_ok=True)
-            final = os.path.join(bucket_dir, f"part-{salt_val:05d}.parquet")
-            # staging name MUST be dot-prefixed: Spark/parquet directory
-            # listings ignore '.'/'_' files, so a kill mid-write (ENOSPC,
-            # SIGKILL) leaves garbage that readers and the resume
-            # verifier never see.  (A non-hidden '<final>.tmp-…' name
-            # broke the 10M crawl-fetch resume: the truncated staging
-            # file failed the whole output read.)  Stale tmps from dead
-            # attempts are swept before this attempt writes its own —
-            # but only ones older than an hour: a CONCURRENT attempt for
-            # the same bucket (speculative or zombie task) may still be
-            # writing its staging file, and unlinking it mid-write would
-            # turn its os.replace into FileNotFoundError.  Younger tmps
-            # are left alone; being dot-prefixed they are invisible to
-            # readers and the resume verifier regardless.
-            sweep_horizon = time.time() - 3600
-            for stale in glob.glob(os.path.join(
-                    bucket_dir, f".part-{salt_val:05d}.parquet.tmp-*")):
-                try:
-                    if os.path.getmtime(stale) < sweep_horizon:
-                        os.remove(stale)
-                except OSError:
-                    pass
-            tmp = os.path.join(
-                bucket_dir,
-                f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
-            table = pa.Table.from_pandas(
-                pd.concat(frames, ignore_index=True)[_COLUMNS],
-                schema=schema, preserve_index=False)
-            pq.write_table(table, tmp, compression=_output_codec())
-            os.replace(tmp, final)  # atomic publish
+            bucket = pd.concat(frames, ignore_index=True)
+            groups = (bucket.groupby(pd.Series(_hive_dirs(bucket, partition_by),
+                                               index=bucket.index), sort=False)
+                      if partition_by else [("", bucket)])
+            for rel, group in groups:
+                bucket_dir = os.path.join(output_dir, rel, f"salt={salt_val}")
+                os.makedirs(bucket_dir, exist_ok=True)
+                final = os.path.join(bucket_dir, f"part-{salt_val:05d}.parquet")
+                # staging name MUST be dot-prefixed: Spark/parquet directory
+                # listings ignore '.'/'_' files, so a kill mid-write (ENOSPC,
+                # SIGKILL) leaves garbage that readers and the resume
+                # verifier never see.  (A non-hidden '<final>.tmp-…' name
+                # broke the 10M crawl-fetch resume: the truncated staging
+                # file failed the whole output read.)  Stale tmps from dead
+                # attempts are swept before this attempt writes its own —
+                # but only ones older than an hour: a CONCURRENT attempt for
+                # the same bucket (speculative or zombie task) may still be
+                # writing its staging file, and unlinking it mid-write would
+                # turn its os.replace into FileNotFoundError.  Younger tmps
+                # are left alone; being dot-prefixed they are invisible to
+                # readers and the resume verifier regardless.
+                sweep_horizon = time.time() - 3600
+                for stale in glob.glob(os.path.join(
+                        bucket_dir, f".part-{salt_val:05d}.parquet.tmp-*")):
+                    try:
+                        if os.path.getmtime(stale) < sweep_horizon:
+                            os.remove(stale)
+                    except OSError:
+                        pass
+                tmp = os.path.join(
+                    bucket_dir,
+                    f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
+                table = pa.Table.from_pandas(group[columns], schema=schema,
+                                             preserve_index=False)
+                pq.write_table(table, tmp, compression=_output_codec())
+                os.replace(tmp, final)  # atomic publish
 
     def sink_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        bucket_stats = yield from _extraction_task(
-            batches, checkpoint_dir, readerable_gate, publish)
+        started = datetime.now(timezone.utc).replace(tzinfo=None)
+        bucket_stats = yield from _extraction_task(batches, readerable_gate, publish)
+        if checkpoint_dir and bucket_stats:
+            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started)
         yield pd.DataFrame({"salt": [int(k) for k in bucket_stats],
                             **_bucket_columns(bucket_stats)})
 
@@ -458,9 +480,8 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
 def _extract_frames(batches, bucket_stats, readerable_gate=False):
     """Shared extraction loop: yields article DataFrames with a `_salt`
     helper column; per-bucket stats accumulate only when the input
-    carries a salt column (unsalted inputs get no checkpoint rows,
-    matching the Spark-sink path's behavior). Gated-out pages count
-    only in rows_in and bytes_in."""
+    carries a salt column (unsalted inputs get no checkpoint rows).
+    Gated-out pages count only in rows_in and bytes_in."""
     import pandas as pd
 
     for pdf in batches:
@@ -504,6 +525,13 @@ def _extract_frames(batches, bucket_stats, readerable_gate=False):
         yield out
 
 
+def _is_remote_uri(path: str) -> bool:
+    """True for scheme-qualified non-local paths (hdfs://, s3a://, ...).
+    file:// and plain paths are local."""
+    scheme = path.split("://", 1)[0] if "://" in path else ""
+    return scheme not in ("", "file")
+
+
 def run_extraction_job_atomic(
     pages: DataFrame,
     output_dir: str,
@@ -512,31 +540,40 @@ def run_extraction_job_atomic(
     num_partitions: int | None = None,
     resume: bool = True,
     readerable_gate: bool = False,
+    partition_by: tuple[str, ...] | None = None,
 ) -> int:
-    """Task-committed variant of run_extraction_job: bucket data files
-    publish atomically DURING the job, so a mid-job kill resumes at
-    bucket granularity instead of redoing all uncommitted work (the
-    plain-filesystem limit of the Spark-committer path, documented in
-    BENCH/BASELINE.md round 3). This is the shape an Iceberg sink gives
-    for free; here the atomicity unit is one bucket file + rename.
+    """The resumable extraction writer: bucket data files publish
+    atomically DURING the job, so a mid-job kill resumes at bucket
+    granularity instead of redoing all uncommitted work. This is the
+    shape an Iceberg sink gives for free; here the atomicity unit is one
+    bucket file + rename, so both dirs must be on a local (or mounted)
+    filesystem.
+
+    `partition_by` (e.g. ("lang",)) hive-partitions the output by string
+    article columns (make_sink_extractor).
 
     Returns the number of buckets processed this run (0 on a no-op
     resume)."""
+    for path in (output_dir, checkpoint_dir):
+        if path and _is_remote_uri(path):
+            raise ValueError(
+                f"run_extraction_job_atomic: {path!r} is a remote URI; the "
+                "bucket sink publishes by local rename and cannot write or "
+                "verify it. Write remote output through an Iceberg table, "
+                "whose transactional commit gives the same resume.")
+    partition_by = tuple(partition_by or ())
+    for col in partition_by:
+        if col not in _COLUMNS or ARTICLES_SCHEMA[col].dataType.simpleString() != "string":
+            raise ValueError(f"partition_by column {col!r}: the bucket sink "
+                             "partitions by string article columns only")
     df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
-                          resume, output_dir, salt_key=True)
+                          resume, output_dir)
     os.makedirs(output_dir, exist_ok=True)
     stats = df.mapInPandas(
-        make_sink_extractor(output_dir, checkpoint_dir, readerable_gate),
+        make_sink_extractor(output_dir, checkpoint_dir, readerable_gate, partition_by),
         schema=SINK_STATS_SCHEMA,
     )
     return stats.count()
-
-
-def _is_remote_uri(path: str) -> bool:
-    """True for scheme-qualified non-local paths (hdfs://, s3a://, ...).
-    file:// and plain paths are local."""
-    scheme = path.split("://", 1)[0] if "://" in path else ""
-    return scheme not in ("", "file")
 
 
 def run_extraction_job(
@@ -546,61 +583,26 @@ def run_extraction_job(
     n_buckets: int = DEFAULT_N_BUCKETS,
     num_partitions: int | None = None,
     resume: bool = True,
-    verify_output: bool = True,
     partition_by: tuple[str, ...] | None = None,
-) -> None:
-    """Batch job: extract and append to a parquet (or Iceberg) articles table.
+) -> int | None:
+    """Batch job: extract and write a parquet articles table.
+
+    With a `checkpoint_dir` the job is resumable and runs through the
+    bucket sink (run_extraction_job_atomic), returning the number of
+    buckets written this run; without one it appends ``extract_pages``
+    through Spark's writer and returns None.
 
     `partition_by` (e.g. ("lang",)) hive-partitions the output — at 100 TB
     the downstream curation filters (language, crawl slice) then prune
     whole directories instead of scanning; resume verification reads the
-    partitioned layout transparently.
-
-    Resume verifies buckets against the actual output by default: the
-    checkpoint lineage rows are written by the task OUTSIDE Spark's
-    output-commit protocol, so a job that dies after the ckpt file lands
-    but before the parquet commit would otherwise mark buckets 'done'
-    whose rows were never written — a silent-data-loss window."""
-    # A job killed mid-write leaves task-committed files under the
-    # output's _temporary/ staging dir; the NEXT append job's commit
-    # adopts them as its own output and duplicates every row the dead
-    # job had task-committed (observed at the 1M kill+restart probe:
-    # 1.68M rows for 1M urls). Iceberg's transactional commit makes
-    # this moot; on a plain filesystem the stale staging dir must not
-    # survive into the next attempt. Safe because one extraction job
-    # owns an output dir at a time (the resume design's premise) — if
-    # that premise is ever violated (two concurrent jobs appending to
-    # one dir), this would delete the live job's staging; the loud log
-    # below is the audit trail. The os.path/shutil cleanup only works
-    # for LOCAL-filesystem outputs: for hdfs:///s3a:// URIs isdir() is
-    # simply False and the hazard remains — those deployments must use
-    # run_extraction_job_atomic (task-committed sink) or an Iceberg
-    # table, whose commit protocols don't have the adoption bug.
-    if not _is_remote_uri(output_dir):
-        stale_staging = os.path.join(output_dir, "_temporary")
-        if os.path.isdir(stale_staging):
-            import logging
-            import shutil
-
-            logging.getLogger(__name__).warning(
-                "run_extraction_job: removing stale staging dir %s left by a "
-                "previous dead attempt (rows under it were task-committed but "
-                "never job-committed; adopting them would duplicate output). "
-                "If another extraction job is CURRENTLY writing to %s, this "
-                "removal just broke it — one job owns an output dir at a time.",
-                stale_staging, output_dir,
-            )
-            shutil.rmtree(stale_staging, ignore_errors=True)
-
-    articles = extract_pages(
-        pages,
-        n_buckets=n_buckets,
-        num_partitions=num_partitions,
-        checkpoint_dir=checkpoint_dir,
-        resume=resume,
-        verify_output_dir=output_dir if verify_output else None,
-    )
-    writer = articles.write.mode("append")
+    partitioned layout transparently."""
+    if checkpoint_dir:
+        return run_extraction_job_atomic(
+            pages, output_dir, checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
+            num_partitions=num_partitions, resume=resume, partition_by=partition_by)
+    writer = extract_pages(pages, n_buckets=n_buckets,
+                           num_partitions=num_partitions).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(output_dir)
+    return None

@@ -15,8 +15,8 @@ iceberg-spark-runtime jar. The extraction plan downstream is identical
 either way — Catalyst sees the same relation and pushes the (url,
 warc_ts, html) projection into either scan; with Iceberg, the
 checkpoint table additionally upgrades to transactional appends
-(plans/extract.py docstrings) and the atomic-sink workaround for
-plain-filesystem commits becomes unnecessary.
+(plans/extract.py docstrings) and the task-committed bucket sink that
+plain-filesystem resume needs becomes unnecessary.
 
 Production session conf (public Iceberg quickstart settings):
 

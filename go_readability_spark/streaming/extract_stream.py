@@ -51,7 +51,7 @@ def extract_pages_stream(pages_stream: DataFrame, n_buckets: int = 64,
     sink; watermarks aren't needed (per-row transform, no event-time agg).
     ``readerable_gate`` drops pages that fail Check inside that stage."""
     df = with_salt(pages_stream.select("url", "warc_ts", "html"), n_buckets)
-    return df.mapInPandas(make_extractor(None, readerable_gate),
+    return df.mapInPandas(make_extractor(readerable_gate),
                           schema=ARTICLES_SCHEMA)
 
 

@@ -14,7 +14,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from go_readability_spark.operators import brute_force_topk, minhash_dedup_pairs
-from go_readability_spark.plans import build_session, extract_pages
+from go_readability_spark.plans import build_session, extract_pages, run_extraction_job
+from go_readability_spark.plans.extract import _salted_exchange
 from go_readability_spark.sources import synth_pages_distributed
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -36,16 +37,17 @@ def main():
             .write.parquet(pages_path)
         pages = spark.read.parquet(pages_path)
 
-        ckpt = f"{tmp}/ckpt"
-        extract_pages(pages, n_buckets=16, num_partitions=2, checkpoint_dir=ckpt).count()
+        ckpt, articles = f"{tmp}/ckpt", f"{tmp}/articles"
+        run_extraction_job(pages, articles, checkpoint_dir=ckpt, n_buckets=16,
+                           num_partitions=2)
 
         out.append("## extract_pages (scan → salt → mapInPandas)\n```")
         out.append(formatted(extract_pages(pages, num_partitions=2)))
         out.append("```\n")
 
-        out.append("## extract_pages with checkpoint resume (broadcast left_anti)\n```")
-        out.append(formatted(extract_pages(pages, n_buckets=16, num_partitions=2,
-                                           checkpoint_dir=ckpt, resume=True)))
+        out.append("## resumable sink prelude on resume (broadcast left_anti → "
+                   "salt exchange)\n```")
+        out.append(formatted(_salted_exchange(pages, 16, 2, ckpt, True, articles)))
         out.append("```\n")
 
         out.append("## filter pushdown into the pages scan\n```")

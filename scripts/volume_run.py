@@ -10,7 +10,7 @@ can SIGKILL the extract phase and re-invoke it:
   python scripts/volume_run.py gen      --n-docs 10000000 --size-scale 0.5 \
       --workdir /root/vol10m
   python scripts/volume_run.py extract  --workdir /root/vol10m \
-      --buckets 2048 --partitions 1024 --atomic-sink
+      --buckets 2048 --partitions 1024
   python scripts/volume_run.py verify   --workdir /root/vol10m --n-docs 10000000
 
 ``size_scale`` shrinks the per-page paragraph count so the 10M input +
@@ -59,8 +59,6 @@ def phase_extract(args):
             "--partitions", str(args.partitions)]
     if args.master:
         argv += ["--master", args.master]
-    if args.atomic_sink:
-        argv.append("--atomic-sink")
     if args.partition_by:
         argv += ["--partition-by", args.partition_by]
     t0 = time.time()
@@ -405,9 +403,9 @@ def phase_warcgen(args):
 def phase_crawlfetch(args):
     """The closed crawl loop at volume: CDXJ index -> crawl-plan CLI
     (selection + frontier) -> crawl-fetch CLI (byte-range member reads
-    -> extraction, ATOMIC resumable sink) -> verify row counts.  A
-    kill+restart probe SIGKILLs this phase mid-extract and re-invokes
-    it; the atomic sink resumes bucket-granular."""
+    -> extraction through the resumable bucket sink, which --checkpoint
+    selects) -> verify row counts.  A kill+restart probe SIGKILLs this
+    phase mid-extract and re-invokes it; the sink resumes bucket-granular."""
     from go_readability_spark.cli import main
 
     base = ["--master", args.master] if args.master else []
@@ -421,7 +419,7 @@ def phase_crawlfetch(args):
     rc = main(["crawl-fetch", "--plan", f"{args.workdir}/plan",
                "--warc-dir", f"{args.workdir}/warc",
                "--output", f"{args.workdir}/articles",
-               "--extract", "--atomic-sink",
+               "--extract",
                "--checkpoint", f"{args.workdir}/ckpt",
                "--buckets", str(args.buckets)] + base)
     t_fetch = time.time() - t0
@@ -555,7 +553,6 @@ def build_parser():
     p.add_argument("--gen-partitions", type=int, default=1024)
     p.add_argument("--buckets", type=int, default=2048)
     p.add_argument("--partitions", type=int, default=1024)
-    p.add_argument("--atomic-sink", action="store_true")
     p.add_argument("--partition-by", default="")
     p.add_argument("--bloom-shards", type=int, default=64)
     p.add_argument("--bloom-bits", type=int, default=1 << 21)

@@ -79,7 +79,7 @@ def test_segmented_fetch_matches_unsegmented(spark, tmp_path):
                              extract=True, n_buckets=4)
     seg_out = str(tmp_path / "segd")
     n_seg = run_crawl_fetch(
-        spark, plan, str(d), seg_out, extract=True, atomic_sink=True,
+        spark, plan, str(d), seg_out, extract=True,
         checkpoint_dir=str(tmp_path / "ckpt"), n_buckets=4, n_segments=2)
     assert n_flat == n_seg == len(rows)
 
@@ -105,12 +105,12 @@ def test_segmented_rerun_is_noop_resume(spark, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     n1 = run_crawl_fetch(spark, plan, str(d), out, extract=True,
-                         atomic_sink=True, checkpoint_dir=ckpt,
+                         checkpoint_dir=ckpt,
                          n_buckets=4, n_segments=3)
     # a restart of the whole loop: completed segments no-op via their own
     # checkpoints — no duplicate rows, same corpus
     n2 = run_crawl_fetch(spark, plan, str(d), out, extract=True,
-                         atomic_sink=True, checkpoint_dir=ckpt,
+                         checkpoint_dir=ckpt,
                          n_buckets=4, n_segments=3)
     assert n1 == n2 == len(rows)
     urls = spark.read.parquet(out).groupBy("url").count()
@@ -186,7 +186,7 @@ def test_extract_segments_parquet_matches_flat(spark, tmp_path):
         r = subprocess.run(
             [sys.executable, "-m", "go_readability_spark", "extract",
              "--input", pages_dir, "--output", out,
-             "--buckets", "4", "--master", "local[2]", "--atomic-sink",
+             "--buckets", "4", "--master", "local[2]",
              *extra],
             capture_output=True, text=True, timeout=420, cwd="/root/repo")
         assert r.returncode == 0, r.stderr[-1500:]
@@ -224,7 +224,7 @@ def test_extract_segments_warc_and_revisit_refusal(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "go_readability_spark", "extract",
          "--input", str(d), "--input-format", "warc", "--output", out,
-         "--segments", "2", "--atomic-sink",
+         "--segments", "2",
          "--checkpoint", str(tmp_path / "ck"),
          "--buckets", "2", "--master", "local[2]"],
         capture_output=True, text=True, timeout=420, cwd="/root/repo")
@@ -248,7 +248,7 @@ def test_segments_cli_flag(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "go_readability_spark", "crawl-fetch",
          "--plan", plan_dir, "--warc-dir", str(d), "--output", out,
-         "--extract", "--atomic-sink",
+         "--extract",
          "--checkpoint", str(tmp_path / "ckpt"),
          "--segments", "2", "--buckets", "4", "--master", "local[2]"],
         capture_output=True, text=True, timeout=300, cwd="/root/repo")
@@ -256,3 +256,35 @@ def test_segments_cli_flag(spark, tmp_path):
     assert f"crawl fetch: {len(rows)} articles" in r.stdout
     got = spark.read.parquet(out)
     assert {a.url for a in got.collect()} == {u for u, *_ in rows}
+
+
+def test_crawl_fetch_cli_checkpoint_resumes(spark, tmp_path):
+    """crawl-fetch --extract --checkpoint is resumable: a second run over
+    the same plan writes 0 buckets and touches no data file."""
+    import glob
+
+    d, rows = _make_corpus(tmp_path, n_archives=2, per_archive=2)
+    plan_dir = str(tmp_path / "plan")
+    _plan_df(spark, rows).write.parquet(plan_dir)
+    out = str(tmp_path / "articles")
+
+    def run():
+        r = subprocess.run(
+            [sys.executable, "-m", "go_readability_spark", "crawl-fetch",
+             "--plan", plan_dir, "--warc-dir", str(d), "--output", out,
+             "--extract", "--checkpoint", str(tmp_path / "ckpt"),
+             "--buckets", "4", "--master", "local[2]"],
+            capture_output=True, text=True, timeout=300,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        assert r.returncode == 0, r.stderr[-1500:]
+        assert f"crawl fetch: {len(rows)} articles" in r.stdout
+        return r
+
+    assert "0 buckets written" not in run().stderr
+    files = glob.glob(os.path.join(out, "salt=*", "part-*.parquet"))
+    assert files
+    mtimes = {f: os.stat(f).st_mtime_ns for f in files}
+    assert "atomic sink: 0 buckets written" in run().stderr
+    assert {f: os.stat(f).st_mtime_ns
+            for f in glob.glob(os.path.join(out, "**", "*.parquet"),
+                               recursive=True)} == mtimes

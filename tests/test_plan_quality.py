@@ -36,16 +36,15 @@ def test_scan_column_pruning(spark, pages_parquet):
 
 
 def test_resume_antijoin_is_broadcast(spark, pages_parquet, tmp_path):
-    """The checkpoint anti-join must broadcast the (tiny) bucket list, not
-    shuffle the 10^12-row pages table."""
-    from go_readability_spark.plans import extract_pages
+    """The resumable sink's checkpoint anti-join must broadcast the (tiny)
+    bucket list, not shuffle the 10^12-row pages table."""
+    from go_readability_spark.plans import run_extraction_job
+    from go_readability_spark.plans.extract import _salted_exchange
 
-    ckpt = str(tmp_path / "ckpt")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     pages = spark.read.parquet(pages_parquet)
-    extract_pages(pages, n_buckets=16, num_partitions=4, checkpoint_dir=ckpt).count()
-    df = extract_pages(pages, n_buckets=16, num_partitions=4,
-                       checkpoint_dir=ckpt, resume=True)
-    plan = _plan(df)
+    run_extraction_job(pages, out, checkpoint_dir=ckpt, n_buckets=16, num_partitions=4)
+    plan = _plan(_salted_exchange(pages, 16, 4, ckpt, True, out))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -61,13 +60,14 @@ def test_single_exchange_in_extract(spark, pages_parquet):
 
 
 def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp_path):
-    """The one extraction exchange is keyed by the coarse salt ONLY when
-    bucket-level resume is in play (checkpoint marks whole buckets done, so
-    each bucket must live in one task); without a checkpoint_dir the same
-    exchange uses the full-width url hash — n_buckets values hashed into P
-    partitions leave measured ~±40% per-task row-count imbalance at
-    n_buckets/P = 8 (guide §2.5 wants 20-100x more keys than partitions)."""
+    """The one extraction exchange is keyed by the coarse salt ONLY in the
+    resumable sink (checkpoint marks whole buckets done, so each bucket
+    must live in one task); extract_pages uses the full-width url hash —
+    n_buckets values hashed into P partitions leave measured ~±40% per-task
+    row-count imbalance at n_buckets/P = 8 (guide §2.5 wants 20-100x more
+    keys than partitions)."""
     from go_readability_spark.plans import extract_pages
+    from go_readability_spark.plans.extract import _salted_exchange
 
     pages = spark.read.parquet(pages_parquet)
     no_resume = _plan(extract_pages(pages, n_buckets=16, num_partitions=4))
@@ -75,9 +75,8 @@ def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp
     assert m and "xxhash64(url" in m.group(1), no_resume
     assert no_resume.count("Exchange") == 1, no_resume
 
-    ckpt = str(tmp_path / "ckpt_key")
-    resumable = _plan(extract_pages(pages, n_buckets=16, num_partitions=4,
-                                    checkpoint_dir=ckpt))
+    resumable = _plan(_salted_exchange(pages, 16, 4, str(tmp_path / "ckpt_key"), True,
+                                       str(tmp_path / "out_key")))
     m = re.search(r"hashpartitioning\(([^)]*)", resumable)
     assert m and m.group(1).startswith("salt"), resumable
     assert "xxhash64(url" not in m.group(1), resumable

@@ -7,7 +7,7 @@ import pytest
 
 from conftest import BEAUTIFIED_GOLDENS, fixture_cases
 
-pytestmark = pytest.mark.skipif(not fixture_cases(), reason="reference corpus not present")
+needs_corpus = pytest.mark.skipif(not fixture_cases(), reason="reference corpus not present")
 
 
 def _norm(s):
@@ -23,6 +23,7 @@ def extracted(spark):
     return {r["url"]: r.asDict() for r in extract_pages(pages, num_partitions=8).collect()}
 
 
+@needs_corpus
 def test_pipeline_text_parity(spark, extracted):
     from go_readability_spark.sources import expected_articles_rows
 
@@ -37,6 +38,7 @@ def test_pipeline_text_parity(spark, extracted):
             assert got["text_content"] == exp["expected_text"], exp["case_id"]
 
 
+@needs_corpus
 def test_pipeline_metadata_parity(spark, extracted):
     from go_readability_spark.sources import expected_articles_rows
 
@@ -47,6 +49,7 @@ def test_pipeline_metadata_parity(spark, extracted):
         assert got["readerable"] == exp["readerable"], exp["case_id"]
 
 
+@needs_corpus
 def test_pipeline_schema(spark, extracted):
     row = next(iter(extracted.values()))
     assert set(row) == {
@@ -56,12 +59,13 @@ def test_pipeline_schema(spark, extracted):
     }
 
 
+@needs_corpus
 def test_checkpoint_resume(spark, tmp_path):
     """Run half the corpus, then resume: completed salt buckets are skipped
     (left_anti on the checkpoint table) and the union covers everything."""
     from pyspark.sql import functions as F
 
-    from go_readability_spark.plans import extract_pages, with_salt
+    from go_readability_spark.plans import run_extraction_job, with_salt
     from go_readability_spark.sources import pages_dataframe
 
     ckpt = str(tmp_path / "ckpt")
@@ -71,8 +75,7 @@ def test_checkpoint_resume(spark, tmp_path):
 
     salted = with_salt(pages, n_buckets=16)
     first_half = salted.where(F.col("salt") < 8).drop("salt")
-    run1 = extract_pages(first_half, n_buckets=16, num_partitions=4, checkpoint_dir=ckpt)
-    run1.write.mode("overwrite").parquet(out)
+    run_extraction_job(first_half, out, checkpoint_dir=ckpt, n_buckets=16, num_partitions=4)
     n1 = spark.read.parquet(out).count()
     assert 0 < n1 < n_total
 
@@ -83,9 +86,7 @@ def test_checkpoint_resume(spark, tmp_path):
     assert ckpt_df.where("status = 'done'").count() == len(done)
 
     # resume over the FULL corpus: only the unfinished buckets re-run
-    run2 = extract_pages(pages, n_buckets=16, num_partitions=4,
-                         checkpoint_dir=ckpt, resume=True)
-    run2.write.mode("append").parquet(out)
+    run_extraction_job(pages, out, checkpoint_dir=ckpt, n_buckets=16, num_partitions=4)
     final = spark.read.parquet(out)
     assert final.count() == n_total  # no duplicates, full coverage
     assert final.select("url").distinct().count() == n_total
@@ -158,28 +159,27 @@ def test_curate_corpus_end_to_end(spark):
 
 def test_resume_verifies_output(spark, tmp_path):
     """A bucket whose checkpoint row exists but whose output was lost
-    (task died between lineage write and commit) must re-run when
-    verify_output_dir is set."""
+    (task died between lineage write and commit) must re-run: the
+    resumable writer verifies every bucket against the output."""
     import glob
     import os
 
-    from go_readability_spark.plans import extract_pages
+    from go_readability_spark.plans import run_extraction_job
     from go_readability_spark.plans.extract import completed_buckets
     from go_readability_spark.sources import synth_pages_dataframe
 
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "articles")
     pages = synth_pages_dataframe(spark, 40, seed=23, skew=False)
-    extract_pages(pages, n_buckets=8, num_partitions=4,
-                  checkpoint_dir=ckpt).write.parquet(out)
+    run_extraction_job(pages, out, checkpoint_dir=ckpt, n_buckets=8, num_partitions=4)
     assert spark.read.parquet(out).count() == 40
 
     # all 8 buckets verified-done while output is intact
     done = completed_buckets(spark, ckpt, verify_output_dir=out, n_buckets=8)
     assert done.count() == 8
 
-    # simulate lost output: delete one parquet part file
-    parts = sorted(glob.glob(out + "/part-*.parquet"))
+    # simulate lost output: delete one bucket's parquet file
+    parts = sorted(glob.glob(out + "/salt=*/part-*.parquet"))
     os.remove(parts[0])
     survivors = spark.read.parquet(out).count()
     assert survivors < 40
@@ -187,11 +187,8 @@ def test_resume_verifies_output(spark, tmp_path):
     done2 = completed_buckets(spark, ckpt, verify_output_dir=out, n_buckets=8)
     assert done2.count() < 8  # damaged buckets no longer count as done
 
-    # resume with verification re-runs exactly the damaged buckets
-    rerun = extract_pages(pages, n_buckets=8, num_partitions=4,
-                          checkpoint_dir=ckpt, resume=True,
-                          verify_output_dir=out)
-    rerun.write.mode("append").parquet(out)
+    # resume re-runs exactly the damaged buckets
+    run_extraction_job(pages, out, checkpoint_dir=ckpt, n_buckets=8, num_partitions=4)
     final = spark.read.parquet(out)
     assert final.select("url").distinct().count() == 40
 
@@ -214,28 +211,97 @@ def test_extraction_partitioning_invariance(spark):
     assert a == b
 
 
-def test_partitioned_output_and_resume(spark, tmp_path):
+# page-supplied <html lang> values that must not steer the partition path
+HOSTILE_LANGS = {"plain": None, "dotdot": "../x", "slash": "a/b", "equals": "k=v",
+                 "percent": "%2F", "empty": "", "non-ascii": "日本語"}
+
+
+@pytest.mark.parametrize("hostile", list(HOSTILE_LANGS.values()), ids=list(HOSTILE_LANGS))
+def test_partitioned_output_and_resume(spark, tmp_path, hostile):
     """partition_by hive-partitions the articles table; resume verification
-    reads the partitioned layout and a rerun stays idempotent."""
+    reads the partitioned layout and a rerun stays idempotent. A partition
+    value comes from the page, so it is escaped as Spark's writer escapes
+    it: the read-back matches a Spark partitionBy write of the same pages,
+    and every file stays one directory level per partition column deep."""
+    import glob
     import os
 
-    from go_readability_spark.plans import run_extraction_job
+    from go_readability_spark.plans import extract_pages, run_extraction_job
     from go_readability_spark.plans.schema import PAGES_SCHEMA
     from go_readability_spark.sources import synth_corpus_rows
 
-    pages = spark.createDataFrame(synth_corpus_rows(12, seed=31, skew=False),
-                                  schema=PAGES_SCHEMA)
+    rows = synth_corpus_rows(12, seed=31, skew=False)
+    if hostile is not None:
+        page = dict(rows[0], url="https://hostile.example.org/page.html")
+        page["html"] = page["html"].replace(
+            b'<html lang="en">', f'<html lang="{hostile}">'.encode(), 1)
+        rows.append(page)
+    pages = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
     out = str(tmp_path / "articles_part")
     ck = str(tmp_path / "ck_part")
-    run_extraction_job(pages, out, checkpoint_dir=ck, n_buckets=8,
-                       num_partitions=4, partition_by=("lang",))
+    assert run_extraction_job(pages, out, checkpoint_dir=ck, n_buckets=8,
+                              num_partitions=4, partition_by=("lang",)) > 0
     assert any(d.startswith("lang=") for d in os.listdir(out)), os.listdir(out)
     first = spark.read.parquet(out)
-    assert first.count() == 12 and "lang" in first.columns
+    assert first.count() == len(rows) and "lang" in first.columns
+
+    ref = str(tmp_path / "spark_part")
+    extract_pages(pages, n_buckets=8, num_partitions=4).write.partitionBy("lang").parquet(ref)
+
+    def url_lang(path):
+        return sorted(map(tuple, spark.read.parquet(path).select("url", "lang").collect()))
+
+    assert url_lang(out) == url_lang(ref)
+
+    # every file lies under output_dir, at lang=<v>/salt=<n>/part-<n>.parquet
+    allowed = tuple(os.path.realpath(d) + os.sep for d in (out, ck, ref))
+    for f in glob.glob(str(tmp_path / "**"), recursive=True):
+        assert not os.path.isfile(f) or os.path.realpath(f).startswith(allowed), f
+    data = glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+    assert data
+    for f in data:
+        lang_dir, salt_dir, name = os.path.relpath(f, out).split(os.sep)
+        assert lang_dir.startswith("lang=") and salt_dir.startswith("salt="), f
+        assert name.startswith("part-"), f
+
     # idempotent resume against the partitioned layout
-    run_extraction_job(pages, out, checkpoint_dir=ck, n_buckets=8,
-                       num_partitions=4, partition_by=("lang",))
-    assert spark.read.parquet(out).count() == 12
+    assert run_extraction_job(pages, out, checkpoint_dir=ck, n_buckets=8,
+                              num_partitions=4, partition_by=("lang",)) == 0
+    assert spark.read.parquet(out).count() == len(rows)
+
+
+def test_sink_partition_escape_matches_spark(spark):
+    """The bucket sink escapes partition values exactly as Spark's writer
+    does (ExternalCatalogUtils.escapePathName), for every ASCII char and
+    some non-ASCII text; empty and null map to the default partition."""
+    import pandas as pd
+
+    from go_readability_spark.plans.extract import _hive_dirs
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = [chr(c) for c in range(1, 128)] + ["日本語", "é/ß", "../x", "a b"]
+    got = _hive_dirs(pd.DataFrame({"lang": values + ["", None]}), ("lang",))
+    assert got[:len(values)] == ["lang=" + utils.escapePathName(v) for v in values]
+    assert got[len(values):] == ["lang=__HIVE_DEFAULT_PARTITION__"] * 2
+
+
+@pytest.mark.parametrize("remote", ["output", "checkpoint"])
+def test_bucket_sink_refuses_remote_dirs(spark, tmp_path, monkeypatch, remote):
+    """The bucket sink publishes by local rename: a remote output or
+    checkpoint URI is refused up front instead of building a local
+    's3a:' tree that the resume verifier never reads."""
+    import os
+
+    from go_readability_spark.plans import run_extraction_job_atomic
+    from go_readability_spark.sources import synth_pages_dataframe
+
+    monkeypatch.chdir(tmp_path)
+    dirs = {"output": str(tmp_path / "out"), "checkpoint": str(tmp_path / "ck")}
+    dirs[remote] = f"s3a://bucket/{remote}"
+    pages = synth_pages_dataframe(spark, 4, seed=3, skew=False)
+    with pytest.raises(ValueError, match="Iceberg"):
+        run_extraction_job_atomic(pages, dirs["output"], checkpoint_dir=dirs["checkpoint"])
+    assert os.listdir(tmp_path) == []
 
 
 def test_curate_with_gopher_gate(spark):
@@ -424,10 +490,10 @@ def test_cli_curate_sharded_output(spark, tmp_path):
 
 
 def test_stale_staging_dir_not_adopted(spark, tmp_path):
-    """A job killed mid-write leaves task-committed files under the
-    output's _temporary/ dir; a restart's job commit would adopt them and
-    duplicate rows (observed at the 1M kill+restart probe: 1.68M rows for
-    1M urls). run_extraction_job must clear the stale staging dir."""
+    """A Spark job killed mid-write leaves task-committed files under the
+    output's _temporary/ dir; a Spark-committer restart's job commit would
+    adopt them and duplicate rows (observed at the 1M kill+restart probe:
+    1.68M rows for 1M urls). The resumable writer must not adopt them."""
     import glob
     import os
     import shutil
@@ -442,7 +508,7 @@ def test_stale_staging_dir_not_adopted(spark, tmp_path):
     ck = str(tmp_path / "ck_stale")
     run_extraction_job(pages, out, checkpoint_dir=ck, n_buckets=4,
                        num_partitions=2)
-    parts = glob.glob(os.path.join(out, "part-*.parquet"))
+    parts = glob.glob(os.path.join(out, "salt=*", "part-*.parquet"))
     assert parts
     assert spark.read.parquet(out).count() == 10
     # simulate a dead job's task-committed leftovers in the staging dir
@@ -450,11 +516,10 @@ def test_stale_staging_dir_not_adopted(spark, tmp_path):
                               "task_000000000000000_0001_m_000000")
     os.makedirs(stale_task)
     shutil.copy(parts[0], os.path.join(stale_task, "part-stale.parquet"))
-    # rerun (resume no-ops the extraction but the write still commits)
+    # rerun (resume no-ops the extraction)
     run_extraction_job(pages, out, checkpoint_dir=ck, n_buckets=4,
                        num_partitions=2)
     assert spark.read.parquet(out).count() == 10  # stale file NOT adopted
-    assert not os.path.isdir(os.path.join(out, "_temporary"))
 
 
 def test_atomic_sink_roundtrip_and_bucket_resume(spark, tmp_path):
@@ -545,7 +610,7 @@ def test_output_codec_knob(tmp_path, monkeypatch):
     ck = str(tmp_path / "ck")
     from datetime import datetime, timezone
     started = datetime.now(timezone.utc).replace(tzinfo=None)
-    _write_checkpoint_rows(ck, {"7": [3, 3, 0, 123]}, started, 0.01)
+    _write_checkpoint_rows(ck, {"7": [3, 3, 0, 123]}, started)
     import glob
     f = glob.glob(f"{ck}/ckpt-*.parquet")[0]
     meta = pq.ParquetFile(f).metadata
