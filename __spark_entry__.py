@@ -77,7 +77,7 @@ def entry(spark: SparkSession) -> DataFrame:
     `pages` table synthesized deterministically from sf0.001 documents."""
     _ship_package(spark)
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    articles = extract_pages(pages, n_buckets=64, num_partitions=8)
+    articles = extract_pages(pages, num_partitions=8)
     return articles.select(
         "url", "title", "text_content", "length", "lang", "readerable", "error"
     )
@@ -92,7 +92,7 @@ def _q_extract_articles(spark, sf_dir):
     separately proven by fixture_parity / tests/test_parity.py)."""
     _ship_package(spark)
     pages = pages_from_documents(spark, sf_dir)
-    return extract_pages(pages, n_buckets=64, num_partitions=8).select(
+    return extract_pages(pages, num_partitions=8).select(
         "url", "title", "length", "readerable", "error"
     )
 
@@ -138,7 +138,7 @@ def _q_fixture_parity(spark, sf_dir):
 
     pages_path, _ = ensure_parity_parquets()
     pages = spark.read.parquet(pages_path)
-    arts = extract_pages(pages, n_buckets=16, num_partitions=8)
+    arts = extract_pages(pages, num_partitions=8)
     return arts.select(
         "url",
         F.md5(normalize_parity_col(F.col("text_content"))).alias("text_md5"),

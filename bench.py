@@ -56,12 +56,12 @@ def bench_queries(spark):
 
     def q_extract_documents():
         pages = pages_from_documents(spark, SF_DIR)
-        return _count(extract_pages(pages, n_buckets=256))
+        return _count(extract_pages(pages))
 
     def q_extract_synth():
         pages = synth_pages_distributed(spark, SYNTH_DOCS, seed=42, skew=True,
                                         num_partitions=int(CPUS))
-        return _count(extract_pages(pages, n_buckets=256))
+        return _count(extract_pages(pages))
 
     def q_extract_fixture_mix():
         # real-world HTML structures: the reference's own 118 pages expanded
@@ -72,7 +72,7 @@ def bench_queries(spark):
                                       num_partitions=int(CPUS))
         except FileNotFoundError:
             return 0
-        return _count(extract_pages(pages, n_buckets=256))
+        return _count(extract_pages(pages))
 
     def q_text_features():
         return _count(with_text_features(docs, "text"))
@@ -181,9 +181,9 @@ def run_scaling():
             try:
                 pages = spark.read.parquet(corpus_dir)
                 warm = pages.limit(int(cpus) * 4)
-                extract_pages(warm, n_buckets=256, num_partitions=int(cpus)).count()
+                extract_pages(warm, num_partitions=int(cpus)).count()
                 t0 = time.time()
-                n = extract_pages(pages, n_buckets=256, num_partitions=128).count()
+                n = extract_pages(pages, num_partitions=128).count()
                 dt = time.time() - t0
                 results[cpus] = {"sec": round(dt, 2), "docs_per_sec": round(n / dt, 2)}
             finally:

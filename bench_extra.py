@@ -70,13 +70,13 @@ def bench_dfs(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     return {
         "extract_documents": lambda: extract_pages(
-            pages_from_documents(spark, SF_DIR), n_buckets=256),
+            pages_from_documents(spark, SF_DIR)),
         "extract_synth": lambda: extract_pages(
             synth_pages_distributed(spark, SYNTH_DOCS, seed=42, skew=True,
-                                    num_partitions=int(CPUS)), n_buckets=256),
+                                    num_partitions=int(CPUS))),
         "extract_fixture_mix": lambda: extract_pages(
             fixture_mix_pages(spark, FIXTURE_DOCS, seed=42,
-                              num_partitions=int(CPUS)), n_buckets=256),
+                              num_partitions=int(CPUS))),
         "text_features": lambda: with_text_features(docs, "text"),
         "minhash_dedup": lambda: minhash_dedup_pairs(docs, threshold=0.5),
         "ann_topk": lambda: brute_force_topk(
@@ -126,19 +126,19 @@ def run_parts():
     spark = _session()
     try:
         noop(extract_pages(synth_pages_distributed(
-            spark, 200, seed=42, skew=True, num_partitions=int(CPUS)), n_buckets=256))
+            spark, 200, seed=42, skew=True, num_partitions=int(CPUS))))
         for parts in (None, 64, 128, 256):
             _time(spark, f"fixture_mix parts={parts}",
                   lambda p=parts: extract_pages(
                       fixture_mix_pages(spark, FIXTURE_DOCS, seed=42,
                                         num_partitions=int(CPUS)),
-                      n_buckets=256, num_partitions=p))
+                      num_partitions=p))
         for parts in (None, 64, 128, 256):
             _time(spark, f"synth parts={parts}",
                   lambda p=parts: extract_pages(
                       synth_pages_distributed(spark, SYNTH_DOCS, seed=42, skew=True,
                                               num_partitions=int(CPUS)),
-                      n_buckets=256, num_partitions=p))
+                      num_partitions=p))
     finally:
         spark.stop()
 

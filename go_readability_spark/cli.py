@@ -488,7 +488,7 @@ def cmd_crawl_fetch(args) -> int:
     gzip members under --warc-dir (sources/warc.py pages_from_fetch_plan)
     into the pages shape — the stage that closes CDX -> robots ->
     frontier -> FETCH -> extract.  With --extract the fetched pages run
-    straight through the salted extraction plan; with --segments K the
+    straight through the extraction plan; with --segments K the
     worklist runs as K archive-aligned sub-jobs so no single shuffle
     exceeds ~1/K of the corpus (plans/crawl.py)."""
     from .plans import build_session, ship_package
@@ -545,7 +545,9 @@ def main(argv=None) -> int:
                    help="checkpoint table dir: makes the job resumable "
                         "(task-committed per-bucket files, atomic rename), "
                         "so a killed job resumes at bucket granularity")
-    e.add_argument("--buckets", type=int, default=256, help="salt buckets")
+    e.add_argument("--buckets", type=int, default=256,
+                   help="salt buckets of the resumable sink; applies with "
+                        "--checkpoint")
     e.add_argument("--partitions", type=int, default=None)
     e.add_argument("--master", default=None, help="override spark master")
     e.add_argument("--no-resume", action="store_true")
@@ -653,7 +655,8 @@ def main(argv=None) -> int:
                          "stage, before scoring; without it, as a filter "
                          "on the fetched pages")
     cf.add_argument("--buckets", type=int, default=64,
-                    help="salt buckets for --extract")
+                    help="salt buckets of the resumable sink; applies "
+                         "with --extract --checkpoint")
     cf.add_argument("--checkpoint", default=None,
                     help="with --extract: checkpoint table dir; makes the "
                          "extraction resumable at bucket granularity "

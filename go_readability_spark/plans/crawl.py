@@ -3,12 +3,13 @@ WARC archives, optionally gated + extracted, optionally split into
 archive-aligned segments so each sub-job's shuffle footprint is bounded.
 
 Why segmentation exists (the 100-TB argument): the fetch+extract job's one
-shuffle repartitions every fetched page by salt, so its scratch footprint
-is proportional to the WHOLE worklist. On a cluster whose aggregate shuffle
-scratch is smaller than the corpus — always true at 10^12 documents — the
-job must be run as K sequential sub-jobs over disjoint slices of the plan,
-each with its own checkpoint and output partition, so no single shuffle
-ever exceeds ~1/K of the corpus. This module makes that the product
+shuffle repartitions every fetched page (by url hash; by salt bucket only
+in the resumable sink), so its scratch footprint is proportional to the
+WHOLE worklist. On a cluster whose aggregate shuffle scratch is smaller
+than the corpus — always true at 10^12 documents — the job must be run as
+K sequential sub-jobs over disjoint slices of the plan, each with its own
+checkpoint and output partition, so no single shuffle ever exceeds ~1/K of
+the corpus. This module makes that the product
 surface instead of an operator's bash loop: the 10M-page record in
 BENCH/BASELINE.md round 6 first hit ENOSPC as one monolithic job and
 completed cleanly as 4 segments.
@@ -64,7 +65,7 @@ def segment_input_files(input_dir: str, n_segments: int,
     """File-aligned segmentation for directory inputs (extract --segments).
 
     The batch extraction job has the same unbounded-shuffle exposure as
-    crawl-fetch: its salt repartition moves the WHOLE input. Splitting by
+    crawl-fetch: its one repartition moves the WHOLE input. Splitting by
     a row-level hash would not help — every segment would still scan every
     input file. Splitting by FILE prunes perfectly: each segment reads
     only its own files, so both scan and shuffle are ~1/K.
@@ -172,8 +173,9 @@ def run_crawl_fetch(
 
     With ``extract`` and a ``checkpoint_dir`` the extraction runs through
     the resumable bucket sink (run_extraction_job_atomic), so a rerun
-    skips the buckets already written; without a checkpoint each run
-    overwrites the output.
+    skips the buckets already written; ``n_buckets`` is that sink's salt
+    and applies only there. Without a checkpoint each run overwrites the
+    output through ``extract_pages``.
 
     With ``n_segments > 1`` the plan is split archive-aligned and the
     segments run as sequential Spark jobs, each writing
@@ -213,8 +215,7 @@ def run_crawl_fetch(
         elif extract:
             from .extract import extract_pages
 
-            extract_pages(pages, n_buckets=n_buckets,
-                          readerable_gate=readerable_gate).write.mode(
+            extract_pages(pages, readerable_gate=readerable_gate).write.mode(
                 "overwrite").parquet(seg_out)
         else:
             if readerable_gate:

@@ -5,9 +5,10 @@ actually runs —
         ──▶ MinHash near-dedup ──▶ curated corpus
 
 Each stage is one of this package's operators; the composition adds no new
-shuffle beyond what the stages own (extract: 1 salted repartition; dedup:
-groupBy fingerprint + LSH band join). Stage boundaries are natural Iceberg
-table checkpoints at scale.
+shuffle beyond what the stages own (extract: 1 repartition on xxhash64(url),
+no salt — only the resumable bucket sink salts; dedup: groupBy fingerprint
++ LSH band join). Stage boundaries are natural Iceberg table checkpoints at
+scale.
 """
 
 from __future__ import annotations
@@ -44,7 +45,6 @@ def curate_corpus(
     min_quality: float = 0.3,
     languages: tuple = ("en",),
     near_dup_threshold: float = 0.7,
-    n_buckets: int = 256,
     num_partitions: int | None = None,
     gopher_gate: bool = False,
     redact_pii: bool = False,
@@ -82,9 +82,9 @@ def curate_corpus(
 
     extract=False takes a PRE-EXTRACTED corpus instead of raw pages
     (articles_from_texts over WET docs — Common Crawl's text sidecar):
-    the extraction UDF, its salt shuffle, and n_buckets
-    are all skipped; every downstream gate (lang/quality/Gopher/LM/PII,
-    exact + near dedup) applies unchanged. host_rank_floor without a
+    the extraction UDF and its url-hash shuffle are skipped; every
+    downstream gate (lang/quality/Gopher/LM/PII, exact + near dedup)
+    applies unchanged. host_rank_floor without a
     `host_ranks` table is refused — it needs the raw html's anchors,
     which WET does not carry.
 
@@ -135,11 +135,7 @@ def curate_corpus(
         )
 
     if extract:
-        articles = extract_pages(
-            pages,
-            n_buckets=n_buckets,
-            num_partitions=num_partitions,
-        )
+        articles = extract_pages(pages, num_partitions=num_partitions)
     else:
         articles = pages  # already article-shaped (articles_from_texts)
 

@@ -1,5 +1,5 @@
-"""The extraction pipeline: Iceberg/parquet scan → salt → one exchange →
-Arrow-batched mapInPandas extraction → sink, with per-partition
+"""The extraction pipeline: Iceberg/parquet scan → one exchange →
+Arrow-batched mapInPandas extraction → sink, with per-bucket
 checkpoint/lineage rows for resumability (SURVEY.md §3 'Spark lifecycle').
 
 Design notes for 10^12-row scale:
@@ -11,7 +11,8 @@ Design notes for 10^12-row scale:
   ``extract_pages`` keys it on the full-width ``xxhash64(url)``, which
   spreads rows evenly; the resumable sink keys it on the salt
   ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly one
-  task, which is what makes bucket-level resume sound.
+  task, which is what makes bucket-level resume sound. The salt is the
+  sink's own unit of lineage; no other plan computes it.
 * The extraction itself is partition-local: one ``mapInPandas`` call per
   partition, iterator form, so the compiled regexes and parser setup
   amortize across all Arrow batches of the partition (no per-row Python
@@ -28,6 +29,7 @@ Design notes for 10^12-row scale:
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import time
@@ -158,15 +160,11 @@ _GC_EVERY_TASKS = 8
 _GC_STATE = {"tasks": 0}
 
 
-def _extraction_task(batches, readerable_gate, publish=None):
-    """The body of one extraction task, shared by both mapInPandas
-    functions. Yields article frames; with ``publish``, hands the frames
-    grouped per salt bucket to ``publish`` instead and yields nothing.
-    Returns the per-bucket stats (the generator's return value)."""
+@contextlib.contextmanager
+def _gc_paused():
+    """Pauses the cyclic collector for one extraction task's body; both
+    mapInPandas functions run inside it."""
     import gc
-
-    bucket_stats: dict[str, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
-    per_bucket_frames: dict[int, list] = {}
 
     # extract_record tears its trees down explicitly, so the cyclic
     # collector has nothing useful to do mid-partition — its full
@@ -175,14 +173,7 @@ def _extraction_task(batches, readerable_gate, publish=None):
     gc_was_enabled = gc.isenabled()
     gc.disable()
     try:
-        for pdf in _extract_frames(batches, bucket_stats, readerable_gate):
-            if publish is None:
-                yield pdf.drop(columns=["_salt"])
-                continue
-            for salt_val, group in pdf.groupby("_salt", sort=False):
-                per_bucket_frames.setdefault(int(salt_val), []).append(
-                    group.drop(columns=["_salt"])
-                )
+        yield
     finally:
         if gc_was_enabled:
             gc.enable()
@@ -190,30 +181,24 @@ def _extraction_task(batches, readerable_gate, publish=None):
             if _GC_STATE["tasks"] % _GC_EVERY_TASKS == 0:
                 gc.collect()
 
-    if publish is not None:
-        publish(per_bucket_frames)
-    return bucket_stats
-
 
 def make_extractor(readerable_gate: bool = False):
     """Build the mapInPandas function. Iterator form: per-partition setup
     runs once, then every Arrow batch streams through."""
 
     def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        return _extraction_task(batches, readerable_gate)
+        with _gc_paused():
+            yield from _extract_frames(batches, readerable_gate)
 
     return extract_batches
 
 
-def _bucket_columns(bucket_stats) -> dict[str, list]:
-    """bucket_stats as one int column per _BUCKET_COUNTS name."""
-    return {name: [int(v[i]) for v in bucket_stats.values()]
-            for i, name in enumerate(_BUCKET_COUNTS)}
-
-
-def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started):
-    """Append one lineage row per completed salt bucket. Atomic per task:
-    written to a unique file name, so concurrent tasks never collide.
+def _write_checkpoint_rows(checkpoint_dir, stats, started):
+    """Append one lineage row per completed salt bucket (one per row of
+    the sink's ``stats`` frame: salt + _BUCKET_COUNTS). Atomic per task:
+    written to a unique file name, so concurrent tasks never collide, and
+    published by rename, so a write killed halfway leaves only a
+    dot-prefixed tmp that readers skip, never a truncated visible file.
     (Production: Iceberg transactional append — same rows, same schema.)"""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -227,19 +212,21 @@ def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started):
         attempt = 1
 
     finished = datetime.now(timezone.utc).replace(tzinfo=None)
-    n = len(bucket_stats)
+    n = len(stats)
     rows = {
-        "partition_key": list(bucket_stats.keys()),
+        "partition_key": stats["salt"].astype(str).tolist(),
         "attempt": [attempt] * n,
         "status": ["done"] * n,
-        **_bucket_columns(bucket_stats),
+        **{c: stats[c].tolist() for c in _BUCKET_COUNTS},
         "started_at": [started] * n,
         "finished_at": [finished] * n,
     }
     os.makedirs(checkpoint_dir, exist_ok=True)
-    path = os.path.join(checkpoint_dir, f"ckpt-{uuid.uuid4().hex}.parquet")
-    pq.write_table(pa.table(rows, schema=_arrow_schema(CHECKPOINT_SCHEMA)), path,
+    name = f"ckpt-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(checkpoint_dir, f".{name}.tmp")
+    pq.write_table(pa.table(rows, schema=_arrow_schema(CHECKPOINT_SCHEMA)), tmp,
                    compression=_output_codec())
+    os.replace(tmp, os.path.join(checkpoint_dir, name))
 
 
 def with_salt(pages: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
@@ -247,7 +234,7 @@ def with_salt(pages: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame
     return pages.withColumn("salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)))
 
 
-def default_extract_partitions(spark, n_buckets: int) -> int:
+def _extract_partitions(spark) -> int:
     """Default extraction partition count (r7, measured — guide §1.1).
 
     The r7 straggler hypothesis (per-doc cost varies ~20x on real
@@ -260,11 +247,15 @@ def default_extract_partitions(spark, n_buckets: int) -> int:
     therefore LOSE below ~100 docs/task: the interleaved A/B measured
     32 partitions beating 128 by ~2x on all three extraction benches.
     The default is the session's shuffle-partition setting, floored at
-    one task per core and capped at ``n_buckets`` (the salt has only
-    that many distinct values, so extra partitions sit empty)."""
+    one task per core."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    par = max(1, spark.sparkContext.defaultParallelism)
-    return max(1, min(int(n_buckets), max(shuffle, par)))
+    return max(1, shuffle, spark.sparkContext.defaultParallelism)
+
+
+def default_extract_partitions(spark, n_buckets: int) -> int:
+    """The resumable sink's partition count: ``_extract_partitions``
+    capped at ``n_buckets``, the salt's number of distinct values."""
+    return max(1, min(int(n_buckets), _extract_partitions(spark)))
 
 
 def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str,
@@ -336,14 +327,12 @@ def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | Non
 
 def extract_pages(
     pages: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
     num_partitions: int | None = None,
     readerable_gate: bool = False,
 ) -> DataFrame:
     """The extraction plan:
 
     pages → select(url, warc_ts, html)          # column pruning to the scan
-          → withColumn(salt, pmod(xxhash64(url), B))
           → repartition(P, xxhash64(url))       # the even full-width key
           → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
 
@@ -351,16 +340,15 @@ def extract_pages(
     mapInPandas stage, before scoring. A pure transform: resumable jobs
     go through ``run_extraction_job`` with a ``checkpoint_dir``.
     """
-    spark = pages.sparkSession
-    df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
+    df = pages.select("url", "warc_ts", "html")
     # no resume semantics on this plan, so the exchange is keyed on the
-    # full-width hash: n_buckets salt values hashed into P partitions
-    # leave measured row-count imbalance (guide §2.5: use 20-100x more
-    # distinct keys than partitions; at n_buckets/P = 8 the per-task row
-    # counts ranged 15-69 around a mean of 31 on the fixture bench, max
-    # task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
+    # full-width hash, not on B coarse buckets: B values hashed into P
+    # partitions leave measured row-count imbalance (guide §2.5: use
+    # 20-100x more distinct keys than partitions; at B/P = 8 the per-task
+    # row counts ranged 15-69 around a mean of 31 on the fixture bench,
+    # max task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
     # multinomially and stays retry-safe (deterministic key, not rand()).
-    df = df.repartition(num_partitions or default_extract_partitions(spark, n_buckets),
+    df = df.repartition(num_partitions or _extract_partitions(pages.sparkSession),
                         F.xxhash64(F.col("url")))
     return df.mapInPandas(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
@@ -468,46 +456,53 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
 
     def sink_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         started = datetime.now(timezone.utc).replace(tzinfo=None)
-        bucket_stats = yield from _extraction_task(batches, readerable_gate, publish)
-        if checkpoint_dir and bucket_stats:
-            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started)
-        yield pd.DataFrame({"salt": [int(k) for k in bucket_stats],
-                            **_bucket_columns(bucket_stats)})
+        bucket_stats: dict[int, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
+        per_bucket_frames: dict[int, list] = {}
+        with _gc_paused():
+            for pdf in batches:
+                # every input row counts in rows_in/bytes_in, gated-out
+                # pages included; the batch is dropped once extracted
+                salts = pdf["salt"].to_numpy()
+                for salt, html in zip(salts.tolist(), pdf["html"].tolist()):
+                    st = bucket_stats.setdefault(salt, [0, 0, 0, 0])
+                    st[0] += 1
+                    st[3] += len(html) if html is not None else 0
+                for out in _extract_frames([pdf], readerable_gate):
+                    for salt, group in out.groupby(salts[out.index], sort=False):
+                        per_bucket_frames.setdefault(int(salt), []).append(group)
+                        errors = int(group["error"].notna().sum())
+                        st = bucket_stats[int(salt)]
+                        st[1] += len(group) - errors
+                        st[2] += errors
+        publish(per_bucket_frames)
+        stats = pd.DataFrame([[salt, *counts] for salt, counts in bucket_stats.items()],
+                             columns=["salt", *_BUCKET_COUNTS])
+        if checkpoint_dir and len(stats):
+            _write_checkpoint_rows(checkpoint_dir, stats, started)
+        yield stats
 
     return sink_batches
 
 
-def _extract_frames(batches, bucket_stats, readerable_gate=False):
-    """Shared extraction loop: yields article DataFrames with a `_salt`
-    helper column; per-bucket stats accumulate only when the input
-    carries a salt column (unsalted inputs get no checkpoint rows).
-    Gated-out pages count only in rows_in and bytes_in."""
+def _extract_frames(batches, readerable_gate=False):
+    """The per-row loop both mapInPandas functions share: yields one
+    article frame per input batch that keeps a row, indexed by the kept
+    rows' positions in that batch (gated-out pages leave gaps)."""
     import pandas as pd
 
     for pdf in batches:
         data: dict[str, list] = {c: [] for c in _COLUMNS}
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        warc = pdf["warc_ts"].tolist() if "warc_ts" in pdf.columns else [None] * len(urls)
-        has_salt = "salt" in pdf.columns
-        salts = pdf["salt"].tolist() if has_salt else [0] * len(urls)
-        kept_salts = []
-        for url, html, ts, salt in zip(urls, htmls, warc, salts):
+        kept = []
+        rows = zip(pdf["url"].tolist(), pdf["html"].tolist(), pdf["warc_ts"].tolist())
+        for i, (url, html, ts) in enumerate(rows):
             rec = extract_record(url, html, readerable_gate)
-            if has_salt:
-                st = bucket_stats.setdefault(str(salt), [0, 0, 0, 0])
-                st[0] += 1
-                st[3] += len(html) if html is not None else 0
             if rec is None:
                 continue
             rec["warc_ts"] = ts
             for c in _COLUMNS:
                 data[c].append(rec[c])
-            kept_salts.append(salt)
-            if has_salt:
-                st[1] += 0 if rec["error"] else 1
-                st[2] += 1 if rec["error"] else 0
-        if not kept_salts:
+            kept.append(i)
+        if not kept:
             continue
         out = pd.DataFrame(
             {
@@ -521,7 +516,7 @@ def _extract_frames(batches, bucket_stats, readerable_gate=False):
                 for c in _COLUMNS
             }
         )
-        out["_salt"] = pd.Series(kept_salts, dtype="int64")
+        out.index = kept
         yield out
 
 
@@ -600,8 +595,7 @@ def run_extraction_job(
         return run_extraction_job_atomic(
             pages, output_dir, checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
             num_partitions=num_partitions, resume=resume, partition_by=partition_by)
-    writer = extract_pages(pages, n_buckets=n_buckets,
-                           num_partitions=num_partitions).write.mode("append")
+    writer = extract_pages(pages, num_partitions=num_partitions).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(output_dir)

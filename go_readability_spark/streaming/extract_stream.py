@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..plans.extract import make_extractor, with_salt
+from ..plans.extract import make_extractor
 from ..plans.schema import ARTICLES_SCHEMA, PAGES_SCHEMA
 
 
@@ -45,14 +45,13 @@ def read_pages_stream_warc(
     )
 
 
-def extract_pages_stream(pages_stream: DataFrame, n_buckets: int = 64,
+def extract_pages_stream(pages_stream: DataFrame,
                          readerable_gate: bool = False) -> DataFrame:
     """Streaming extraction: stateless mapInPandas, so it composes with any
     sink; watermarks aren't needed (per-row transform, no event-time agg).
     ``readerable_gate`` drops pages that fail Check inside that stage."""
-    df = with_salt(pages_stream.select("url", "warc_ts", "html"), n_buckets)
-    return df.mapInPandas(make_extractor(readerable_gate),
-                          schema=ARTICLES_SCHEMA)
+    return pages_stream.select("url", "warc_ts", "html").mapInPandas(
+        make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
 
 def run_discovery_stream(

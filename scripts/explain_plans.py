@@ -41,7 +41,7 @@ def main():
         run_extraction_job(pages, articles, checkpoint_dir=ckpt, n_buckets=16,
                            num_partitions=2)
 
-        out.append("## extract_pages (scan → salt → mapInPandas)\n```")
+        out.append("## extract_pages (scan → xxhash64(url) exchange → mapInPandas)\n```")
         out.append(formatted(extract_pages(pages, num_partitions=2)))
         out.append("```\n")
 

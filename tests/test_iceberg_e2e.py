@@ -85,7 +85,7 @@ def test_extract_into_iceberg_with_transactional_resume(iceberg_spark, tmp_path)
 
     _write_pages(iceberg_spark, 30, seed=11)
     pages = read_pages(iceberg_spark, "crawl.db.pages", format="iceberg")
-    arts = extract_pages(pages, n_buckets=16, num_partitions=4).select(
+    arts = extract_pages(pages, num_partitions=4).select(
         "url", "title", "text_content", "length", "readerable", "error"
     )
     arts.writeTo("crawl.db.articles").createOrReplace()
@@ -96,7 +96,7 @@ def test_extract_into_iceberg_with_transactional_resume(iceberg_spark, tmp_path)
     done = iceberg_spark.table("crawl.db.articles").select("url")
     remaining = pages.join(F.broadcast(done), "url", "left_anti")
     assert remaining.count() == 0  # everything extracted -> nothing to do
-    extract_pages(remaining, n_buckets=16, num_partitions=4).select(
+    extract_pages(remaining, num_partitions=4).select(
         "url", "title", "text_content", "length", "readerable", "error"
     ).writeTo("crawl.db.articles").append()
     assert iceberg_spark.table("crawl.db.articles").count() == n1  # no dupes

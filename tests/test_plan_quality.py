@@ -50,8 +50,8 @@ def test_resume_antijoin_is_broadcast(spark, pages_parquet, tmp_path):
 
 
 def test_single_exchange_in_extract(spark, pages_parquet):
-    """Exactly one shuffle: the salted repartition. (AQE may add a read
-    node, but there must be a single Exchange operator.)"""
+    """Exactly one shuffle: the repartition on xxhash64(url). (AQE may add
+    a read node, but there must be a single Exchange operator.)"""
     from go_readability_spark.plans import extract_pages
 
     df = extract_pages(spark.read.parquet(pages_parquet), num_partitions=4)
@@ -70,10 +70,14 @@ def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp
     from go_readability_spark.plans.extract import _salted_exchange
 
     pages = spark.read.parquet(pages_parquet)
-    no_resume = _plan(extract_pages(pages, n_buckets=16, num_partitions=4))
+    no_resume = _plan(extract_pages(pages, num_partitions=4))
     m = re.search(r"hashpartitioning\(([^)]*)", no_resume)
     assert m and "xxhash64(url" in m.group(1), no_resume
     assert no_resume.count("Exchange") == 1, no_resume
+    # the salt is the resumable sink's alone: extract_pages never computes
+    # or ships it
+    assert "salt" not in no_resume, no_resume
+    assert "pmod(" not in no_resume, no_resume
 
     resumable = _plan(_salted_exchange(pages, 16, 4, str(tmp_path / "ckpt_key"), True,
                                        str(tmp_path / "out_key")))

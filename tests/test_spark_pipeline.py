@@ -194,19 +194,19 @@ def test_resume_verifies_output(spark, tmp_path):
 
 
 def test_extraction_partitioning_invariance(spark):
-    """Per-url results must not depend on bucket count, partition count, or
-    parallelism — the cluster-resize invariant behind the scaling claim."""
+    """Per-url results must not depend on partition count or parallelism —
+    the cluster-resize invariant behind the scaling claim."""
     from go_readability_spark.plans import extract_pages
     from go_readability_spark.sources import synth_pages_dataframe
 
     pages = synth_pages_dataframe(spark, 30, seed=41, skew=True)
     a = {
         r["url"]: (r["text_content"], r["title"], r["length"], r["readerable"])
-        for r in extract_pages(pages, n_buckets=4, num_partitions=2).collect()
+        for r in extract_pages(pages, num_partitions=2).collect()
     }
     b = {
         r["url"]: (r["text_content"], r["title"], r["length"], r["readerable"])
-        for r in extract_pages(pages, n_buckets=512, num_partitions=16).collect()
+        for r in extract_pages(pages, num_partitions=16).collect()
     }
     assert a == b
 
@@ -246,7 +246,7 @@ def test_partitioned_output_and_resume(spark, tmp_path, hostile):
     assert first.count() == len(rows) and "lang" in first.columns
 
     ref = str(tmp_path / "spark_part")
-    extract_pages(pages, n_buckets=8, num_partitions=4).write.partitionBy("lang").parquet(ref)
+    extract_pages(pages, num_partitions=4).write.partitionBy("lang").parquet(ref)
 
     def url_lang(path):
         return sorted(map(tuple, spark.read.parquet(path).select("url", "lang").collect()))
@@ -598,6 +598,7 @@ def test_output_codec_knob(tmp_path, monkeypatch):
     env caching."""
     import time
 
+    import pandas as pd
     import pyarrow.parquet as pq
 
     from go_readability_spark.plans.extract import (
@@ -610,7 +611,8 @@ def test_output_codec_knob(tmp_path, monkeypatch):
     ck = str(tmp_path / "ck")
     from datetime import datetime, timezone
     started = datetime.now(timezone.utc).replace(tzinfo=None)
-    _write_checkpoint_rows(ck, {"7": [3, 3, 0, 123]}, started)
+    _write_checkpoint_rows(ck, pd.DataFrame({"salt": [7], "rows_in": [3], "rows_out": [3],
+                                             "parse_errors": [0], "bytes_in": [123]}), started)
     import glob
     f = glob.glob(f"{ck}/ckpt-*.parquet")[0]
     meta = pq.ParquetFile(f).metadata

@@ -47,10 +47,10 @@ def surfaces(spark, tmp_path_factory):
     for gate in (False, True):
         leg = "gated" if gate else "plain"
         got["batch"][leg] = _by_url(extract_pages(
-            pages, n_buckets=N_BUCKETS, num_partitions=4,
+            pages, num_partitions=4,
             readerable_gate=gate).collect())
         got["stream"][leg] = _by_url(extract_pages_stream(
-            pages, n_buckets=N_BUCKETS, readerable_gate=gate).collect())
+            pages, readerable_gate=gate).collect())
         out, ckpt = str(tmp / f"out_{leg}"), str(tmp / f"ckpt_{leg}")
         dirs[leg] = (out, ckpt)
         run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
@@ -64,7 +64,10 @@ def surfaces(spark, tmp_path_factory):
     return got, dirs, restart
 
 
-def test_surfaces_agree_per_url(surfaces):
+def test_surfaces_agree_per_url(spark, surfaces):
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+    from go_readability_spark.streaming import extract_pages_stream
+
     got, _, _ = surfaces
     urls = {r["url"] for r in _corpus_rows()}
     batch = got["batch"]["plain"]
@@ -73,6 +76,10 @@ def test_surfaces_agree_per_url(surfaces):
     assert got["stream"]["plain"] == batch
     # the corpus exercises both sides of the gate
     assert 0 < sum(r["readerable"] is True for r in batch.values()) < len(batch)
+    # the streaming plan is select -> mapInPandas: no exchange, no salt
+    stream = extract_pages_stream(spark.createDataFrame(_corpus_rows(), schema=PAGES_SCHEMA))
+    plan = stream._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "salt" not in plan, plan
 
 
 @pytest.mark.parametrize("surface", ["batch", "atomic", "stream"])
@@ -83,14 +90,26 @@ def test_gated_equals_ungated_filtered(surfaces, surface):
     assert got[surface]["gated"] == want
 
 
-def test_gated_atomic_restart_writes_nothing(spark, surfaces):
+def test_gated_atomic_restart_writes_nothing(spark, surfaces, tmp_path):
     """Gated-out rows count in rows_in/bytes_in only, so rows_out matches
     the bucket's data file; a bucket whose every page was gated gets a
     lineage row with rows_out = 0 and no data file, and still counts as
-    done on restart."""
+    done on restart. Every bucket's four counters, in its lineage row and
+    in the sink's stats frame, equal the counts Spark computes from the
+    input pages and the ungated output."""
     from pyspark.sql import functions as F
 
-    from go_readability_spark.plans.extract import completed_buckets
+    from go_readability_spark.plans.extract import (
+        _salted_exchange,
+        completed_buckets,
+        make_extractor,
+        make_sink_extractor,
+    )
+    from go_readability_spark.plans.schema import (
+        ARTICLES_SCHEMA,
+        PAGES_SCHEMA,
+        SINK_STATS_SCHEMA,
+    )
 
     _, dirs, restart = surfaces
     out, ckpt = dirs["gated"]
@@ -106,6 +125,56 @@ def test_gated_atomic_restart_writes_nothing(spark, surfaces):
     done = {r["salt"] for r in completed_buckets(
         spark, ckpt, verify_output_dir=out, n_buckets=N_BUCKETS).collect()}
     assert done == set(rows)
+
+    # every counter of every bucket, on the gated corpus plus pages that
+    # pass Check and then fail scoring; the failure is raised inside the
+    # Python worker, so the wrapper is a closure (pickled by value)
+    def scoring_fails(mapper):
+        def run(batches):
+            from go_readability_spark.readability import Parser
+
+            score = Parser.parse_document
+
+            def parse_document(self, doc, url):
+                if "/scoring-fails/" in url:
+                    raise RuntimeError("scoring failed")
+                return score(self, doc, url)
+
+            Parser.parse_document = parse_document
+            try:
+                yield from mapper(batches)
+            finally:
+                Parser.parse_document = score
+        return run
+
+    failing = [dict(r, url=f"https://x.example.org/scoring-fails/{i}.html")
+               for i, r in enumerate(_corpus_rows()[:3])]
+    pages = spark.createDataFrame(_corpus_rows() + failing, schema=PAGES_SCHEMA)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    stats = _salted_exchange(pages, N_BUCKETS, 4, None, False, out).mapInPandas(
+        scoring_fails(make_sink_extractor(out, ckpt, readerable_gate=True)),
+        schema=SINK_STATS_SCHEMA).collect()
+    ungated = pages.select("url", "warc_ts", "html").mapInPandas(
+        scoring_fails(make_extractor()), schema=ARTICLES_SCHEMA)
+
+    bucket = F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS)).alias("bucket")
+    want = {r["bucket"]: [r["rows_in"], 0, 0, r["bytes_in"]]
+            for r in pages.groupBy(bucket).agg(
+                F.count("*").alias("rows_in"),
+                F.coalesce(F.sum(F.octet_length("html")), F.lit(0)).alias("bytes_in"),
+            ).collect()}
+    # the gate keeps exactly the ungated records that pass Check
+    for r in ungated.where(F.col("readerable")).groupBy(bucket).agg(
+            F.count(F.when(F.col("error").isNull(), 1)).alias("rows_out"),
+            F.count("error").alias("parse_errors")).collect():
+        want[r["bucket"]][1:3] = [r["rows_out"], r["parse_errors"]]
+    assert sum(w[2] for w in want.values()) == len(failing)
+
+    counters = ["rows_in", "rows_out", "parse_errors", "bytes_in"]
+    lineage = spark.read.parquet(ckpt).collect()
+    assert len(lineage) == len(want)  # one lineage row per bucket
+    assert {int(r["partition_key"]): [r[c] for c in counters] for r in lineage} == want
+    assert {r["salt"]: [r[c] for c in counters] for r in stats} == want
 
 
 def test_all_gated_job_resumes_without_output(spark, tmp_path):
@@ -125,6 +194,46 @@ def test_all_gated_job_resumes_without_output(spark, tmp_path):
     assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
                                      n_buckets=N_BUCKETS, num_partitions=2,
                                      readerable_gate=True) == 0
+
+
+def test_killed_checkpoint_write_leaves_no_visible_file(spark, tmp_path, monkeypatch):
+    """A lineage write that dies halfway (ENOSPC, kill) leaves no visible
+    ckpt-*.parquet, so the restart over that checkpoint dir still reads
+    it and completes."""
+    import errno
+    import io
+    from datetime import datetime
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from go_readability_spark.plans import run_extraction_job_atomic
+    from go_readability_spark.plans.extract import _write_checkpoint_rows
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+
+    pages = spark.createDataFrame(_corpus_rows(), schema=PAGES_SCHEMA)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
+                                     n_buckets=N_BUCKETS, num_partitions=2) > 0
+    visible = sorted(glob.glob(os.path.join(ckpt, "ckpt-*.parquet")))
+    write_table = pq.write_table
+
+    def dies_halfway(table, where, **kwargs):
+        buf = io.BytesIO()
+        write_table(table, buf, **kwargs)
+        with open(where, "wb") as fh:
+            fh.write(buf.getvalue()[:len(buf.getvalue()) // 2])
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(pq, "write_table", dies_halfway)
+    stats = pd.DataFrame({"salt": [0], "rows_in": [1], "rows_out": [1],
+                          "parse_errors": [0], "bytes_in": [10]})
+    with pytest.raises(OSError):
+        _write_checkpoint_rows(ckpt, stats, datetime(2026, 1, 1))
+    monkeypatch.undo()
+    assert sorted(glob.glob(os.path.join(ckpt, "ckpt-*.parquet"))) == visible
+    assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
+                                     n_buckets=N_BUCKETS, num_partitions=2) == 0
 
 
 def test_on_disk_format(surfaces):

@@ -138,8 +138,7 @@ def test_pages_from_warc_strict_raises(spark, warc_dir):
 def test_warc_feeds_extraction_plan(spark, warc_dir):
     from go_readability_spark.plans.extract import extract_pages
 
-    arts = extract_pages(pages_from_warc(spark, warc_dir), n_buckets=4,
-                         num_partitions=4)
+    arts = extract_pages(pages_from_warc(spark, warc_dir), num_partitions=4)
     got = {r.url: r for r in arts.collect()}
     assert len(got) == 7
     a0 = got["http://example.org/a0"]
@@ -325,7 +324,7 @@ def test_ranged_fetch_matches_whole_archive(spark, tmp_path):
         assert fetched[u].warc_ts == whole[u].warc_ts
     arts = {r.url: r
             for r in extract_pages(pages_from_fetch_plan(plan, str(d)),
-                                   n_buckets=2, num_partitions=2).collect()}
+                                   num_partitions=2).collect()}
     assert len(arts) == len(urls)
     assert arts["http://example.org/r0"].title == "T0"
     assert arts["http://example.org/r0"].error is None
