@@ -11,6 +11,13 @@ Per-node readability state (content score, data-table marker) is kept as
 (parser.go:2235-2282) because the %.4f round-trip quantization of scores is
 observable in candidate ordering, and because attribute-based state must
 survive the per-attempt document clone (parser.go:768).
+
+One deliberate deviation from the reference: the retry sieve
+(parser.go:1196-1249) skips a retry that would replay the attempt just run.
+Each sieve flag has one reader, and an attempt records which of them
+decided something. A retry whose flag decided nothing, in an attempt that
+left the byline unchanged, would run the same operations on the same clone,
+so it is skipped; the output is the same bytes (see ``_grab_article``).
 """
 
 from __future__ import annotations
@@ -73,6 +80,9 @@ def _WS_ONLY(s: str) -> bool:
 _PRESENTATIONAL_SET = frozenset(rx.PRESENTATIONAL_ATTRIBUTES)
 _PRESENTATIONAL_PLUS_SIZE = _PRESENTATIONAL_SET | {"width", "height"}
 
+# the retry sieve turns these Flags off one per retry, in this order
+_SIEVE_FLAGS = ("strip_unlikelys", "use_weight_classes", "clean_conditionally")
+
 _CLEAN_COND_TAGS = frozenset(
     ("ul", "ol", "p", "img", "li", "input", "object", "embed", "iframe",
      "h1", "h2", "h3", "h4", "h5", "h6")
@@ -132,6 +142,9 @@ class Parser:
     article_lang: str = ""
     attempts: list = field(default_factory=list)
     flags: Flags = field(default_factory=Flags)
+    # names of the Flags whose branch decided something in the current
+    # grab attempt (reset per attempt; read by the retry sieve)
+    fired: set = field(default_factory=set, init=False, repr=False)
 
     # ------------------------------------------------------------ score state
 
@@ -421,6 +434,8 @@ class Parser:
             weight += rx.class_weight_string(cls)
         if nid != "":
             weight += rx.class_weight_string(nid)
+        if weight:
+            self.fired.add("use_weight_classes")
         return weight
 
     def _initialize_node(self, node) -> None:
@@ -713,8 +728,27 @@ class Parser:
             )
 
     def _grab_article(self):
-        """parser.go:764-1250: the scoring core with its retry sieve."""
+        """parser.go:764-1250: the scoring core with its retry sieve.
+
+        Deviation from parser.go:1196-1249: a retry that provably replays
+        the attempt just run is skipped. Only two pieces of state carry
+        from one attempt to the next: ``self.flags`` and
+        ``self.article_byline`` (once set, ``_check_byline`` stops removing
+        the byline node); the document is re-cloned and the language
+        re-read each time. Each flag has exactly one reader: the unlikely
+        and role removals, ``_get_class_weight`` and ``_clean_conditionally``.
+        So when an attempt left the byline unchanged and the flag the next
+        retry turns off never fired (no removal, a zero weight, no node
+        removed), that retry would run the same operations on the same
+        clone and end with the same (content, length) and the same fired
+        flags: the sieve turns the next flag off instead, and keeps going
+        until a flag that fired. With no flag left it selects as before;
+        the sort is stable, so a skipped replay could only have tied an
+        earlier attempt, which wins the tie. ``self.attempts`` holds the
+        attempts actually run."""
         while True:
+            self.fired.clear()
+            byline_before = self.article_byline
             doc = self.doc.clone(True)
             page = body_element(doc)
             if page is None:
@@ -766,6 +800,7 @@ class Parser:
                         and node_tag != "a"
                     ):
                         self._logf("removing unlikely candidate: %r", match_string)
+                        self.fired.add("strip_unlikelys")
                         node = self._remove_and_get_next(node)
                         continue
 
@@ -774,6 +809,7 @@ class Parser:
                         self._logf(
                             "removing content with role %r: %r", role, match_string
                         )
+                        self.fired.add("strip_unlikelys")
                         node = self._remove_and_get_next(node)
                         continue
 
@@ -991,12 +1027,13 @@ class Parser:
             text_length = char_count(get_inner_text(article_content, True))
             if text_length < self.char_thresholds:
                 self.attempts.append((article_content, text_length))
-                if self.flags.strip_unlikelys:
-                    self.flags.strip_unlikelys = False
-                elif self.flags.use_weight_classes:
-                    self.flags.use_weight_classes = False
-                elif self.flags.clean_conditionally:
-                    self.flags.clean_conditionally = False
+                replay = self.article_byline == byline_before
+                for name in _SIEVE_FLAGS:
+                    if getattr(self.flags, name):
+                        setattr(self.flags, name, False)
+                        if not replay or name in self.fired:
+                            break
+                        self._logf("skipping retry without %s: it decided nothing", name)
                 else:
                     self.attempts.sort(key=lambda a: a[1], reverse=True)
                     if self.attempts[0][1] == 0:
@@ -1213,7 +1250,13 @@ class Parser:
             return
         rx_video = self._video_filter()
 
-        def fn(node):
+        def remove(node):
+            if fishy(node):
+                self.fired.add("clean_conditionally")
+                return True
+            return False
+
+        def fishy(node):
             if tag == "table" and self._is_data_table(node):
                 return False
 
@@ -1292,7 +1335,7 @@ class Parser:
 
             return False
 
-        self._remove_nodes(get_elements_by_tag_name(element, tag), fn)
+        self._remove_nodes(get_elements_by_tag_name(element, tag), remove)
 
     def _get_char_count(self, node, s=",") -> int:
         """parser.go:1674-1677 — ASCII comma count only."""

@@ -116,3 +116,19 @@ def test_debug_flag_logs_decisions(caplog):
     with caplog.at_level(logging.INFO, "go_readability_spark.readability"):
         Parser(debug=True).parse_document(parse_html(html), "http://x/")
     assert any("unlikely candidate" in r.message for r in caplog.records)
+    assert not any("skipping retry without strip_unlikelys" in r.message
+                   for r in caplog.records)
+
+    # a short page with no unlikely nodes: the strip_unlikelys retry would
+    # replay the first attempt, so the sieve skips it and says why
+    short = b"<html><body><p>One short line, and nothing else.</p></body></html>"
+    caplog.clear()
+    with caplog.at_level(logging.INFO, "go_readability_spark.readability"):
+        Parser().parse_document(parse_html(short), "http://x/")
+    assert not caplog.records
+    with caplog.at_level(logging.INFO, "go_readability_spark.readability"):
+        Parser(debug=True).parse_document(parse_html(short), "http://x/")
+    assert any(
+        "skipping retry without strip_unlikelys: it decided nothing" in r.message
+        for r in caplog.records
+    )
