@@ -4,6 +4,8 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
+A leaf whose input is absent on this host reports null in "queries" and
+its reason in "skipped"; the total sums the leaves that ran.
 
 Usage:
   python bench.py                # full headline suite
@@ -40,6 +42,11 @@ def _count(df):
     return df.count()
 
 
+class LeafSkipped(Exception):
+    """A bench leaf whose input is absent: reported with its reason,
+    never timed."""
+
+
 def bench_queries(spark):
     from pyspark.sql import functions as F
 
@@ -70,8 +77,8 @@ def bench_queries(spark):
         try:
             pages = fixture_mix_pages(spark, FIXTURE_DOCS, seed=42,
                                       num_partitions=int(CPUS))
-        except FileNotFoundError:
-            return 0
+        except FileNotFoundError as exc:
+            raise LeafSkipped(str(exc)) from exc
         return _count(extract_pages(pages))
 
     def q_text_features():
@@ -105,12 +112,18 @@ def run_suite():
     spark = _session(CPUS)
     try:
         samples: dict[str, list] = {}
+        skipped: dict[str, str] = {}
         doc_counts = {}
         for i in range(repeats):
             for name, (fn, n_docs) in bench_queries(spark).items():
+                times = samples.setdefault(name, [])
                 t0 = time.time()
-                n = fn()
-                samples.setdefault(name, []).append(time.time() - t0)
+                try:
+                    n = fn()
+                except LeafSkipped as exc:
+                    skipped[name] = str(exc)
+                    continue
+                times.append(time.time() - t0)
                 doc_counts[name] = n_docs or n
 
         def _median(xs):
@@ -118,12 +131,13 @@ def run_suite():
             m = len(s) // 2
             return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
 
-        timings = {k: round(_median(v), 3) for k, v in samples.items()}
+        # a skipped leaf has no samples: null, never 0 s
+        timings = {k: round(_median(v), 3) if v else None for k, v in samples.items()}
         iqr = {
-            k: round(sorted(v)[(3 * len(v)) // 4] - sorted(v)[len(v) // 4], 3)
+            k: round(sorted(v)[(3 * len(v)) // 4] - sorted(v)[len(v) // 4], 3) if v else None
             for k, v in samples.items()
         }
-        total = round(sum(timings.values()), 3)
+        total = round(sum(t for t in timings.values() if t is not None), 3)
         extract_rate = round(doc_counts["extract_synth"] / timings["extract_synth"], 2)
         print(json.dumps({
             "metric": "readability extraction + corpus-ops wall time "
@@ -132,6 +146,7 @@ def run_suite():
             "unit": "sec",
             "queries": timings,
             "iqr": iqr,
+            "skipped": skipped,
             "repeats": repeats,
             "sf": SF_DIR.rstrip("/").split("sf")[-1],
             "docs_per_sec": extract_rate,

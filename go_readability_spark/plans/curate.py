@@ -5,7 +5,8 @@ actually runs —
         ──▶ MinHash near-dedup ──▶ curated corpus
 
 Each stage is one of this package's operators; the composition adds no new
-shuffle beyond what the stages own (extract: 1 repartition on xxhash64(url),
+shuffle beyond what the stages own (extract: at most 1 repartition on
+xxhash64(url), none over a scan that already gives every core a split, and
 no salt — only the resumable bucket sink salts; dedup: groupBy fingerprint
 + LSH band join). Stage boundaries are natural Iceberg table checkpoints at
 scale.

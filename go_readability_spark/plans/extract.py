@@ -1,15 +1,19 @@
-"""The extraction pipeline: Iceberg/parquet scan → one exchange →
-Arrow-batched mapInPandas extraction → sink, with per-bucket
+"""The extraction pipeline: Iceberg/parquet scan → [at most one exchange]
+→ Arrow-batched mapInPandas extraction → sink, with per-bucket
 checkpoint/lineage rows for resumability (SURVEY.md §3 'Spark lifecycle').
 
 Design notes for 10^12-row scale:
 
-* Column pruning is explicit: only (url, warc_ts, html) reach the shuffle;
+* Column pruning is explicit: only (url, warc_ts, html) leave the scan;
   Catalyst pushes the projection into the parquet/Iceberg scan.
-* Skew (host/size concentration in Common-Crawl) is defused by one
-  deterministic hash exchange — the only shuffle in the job.
-  ``extract_pages`` keys it on the full-width ``xxhash64(url)``, which
-  spreads rows evenly; the resumable sink keys it on the salt
+* Extracting a page is a per-row map, so HTML moves through an exchange
+  only where one is needed. ``extract_pages`` runs in place over an
+  exchange-free scan whose splits already give every core a task (a
+  crawl-scale table arrives in thousands of splits; task sizes then
+  follow the splits); otherwise, or when ``num_partitions`` is given, it
+  adds one deterministic hash exchange on the full-width
+  ``xxhash64(url)``, which spreads rows evenly. The resumable sink
+  always exchanges, keyed on the salt
   ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly one
   task, which is what makes bucket-level resume sound. The salt is the
   sink's own unit of lineage; no other plan computes it.
@@ -39,6 +43,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, functions as F
 
+from .parallelism import splits_fill_session
 from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA, SINK_STATS_SCHEMA
 
 DEFAULT_N_BUCKETS = 256
@@ -333,23 +338,34 @@ def extract_pages(
     """The extraction plan:
 
     pages → select(url, warc_ts, html)          # column pruning to the scan
-          → repartition(P, xxhash64(url))       # the even full-width key
+          → [repartition(P, xxhash64(url))]     # only when the input needs it
           → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
+
+    Extracting a page is a per-row map, so the pages move through an
+    exchange only when that buys parallelism: always when
+    ``num_partitions`` asks for P tasks, and otherwise unless the pruned
+    input is an exchange-free batch plan whose splits already give every
+    core a task (``splits_fill_session``). A multi-file scan then runs in
+    place, one Python task per split; a single-split table, a stream, or
+    an input that already shuffles (the crawl-fetch plan's repartition by
+    archive, whose AQE-coalesced task count is unknown until it runs) gets
+    the hash exchange.
 
     ``readerable_gate`` drops pages that fail Check inside that one
     mapInPandas stage, before scoring. A pure transform: resumable jobs
     go through ``run_extraction_job`` with a ``checkpoint_dir``.
     """
     df = pages.select("url", "warc_ts", "html")
-    # no resume semantics on this plan, so the exchange is keyed on the
-    # full-width hash, not on B coarse buckets: B values hashed into P
-    # partitions leave measured row-count imbalance (guide §2.5: use
-    # 20-100x more distinct keys than partitions; at B/P = 8 the per-task
-    # row counts ranged 15-69 around a mean of 31 on the fixture bench,
-    # max task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
-    # multinomially and stays retry-safe (deterministic key, not rand()).
-    df = df.repartition(num_partitions or _extract_partitions(pages.sparkSession),
-                        F.xxhash64(F.col("url")))
+    if num_partitions or not splits_fill_session(df):
+        # no resume semantics on this plan, so the exchange is keyed on the
+        # full-width hash, not on B coarse buckets: B values hashed into P
+        # partitions leave measured row-count imbalance (guide §2.5: use
+        # 20-100x more distinct keys than partitions; at B/P = 8 the per-task
+        # row counts ranged 15-69 around a mean of 31 on the fixture bench,
+        # max task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
+        # multinomially and stays retry-safe (deterministic key, not rand()).
+        df = df.repartition(num_partitions or _extract_partitions(pages.sparkSession),
+                            F.xxhash64(F.col("url")))
     return df.mapInPandas(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
 

@@ -26,12 +26,40 @@ its current partitioning offers less parallelism than the session
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+# a physical-plan node that runs Spark jobs before the plan's own tasks can
+# start: any exchange (shuffle, broadcast, reused), an AQE query stage, a
+# subquery, or the AQE wrapper itself (present only when the plan has one
+# of the others); matched on the node name that opens a tree-string line
+_STAGED_NODE = re.compile(
+    r"^[\s:|+-]*(?:\*\(\d+\) )?"
+    r"(?:\w*(?:Exchange|QueryStage)|\w*Subquery\w*|AdaptiveSparkPlan)\b",
+    re.MULTILINE)
 
 
 def session_parallelism(spark) -> int:
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, min(shuffle, spark.sparkContext.defaultParallelism))
+
+
+def splits_fill_session(df: DataFrame) -> bool:
+    """True iff `df` is a batch plan with no exchange of any kind whose
+    input splits number at least ``session_parallelism``: a per-row map
+    over it already gives every core a task, so it needs no exchange.
+
+    The plan is read before the split count is probed, because the probe
+    is free only on exchange-free plans: on a parquet scan
+    ``getNumPartitions`` launches no job, but on a plan holding an
+    exchange AQE first runs the shuffle (one job) and then answers with
+    its coalesced partition count."""
+    if df.isStreaming:
+        return False
+    if _STAGED_NODE.search(df._jdf.queryExecution().executedPlan().toString()):
+        return False
+    return df.rdd.getNumPartitions() >= session_parallelism(df.sparkSession)
 
 
 def ensure_scan_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for the engine's key plans into EXPLAIN.md —
-the plan-shape evidence (pruning, pushdown, broadcast, single exchange)
+the plan-shape evidence (pruning, pushdown, broadcast, at most one exchange)
 that tests/test_plan_quality.py asserts programmatically."""
 
 import contextlib
@@ -14,7 +14,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from go_readability_spark.operators import brute_force_topk, minhash_dedup_pairs
-from go_readability_spark.plans import build_session, extract_pages, run_extraction_job
+from go_readability_spark.plans import (
+    build_session,
+    extract_pages,
+    run_extraction_job,
+    session_parallelism,
+)
 from go_readability_spark.plans.extract import _salted_exchange
 from go_readability_spark.sources import synth_pages_distributed
 
@@ -41,8 +46,19 @@ def main():
         run_extraction_job(pages, articles, checkpoint_dir=ckpt, n_buckets=16,
                            num_partitions=2)
 
-        out.append("## extract_pages (scan → xxhash64(url) exchange → mapInPandas)\n```")
+        out.append("## extract_pages with num_partitions (scan → xxhash64(url) "
+                   "exchange → mapInPandas)\n```")
         out.append(formatted(extract_pages(pages, num_partitions=2)))
+        out.append("```\n")
+
+        # one file per core: the default plan extracts over the scan in place
+        split_path = f"{tmp}/pages_split"
+        synth_pages_distributed(spark, 32, seed=2, skew=False,
+                                num_partitions=session_parallelism(spark))\
+            .write.parquet(split_path)
+        out.append("## extract_pages over a scan with a split per core "
+                   "(scan → mapInPandas, no exchange)\n```")
+        out.append(formatted(extract_pages(spark.read.parquet(split_path))))
         out.append("```\n")
 
         out.append("## resumable sink prelude on resume (broadcast left_anti → "

@@ -15,7 +15,14 @@ from go_readability_spark.readability import from_url
 @pytest.fixture(scope="module")
 def httpd():
     fixture = os.path.join(TEST_PAGES, "001", "source.html")
-    body = open(fixture, "rb").read() if os.path.exists(fixture) else b"<p>hello world</p>"
+    if os.path.exists(fixture):
+        body = open(fixture, "rb").read()
+    else:
+        # without the reference corpus, a seeded in-repo article that
+        # passes Check, so the CLI and the server extract it
+        from go_readability_spark.sources.synthetic import synth_page
+
+        body = synth_page(seed=1, idx=0, host="example.org", n_paragraphs=12)["html"]
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):

@@ -1,6 +1,7 @@
 """Physical-plan assertions (SURVEY.md §4): these lock in the properties
 that make the pipeline survive a 100x scale-up — column pruning into the
-scan, broadcast resume-join, a single exchange, predicate pushdown."""
+scan, broadcast resume-join, at most one exchange (none over a scan that
+already gives every core a split), predicate pushdown."""
 
 import re
 
@@ -85,6 +86,113 @@ def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp
     assert m and m.group(1).startswith("salt"), resumable
     assert "xxhash64(url" not in m.group(1), resumable
     assert resumable.count("Exchange") == 1, resumable
+
+
+@pytest.fixture
+def four_way_session(spark):
+    """The session with at most 4 parallel tasks (session_parallelism ≤ 4),
+    so the 4-file ``pages_parquet`` fixture gives every core a split."""
+    from go_readability_spark.plans import session_parallelism
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    assert 2 <= session_parallelism(spark) <= 4
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+@pytest.fixture(scope="module")
+def one_file_pages(spark, pages_parquet, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("plans") / "pages_one_file")
+    spark.read.parquet(pages_parquet).coalesce(1).write.parquet(path)
+    return path
+
+
+def _jobs(spark):
+    """Job ids Spark has started so far (listener bus drained first)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _built_plan(spark, build):
+    """(plan string, jobs launched while building and planning it)."""
+    before = _jobs(spark)
+    plan = _plan(build())
+    return plan, _jobs(spark) - before
+
+
+def test_default_extract_over_split_scan_is_exchange_free(four_way_session, pages_parquet):
+    """Without num_partitions, a scan whose splits already give every core
+    a task is extracted in place: no exchange, one MapInPandas straight
+    over the pruned scan, and building the plan launches no job."""
+    from go_readability_spark.plans import extract_pages
+
+    spark = four_way_session
+    pages = spark.read.parquet(pages_parquet)
+    assert pages.rdd.getNumPartitions() == 4
+    for gate in (False, True):
+        plan, jobs = _built_plan(spark, lambda: extract_pages(pages, readerable_gate=gate))
+        assert "Exchange" not in plan, plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert not jobs, plan
+        read_schema = re.search(r"ReadSchema: ([^\n]+)", plan).group(1)
+        assert read_schema == "struct<url:string,warc_ts:timestamp,html:binary>", plan
+
+
+def test_default_extract_over_one_split_keeps_url_exchange(four_way_session, one_file_pages):
+    """A single-split input cannot feed every core: it keeps the one
+    xxhash64(url) exchange, and deciding so launches no job."""
+    from go_readability_spark.plans import extract_pages
+
+    spark = four_way_session
+    pages = spark.read.parquet(one_file_pages)
+    plan, jobs = _built_plan(spark, lambda: extract_pages(pages))
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(xxhash64(url" in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert not jobs, plan
+
+
+def test_default_extract_over_shuffled_input_keeps_url_exchange(four_way_session,
+                                                                pages_parquet):
+    """An input whose plan already holds an exchange, shuffle or broadcast,
+    keeps the xxhash64(url) exchange; its split count is never probed,
+    because the probe would run the shuffle first (the control below shows
+    it does)."""
+    from pyspark.sql import functions as F
+
+    from go_readability_spark.plans import extract_pages
+
+    spark = four_way_session
+    pages = spark.read.parquet(pages_parquet)
+    hosts = spark.createDataFrame([("https://site1",)], "host string")
+    broadcast_join = pages.join(F.broadcast(hosts), F.col("url").startswith(F.col("host")),
+                                "left_semi")
+    for shuffled in (pages.repartition(3), broadcast_join):
+        plan, jobs = _built_plan(spark, lambda: extract_pages(shuffled))
+        assert "hashpartitioning(xxhash64(url" in plan, plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert not jobs, plan
+
+    before = _jobs(spark)
+    pages.repartition(3).rdd.getNumPartitions()
+    assert _jobs(spark) - before, "the job counter must see a probed shuffle"
+
+
+def test_salted_exchange_keeps_one_salt_exchange(four_way_session, pages_parquet, tmp_path):
+    """The resumable sink keeps its salt exchange whatever the input's
+    splits: each bucket must live in exactly one task."""
+    from go_readability_spark.plans.extract import _salted_exchange
+
+    spark = four_way_session
+    pages = spark.read.parquet(pages_parquet)
+    plan, jobs = _built_plan(spark, lambda: _salted_exchange(
+        pages, 16, None, None, False, str(tmp_path / "out")))
+    assert plan.count("Exchange") == 1, plan
+    m = re.search(r"hashpartitioning\(([^)]*)", plan)
+    assert m and m.group(1).startswith("salt"), plan
+    assert not jobs, plan
 
 
 def test_gated_extract_is_one_python_stage(spark, pages_parquet):

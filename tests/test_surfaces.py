@@ -1,6 +1,7 @@
 """Every extraction surface runs the same per-document kernel: the batch
-plan, the atomic sink (read back), and the streaming plan over a static
-frame give identical records per url, and each surface's readerable-gated
+plan (hash-exchanged, and exchange-free over a multi-file parquet scan),
+the atomic sink (read back), and the streaming plan over a static frame
+give identical records per url, and each surface's readerable-gated
 run equals its ungated output filtered to ``readerable = true``.  The
 corpus is built in the repository: synthetic readable pages mixed with
 stub pages that fail Check."""
@@ -36,19 +37,29 @@ def _by_url(rows):
 def surfaces(spark, tmp_path_factory):
     """{surface: {"plain": records, "gated": records}} plus the atomic
     sink's directories and its gated restart's bucket count."""
-    from go_readability_spark.plans import extract_pages, run_extraction_job_atomic
+    from go_readability_spark.plans import (
+        extract_pages,
+        run_extraction_job_atomic,
+        session_parallelism,
+    )
     from go_readability_spark.plans.schema import PAGES_SCHEMA
+    from go_readability_spark.sources import read_pages
     from go_readability_spark.streaming import extract_pages_stream
 
     tmp = tmp_path_factory.mktemp("surfaces")
     pages = spark.createDataFrame(_corpus_rows(), schema=PAGES_SCHEMA)
-    got = {"batch": {}, "atomic": {}, "stream": {}}
-    dirs = {}
+    # one file per core: the default extract_pages runs in place over it
+    dirs = {"pages": str(tmp / "pages")}
+    pages.repartition(session_parallelism(spark)).write.parquet(dirs["pages"])
+    files = read_pages(spark, dirs["pages"])
+    got = {"batch": {}, "batch_files": {}, "atomic": {}, "stream": {}}
     for gate in (False, True):
         leg = "gated" if gate else "plain"
         got["batch"][leg] = _by_url(extract_pages(
             pages, num_partitions=4,
             readerable_gate=gate).collect())
+        got["batch_files"][leg] = _by_url(extract_pages(
+            files, readerable_gate=gate).collect())
         got["stream"][leg] = _by_url(extract_pages_stream(
             pages, readerable_gate=gate).collect())
         out, ckpt = str(tmp / f"out_{leg}"), str(tmp / f"ckpt_{leg}")
@@ -80,6 +91,23 @@ def test_surfaces_agree_per_url(spark, surfaces):
     stream = extract_pages_stream(spark.createDataFrame(_corpus_rows(), schema=PAGES_SCHEMA))
     plan = stream._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "salt" not in plan, plan
+
+
+def test_exchange_free_batch_agrees_per_url(spark, surfaces):
+    """The default extract_pages over a multi-file parquet scan runs with
+    no exchange and gives, ungated and gated, the same records per url as
+    the atomic sink and the stream."""
+    from go_readability_spark.plans import extract_pages
+    from go_readability_spark.sources import read_pages
+
+    got, dirs, _ = surfaces
+    for leg in ("plain", "gated"):
+        assert got["batch_files"][leg] == got["atomic"][leg]
+        assert got["batch_files"][leg] == got["stream"][leg]
+    assert set(got["batch_files"]["plain"]) == {r["url"] for r in _corpus_rows()}
+    pages = read_pages(spark, dirs["pages"])
+    plan = extract_pages(pages)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
 
 
 @pytest.mark.parametrize("surface", ["batch", "atomic", "stream"])
