@@ -6,7 +6,7 @@ actually runs —
 
 Each stage is one of this package's operators; the composition adds no new
 shuffle beyond what the stages own (extract: at most 1 repartition on
-xxhash64(url), none over a scan that already gives every core a split, and
+xxhash64(url), none over a scan whose splits fill the cores in one wave, and
 no salt — only the resumable bucket sink salts; dedup: groupBy fingerprint
 + LSH band join). Stage boundaries are natural Iceberg table checkpoints at
 scale.

@@ -8,10 +8,11 @@ Design notes for 10^12-row scale:
   Catalyst pushes the projection into the parquet/Iceberg scan.
 * Extracting a page is a per-row map, so HTML moves through an exchange
   only where one is needed. ``extract_pages`` runs in place over an
-  exchange-free scan whose splits already give every core a task (a
-  crawl-scale table arrives in thousands of splits; task sizes then
-  follow the splits); otherwise, or when ``num_partitions`` is given, it
-  adds one deterministic hash exchange on the full-width
+  exchange-free scan whose splits fill the session's slots in one wave
+  (task sizes then follow the splits, and the extractor's bounded
+  collector pause keeps a worker's memory flat in split size);
+  otherwise, or when ``num_partitions`` is given, it adds one
+  deterministic hash exchange on the full-width
   ``xxhash64(url)``, which spreads rows evenly. The resumable sink
   always exchanges, keyed on the salt
   ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly one
@@ -153,16 +154,28 @@ def extract_record(url, html_bytes, readerable_gate=False):
 
 
 # Amortized end-of-task cyclic collection (r7, guide §4.5).
-# extract_record tears every tree down explicitly, so the only cyclic
-# garbage a task can leave is exception-path residue — small and
-# bounded.  The old per-task ``gc.collect()`` safety net cost a
-# measured 15-25 ms per task; one full sweep every _GC_EVERY_TASKS
-# tasks keeps the reused worker's residue bounded at ~1/8 the old
-# per-task frequency cost.  Module-level counter: Python workers are
-# single-threaded and reused across tasks (spark.python.worker.reuse),
-# and this module ships to executors, so the state persists.
+# extract_record tears the trees it can reach down explicitly; what a
+# task leaves to the cyclic collector is the subtrees the kernel detached
+# on the way (about 83 DOM nodes per skew-corpus page, found by a
+# DEBUG_SAVEALL sweep at the end of a 2,000-page task).  The old
+# per-task ``gc.collect()`` safety net cost a measured 15-25 ms per
+# task; one full sweep every _GC_EVERY_TASKS tasks keeps the reused
+# worker's residue bounded at ~1/8 the old per-task frequency cost.
+# Module-level counter: Python workers are single-threaded and reused
+# across tasks (spark.python.worker.reuse), and this module ships to
+# executors, so the state persists.
 _GC_EVERY_TASKS = 8
 _GC_STATE = {"tasks": 0}
+
+# HTML bytes a task reads between full sweeps inside its pause.  Those
+# detached subtrees pile up for as long as the pause lasts, so a task's
+# memory grew with its input: one 211 MB parquet split (770 MB of
+# skew-corpus HTML, 42,000 pages) as one local[1] task peaked the Python
+# worker at 835 MB RSS paused, 264 MB with the collector on, and 336 MB
+# as 8 hash-exchanged tasks.  With a sweep per 32 MB it peaked at
+# 296-298 MB in the same wall time (105.1/96.0 s against 104.6/96.4 s,
+# interleaved); a task below the budget never sweeps.
+_GC_EVERY_HTML_BYTES = 32 << 20
 
 
 @contextlib.contextmanager
@@ -172,9 +185,10 @@ def _gc_paused():
     import gc
 
     # extract_record tears its trees down explicitly, so the cyclic
-    # collector has nothing useful to do mid-partition — its full
-    # gen-2 sweeps (triggered purely by allocation counts at this
-    # node rate) were the single largest per-doc latency source.
+    # collector has little to do mid-partition — its full gen-2 sweeps
+    # (triggered purely by allocation counts at this node rate) were the
+    # single largest per-doc latency source.  _extract_frames sweeps
+    # the detached residue itself, once per _GC_EVERY_HTML_BYTES read.
     gc_was_enabled = gc.isenabled()
     gc.disable()
     try:
@@ -344,12 +358,12 @@ def extract_pages(
     Extracting a page is a per-row map, so the pages move through an
     exchange only when that buys parallelism: always when
     ``num_partitions`` asks for P tasks, and otherwise unless the pruned
-    input is an exchange-free batch plan whose splits already give every
-    core a task (``splits_fill_session``). A multi-file scan then runs in
-    place, one Python task per split; a single-split table, a stream, or
-    an input that already shuffles (the crawl-fetch plan's repartition by
-    archive, whose AQE-coalesced task count is unknown until it runs) gets
-    the hash exchange.
+    input is an exchange-free batch plan whose splits fill the session's
+    slots in one wave (``splits_fill_session``: 4 splits on 4 cores).
+    Such a scan runs in place, one Python task per split; any other
+    split count, a stream, or an input that already shuffles (the crawl-fetch plan's repartition by archive, whose
+    AQE-coalesced task count is unknown until it runs) gets the hash
+    exchange.
 
     ``readerable_gate`` drops pages that fail Check inside that one
     mapInPandas stage, before scoring. A pure transform: resumable jobs
@@ -504,12 +518,21 @@ def _extract_frames(batches, readerable_gate=False):
     """The per-row loop both mapInPandas functions share: yields one
     article frame per input batch that keeps a row, indexed by the kept
     rows' positions in that batch (gated-out pages leave gaps)."""
+    import gc
+
     import pandas as pd
 
+    unswept = 0
     for pdf in batches:
+        if unswept >= _GC_EVERY_HTML_BYTES:
+            # sweep the subtrees the pages read so far left detached
+            gc.collect()
+            unswept = 0
         data: dict[str, list] = {c: [] for c in _COLUMNS}
         kept = []
-        rows = zip(pdf["url"].tolist(), pdf["html"].tolist(), pdf["warc_ts"].tolist())
+        htmls = pdf["html"].tolist()
+        unswept += sum(len(h) for h in htmls if h is not None)
+        rows = zip(pdf["url"].tolist(), htmls, pdf["warc_ts"].tolist())
         for i, (url, html, ts) in enumerate(rows):
             rec = extract_record(url, html, readerable_gate)
             if rec is None:

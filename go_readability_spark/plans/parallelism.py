@@ -45,21 +45,43 @@ def session_parallelism(spark) -> int:
     return max(1, min(shuffle, spark.sparkContext.defaultParallelism))
 
 
+def fills_one_wave(splits: int, slots: int) -> bool:
+    """True iff ``splits`` tasks run in one wave that keeps at least
+    ``_MIN_SLOT_FILL`` of the ``slots`` busy: 4 of 4, 7 or 8 of 8."""
+    return _MIN_SLOT_FILL * slots <= splits <= slots
+
+
+# Measured on 4 cores: default extract_pages over S parquet files read
+# one split per file, in place against the xxhash64(url) exchange (8
+# Python tasks), interleaved, medians of 5-7 runs, on the short-page and
+# the kernel-bound skew corpus.  One full wave (4 splits) took 0.84x and
+# 0.86x the exchanged time.  More splits than slots did not pay: 0.90-1.23x
+# at 5-8 splits (wins only at 5 and 6 on the skew corpus) and 1.05-1.23x
+# at 9-16, since every Python task carries a fixed cost and these tasks
+# are small.  One partial wave at fill f takes about 1/f of the full
+# wave's time, so it beats an exchange costing 1.17-1.19x only while
+# f >= 1/1.17, about 0.85; at 3 of 4 (0.75) the ratios straddled 1.
+_MIN_SLOT_FILL = 0.85
+
+
 def splits_fill_session(df: DataFrame) -> bool:
     """True iff `df` is a batch plan with no exchange of any kind whose
-    input splits number at least ``session_parallelism``: a per-row map
-    over it already gives every core a task, so it needs no exchange.
+    input splits fill the session's ``session_parallelism`` slots in one
+    wave (``fills_one_wave``): a per-row map over it then keeps the cores
+    busy without an exchange.
 
-    The plan is read before the split count is probed, because the probe
-    is free only on exchange-free plans: on a parquet scan
-    ``getNumPartitions`` launches no job, but on a plan holding an
-    exchange AQE first runs the shuffle (one job) and then answers with
-    its coalesced partition count."""
+    The split count is read off the physical plan already built for the
+    check, and only once that plan is known to be exchange-free: there
+    ``execute()`` just wraps the scan's file splits in an RDD and runs no
+    job, while on a plan holding an exchange AQE would first run the
+    shuffle (one job) and then answer with its coalesced partition count."""
     if df.isStreaming:
         return False
-    if _STAGED_NODE.search(df._jdf.queryExecution().executedPlan().toString()):
+    plan = df._jdf.queryExecution().executedPlan()
+    if _STAGED_NODE.search(plan.toString()):
         return False
-    return df.rdd.getNumPartitions() >= session_parallelism(df.sparkSession)
+    return fills_one_wave(plan.execute().getNumPartitions(),
+                          session_parallelism(df.sparkSession))
 
 
 def ensure_scan_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -56,7 +56,7 @@ def main():
         synth_pages_distributed(spark, 32, seed=2, skew=False,
                                 num_partitions=session_parallelism(spark))\
             .write.parquet(split_path)
-        out.append("## extract_pages over a scan with a split per core "
+        out.append("## extract_pages over a scan with one split per core "
                    "(scan → mapInPandas, no exchange)\n```")
         out.append(formatted(extract_pages(spark.read.parquet(split_path))))
         out.append("```\n")

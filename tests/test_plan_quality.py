@@ -1,8 +1,10 @@
 """Physical-plan assertions (SURVEY.md §4): these lock in the properties
 that make the pipeline survive a 100x scale-up — column pruning into the
-scan, broadcast resume-join, at most one exchange (none over a scan that
-already gives every core a split), predicate pushdown."""
+scan, broadcast resume-join, at most one exchange (none over a scan whose
+splits fill the session's slots in one wave), predicate pushdown."""
 
+import glob
+import os
 import re
 
 import pytest
@@ -123,8 +125,8 @@ def _built_plan(spark, build):
 
 
 def test_default_extract_over_split_scan_is_exchange_free(four_way_session, pages_parquet):
-    """Without num_partitions, a scan whose splits already give every core
-    a task is extracted in place: no exchange, one MapInPandas straight
+    """Without num_partitions, a scan whose splits fill the session's slots
+    in one wave is extracted in place: no exchange, one MapInPandas straight
     over the pruned scan, and building the plan launches no job."""
     from go_readability_spark.plans import extract_pages
 
@@ -151,6 +153,60 @@ def test_default_extract_over_one_split_keeps_url_exchange(four_way_session, one
     assert plan.count("Exchange") == 1, plan
     assert "hashpartitioning(xxhash64(url" in plan, plan
     assert plan.count("MapInPandas") == 1, plan
+    assert not jobs, plan
+
+
+def test_one_wave_rule_admits_only_a_nearly_full_single_wave():
+    """In place only where the splits run in one wave that keeps the slots
+    nearly busy; fewer splits idle cores, more take extra waves of Python
+    tasks, and both keep the exchange."""
+    from go_readability_spark.plans.parallelism import fills_one_wave
+
+    assert [s for s in range(1, 17) if fills_one_wave(s, 4)] == [4]
+    assert [s for s in range(1, 17) if fills_one_wave(s, 8)] == [7, 8]
+    assert [s for s in range(1, 65) if fills_one_wave(s, 32)] == list(range(28, 33))
+
+
+@pytest.fixture
+def one_split_per_file(spark):
+    """Read small files one split each: no per-file open cost, no per-core
+    byte target, and a split cap of the largest file, so no file is cut
+    and no two files share a split."""
+    keys = ("spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum",
+            "spark.sql.files.maxPartitionBytes")
+    before = {k: spark.conf.get(k, None) for k in keys}
+
+    def read(path):
+        fmax = max(os.path.getsize(f) for f in glob.glob(f"{path}/*.parquet"))
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(fmax))
+        return spark.read.parquet(path)
+
+    yield read
+    for k, v in before.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("n_files", [5, 8])
+def test_default_extract_over_more_splits_than_slots_keeps_url_exchange(
+        four_way_session, pages_parquet, one_split_per_file, tmp_path, n_files):
+    """More splits than slots (a ragged 5, or two waves of 8) keep the
+    xxhash64(url) exchange; deciding launches no job."""
+    from go_readability_spark.plans import extract_pages
+
+    spark = four_way_session
+    path = str(tmp_path / "pages")
+    (spark.read.parquet(pages_parquet).coalesce(1).write
+     .option("maxRecordsPerFile", -(-64 // n_files)).parquet(path))
+    pages = one_split_per_file(path)
+    assert pages.rdd.getNumPartitions() == n_files
+    plan, jobs = _built_plan(spark, lambda: extract_pages(pages))
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(xxhash64(url" in plan, plan
     assert not jobs, plan
 
 

@@ -164,6 +164,49 @@ def test_default_extract_partitions_policy(spark):
     assert default_extract_partitions(spark, 4) == 4
 
 
+def _cycle_pinned_batches(n_batches, rows, refs):
+    """Input frames each kept alive only by a reference cycle: stand-ins
+    for the cyclic residue (detached DOM subtrees) a batch leaves behind.
+    A weakref to each frame goes to `refs`."""
+    import weakref
+
+    import pandas as pd
+
+    from go_readability_spark.sources.synthetic import synth_page
+
+    for b in range(n_batches):
+        pages = [synth_page(seed=3, idx=b * rows + i, host="example.org", n_paragraphs=6)
+                 for i in range(rows)]
+        pdf = pd.DataFrame({"url": [p["url"] for p in pages],
+                            "html": [p["html"] for p in pages],
+                            "warc_ts": [None] * rows})
+        holder = {"frame": pdf}
+        holder["self"] = holder
+        refs.append(weakref.ref(pdf))
+        del pdf, holder
+        yield refs[-1]()
+
+
+@pytest.mark.parametrize("budget, freed_mid_task", [(1, True), (1 << 40, False)])
+def test_extractor_sweeps_paused_collector_per_html_budget(monkeypatch, budget,
+                                                          freed_mid_task):
+    """The collector stays paused through an extraction task, except that a
+    task which has read _GC_EVERY_HTML_BYTES of HTML sweeps before its next
+    batch: cyclic garbage the earlier batches left is freed mid-task
+    instead of piling up for the whole split."""
+    from go_readability_spark.plans import extract as ex
+
+    monkeypatch.setattr(ex, "_GC_EVERY_HTML_BYTES", budget)
+    refs, alive_at_frame, urls = [], [], []
+    for frame in ex.make_extractor()(_cycle_pinned_batches(4, 3, refs)):
+        # frames arrive one per input batch; count the earlier batches
+        # still held when this one's frame comes out
+        alive_at_frame.append(sum(r() is not None for r in refs[:-1]))
+        urls += frame["url"].tolist()
+    assert len(urls) == 12 and len(set(urls)) == 12
+    assert alive_at_frame == ([0, 0, 0, 0] if freed_mid_task else [0, 1, 2, 3])
+
+
 # ------------------------------------------------- text-features staging
 
 
