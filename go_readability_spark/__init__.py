@@ -5,7 +5,7 @@ re-expressed Spark-first (SURVEY.md).
 Layout:
   dom/         stdlib-only DOM + HTML5-ish tree builder + serializer
   readability/ the Arc90 extraction algorithm (pure Python, UDF interior)
-  plans/       Spark pipeline: scan → exchange → mapInPandas → sink; the
+  plans/       Spark pipeline: scan → [exchange] → mapInArrow → sink; the
                resumable bucket sink alone salts its input + checkpoints
   sources/     fixture/corpus packers producing the `pages` table shape
   operators/   training-data ops: dedup (exact/minhash/simhash), similarity

@@ -1,25 +1,25 @@
 """SQL-callable extraction functions: register the readability engine as
-Arrow-batched pandas UDFs so users can call it from Spark SQL directly:
+Arrow UDFs so users can call it from Spark SQL directly:
 
     SELECT url, readability_text(html) FROM pages WHERE readerable(html)
 
-The heavy pipeline entry point remains plans.extract_pages (mapInPandas
+The heavy pipeline entry point remains plans.extract_pages (mapInArrow
 with lineage); these UDFs are the ad-hoc query surface over the same
 per-document kernel (plans/extract.py extract_record).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F, types as T
 
 
-@F.pandas_udf(T.BooleanType())
-def readerable(html: pd.Series) -> pd.Series:
+@F.arrow_udf(T.BooleanType())
+def readerable(html: pa.Array) -> pa.Array:
     """CheckDocument as a SQL boolean (parser-check.go:25-80); False when
     the page cannot be parsed."""
     from ..dom import parse_html
-    from ..plans.extract import release_trees
+    from ..plans.extract import _arrow_array, release_trees
     from ..readability import check_document
 
     def one(h):
@@ -32,23 +32,24 @@ def readerable(html: pd.Series) -> pd.Series:
         finally:
             release_trees(doc)
 
-    return html.map(one)
+    return _arrow_array(pa.bool_(), [one(h) for h in html.to_pylist()])
 
 
-def _record_field(html: pd.Series, field: str) -> pd.Series:
-    from ..plans.extract import extract_record
+def _record_field(html: pa.Array, field: str) -> pa.Array:
+    from ..plans.extract import _arrow_array, extract_record
 
-    return html.map(lambda h: extract_record(None, h)[field])
+    return _arrow_array(pa.string(),
+                        [extract_record(None, h)[field] for h in html.to_pylist()])
 
 
-@F.pandas_udf(T.StringType())
-def readability_text(html: pd.Series) -> pd.Series:
+@F.arrow_udf(T.StringType())
+def readability_text(html: pa.Array) -> pa.Array:
     """Extracted main text as a SQL string (Article.TextContent)."""
     return _record_field(html, "text_content")
 
 
-@F.pandas_udf(T.StringType())
-def readability_title(html: pd.Series) -> pd.Series:
+@F.arrow_udf(T.StringType())
+def readability_title(html: pa.Array) -> pa.Array:
     return _record_field(html, "title")
 
 

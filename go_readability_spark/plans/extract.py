@@ -1,6 +1,6 @@
 """The extraction pipeline: Iceberg/parquet scan → [at most one exchange]
-→ Arrow-batched mapInPandas extraction → sink, with per-bucket
-checkpoint/lineage rows for resumability (SURVEY.md §3 'Spark lifecycle').
+→ mapInArrow extraction → sink, with per-bucket checkpoint/lineage rows
+for resumability (SURVEY.md §3 'Spark lifecycle').
 
 Design notes for 10^12-row scale:
 
@@ -18,11 +18,13 @@ Design notes for 10^12-row scale:
   ``pmod(xxhash64(url), n_buckets)``, so each bucket lives in exactly one
   task, which is what makes bucket-level resume sound. The salt is the
   sink's own unit of lineage; no other plan computes it.
-* The extraction itself is partition-local: one ``mapInPandas`` call per
+* The extraction itself is partition-local: one ``mapInArrow`` call per
   partition, iterator form, so the compiled regexes and parser setup
   amortize across all Arrow batches of the partition (no per-row Python
-  dispatch at the Spark boundary). The optional readerable gate runs in
-  the same stage: a page that fails Check is dropped before scoring.
+  dispatch at the Spark boundary). Record batches go in and out with no
+  pandas in between, and warc_ts passes through untouched. The optional
+  readerable gate runs in the same stage: a page that fails Check is
+  dropped before scoring.
 * Resume: a job with a ``checkpoint_dir`` runs through the task-committed
   bucket sink (``run_extraction_job_atomic``), the one resumable writer.
   Each task publishes its bucket files by atomic rename and then records
@@ -42,6 +44,7 @@ import uuid
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from .parallelism import splits_fill_session
@@ -63,17 +66,64 @@ def _output_codec() -> str:
 
 
 def _arrow_schema(struct):
-    """pyarrow schema for a task-side parquet write of ``struct``.
+    """pyarrow schema for the record batches and task-side parquet writes
+    of ``struct``.
 
     Pinned to the on-disk format earlier outputs and checkpoints were
     written in, so resume keeps reading them: naive ``timestamp[us]``
-    (pyspark's own Arrow mapping is UTC-zoned) and every field nullable."""
-    import pyarrow as pa
-
+    (pyspark's own Arrow mapping is UTC-zoned; Spark reads either as the
+    same UTC microseconds) and every field nullable."""
     types = {"string": pa.string(), "timestamp": pa.timestamp("us"),
              "int": pa.int32(), "bigint": pa.int64(), "boolean": pa.bool_()}
     return pa.schema([(f.name, types[f.dataType.simpleString()])
                       for f in struct.fields])
+
+
+_ARTICLES_ARROW = _arrow_schema(ARTICLES_SCHEMA)
+
+# published_time/modified_time outside pandas' nanosecond timestamp range
+# come out null.  Earlier versions built these columns through pandas,
+# which coerced such dates to null; output stays equal to theirs and to
+# the files they wrote.
+_PANDAS_TIMESTAMP_RANGE = (datetime(1677, 9, 21, 0, 12, 43, 145225),
+                           datetime(2262, 4, 11, 23, 47, 16, 854775))
+
+
+def _arrow_array(type_, values):
+    """``values`` (None for null) as an Arrow array of ``type_``, one of
+    the types _arrow_schema maps to.
+
+    Built from buffers: ``pa.array`` imports pandas to probe its argument
+    for pandas objects, and importing pandas adds about 37 MB to a Python
+    worker that has pyarrow loaded."""
+    import numpy as np
+
+    if type_ == pa.string():
+        raw = [v.encode() if v is not None else b"" for v in values]
+        offsets = np.cumsum([0, *map(len, raw)])
+        if offsets[-1] >= 1 << 31:  # int32 offsets would wrap
+            raise OverflowError(f"{offsets[-1]} bytes of strings in one Arrow batch")
+        data = [offsets.astype(np.int32), b"".join(raw)]
+    elif type_ == pa.bool_():
+        data = [np.packbits(np.fromiter(map(bool, values), bool, len(values)),
+                            bitorder="little")]
+    else:  # int32, int64, timestamp[us]
+        ints = f"<i{type_.bit_width // 8}"
+        data = [np.array([v if v is not None else 0 for v in values],
+                         "datetime64[us]" if pa.types.is_timestamp(type_) else ints).view(ints)]
+    mask = (np.packbits([v is not None for v in values], bitorder="little")
+            if None in values else None)
+    return pa.Array.from_buffers(type_, len(values), [
+        None if b is None else pa.py_buffer(b) for b in (mask, *data)])
+
+
+def _record_batch(schema, columns):
+    """A record batch of ``schema`` from ``columns``: name -> Arrow array,
+    or Python values with None for null.  ``columns`` is emptied column by
+    column, so each column's Python values are freed once copied."""
+    return pa.RecordBatch.from_arrays([
+        col if isinstance(col, pa.Array) else _arrow_array(f.type, col)
+        for f, col in ((f, columns.pop(f.name)) for f in schema)], schema=schema)
 
 
 def _utc_naive(dt):
@@ -181,13 +231,13 @@ _GC_EVERY_HTML_BYTES = 32 << 20
 @contextlib.contextmanager
 def _gc_paused():
     """Pauses the cyclic collector for one extraction task's body; both
-    mapInPandas functions run inside it."""
+    mapInArrow functions run inside it."""
     import gc
 
     # extract_record tears its trees down explicitly, so the cyclic
     # collector has little to do mid-partition — its full gen-2 sweeps
     # (triggered purely by allocation counts at this node rate) were the
-    # single largest per-doc latency source.  _extract_frames sweeps
+    # single largest per-doc latency source.  _extract_batches sweeps
     # the detached residue itself, once per _GC_EVERY_HTML_BYTES read.
     gc_was_enabled = gc.isenabled()
     gc.disable()
@@ -202,49 +252,45 @@ def _gc_paused():
 
 
 def make_extractor(readerable_gate: bool = False):
-    """Build the mapInPandas function. Iterator form: per-partition setup
+    """Build the mapInArrow function. Iterator form: per-partition setup
     runs once, then every Arrow batch streams through."""
 
-    def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         with _gc_paused():
-            yield from _extract_frames(batches, readerable_gate)
+            for batch, kept, articles in _extract_batches(batches, readerable_gate):
+                if kept:
+                    yield articles
+                del batch, articles  # not held while the next batch is extracted
 
     return extract_batches
 
 
 def _write_checkpoint_rows(checkpoint_dir, stats, started):
     """Append one lineage row per completed salt bucket (one per row of
-    the sink's ``stats`` frame: salt + _BUCKET_COUNTS). Atomic per task:
+    the sink's ``stats`` batch: salt + _BUCKET_COUNTS). Atomic per task:
     written to a unique file name, so concurrent tasks never collide, and
     published by rename, so a write killed halfway leaves only a
     dot-prefixed tmp that readers skip, never a truncated visible file.
     (Production: Iceberg transactional append — same rows, same schema.)"""
-    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark import TaskContext
 
-    try:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        attempt = (ctx.attemptNumber() + 1) if ctx is not None else 1
-    except Exception:
-        attempt = 1
-
+    ctx = TaskContext.get()  # None outside a Spark task
+    attempt = ctx.attemptNumber() + 1 if ctx is not None else 1
     finished = datetime.now(timezone.utc).replace(tzinfo=None)
-    n = len(stats)
-    rows = {
-        "partition_key": stats["salt"].astype(str).tolist(),
+    n = stats.num_rows
+    rows = _record_batch(_arrow_schema(CHECKPOINT_SCHEMA), {
+        "partition_key": [str(s) for s in stats.column("salt").to_pylist()],
         "attempt": [attempt] * n,
         "status": ["done"] * n,
-        **{c: stats[c].tolist() for c in _BUCKET_COUNTS},
+        **{c: stats.column(c) for c in _BUCKET_COUNTS},
         "started_at": [started] * n,
         "finished_at": [finished] * n,
-    }
+    })
     os.makedirs(checkpoint_dir, exist_ok=True)
     name = f"ckpt-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(checkpoint_dir, f".{name}.tmp")
-    pq.write_table(pa.table(rows, schema=_arrow_schema(CHECKPOINT_SCHEMA)), tmp,
-                   compression=_output_codec())
+    pq.write_table(pa.Table.from_batches([rows]), tmp, compression=_output_codec())
     os.replace(tmp, os.path.join(checkpoint_dir, name))
 
 
@@ -353,7 +399,7 @@ def extract_pages(
 
     pages → select(url, warc_ts, html)          # column pruning to the scan
           → [repartition(P, xxhash64(url))]     # only when the input needs it
-          → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
+          → mapInArrow(extract, ARTICLES)       # partition-local, Arrow batches
 
     Extracting a page is a per-row map, so the pages move through an
     exchange only when that buys parallelism: always when
@@ -361,12 +407,12 @@ def extract_pages(
     input is an exchange-free batch plan whose splits fill the session's
     slots in one wave (``splits_fill_session``: 4 splits on 4 cores).
     Such a scan runs in place, one Python task per split; any other
-    split count, a stream, or an input that already shuffles (the crawl-fetch plan's repartition by archive, whose
-    AQE-coalesced task count is unknown until it runs) gets the hash
-    exchange.
+    split count, a stream, or an input that already shuffles (the
+    crawl-fetch plan's repartition by archive, whose AQE-coalesced task
+    count is unknown until it runs) gets the hash exchange.
 
     ``readerable_gate`` drops pages that fail Check inside that one
-    mapInPandas stage, before scoring. A pure transform: resumable jobs
+    mapInArrow stage, before scoring. A pure transform: resumable jobs
     go through ``run_extraction_job`` with a ``checkpoint_dir``.
     """
     df = pages.select("url", "warc_ts", "html")
@@ -380,7 +426,7 @@ def extract_pages(
         # multinomially and stays retry-safe (deterministic key, not rand()).
         df = df.repartition(num_partitions or _extract_partitions(pages.sparkSession),
                             F.xxhash64(F.col("url")))
-    return df.mapInPandas(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
+    return df.mapInArrow(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
 
 # chars Spark's writer %XX-escapes in a hive partition value
@@ -389,7 +435,7 @@ _HIVE_ESCAPE = frozenset([*map(chr, range(1, 32)), *"\"#%'*/:=?\\{[]^", "\x7f"])
 _HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _hive_dirs(frame, partition_by) -> list[str]:
+def _hive_dirs(articles, partition_by) -> list[str]:
     """Per-row hive partition path ``col=<value>/...`` for ``partition_by``,
     escaped the way Spark's writer escapes it: null and empty values map
     to the default partition, and every char that could end the path
@@ -402,15 +448,15 @@ def _hive_dirs(frame, partition_by) -> list[str]:
                                    for ch in v)
 
     return [os.path.join(*(component(c, v) for c, v in zip(partition_by, vals)))
-            for vals in zip(*(frame[c].tolist() for c in partition_by))]
+            for vals in zip(*(articles.column(c).to_pylist() for c in partition_by))]
 
 
 def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
                         readerable_gate: bool = False,
                         partition_by: tuple[str, ...] = ()):
-    """mapInPandas function for the ATOMIC task-committed sink: the
+    """mapInArrow function for the ATOMIC task-committed sink: the
     extraction output is written per salt bucket straight into the
-    articles table from inside the task, and the mapInPandas result is
+    articles table from inside the task, and the mapInArrow result is
     only the tiny per-bucket stats relation.
 
     The properties that make mid-job resume REAL on a plain filesystem
@@ -437,126 +483,111 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
     A bucket whose every page is gated out gets a lineage row with
     rows_out = 0 and no data file.
     """
-    import pandas as pd
-
     columns = [c for c in _COLUMNS if c not in partition_by]
 
-    def publish(per_bucket_frames):
-        import pyarrow as pa
+    def publish(parts):
         import pyarrow.parquet as pq
 
-        schema = pa.schema([f for f in _arrow_schema(ARTICLES_SCHEMA) if f.name in columns])
-        for salt_val, frames in per_bucket_frames.items():
-            bucket = pd.concat(frames, ignore_index=True)
-            groups = (bucket.groupby(pd.Series(_hive_dirs(bucket, partition_by),
-                                               index=bucket.index), sort=False)
-                      if partition_by else [("", bucket)])
-            for rel, group in groups:
-                bucket_dir = os.path.join(output_dir, rel, f"salt={salt_val}")
-                os.makedirs(bucket_dir, exist_ok=True)
-                final = os.path.join(bucket_dir, f"part-{salt_val:05d}.parquet")
-                # staging name MUST be dot-prefixed: Spark/parquet directory
-                # listings ignore '.'/'_' files, so a kill mid-write (ENOSPC,
-                # SIGKILL) leaves garbage that readers and the resume
-                # verifier never see.  (A non-hidden '<final>.tmp-…' name
-                # broke the 10M crawl-fetch resume: the truncated staging
-                # file failed the whole output read.)  Stale tmps from dead
-                # attempts are swept before this attempt writes its own —
-                # but only ones older than an hour: a CONCURRENT attempt for
-                # the same bucket (speculative or zombie task) may still be
-                # writing its staging file, and unlinking it mid-write would
-                # turn its os.replace into FileNotFoundError.  Younger tmps
-                # are left alone; being dot-prefixed they are invisible to
-                # readers and the resume verifier regardless.
-                sweep_horizon = time.time() - 3600
-                for stale in glob.glob(os.path.join(
-                        bucket_dir, f".part-{salt_val:05d}.parquet.tmp-*")):
-                    try:
-                        if os.path.getmtime(stale) < sweep_horizon:
-                            os.remove(stale)
-                    except OSError:
-                        pass
-                tmp = os.path.join(
-                    bucket_dir,
-                    f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
-                table = pa.Table.from_pandas(group[columns], schema=schema,
-                                             preserve_index=False)
-                pq.write_table(table, tmp, compression=_output_codec())
-                os.replace(tmp, final)  # atomic publish
+        for (salt_val, rel), pieces in parts.items():
+            bucket_dir = os.path.join(output_dir, rel, f"salt={salt_val}")
+            os.makedirs(bucket_dir, exist_ok=True)
+            final = os.path.join(bucket_dir, f"part-{salt_val:05d}.parquet")
+            # staging name MUST be dot-prefixed: Spark/parquet directory
+            # listings ignore '.'/'_' files, so a kill mid-write (ENOSPC,
+            # SIGKILL) leaves garbage that readers and the resume
+            # verifier never see.  (A non-hidden '<final>.tmp-…' name
+            # broke the 10M crawl-fetch resume: the truncated staging
+            # file failed the whole output read.)  Stale tmps from dead
+            # attempts are swept before this attempt writes its own —
+            # but only ones older than an hour: a CONCURRENT attempt for
+            # the same bucket (speculative or zombie task) may still be
+            # writing its staging file, and unlinking it mid-write would
+            # turn its os.replace into FileNotFoundError.  Younger tmps
+            # are left alone; being dot-prefixed they are invisible to
+            # readers and the resume verifier regardless.
+            sweep_horizon = time.time() - 3600
+            for stale in glob.glob(os.path.join(
+                    bucket_dir, f".part-{salt_val:05d}.parquet.tmp-*")):
+                try:
+                    if os.path.getmtime(stale) < sweep_horizon:
+                        os.remove(stale)
+                except OSError:
+                    pass
+            tmp = os.path.join(
+                bucket_dir,
+                f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
+            bucket = pa.Table.from_batches(
+                [articles.take(_arrow_array(pa.int64(), rows)) for articles, rows in pieces])
+            pq.write_table(bucket.select(columns), tmp, compression=_output_codec())
+            os.replace(tmp, final)  # atomic publish
 
-    def sink_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def sink_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
         started = datetime.now(timezone.utc).replace(tzinfo=None)
         bucket_stats: dict[int, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
-        per_bucket_frames: dict[int, list] = {}
+        parts: dict[tuple, list] = {}  # (salt, hive dir) -> [(article batch, rows)]
         with _gc_paused():
-            for pdf in batches:
+            for batch, kept, articles in _extract_batches(batches, readerable_gate):
                 # every input row counts in rows_in/bytes_in, gated-out
-                # pages included; the batch is dropped once extracted
-                salts = pdf["salt"].to_numpy()
-                for salt, html in zip(salts.tolist(), pdf["html"].tolist()):
+                # pages included
+                salts = batch.column("salt").to_pylist()
+                for salt, size in zip(salts, pc.binary_length(batch.column("html")).to_pylist()):
                     st = bucket_stats.setdefault(salt, [0, 0, 0, 0])
                     st[0] += 1
-                    st[3] += len(html) if html is not None else 0
-                for out in _extract_frames([pdf], readerable_gate):
-                    for salt, group in out.groupby(salts[out.index], sort=False):
-                        per_bucket_frames.setdefault(int(salt), []).append(group)
-                        errors = int(group["error"].notna().sum())
-                        st = bucket_stats[int(salt)]
-                        st[1] += len(group) - errors
-                        st[2] += errors
-        publish(per_bucket_frames)
-        stats = pd.DataFrame([[salt, *counts] for salt, counts in bucket_stats.items()],
-                             columns=["salt", *_BUCKET_COUNTS])
-        if checkpoint_dir and len(stats):
+                    st[3] += size or 0
+                dirs = _hive_dirs(articles, partition_by) if partition_by else [""] * len(kept)
+                groups: dict[tuple, list] = {}  # (salt, hive dir) -> article rows
+                for row, (i, error, rel) in enumerate(
+                        zip(kept, articles.column("error").to_pylist(), dirs)):
+                    bucket_stats[salts[i]][1 if error is None else 2] += 1
+                    groups.setdefault((salts[i], rel), []).append(row)
+                for key, rows in groups.items():
+                    parts.setdefault(key, []).append((articles, rows))
+                del batch  # not held while the next batch is extracted
+        publish(parts)
+        stats = _record_batch(_arrow_schema(SINK_STATS_SCHEMA), {
+            "salt": list(bucket_stats),
+            **{c: [counts[k] for counts in bucket_stats.values()]
+               for k, c in enumerate(_BUCKET_COUNTS)}})
+        if checkpoint_dir and stats.num_rows:
             _write_checkpoint_rows(checkpoint_dir, stats, started)
         yield stats
 
     return sink_batches
 
 
-def _extract_frames(batches, readerable_gate=False):
-    """The per-row loop both mapInPandas functions share: yields one
-    article frame per input batch that keeps a row, indexed by the kept
-    rows' positions in that batch (gated-out pages leave gaps)."""
+def _extract_batches(batches, readerable_gate=False):
+    """The per-row loop both mapInArrow functions share: yields, per input
+    record batch (url, warc_ts, html, ...), that batch, the positions of
+    the rows the gate kept, and their article batch in _ARTICLES_ARROW.
+    warc_ts is the input column's kept rows, passed through unconverted."""
     import gc
 
-    import pandas as pd
-
+    lo, hi = _PANDAS_TIMESTAMP_RANGE
     unswept = 0
-    for pdf in batches:
+    for batch in batches:
         if unswept >= _GC_EVERY_HTML_BYTES:
             # sweep the subtrees the pages read so far left detached
             gc.collect()
             unswept = 0
-        data: dict[str, list] = {c: [] for c in _COLUMNS}
+        data: dict[str, list] = {c: [] for c in _COLUMNS if c != "warc_ts"}
         kept = []
-        htmls = pdf["html"].tolist()
-        unswept += sum(len(h) for h in htmls if h is not None)
-        rows = zip(pdf["url"].tolist(), htmls, pdf["warc_ts"].tolist())
-        for i, (url, html, ts) in enumerate(rows):
+        htmls = batch.column("html")
+        for i, url in enumerate(batch.column("url").to_pylist()):
+            html = htmls[i].as_py()  # one page's bytes at a time
+            unswept += len(html or b"")
             rec = extract_record(url, html, readerable_gate)
             if rec is None:
                 continue
-            rec["warc_ts"] = ts
-            for c in _COLUMNS:
-                data[c].append(rec[c])
+            for c, values in data.items():
+                values.append(rec[c])
             kept.append(i)
-        if not kept:
-            continue
-        out = pd.DataFrame(
-            {
-                c: (
-                    pd.to_datetime(pd.Series(data[c], dtype="object"), errors="coerce")
-                    if c in ("published_time", "modified_time", "warc_ts")
-                    else pd.Series(data[c], dtype="int32")
-                    if c == "length"
-                    else data[c]
-                )
-                for c in _COLUMNS
-            }
-        )
-        out.index = kept
-        yield out
+        for c in ("published_time", "modified_time"):
+            data[c] = [t if t is not None and lo <= t <= hi else None for t in data[c]]
+        warc_ts = batch.column("warc_ts").take(_arrow_array(pa.int64(), kept))
+        data["warc_ts"] = warc_ts.cast(_ARTICLES_ARROW.field("warc_ts").type)
+        yield batch, kept, _record_batch(_ARTICLES_ARROW, data)
 
 
 def _is_remote_uri(path: str) -> bool:
@@ -603,7 +634,7 @@ def run_extraction_job_atomic(
     df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
                           resume, output_dir)
     os.makedirs(output_dir, exist_ok=True)
-    stats = df.mapInPandas(
+    stats = df.mapInArrow(
         make_sink_extractor(output_dir, checkpoint_dir, readerable_gate, partition_by),
         schema=SINK_STATS_SCHEMA,
     )

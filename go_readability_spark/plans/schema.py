@@ -36,8 +36,9 @@ ARTICLE_FIELDS = [
 ]
 ARTICLES_SCHEMA = T.StructType(ARTICLE_FIELDS)
 
-# atomic-sink per-bucket stats (the mapInPandas OUTPUT when the data
-# itself is task-committed straight to the articles table)
+# atomic-sink per-bucket stats (the mapInArrow OUTPUT, one record batch
+# per task, when the data itself is task-committed straight to the
+# articles table)
 SINK_STATS_SCHEMA = T.StructType(
     [
         T.StructField("salt", T.LongType(), False),

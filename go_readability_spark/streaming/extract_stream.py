@@ -1,6 +1,6 @@
-"""Structured Streaming wrapper: the same extraction UDF over a streaming
-`pages` source (SURVEY.md §1: 'Structured Streaming is an optional later
-wrapper (same UDF under foreachBatch)')."""
+"""Structured Streaming wrapper: the batch plan's mapInArrow extractor
+over a streaming `pages` source (SURVEY.md §1: 'Structured Streaming is
+an optional later wrapper (same UDF under foreachBatch)')."""
 
 from __future__ import annotations
 
@@ -47,10 +47,10 @@ def read_pages_stream_warc(
 
 def extract_pages_stream(pages_stream: DataFrame,
                          readerable_gate: bool = False) -> DataFrame:
-    """Streaming extraction: stateless mapInPandas, so it composes with any
+    """Streaming extraction: stateless mapInArrow, so it composes with any
     sink; watermarks aren't needed (per-row transform, no event-time agg).
     ``readerable_gate`` drops pages that fail Check inside that stage."""
-    return pages_stream.select("url", "warc_ts", "html").mapInPandas(
+    return pages_stream.select("url", "warc_ts", "html").mapInArrow(
         make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
 

@@ -47,7 +47,7 @@ def main():
                            num_partitions=2)
 
         out.append("## extract_pages with num_partitions (scan → xxhash64(url) "
-                   "exchange → mapInPandas)\n```")
+                   "exchange → mapInArrow)\n```")
         out.append(formatted(extract_pages(pages, num_partitions=2)))
         out.append("```\n")
 
@@ -57,7 +57,7 @@ def main():
                                 num_partitions=session_parallelism(spark))\
             .write.parquet(split_path)
         out.append("## extract_pages over a scan with one split per core "
-                   "(scan → mapInPandas, no exchange)\n```")
+                   "(scan → mapInArrow, no exchange)\n```")
         out.append(formatted(extract_pages(spark.read.parquet(split_path))))
         out.append("```\n")
 

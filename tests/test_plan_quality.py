@@ -126,7 +126,7 @@ def _built_plan(spark, build):
 
 def test_default_extract_over_split_scan_is_exchange_free(four_way_session, pages_parquet):
     """Without num_partitions, a scan whose splits fill the session's slots
-    in one wave is extracted in place: no exchange, one MapInPandas straight
+    in one wave is extracted in place: no exchange, one MapInArrow straight
     over the pruned scan, and building the plan launches no job."""
     from go_readability_spark.plans import extract_pages
 
@@ -136,7 +136,7 @@ def test_default_extract_over_split_scan_is_exchange_free(four_way_session, page
     for gate in (False, True):
         plan, jobs = _built_plan(spark, lambda: extract_pages(pages, readerable_gate=gate))
         assert "Exchange" not in plan, plan
-        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
         assert not jobs, plan
         read_schema = re.search(r"ReadSchema: ([^\n]+)", plan).group(1)
         assert read_schema == "struct<url:string,warc_ts:timestamp,html:binary>", plan
@@ -152,7 +152,7 @@ def test_default_extract_over_one_split_keeps_url_exchange(four_way_session, one
     plan, jobs = _built_plan(spark, lambda: extract_pages(pages))
     assert plan.count("Exchange") == 1, plan
     assert "hashpartitioning(xxhash64(url" in plan, plan
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert not jobs, plan
 
 
@@ -228,7 +228,7 @@ def test_default_extract_over_shuffled_input_keeps_url_exchange(four_way_session
     for shuffled in (pages.repartition(3), broadcast_join):
         plan, jobs = _built_plan(spark, lambda: extract_pages(shuffled))
         assert "hashpartitioning(xxhash64(url" in plan, plan
-        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
         assert not jobs, plan
 
     before = _jobs(spark)
@@ -253,13 +253,13 @@ def test_salted_exchange_keeps_one_salt_exchange(four_way_session, pages_parquet
 
 def test_gated_extract_is_one_python_stage(spark, pages_parquet):
     """The readerable gate runs inside the extraction stage: the gated plan
-    has exactly one Python node (the MapInPandas) — no separate Arrow or
+    has exactly one Python node (the MapInArrow) — no separate Arrow or
     row-at-a-time UDF stage that parses every page a second time."""
     from go_readability_spark.plans import extract_pages
 
     pages = spark.read.parquet(pages_parquet)
     plan = _plan(extract_pages(pages, num_partitions=4, readerable_gate=True))
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -275,12 +275,12 @@ def test_filter_pushdown_to_scan(spark, pages_parquet):
 
 
 def test_extract_has_no_python_row_udf(spark, pages_parquet):
-    """The extraction stage must be Arrow-batched (MapInPandas/ArrowEvalPython),
+    """The extraction stage must be Arrow-batched (MapInArrow/ArrowEvalPython),
     never row-at-a-time BatchEvalPython."""
     from go_readability_spark.plans import extract_pages
 
     plan = _plan(extract_pages(spark.read.parquet(pages_parquet), num_partitions=4))
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan, plan
+    assert "MapInArrow" in plan or "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
 

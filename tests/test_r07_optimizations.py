@@ -165,25 +165,25 @@ def test_default_extract_partitions_policy(spark):
 
 
 def _cycle_pinned_batches(n_batches, rows, refs):
-    """Input frames each kept alive only by a reference cycle: stand-ins
-    for the cyclic residue (detached DOM subtrees) a batch leaves behind.
-    A weakref to each frame goes to `refs`."""
+    """Input record batches each kept alive only by a reference cycle:
+    stand-ins for the cyclic residue (detached DOM subtrees) a batch
+    leaves behind. A weakref to each batch goes to `refs`."""
     import weakref
 
-    import pandas as pd
+    import pyarrow as pa
 
     from go_readability_spark.sources.synthetic import synth_page
 
     for b in range(n_batches):
         pages = [synth_page(seed=3, idx=b * rows + i, host="example.org", n_paragraphs=6)
                  for i in range(rows)]
-        pdf = pd.DataFrame({"url": [p["url"] for p in pages],
-                            "html": [p["html"] for p in pages],
-                            "warc_ts": [None] * rows})
-        holder = {"frame": pdf}
+        batch = pa.RecordBatch.from_pydict(
+            {"url": [p["url"] for p in pages], "html": [p["html"] for p in pages],
+             "warc_ts": pa.nulls(rows, pa.timestamp("us", tz="UTC"))})
+        holder = {"batch": batch}
         holder["self"] = holder
-        refs.append(weakref.ref(pdf))
-        del pdf, holder
+        refs.append(weakref.ref(batch))
+        del batch, holder
         yield refs[-1]()
 
 
@@ -202,7 +202,7 @@ def test_extractor_sweeps_paused_collector_per_html_budget(monkeypatch, budget,
         # frames arrive one per input batch; count the earlier batches
         # still held when this one's frame comes out
         alive_at_frame.append(sum(r() is not None for r in refs[:-1]))
-        urls += frame["url"].tolist()
+        urls += frame.column("url").to_pylist()
     assert len(urls) == 12 and len(set(urls)) == 12
     assert alive_at_frame == ([0, 0, 0, 0] if freed_mid_task else [0, 1, 2, 3])
 

@@ -274,13 +274,13 @@ def test_sink_partition_escape_matches_spark(spark):
     """The bucket sink escapes partition values exactly as Spark's writer
     does (ExternalCatalogUtils.escapePathName), for every ASCII char and
     some non-ASCII text; empty and null map to the default partition."""
-    import pandas as pd
+    import pyarrow as pa
 
     from go_readability_spark.plans.extract import _hive_dirs
 
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     values = [chr(c) for c in range(1, 128)] + ["日本語", "é/ß", "../x", "a b"]
-    got = _hive_dirs(pd.DataFrame({"lang": values + ["", None]}), ("lang",))
+    got = _hive_dirs(pa.table({"lang": values + ["", None]}), ("lang",))
     assert got[:len(values)] == ["lang=" + utils.escapePathName(v) for v in values]
     assert got[len(values):] == ["lang=__HIVE_DEFAULT_PARTITION__"] * 2
 
@@ -598,7 +598,7 @@ def test_output_codec_knob(tmp_path, monkeypatch):
     env caching."""
     import time
 
-    import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from go_readability_spark.plans.extract import (
@@ -611,8 +611,9 @@ def test_output_codec_knob(tmp_path, monkeypatch):
     ck = str(tmp_path / "ck")
     from datetime import datetime, timezone
     started = datetime.now(timezone.utc).replace(tzinfo=None)
-    _write_checkpoint_rows(ck, pd.DataFrame({"salt": [7], "rows_in": [3], "rows_out": [3],
-                                             "parse_errors": [0], "bytes_in": [123]}), started)
+    _write_checkpoint_rows(ck, pa.RecordBatch.from_pydict(
+        {"salt": [7], "rows_in": [3], "rows_out": [3], "parse_errors": [0],
+         "bytes_in": [123]}), started)
     import glob
     f = glob.glob(f"{ck}/ckpt-*.parquet")[0]
     meta = pq.ParquetFile(f).metadata

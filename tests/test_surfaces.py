@@ -8,6 +8,8 @@ stub pages that fail Check."""
 
 import glob
 import os
+import re
+from datetime import datetime, timezone
 
 import pytest
 
@@ -87,10 +89,11 @@ def test_surfaces_agree_per_url(spark, surfaces):
     assert got["stream"]["plain"] == batch
     # the corpus exercises both sides of the gate
     assert 0 < sum(r["readerable"] is True for r in batch.values()) < len(batch)
-    # the streaming plan is select -> mapInPandas: no exchange, no salt
+    # the streaming plan is select -> mapInArrow: no exchange, no salt
     stream = extract_pages_stream(spark.createDataFrame(_corpus_rows(), schema=PAGES_SCHEMA))
     plan = stream._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "salt" not in plan, plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
 
 
 def test_exchange_free_batch_agrees_per_url(spark, surfaces):
@@ -179,10 +182,10 @@ def test_gated_atomic_restart_writes_nothing(spark, surfaces, tmp_path):
                for i, r in enumerate(_corpus_rows()[:3])]
     pages = spark.createDataFrame(_corpus_rows() + failing, schema=PAGES_SCHEMA)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stats = _salted_exchange(pages, N_BUCKETS, 4, None, False, out).mapInPandas(
+    stats = _salted_exchange(pages, N_BUCKETS, 4, None, False, out).mapInArrow(
         scoring_fails(make_sink_extractor(out, ckpt, readerable_gate=True)),
         schema=SINK_STATS_SCHEMA).collect()
-    ungated = pages.select("url", "warc_ts", "html").mapInPandas(
+    ungated = pages.select("url", "warc_ts", "html").mapInArrow(
         scoring_fails(make_extractor()), schema=ARTICLES_SCHEMA)
 
     bucket = F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS)).alias("bucket")
@@ -232,7 +235,7 @@ def test_killed_checkpoint_write_leaves_no_visible_file(spark, tmp_path, monkeyp
     import io
     from datetime import datetime
 
-    import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from go_readability_spark.plans import run_extraction_job_atomic
@@ -254,8 +257,8 @@ def test_killed_checkpoint_write_leaves_no_visible_file(spark, tmp_path, monkeyp
         raise OSError(errno.ENOSPC, "No space left on device")
 
     monkeypatch.setattr(pq, "write_table", dies_halfway)
-    stats = pd.DataFrame({"salt": [0], "rows_in": [1], "rows_out": [1],
-                          "parse_errors": [0], "bytes_in": [10]})
+    stats = pa.RecordBatch.from_pydict({"salt": [0], "rows_in": [1], "rows_out": [1],
+                                        "parse_errors": [0], "bytes_in": [10]})
     with pytest.raises(OSError):
         _write_checkpoint_rows(ckpt, stats, datetime(2026, 1, 1))
     monkeypatch.undo()
@@ -312,3 +315,183 @@ def test_gate_keeps_error_rows_that_passed_check(monkeypatch):
     assert plain["readerable"] is True
     assert plain["error"] == "RuntimeError: scoring failed"
     assert extract_record("https://x/a.html", html, readerable_gate=True) == plain
+
+
+# Valid Spark timestamps outside pandas' nanosecond range, as warehouse
+# tables use them for sentinels.  0001-01-01 itself stays out of the
+# warc_ts leg: pyspark's own driver-side collect of it raises in a UTC
+# session, with no extraction involved.
+_FAR_PAST, _FAR_FUTURE = datetime(1, 1, 2), datetime(9999, 12, 31)
+
+
+def _every_surface(spark, rows, tmp):
+    """{surface: {url: record}} for ``rows`` through extract_pages with its
+    url exchange and in place over a one-wave parquet scan, the bucket
+    sink read back, and the stream over a parquet streaming source."""
+    from go_readability_spark.plans import (
+        extract_pages,
+        run_extraction_job_atomic,
+        session_parallelism,
+    )
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+    from go_readability_spark.sources import read_pages
+    from go_readability_spark.streaming import read_pages_stream, run_stream_to_parquet
+
+    pages = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
+    pages.repartition(session_parallelism(spark)).write.parquet(str(tmp / "pages"))
+    files = read_pages(spark, str(tmp / "pages"))
+    in_place = extract_pages(files)
+    assert "Exchange" not in in_place._jdf.queryExecution().executedPlan().toString()
+    got = {"exchanged": extract_pages(pages, num_partitions=2).collect(),
+           "in_place": in_place.collect()}
+    run_extraction_job_atomic(pages, str(tmp / "sink"), checkpoint_dir=str(tmp / "ckpt"),
+                              n_buckets=N_BUCKETS, num_partitions=2)
+    got["sink"] = spark.read.parquet(str(tmp / "sink")).collect()
+    run_stream_to_parquet(read_pages_stream(spark, str(tmp / "pages")), str(tmp / "stream"),
+                          str(tmp / "stream_ckpt")).awaitTermination()
+    got["stream"] = spark.read.parquet(str(tmp / "stream")).collect()
+    return {surface: {r["url"]: r for r in recs} for surface, recs in got.items()}
+
+
+def test_out_of_range_warc_ts_passes_through_every_surface(spark, tmp_path):
+    """A page whose warc_ts is a valid Spark timestamp outside pandas'
+    nanosecond range is extracted like any other on every surface, and
+    its warc_ts comes out unchanged."""
+    from go_readability_spark.sources import synth_corpus_rows
+
+    rows = synth_corpus_rows(6, seed=31, skew=False)
+    for i, row in enumerate(rows):
+        row["warc_ts"] = (_FAR_PAST, _FAR_FUTURE, datetime(2020, 1, 2, 3, 4, 5))[i % 3]
+    want = {r["url"]: r["warc_ts"] for r in rows}
+    for surface, recs in _every_surface(spark, rows, tmp_path).items():
+        assert {u: r["warc_ts"] for u, r in recs.items()} == want, surface
+        assert all(r["error"] is None and r["length"] > 0 for r in recs.values()), surface
+
+
+def test_published_and_modified_time_range_is_kept(spark, tmp_path):
+    """published_time/modified_time parsed from a page's metadata come out
+    as earlier runs wrote them: a date outside pandas' nanosecond range
+    (0001-01-01, 9999-12-31) is null, an in-range one is its UTC value,
+    on every surface."""
+    from go_readability_spark.sources import synth_corpus_rows
+
+    stamps = {"0001-01-01T00:00:00Z": None, "9999-12-31T23:59:59Z": None,
+              "2021-03-04T05:06:07+02:00": datetime(2021, 3, 4, 3, 6, 7)}
+    rows, want = synth_corpus_rows(6, seed=31, skew=False), {}
+    for i, row in enumerate(rows):
+        published, modified = list(stamps)[i % 3], list(stamps)[(i + 1) % 3]
+        meta = (b'<meta property="article:published_time" content="%s"/>'
+                b'<meta property="article:modified_time" content="%s"/>'
+                % (published.encode(), modified.encode()))
+        row["html"] = re.sub(rb'<meta property="article:published_time"[^>]*>', meta,
+                             row["html"], count=1)
+        want[row["url"]] = (stamps[published], stamps[modified])
+    for surface, recs in _every_surface(spark, rows, tmp_path).items():
+        assert {u: (r["published_time"], r["modified_time"])
+                for u, r in recs.items()} == want, surface
+
+
+_NO_PANDAS_WORKER = """
+import json, sys
+import pyarrow as pa
+from go_readability_spark.plans.extract import make_extractor, make_sink_extractor
+
+def batches():
+    with pa.ipc.open_stream(sys.argv[1]) as reader:
+        yield from reader
+
+articles = [b for b in make_extractor()(batches())]
+stats = list(make_sink_extractor(sys.argv[2], sys.argv[3])(batches()))
+print(json.dumps({"pandas": "pandas" in sys.modules,
+                  "urls": sorted(u for b in articles for u in b.column("url").to_pylist()),
+                  "rows_out": sum(s.column("rows_out").to_pylist()[0] for s in stats)}))
+"""
+
+
+def test_extraction_worker_path_imports_no_pandas(tmp_path):
+    """The extractor and the bucket sink run over Arrow record batches, as a
+    mapInArrow worker feeds them, without importing pandas."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+
+    rows = _corpus_rows()[:12]
+    batch = pa.RecordBatch.from_pydict({
+        "url": [r["url"] for r in rows],
+        "warc_ts": pa.array([r["warc_ts"] for r in rows], pa.timestamp("us", tz="UTC")),
+        "html": pa.array([r["html"] for r in rows], pa.binary()),
+        "salt": [0] * len(rows)})
+    with pa.ipc.new_stream(str(tmp_path / "pages.arrows"), batch.schema) as writer:
+        writer.write_batch(batch.slice(0, 5))
+        writer.write_batch(batch.slice(5))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", _NO_PANDAS_WORKER, str(tmp_path / "pages.arrows"),
+         str(tmp_path / "out"), str(tmp_path / "ckpt")],
+        cwd=root, capture_output=True, text=True, check=True,
+        env={**os.environ, "PYTHONPATH": root})
+    got = json.loads(done.stdout.splitlines()[-1])
+    assert got["pandas"] is False
+    assert got["urls"] == sorted(r["url"] for r in rows)
+    assert got["rows_out"] == len(rows)  # one bucket, every page kept, none errored
+
+
+def test_arrow_array_matches_pyarrow_conversion():
+    """The buffer-built arrays the extraction plans emit equal pyarrow's own
+    conversion of the same Python values, nulls, empty input, non-ASCII
+    text and the timestamp range ends included."""
+    import pyarrow as pa
+
+    from go_readability_spark.plans.extract import _arrow_array
+
+    cases = {
+        pa.string(): ["a", None, "", "日本語 é", "x" * 1000],
+        pa.int32(): [0, None, -(1 << 31), (1 << 31) - 1],
+        pa.int64(): [0, None, -(1 << 63), (1 << 63) - 1],
+        pa.bool_(): [True, None, False] * 5,
+        pa.timestamp("us"): [datetime(1, 1, 1), None, datetime(9999, 12, 31, 23, 59, 59, 999999),
+                             datetime(2021, 3, 4, 5, 6, 7, 8)],
+    }
+    for type_, values in cases.items():
+        for vals in (values, [v for v in values if v is not None], []):
+            got = _arrow_array(type_, vals)
+            got.validate(full=True)
+            assert got.equals(pa.array(vals, type_)), (type_, vals)
+
+
+def test_timestamps_are_utc_under_any_session_time_zone(spark, tmp_path):
+    """warc_ts and published_time keep their instant through extract_pages,
+    and the bucket files hold both as UTC wall time, whatever the
+    session time zone."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from go_readability_spark.plans import extract_pages, run_extraction_job_atomic
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+    from go_readability_spark.sources import synth_corpus_rows
+
+    row = synth_corpus_rows(1, seed=31, skew=False)[0]
+    row["html"] = re.sub(rb'<meta property="article:published_time"[^>]*>',
+                         b'<meta property="article:published_time" content="2021-03-04T05:06:07Z"/>',
+                         row["html"], count=1)
+    row["warc_ts"] = datetime(2020, 1, 2, 3, 4, 5)
+    published = datetime(2021, 3, 4, 5, 6, 7, tzinfo=timezone.utc)
+    before = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        pages = spark.createDataFrame([row], schema=PAGES_SCHEMA)
+        warc_epoch = pages.select(F.col("warc_ts").cast("long")).first()[0]
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        got = extract_pages(pages, num_partitions=1).select(
+            F.col("warc_ts").cast("long"), F.col("published_time").cast("long")).first()
+        assert tuple(got) == (warc_epoch, int(published.timestamp()))
+        out = str(tmp_path / "out")
+        run_extraction_job_atomic(pages, out, checkpoint_dir=str(tmp_path / "ckpt"),
+                                  n_buckets=N_BUCKETS, num_partitions=1)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    written = pq.read_table(glob.glob(os.path.join(out, "salt=*", "part-*.parquet"))[0])
+    utc_wall = [datetime.fromtimestamp(warc_epoch, timezone.utc).replace(tzinfo=None),
+                published.replace(tzinfo=None)]
+    assert [written.column(c)[0].as_py() for c in ("warc_ts", "published_time")] == utc_wall
