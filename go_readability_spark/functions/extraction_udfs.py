@@ -19,7 +19,7 @@ def readerable(html: pa.Array) -> pa.Array:
     """CheckDocument as a SQL boolean (parser-check.go:25-80); False when
     the page cannot be parsed."""
     from ..dom import parse_html
-    from ..plans.extract import _arrow_array, release_trees
+    from ..plans.extract import release_trees
     from ..readability import check_document
 
     def one(h):
@@ -32,14 +32,13 @@ def readerable(html: pa.Array) -> pa.Array:
         finally:
             release_trees(doc)
 
-    return _arrow_array(pa.bool_(), [one(h) for h in html.to_pylist()])
+    return pa.array([one(h) for h in html.to_pylist()], pa.bool_())
 
 
 def _record_field(html: pa.Array, field: str) -> pa.Array:
-    from ..plans.extract import _arrow_array, extract_record
+    from ..plans.extract import extract_record
 
-    return _arrow_array(pa.string(),
-                        [extract_record(None, h)[field] for h in html.to_pylist()])
+    return pa.array([extract_record(None, h)[field] for h in html.to_pylist()], pa.string())
 
 
 @F.arrow_udf(T.StringType())

@@ -89,43 +89,6 @@ _PANDAS_TIMESTAMP_RANGE = (datetime(1677, 9, 21, 0, 12, 43, 145225),
                            datetime(2262, 4, 11, 23, 47, 16, 854775))
 
 
-def _arrow_array(type_, values):
-    """``values`` (None for null) as an Arrow array of ``type_``, one of
-    the types _arrow_schema maps to.
-
-    Built from buffers: ``pa.array`` imports pandas to probe its argument
-    for pandas objects, and importing pandas adds about 37 MB to a Python
-    worker that has pyarrow loaded."""
-    import numpy as np
-
-    if type_ == pa.string():
-        raw = [v.encode() if v is not None else b"" for v in values]
-        offsets = np.cumsum([0, *map(len, raw)])
-        if offsets[-1] >= 1 << 31:  # int32 offsets would wrap
-            raise OverflowError(f"{offsets[-1]} bytes of strings in one Arrow batch")
-        data = [offsets.astype(np.int32), b"".join(raw)]
-    elif type_ == pa.bool_():
-        data = [np.packbits(np.fromiter(map(bool, values), bool, len(values)),
-                            bitorder="little")]
-    else:  # int32, int64, timestamp[us]
-        ints = f"<i{type_.bit_width // 8}"
-        data = [np.array([v if v is not None else 0 for v in values],
-                         "datetime64[us]" if pa.types.is_timestamp(type_) else ints).view(ints)]
-    mask = (np.packbits([v is not None for v in values], bitorder="little")
-            if None in values else None)
-    return pa.Array.from_buffers(type_, len(values), [
-        None if b is None else pa.py_buffer(b) for b in (mask, *data)])
-
-
-def _record_batch(schema, columns):
-    """A record batch of ``schema`` from ``columns``: name -> Arrow array,
-    or Python values with None for null.  ``columns`` is emptied column by
-    column, so each column's Python values are freed once copied."""
-    return pa.RecordBatch.from_arrays([
-        col if isinstance(col, pa.Array) else _arrow_array(f.type, col)
-        for f, col in ((f, columns.pop(f.name)) for f in schema)], schema=schema)
-
-
 def _utc_naive(dt):
     if dt is None:
         return None
@@ -279,14 +242,14 @@ def _write_checkpoint_rows(checkpoint_dir, stats, started):
     attempt = ctx.attemptNumber() + 1 if ctx is not None else 1
     finished = datetime.now(timezone.utc).replace(tzinfo=None)
     n = stats.num_rows
-    rows = _record_batch(_arrow_schema(CHECKPOINT_SCHEMA), {
+    rows = pa.RecordBatch.from_pydict({
         "partition_key": [str(s) for s in stats.column("salt").to_pylist()],
         "attempt": [attempt] * n,
         "status": ["done"] * n,
         **{c: stats.column(c) for c in _BUCKET_COUNTS},
         "started_at": [started] * n,
         "finished_at": [finished] * n,
-    })
+    }, schema=_arrow_schema(CHECKPOINT_SCHEMA))
     os.makedirs(checkpoint_dir, exist_ok=True)
     name = f"ckpt-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(checkpoint_dir, f".{name}.tmp")
@@ -517,7 +480,7 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
                 bucket_dir,
                 f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
             bucket = pa.Table.from_batches(
-                [articles.take(_arrow_array(pa.int64(), rows)) for articles, rows in pieces])
+                [articles.take(pa.array(rows, pa.int64())) for articles, rows in pieces])
             pq.write_table(bucket.select(columns), tmp, compression=_output_codec())
             os.replace(tmp, final)  # atomic publish
 
@@ -546,10 +509,10 @@ def make_sink_extractor(output_dir: str, checkpoint_dir: str | None,
                     parts.setdefault(key, []).append((articles, rows))
                 del batch  # not held while the next batch is extracted
         publish(parts)
-        stats = _record_batch(_arrow_schema(SINK_STATS_SCHEMA), {
+        stats = pa.RecordBatch.from_pydict({
             "salt": list(bucket_stats),
             **{c: [counts[k] for counts in bucket_stats.values()]
-               for k, c in enumerate(_BUCKET_COUNTS)}})
+               for k, c in enumerate(_BUCKET_COUNTS)}}, schema=_arrow_schema(SINK_STATS_SCHEMA))
         if checkpoint_dir and stats.num_rows:
             _write_checkpoint_rows(checkpoint_dir, stats, started)
         yield stats
@@ -585,9 +548,9 @@ def _extract_batches(batches, readerable_gate=False):
             kept.append(i)
         for c in ("published_time", "modified_time"):
             data[c] = [t if t is not None and lo <= t <= hi else None for t in data[c]]
-        warc_ts = batch.column("warc_ts").take(_arrow_array(pa.int64(), kept))
+        warc_ts = batch.column("warc_ts").take(pa.array(kept, pa.int64()))
         data["warc_ts"] = warc_ts.cast(_ARTICLES_ARROW.field("warc_ts").type)
-        yield batch, kept, _record_batch(_ARTICLES_ARROW, data)
+        yield batch, kept, pa.RecordBatch.from_pydict(data, schema=_ARTICLES_ARROW)
 
 
 def _is_remote_uri(path: str) -> bool:

@@ -391,76 +391,6 @@ def test_published_and_modified_time_range_is_kept(spark, tmp_path):
                 for u, r in recs.items()} == want, surface
 
 
-_NO_PANDAS_WORKER = """
-import json, sys
-import pyarrow as pa
-from go_readability_spark.plans.extract import make_extractor, make_sink_extractor
-
-def batches():
-    with pa.ipc.open_stream(sys.argv[1]) as reader:
-        yield from reader
-
-articles = [b for b in make_extractor()(batches())]
-stats = list(make_sink_extractor(sys.argv[2], sys.argv[3])(batches()))
-print(json.dumps({"pandas": "pandas" in sys.modules,
-                  "urls": sorted(u for b in articles for u in b.column("url").to_pylist()),
-                  "rows_out": sum(s.column("rows_out").to_pylist()[0] for s in stats)}))
-"""
-
-
-def test_extraction_worker_path_imports_no_pandas(tmp_path):
-    """The extractor and the bucket sink run over Arrow record batches, as a
-    mapInArrow worker feeds them, without importing pandas."""
-    import json
-    import subprocess
-    import sys
-
-    import pyarrow as pa
-
-    rows = _corpus_rows()[:12]
-    batch = pa.RecordBatch.from_pydict({
-        "url": [r["url"] for r in rows],
-        "warc_ts": pa.array([r["warc_ts"] for r in rows], pa.timestamp("us", tz="UTC")),
-        "html": pa.array([r["html"] for r in rows], pa.binary()),
-        "salt": [0] * len(rows)})
-    with pa.ipc.new_stream(str(tmp_path / "pages.arrows"), batch.schema) as writer:
-        writer.write_batch(batch.slice(0, 5))
-        writer.write_batch(batch.slice(5))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    done = subprocess.run(
-        [sys.executable, "-c", _NO_PANDAS_WORKER, str(tmp_path / "pages.arrows"),
-         str(tmp_path / "out"), str(tmp_path / "ckpt")],
-        cwd=root, capture_output=True, text=True, check=True,
-        env={**os.environ, "PYTHONPATH": root})
-    got = json.loads(done.stdout.splitlines()[-1])
-    assert got["pandas"] is False
-    assert got["urls"] == sorted(r["url"] for r in rows)
-    assert got["rows_out"] == len(rows)  # one bucket, every page kept, none errored
-
-
-def test_arrow_array_matches_pyarrow_conversion():
-    """The buffer-built arrays the extraction plans emit equal pyarrow's own
-    conversion of the same Python values, nulls, empty input, non-ASCII
-    text and the timestamp range ends included."""
-    import pyarrow as pa
-
-    from go_readability_spark.plans.extract import _arrow_array
-
-    cases = {
-        pa.string(): ["a", None, "", "日本語 é", "x" * 1000],
-        pa.int32(): [0, None, -(1 << 31), (1 << 31) - 1],
-        pa.int64(): [0, None, -(1 << 63), (1 << 63) - 1],
-        pa.bool_(): [True, None, False] * 5,
-        pa.timestamp("us"): [datetime(1, 1, 1), None, datetime(9999, 12, 31, 23, 59, 59, 999999),
-                             datetime(2021, 3, 4, 5, 6, 7, 8)],
-    }
-    for type_, values in cases.items():
-        for vals in (values, [v for v in values if v is not None], []):
-            got = _arrow_array(type_, vals)
-            got.validate(full=True)
-            assert got.equals(pa.array(vals, type_)), (type_, vals)
-
-
 def test_timestamps_are_utc_under_any_session_time_zone(spark, tmp_path):
     """warc_ts and published_time keep their instant through extract_pages,
     and the bucket files hold both as UTC wall time, whatever the
