@@ -19,8 +19,10 @@ def readerable(html: pa.Array) -> pa.Array:
     """CheckDocument as a SQL boolean (parser-check.go:25-80); False when
     the page cannot be parsed."""
     from ..dom import parse_html
-    from ..plans.extract import release_trees
+    from ..plans.extract import _stat_checked_zip_importers, release_trees
     from ..readability import check_document
+
+    _stat_checked_zip_importers()
 
     def one(h):
         doc = None
@@ -36,8 +38,9 @@ def readerable(html: pa.Array) -> pa.Array:
 
 
 def _record_field(html: pa.Array, field: str) -> pa.Array:
-    from ..plans.extract import extract_record
+    from ..plans.extract import _stat_checked_zip_importers, extract_record
 
+    _stat_checked_zip_importers()
     return pa.array([extract_record(None, h)[field] for h in html.to_pylist()], pa.string())
 
 

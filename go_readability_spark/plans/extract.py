@@ -37,10 +37,13 @@ Design notes for 10^12-row scale:
 from __future__ import annotations
 
 import contextlib
+import gc
 import glob
 import os
+import sys
 import time
 import uuid
+import zipimport
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
@@ -166,28 +169,20 @@ def extract_record(url, html_bytes, readerable_gate=False):
     return out
 
 
-# Amortized end-of-task cyclic collection (r7, guide §4.5).
-# extract_record tears the trees it can reach down explicitly; what a
-# task leaves to the cyclic collector is the subtrees the kernel detached
-# on the way (about 83 DOM nodes per skew-corpus page, found by a
-# DEBUG_SAVEALL sweep at the end of a 2,000-page task).  The old
-# per-task ``gc.collect()`` safety net cost a measured 15-25 ms per
-# task; one full sweep every _GC_EVERY_TASKS tasks keeps the reused
-# worker's residue bounded at ~1/8 the old per-task frequency cost.
-# Module-level counter: Python workers are single-threaded and reused
-# across tasks (spark.python.worker.reuse), and this module ships to
-# executors, so the state persists.
-_GC_EVERY_TASKS = 8
-_GC_STATE = {"tasks": 0}
-
-# HTML bytes a task reads between full sweeps inside its pause.  Those
-# detached subtrees pile up for as long as the pause lasts, so a task's
-# memory grew with its input: one 211 MB parquet split (770 MB of
+# HTML bytes a task reads between full sweeps of the cyclic collector,
+# which stays paused for the rest of the task.  extract_record tears the
+# trees it can reach down explicitly; what it leaves to the collector is
+# the subtrees the kernel detached on the way (about 83 DOM nodes per
+# skew-corpus page, found by a DEBUG_SAVEALL sweep at the end of a
+# 2,000-page task).  Those pile up for as long as the pause lasts, so a
+# task's memory grew with its input: one 211 MB parquet split (770 MB of
 # skew-corpus HTML, 42,000 pages) as one local[1] task peaked the Python
 # worker at 835 MB RSS paused, 264 MB with the collector on, and 336 MB
 # as 8 hash-exchanged tasks.  With a sweep per 32 MB it peaked at
 # 296-298 MB in the same wall time (105.1/96.0 s against 104.6/96.4 s,
-# interleaved); a task below the budget never sweeps.
+# interleaved); a task below the budget never sweeps.  Between tasks
+# pyspark's daemon collects after every task of a reused worker
+# (pyspark/daemon.py), and a worker without the daemon exits after one.
 _GC_EVERY_HTML_BYTES = 32 << 20
 
 
@@ -195,8 +190,6 @@ _GC_EVERY_HTML_BYTES = 32 << 20
 def _gc_paused():
     """Pauses the cyclic collector for one extraction task's body; both
     mapInArrow functions run inside it."""
-    import gc
-
     # extract_record tears its trees down explicitly, so the cyclic
     # collector has little to do mid-partition — its full gen-2 sweeps
     # (triggered purely by allocation counts at this node rate) were the
@@ -209,9 +202,48 @@ def _gc_paused():
     finally:
         if gc_was_enabled:
             gc.enable()
-            _GC_STATE["tasks"] += 1
-            if _GC_STATE["tasks"] % _GC_EVERY_TASKS == 0:
-                gc.collect()
+
+
+def _archive_stamp(path):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _stat_checked(finder):
+    seen = _archive_stamp(finder.archive)
+
+    def invalidate_caches():
+        nonlocal seen
+        stamp = _archive_stamp(finder.archive)
+        if stamp != seen:
+            seen = stamp
+            zipimport.zipimporter.invalidate_caches(finder)
+
+    return invalidate_caches
+
+
+def _stat_checked_zip_importers() -> None:
+    """Make each archive importer on the import path re-read its
+    directory only when its archive file has changed.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``), reused workers
+    included.  On Python 3.11 and 3.12 every cached ``zipimporter`` then
+    re-reads its whole archive directory: the worker's 16-17, over
+    pyspark.zip, py4j, the spark-core jar (5,359 entries) and the
+    shipped package, took 137-470 ms of every task measured, before any
+    of the task's own code ran.  Wrapped, an
+    importer costs one ``stat`` per call and re-reads only when the
+    archive's (mtime_ns, size) moved, so a worker pays the re-read on
+    its first task alone and a rewritten archive still reloads.
+    Importers created since the last call are wrapped on the next."""
+    for finder in list(sys.path_importer_cache.values()):
+        if (isinstance(finder, zipimport.zipimporter)
+                and "invalidate_caches" not in vars(finder)):
+            finder.invalidate_caches = _stat_checked(finder)
 
 
 def make_extractor(readerable_gate: bool = False):
@@ -267,15 +299,18 @@ def _extract_partitions(spark) -> int:
 
     The r7 straggler hypothesis (per-doc cost varies ~20x on real
     pages, so 4x tasks-per-core should smooth the tail) was MEASURED
-    AND REJECTED on this host: every Python-boundary task pays ~13 ms
-    of serialized per-task protocol cost (mapInPandas identity over
-    5000 rows: 0.74 s at 32 tasks, 2.04 s at 128, 4.7 s at 512, while
-    the JVM-only twin is flat at 0.26 s — worker reuse confirmed
-    active, so it is per-task handshake, not fork).  Finer partitions
-    therefore LOSE below ~100 docs/task: the interleaved A/B measured
-    32 partitions beating 128 by ~2x on all three extraction benches.
-    The default is the session's shuffle-partition setting, floored at
-    one task per core."""
+    AND REJECTED on the 32-core host: every Python-boundary task paid a
+    fixed cost (mapInPandas identity over 5000 rows: 0.74 s at 32
+    tasks, 2.04 s at 128, 4.7 s at 512, while the JVM-only twin is flat
+    at 0.26 s, with worker reuse active), so finer partitions LOST
+    below ~100 docs/task: 32 partitions beat 128 by ~2x on all three
+    extraction benches.  That cost was the worker's
+    ``importlib.invalidate_caches()`` before each task re-reading every
+    zip archive on its path (see _stat_checked_zip_importers).  On 4
+    cores an identity mapInArrow over 5000 rows cost 64-65 ms of wall
+    per task with the re-read and 13-14 ms without it, as in the
+    extraction functions now.  The default is the session's
+    shuffle-partition setting, floored at one task per core."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, shuffle, spark.sparkContext.defaultParallelism)
 
@@ -525,8 +560,7 @@ def _extract_batches(batches, readerable_gate=False):
     record batch (url, warc_ts, html, ...), that batch, the positions of
     the rows the gate kept, and their article batch in _ARTICLES_ARROW.
     warc_ts is the input column's kept rows, passed through unconverted."""
-    import gc
-
+    _stat_checked_zip_importers()
     lo, hi = _PANDAS_TIMESTAMP_RANGE
     unswept = 0
     for batch in batches:

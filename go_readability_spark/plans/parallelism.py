@@ -57,8 +57,13 @@ def fills_one_wave(splits: int, slots: int) -> bool:
 # the kernel-bound skew corpus.  One full wave (4 splits) took 0.84x and
 # 0.86x the exchanged time.  More splits than slots did not pay: 0.90-1.23x
 # at 5-8 splits (wins only at 5 and 6 on the skew corpus) and 1.05-1.23x
-# at 9-16, since every Python task carries a fixed cost and these tasks
-# are small.  One partial wave at fill f takes about 1/f of the full
+# at 9-16, since every Python task then carried a fixed cost of about
+# 0.2 s of worker CPU (pyspark's per-task importlib.invalidate_caches()
+# re-reading every zip archive on the worker's path) and these tasks are
+# small.  The extraction functions now skip that re-read
+# (extract._stat_checked_zip_importers), and the same sweep on short
+# pages reads 0.84x at 4 splits and 0.91x at 8 (0.78x and 1.02x with the
+# re-read); the rule is not re-priced yet.  One partial wave at fill f takes about 1/f of the full
 # wave's time, so it beats an exchange costing 1.17-1.19x only while
 # f >= 1/1.17, about 0.85; at 3 of 4 (0.75) the ratios straddled 1.
 _MIN_SLOT_FILL = 0.85
