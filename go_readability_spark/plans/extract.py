@@ -235,11 +235,11 @@ def _stat_checked_zip_importers() -> None:
     re-reads its whole archive directory: the worker's 16-17, over
     pyspark.zip, py4j, the spark-core jar (5,359 entries) and the
     shipped package, took 137-470 ms of every task measured, before any
-    of the task's own code ran.  Wrapped, an
-    importer costs one ``stat`` per call and re-reads only when the
-    archive's (mtime_ns, size) moved, so a worker pays the re-read on
-    its first task alone and a rewritten archive still reloads.
-    Importers created since the last call are wrapped on the next."""
+    of the task's own code ran.  Wrapped, an importer costs one ``stat``
+    per call and re-reads only when the archive's (mtime_ns, size)
+    moved, so a worker pays the re-read on its first task alone and a
+    rewritten archive still reloads.  Importers created since the last
+    call are wrapped on the next."""
     for finder in list(sys.path_importer_cache.values()):
         if (isinstance(finder, zipimport.zipimporter)
                 and "invalidate_caches" not in vars(finder)):
