@@ -112,31 +112,15 @@ def check_segment_marker(output_dir: str, n_segments: int,
 
     pmod-hash assignment reshuffles every archive/file across segments
     when K changes, while stale seg=i dirs from the previous K survive
-    (writes are per-segment) — the reunion would silently hold duplicate
-    rows. The first segmented run records (K, kind) in an
-    underscore-prefixed marker (invisible to parquet discovery); any
-    later run against the same output must match, including a K=1 rerun
-    into a previously segmented dir."""
-    import json as _json
+    (writes are per-segment). The first segmented run records (K, kind)
+    in ``_SEGMENTS`` (check_layout_marker); any later run against the
+    same output must match, including a K=1 rerun into a previously
+    segmented dir."""
+    from .extract import check_layout_marker
 
-    path = os.path.join(output_dir, "_SEGMENTS")
-    want = {"n_segments": n_segments, "kind": kind}
-    if os.path.exists(path):
-        with open(path) as fh:
-            prev = _json.load(fh)
-        if prev != want:
-            raise ValueError(
-                f"segmented output {output_dir} was written with "
-                f"{prev}; rerunning with {want} would reshuffle the "
-                "hash assignment over stale seg=i dirs and duplicate "
-                "rows — reuse the original --segments value, or remove "
-                "the output and checkpoints to start over")
-    elif n_segments > 1:
-        os.makedirs(output_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(want, fh)
-        os.replace(tmp, path)
+    check_layout_marker(output_dir, "_SEGMENTS",
+                        {"n_segments": n_segments, "kind": kind},
+                        record=n_segments > 1)
 
 
 def _release_job_state(spark) -> None:

@@ -50,7 +50,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from .parallelism import splits_fill_session
+from .parallelism import session_parallelism, splits_fill_session
 from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA, SINK_STATS_SCHEMA
 
 DEFAULT_N_BUCKETS = 256
@@ -294,33 +294,6 @@ def with_salt(pages: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame
     return pages.withColumn("salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)))
 
 
-def _extract_partitions(spark) -> int:
-    """Default extraction partition count (r7, measured — guide §1.1).
-
-    The r7 straggler hypothesis (per-doc cost varies ~20x on real
-    pages, so 4x tasks-per-core should smooth the tail) was MEASURED
-    AND REJECTED on the 32-core host: every Python-boundary task paid a
-    fixed cost (mapInPandas identity over 5000 rows: 0.74 s at 32
-    tasks, 2.04 s at 128, 4.7 s at 512, while the JVM-only twin is flat
-    at 0.26 s, with worker reuse active), so finer partitions LOST
-    below ~100 docs/task: 32 partitions beat 128 by ~2x on all three
-    extraction benches.  That cost was the worker's
-    ``importlib.invalidate_caches()`` before each task re-reading every
-    zip archive on its path (see _stat_checked_zip_importers).  On 4
-    cores an identity mapInArrow over 5000 rows cost 64-65 ms of wall
-    per task with the re-read and 13-14 ms without it, as in the
-    extraction functions now.  The default is the session's
-    shuffle-partition setting, floored at one task per core."""
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(1, shuffle, spark.sparkContext.defaultParallelism)
-
-
-def default_extract_partitions(spark, n_buckets: int) -> int:
-    """The resumable sink's partition count: ``_extract_partitions``
-    capped at ``n_buckets``, the salt's number of distinct values."""
-    return max(1, min(int(n_buckets), _extract_partitions(spark)))
-
-
 def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str,
                       n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame | None:
     """Salt buckets safe to skip on resume.
@@ -329,7 +302,8 @@ def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str,
     `verify_output_dir` agree with the checkpoint's rows_out — closing the
     failure window where a task wrote its lineage row but died before its
     output landed. The bucket is recomputed from the output's url column
-    (xxhash64 is deterministic), so no schema change is needed.
+    by ``with_salt``, the key the sink wrote it under, so no schema
+    change is needed.
     (Iceberg: both writes share one transaction and this check is free.)"""
     if not checkpoint_dir or not os.path.isdir(checkpoint_dir):
         return None
@@ -352,8 +326,8 @@ def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str,
         # errored or was gated out) are truly done
         return done.where(F.col("rows_out") == 0).select("salt")
     actual = (
-        out.where(F.col("error").isNull())
-        .groupBy(F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).alias("salt"))
+        with_salt(out.where(F.col("error").isNull()), n_buckets)
+        .groupBy("salt")
         .agg(F.count("*").alias("actual_rows"))
     )
     # LEFT join: a bucket whose every page errored has rows_out == 0 and
@@ -371,7 +345,8 @@ def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | Non
                      output_dir: str) -> DataFrame:
     """The sink's plan prelude: prune to (url, warc_ts, html), salt,
     anti-join the buckets completed in ``output_dir`` on resume, and run
-    the one exchange keyed on the salt."""
+    the one exchange keyed on the salt, into ``num_partitions`` tasks or
+    else min(n_buckets, ``session_parallelism``)."""
     spark = pages.sparkSession
     df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
 
@@ -384,7 +359,7 @@ def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | Non
     # bucket-level resume requires each salt bucket to live in exactly
     # one task: the checkpoint marks whole buckets done, so a bucket
     # split across tasks could be half-recorded as complete
-    return df.repartition(num_partitions or default_extract_partitions(spark, n_buckets),
+    return df.repartition(num_partitions or min(n_buckets, session_parallelism(spark)),
                           "salt")
 
 
@@ -407,7 +382,8 @@ def extract_pages(
     Such a scan runs in place, one Python task per split; any other
     split count, a stream, or an input that already shuffles (the
     crawl-fetch plan's repartition by archive, whose AQE-coalesced task
-    count is unknown until it runs) gets the hash exchange.
+    count is unknown until it runs) gets the hash exchange, into P =
+    ``session_parallelism`` tasks: the slots the in-place rule counts.
 
     ``readerable_gate`` drops pages that fail Check inside that one
     mapInArrow stage, before scoring. A pure transform: resumable jobs
@@ -422,7 +398,7 @@ def extract_pages(
         # row counts ranged 15-69 around a mean of 31 on the fixture bench,
         # max task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
         # multinomially and stays retry-safe (deterministic key, not rand()).
-        df = df.repartition(num_partitions or _extract_partitions(pages.sparkSession),
+        df = df.repartition(num_partitions or session_parallelism(pages.sparkSession),
                             F.xxhash64(F.col("url")))
     return df.mapInArrow(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
@@ -594,6 +570,37 @@ def _is_remote_uri(path: str) -> bool:
     return scheme not in ("", "file")
 
 
+def check_layout_marker(output_dir: str, marker: str, layout: dict,
+                        record: bool = True) -> None:
+    """Refuse writing into ``output_dir`` under another hash layout than
+    the one its ``marker`` file records.
+
+    Output is written per hash cell (``seg=i`` dirs, ``salt=<n>`` files),
+    so rerunning with another cell count reassigns rows while the cells
+    of the earlier count survive: the output would silently hold
+    duplicate rows.  The first run with ``record`` stores ``layout`` in
+    the underscore-prefixed marker (invisible to parquet discovery);
+    every later run against the same output must match it."""
+    import json
+
+    path = os.path.join(output_dir, marker)
+    if os.path.exists(path):
+        with open(path) as fh:
+            prev = json.load(fh)
+        if prev != layout:
+            raise ValueError(
+                f"output {output_dir} was written with {prev}; rerunning "
+                f"with {layout} would reshuffle the hash assignment over "
+                "the earlier run's files and duplicate rows — rerun with "
+                f"{prev}, or remove the output and checkpoints to start over")
+    elif record:
+        os.makedirs(output_dir, exist_ok=True)
+        tmp = path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(layout, fh)
+        os.replace(tmp, path)
+
+
 def run_extraction_job_atomic(
     pages: DataFrame,
     output_dir: str,
@@ -614,6 +621,11 @@ def run_extraction_job_atomic(
     `partition_by` (e.g. ("lang",)) hive-partitions the output by string
     article columns (make_sink_extractor).
 
+    ``n_buckets`` is recorded in ``output_dir/_BUCKETS`` on the first run;
+    a later run into the same output with another value raises
+    ValueError (check_layout_marker), since the earlier salt's bucket
+    files would stay beside the new ones.
+
     Returns the number of buckets processed this run (0 on a no-op
     resume)."""
     for path in (output_dir, checkpoint_dir):
@@ -628,6 +640,7 @@ def run_extraction_job_atomic(
         if col not in _COLUMNS or ARTICLES_SCHEMA[col].dataType.simpleString() != "string":
             raise ValueError(f"partition_by column {col!r}: the bucket sink "
                              "partitions by string article columns only")
+    check_layout_marker(output_dir, "_BUCKETS", {"n_buckets": n_buckets})
     df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
                           resume, output_dir)
     os.makedirs(output_dir, exist_ok=True)

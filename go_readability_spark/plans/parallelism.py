@@ -41,6 +41,10 @@ _STAGED_NODE = re.compile(
 
 
 def session_parallelism(spark) -> int:
+    """The session's task slots: min(shuffle.partitions, cores).  The one
+    task count every extraction plan reads: the in-place decision, the
+    scan guard below, and both extraction exchanges (the sink's capped
+    at its bucket count)."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, min(shuffle, spark.sparkContext.defaultParallelism))
 
@@ -89,13 +93,13 @@ def splits_fill_session(df: DataFrame) -> bool:
                           session_parallelism(df.sparkSession))
 
 
-def ensure_scan_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     """Repartition `df` round-robin iff it currently has fewer partitions
     than the session could use (no-op for streaming frames and for
     already-parallel inputs)."""
     if df.isStreaming:
         return df
-    target = min_parts or session_parallelism(df.sparkSession)
+    target = session_parallelism(df.sparkSession)
     try:
         current = df.rdd.getNumPartitions()
     except Exception:

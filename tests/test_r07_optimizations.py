@@ -154,14 +154,47 @@ def test_ensure_scan_parallelism_restores_and_noops(spark, tmp_path):
     assert ensure_scan_parallelism(wide) is wide
 
 
-def test_default_extract_partitions_policy(spark):
-    from go_readability_spark.plans.extract import default_extract_partitions
+def test_extraction_exchanges_use_session_parallelism(spark, tmp_path):
+    """Both extraction exchanges take their task count from
+    session_parallelism = min(shuffle.partitions, cores), the slot count
+    the in-place rule reads, also on a session left at the default 200
+    shuffle partitions: extract_pages over an under-split input plans
+    P = session_parallelism hash tasks (not 200), and the sink plans
+    min(n_buckets, session_parallelism) salt tasks."""
+    import re
 
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    got = default_extract_partitions(spark, 256)
-    assert got == min(256, max(shuffle, spark.sparkContext.defaultParallelism))
-    # the salt cardinality caps the useful partition count
-    assert default_extract_partitions(spark, 4) == 4
+    from go_readability_spark.plans import extract_pages, session_parallelism
+    from go_readability_spark.plans.extract import _salted_exchange
+    from go_readability_spark.plans.schema import PAGES_SCHEMA
+    from go_readability_spark.sources import read_pages, synth_corpus_rows
+
+    def planned_tasks(df, key):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        m = re.search(r"hashpartitioning\((\w+)[^,]*(?:, \d+\))?, (\d+)\)", plan)
+        assert m and m.group(1) == key, plan
+        return int(m.group(2))
+
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(synth_corpus_rows(8, seed=5, skew=False),
+                          schema=PAGES_SCHEMA).coalesce(1).write.parquet(path)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        pages = read_pages(spark, path)
+        slots = session_parallelism(spark)
+        assert slots == min(200, spark.sparkContext.defaultParallelism)
+        assert pages.rdd.getNumPartitions() == 1
+        assert planned_tasks(extract_pages(pages), "xxhash64") == slots
+        out = str(tmp_path / "out")
+        for n_buckets in (256, 4, 2):
+            # the salt's number of distinct values caps the useful task count
+            sink = _salted_exchange(pages, n_buckets, None, None, False, out)
+            assert planned_tasks(sink, "salt") == min(n_buckets, slots)
+        # num_partitions still overrides both
+        assert planned_tasks(extract_pages(pages, num_partitions=3), "xxhash64") == 3
+        assert planned_tasks(_salted_exchange(pages, 256, 3, None, False, out), "salt") == 3
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def _cycle_pinned_batches(n_batches, rows, refs):

@@ -193,6 +193,28 @@ def test_resume_verifies_output(spark, tmp_path):
     assert final.select("url").distinct().count() == 40
 
 
+def test_sink_refuses_another_bucket_count(spark, tmp_path):
+    """The salt pmod(xxhash64(url), B) places a url in another bucket file
+    under another B, and the earlier B's salt=<n> files stay: a restart
+    with a different bucket count would add a second copy of the pages.
+    The first run records B in an underscore-prefixed marker; a run with
+    another B raises before writing, and the same B resumes."""
+    from go_readability_spark.plans import run_extraction_job_atomic
+    from go_readability_spark.sources import synth_pages_dataframe
+
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "articles")
+    pages = synth_pages_dataframe(spark, 40, seed=29, skew=False)
+    assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=16) > 0
+    assert os.path.exists(os.path.join(out, "_BUCKETS"))
+    for n_buckets in (4, 64):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=n_buckets)
+    rows = spark.read.parquet(out)
+    assert rows.count() == 40 and rows.select("url").distinct().count() == 40
+    assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=16) == 0
+
+
 def test_extraction_partitioning_invariance(spark):
     """Per-url results must not depend on partition count or parallelism —
     the cluster-resize invariant behind the scaling claim."""

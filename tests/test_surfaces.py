@@ -425,3 +425,59 @@ def test_timestamps_are_utc_under_any_session_time_zone(spark, tmp_path):
     utc_wall = [datetime.fromtimestamp(warc_epoch, timezone.utc).replace(tzinfo=None),
                 published.replace(tzinfo=None)]
     assert [written.column(c)[0].as_py() for c in ("warc_ts", "published_time")] == utc_wall
+
+
+def test_cli_and_http_agree_with_extract_record(tmp_path, capsys):
+    """The single-document surfaces run the same kernel: on every
+    readerable page of the corpus, ``parse -t`` prints the record's
+    text_content, ``parse -m`` its five metadata fields (file sources
+    resolve against http://fakehost.com), and the HTTP server's
+    ``?text=true`` answers with the same text."""
+    import http.server
+    import json
+    import threading
+    from urllib.parse import quote
+    from urllib.request import urlopen
+
+    from go_readability_spark.cli import main, make_http_server
+    from go_readability_spark.plans.extract import extract_record
+
+    pages = {}
+    for row in _corpus_rows():
+        rec = extract_record("http://fakehost.com", row["html"])
+        if rec["readerable"] is True:
+            pages[f"/{len(pages)}.html"] = (row["html"], rec)
+    assert pages
+
+    class Origin(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            self.send_response(200)
+            self.send_header("Content-Type", "text/html; charset=utf-8")
+            self.end_headers()
+            self.wfile.write(pages[self.path][0])
+
+        def log_message(self, *a):
+            pass
+
+    origin = http.server.HTTPServer(("127.0.0.1", 0), Origin)
+    server = make_http_server("127.0.0.1:0")
+    for s in (origin, server):
+        threading.Thread(target=s.serve_forever, daemon=True).start()
+    try:
+        for path, (html, rec) in pages.items():
+            src = tmp_path / path.lstrip("/")
+            src.write_bytes(html)
+            assert main(["parse", str(src), "-t"]) == 0
+            assert capsys.readouterr().out == rec["text_content"] + "\n", path
+            assert main(["parse", str(src), "-m"]) == 0
+            meta = json.loads(capsys.readouterr().out)
+            assert meta == {k: rec[k] for k in ("title", "byline", "excerpt", "image",
+                                                "favicon")}, path
+            page = quote(f"http://127.0.0.1:{origin.server_port}{path}", safe="")
+            with urlopen(f"http://127.0.0.1:{server.server_address[1]}/?url={page}"
+                         "&text=true") as r:
+                assert r.read().decode("utf-8") == rec["text_content"], path
+    finally:
+        for s in (origin, server):
+            s.shutdown()
+            s.server_close()
