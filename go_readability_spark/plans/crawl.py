@@ -115,11 +115,11 @@ def check_segment_marker(output_dir: str, n_segments: int,
     (writes are per-segment). The first segmented run records (K, kind)
     in ``_SEGMENTS`` (check_layout_marker); any later run against the
     same output must match, including a K=1 rerun into a previously
-    segmented dir."""
+    segmented dir, and seg=i dirs without the marker are refused."""
     from .extract import check_layout_marker
 
     check_layout_marker(output_dir, "_SEGMENTS",
-                        {"n_segments": n_segments, "kind": kind},
+                        {"n_segments": n_segments, "kind": kind}, "seg=*",
                         record=n_segments > 1)
 
 

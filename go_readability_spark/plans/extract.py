@@ -50,7 +50,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from .parallelism import session_parallelism, splits_fill_session
+from .parallelism import shuffle_partitions, splits_fill_session
 from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA, SINK_STATS_SCHEMA
 
 DEFAULT_N_BUCKETS = 256
@@ -346,7 +346,15 @@ def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | Non
     """The sink's plan prelude: prune to (url, warc_ts, html), salt,
     anti-join the buckets completed in ``output_dir`` on resume, and run
     the one exchange keyed on the salt, into ``num_partitions`` tasks or
-    else min(n_buckets, ``session_parallelism``)."""
+    else min(n_buckets, max(``spark.sql.shuffle.partitions``, cores)).
+
+    A sink task publishes its buckets and their lineage rows when its
+    input ends, so the tasks are the unit a mid-job kill resumes from,
+    and each holds its share of the articles until then.  The sink
+    therefore keeps Spark's shuffle task count (200 by default: several
+    waves that publish as they finish), floored at one task per core.
+    One task per core would publish nothing until the job nears its end
+    and hold N/cores articles per task."""
     spark = pages.sparkSession
     df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
 
@@ -359,8 +367,8 @@ def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | Non
     # bucket-level resume requires each salt bucket to live in exactly
     # one task: the checkpoint marks whole buckets done, so a bucket
     # split across tasks could be half-recorded as complete
-    return df.repartition(num_partitions or min(n_buckets, session_parallelism(spark)),
-                          "salt")
+    tasks = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism)
+    return df.repartition(num_partitions or min(n_buckets, tasks), "salt")
 
 
 def extract_pages(
@@ -382,8 +390,11 @@ def extract_pages(
     Such a scan runs in place, one Python task per split; any other
     split count, a stream, or an input that already shuffles (the
     crawl-fetch plan's repartition by archive, whose AQE-coalesced task
-    count is unknown until it runs) gets the hash exchange, into P =
-    ``session_parallelism`` tasks: the slots the in-place rule counts.
+    count is unknown until it runs) gets the hash exchange, into one
+    task per core (``defaultParallelism``): each Python task has a fixed
+    cost, so more tasks than cores only add it, and
+    ``spark.sql.shuffle.partitions`` (200 by default) neither raises nor
+    caps the count.
 
     ``readerable_gate`` drops pages that fail Check inside that one
     mapInArrow stage, before scoring. A pure transform: resumable jobs
@@ -398,7 +409,7 @@ def extract_pages(
         # row counts ranged 15-69 around a mean of 31 on the fixture bench,
         # max task 1.8s vs 0.97s mean). xxhash64(url) spreads counts
         # multinomially and stays retry-safe (deterministic key, not rand()).
-        df = df.repartition(num_partitions or session_parallelism(pages.sparkSession),
+        df = df.repartition(num_partitions or pages.sparkSession.sparkContext.defaultParallelism,
                             F.xxhash64(F.col("url")))
     return df.mapInArrow(make_extractor(readerable_gate), schema=ARTICLES_SCHEMA)
 
@@ -570,7 +581,7 @@ def _is_remote_uri(path: str) -> bool:
     return scheme not in ("", "file")
 
 
-def check_layout_marker(output_dir: str, marker: str, layout: dict,
+def check_layout_marker(output_dir: str, marker: str, layout: dict, cells: str,
                         record: bool = True) -> None:
     """Refuse writing into ``output_dir`` under another hash layout than
     the one its ``marker`` file records.
@@ -579,8 +590,11 @@ def check_layout_marker(output_dir: str, marker: str, layout: dict,
     so rerunning with another cell count reassigns rows while the cells
     of the earlier count survive: the output would silently hold
     duplicate rows.  The first run with ``record`` stores ``layout`` in
-    the underscore-prefixed marker (invisible to parquet discovery);
-    every later run against the same output must match it."""
+    the underscore-prefixed marker (invisible to parquet discovery)
+    before it writes a cell; every later run against the same output must
+    match it.  An output that holds cells (entries matching the ``cells``
+    glob under ``output_dir``) but no marker was written under an
+    unknown layout and is refused too."""
     import json
 
     path = os.path.join(output_dir, marker)
@@ -593,7 +607,15 @@ def check_layout_marker(output_dir: str, marker: str, layout: dict,
                 f"with {layout} would reshuffle the hash assignment over "
                 "the earlier run's files and duplicate rows — rerun with "
                 f"{prev}, or remove the output and checkpoints to start over")
-    elif record:
+        return
+    if glob.glob(os.path.join(glob.escape(output_dir), cells), recursive=True):
+        raise ValueError(
+            f"output {output_dir} holds {cells} entries but no {marker} "
+            f"marker, so the layout they were written under is unknown; "
+            f"rerunning with {layout} could reshuffle the hash assignment "
+            "over them and duplicate rows — remove the output and "
+            "checkpoints to start over")
+    if record:
         os.makedirs(output_dir, exist_ok=True)
         tmp = path + ".tmp"
         with open(tmp, "w") as fh:
@@ -622,9 +644,9 @@ def run_extraction_job_atomic(
     article columns (make_sink_extractor).
 
     ``n_buckets`` is recorded in ``output_dir/_BUCKETS`` on the first run;
-    a later run into the same output with another value raises
-    ValueError (check_layout_marker), since the earlier salt's bucket
-    files would stay beside the new ones.
+    a later run into the same output with another value, or into bucket
+    files with no marker, raises ValueError (check_layout_marker), since
+    the earlier salt's bucket files would stay beside the new ones.
 
     Returns the number of buckets processed this run (0 on a no-op
     resume)."""
@@ -640,7 +662,8 @@ def run_extraction_job_atomic(
         if col not in _COLUMNS or ARTICLES_SCHEMA[col].dataType.simpleString() != "string":
             raise ValueError(f"partition_by column {col!r}: the bucket sink "
                              "partitions by string article columns only")
-    check_layout_marker(output_dir, "_BUCKETS", {"n_buckets": n_buckets})
+    check_layout_marker(output_dir, "_BUCKETS", {"n_buckets": n_buckets},
+                        "**/salt=*")
     df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
                           resume, output_dir)
     os.makedirs(output_dir, exist_ok=True)

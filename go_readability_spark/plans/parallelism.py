@@ -40,13 +40,15 @@ _STAGED_NODE = re.compile(
     re.MULTILINE)
 
 
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions``."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
 def session_parallelism(spark) -> int:
-    """The session's task slots: min(shuffle.partitions, cores).  The one
-    task count every extraction plan reads: the in-place decision, the
-    scan guard below, and both extraction exchanges (the sink's capped
-    at its bucket count)."""
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(1, min(shuffle, spark.sparkContext.defaultParallelism))
+    """The session's task slots as the in-place decision and the scan
+    guard below count them: min(shuffle.partitions, cores)."""
+    return max(1, min(shuffle_partitions(spark), spark.sparkContext.defaultParallelism))
 
 
 def fills_one_wave(splits: int, slots: int) -> bool:

@@ -1,7 +1,7 @@
 """SparkSession builder with the configuration the extraction pipeline
 wants at scale (SURVEY.md §4): Arrow transport on, small Arrow batches
-(see the maxRecordsPerBatch note), AQE for post-shuffle coalescing, UTC
-session timezone."""
+(HTML rows are ~100 KB median, so 512 rows/batch keeps buffers sane),
+AQE for post-shuffle coalescing, UTC session timezone."""
 
 from __future__ import annotations
 
@@ -37,14 +37,7 @@ def build_session(master: str | None = None, app_name: str = "go-readability-spa
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # rows per Arrow batch into and out of every Python stage.  An
-        # extraction task holds its input batch and the batch's articles
-        # while it works (the sink holds every article batch until it
-        # publishes), so a task's memory follows rows x page size.  With
-        # one exchanged task per slot a skew-corpus sink task reads ~500
-        # pages; one such task in process peaked at 170 MB with 512-row
-        # batches and at 160 MB with 256 or 128, at the same docs/s.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         # vectorized parquet reader: the default 4096-row columnar batch
         # over a binary html column (10 KB-1.6 MB/page on real crawls)
         # asks for up-to-hundreds-of-MB contiguous per column vector and

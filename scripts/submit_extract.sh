@@ -14,7 +14,7 @@ exec spark-submit \
   --py-files "$ZIP" \
   --conf spark.sql.session.timeZone=UTC \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.execution.arrow.maxRecordsPerBatch=256 \
+  --conf spark.sql.execution.arrow.maxRecordsPerBatch=512 \
   --conf spark.sql.adaptive.enabled=true \
   "$ROOT/scripts/extract_job.py" \
   --input "$INPUT" --output "$OUTPUT" ${CKPT:+--checkpoint "$CKPT"}

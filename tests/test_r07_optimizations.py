@@ -154,16 +154,16 @@ def test_ensure_scan_parallelism_restores_and_noops(spark, tmp_path):
     assert ensure_scan_parallelism(wide) is wide
 
 
-def test_extraction_exchanges_use_session_parallelism(spark, tmp_path):
-    """Both extraction exchanges take their task count from
-    session_parallelism = min(shuffle.partitions, cores), the slot count
-    the in-place rule reads, also on a session left at the default 200
-    shuffle partitions: extract_pages over an under-split input plans
-    P = session_parallelism hash tasks (not 200), and the sink plans
-    min(n_buckets, session_parallelism) salt tasks."""
+def test_extraction_exchange_task_counts(spark, tmp_path):
+    """extract_pages over an under-split input exchanges into one task per
+    core, whatever spark.sql.shuffle.partitions says: not 200 on a
+    session left at the default, and not fewer than the cores when it is
+    set lower. The resumable sink keeps min(n_buckets, max(shuffle
+    partitions, cores)) salt tasks: its tasks are the unit it publishes
+    and resumes by. num_partitions overrides both."""
     import re
 
-    from go_readability_spark.plans import extract_pages, session_parallelism
+    from go_readability_spark.plans import extract_pages
     from go_readability_spark.plans.extract import _salted_exchange
     from go_readability_spark.plans.schema import PAGES_SCHEMA
     from go_readability_spark.sources import read_pages, synth_corpus_rows
@@ -177,22 +177,23 @@ def test_extraction_exchanges_use_session_parallelism(spark, tmp_path):
     path = str(tmp_path / "pages")
     spark.createDataFrame(synth_corpus_rows(8, seed=5, skew=False),
                           schema=PAGES_SCHEMA).coalesce(1).write.parquet(path)
+    out = str(tmp_path / "out")
+    cores = spark.sparkContext.defaultParallelism
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
-        pages = read_pages(spark, path)
-        slots = session_parallelism(spark)
-        assert slots == min(200, spark.sparkContext.defaultParallelism)
-        assert pages.rdd.getNumPartitions() == 1
-        assert planned_tasks(extract_pages(pages), "xxhash64") == slots
-        out = str(tmp_path / "out")
-        for n_buckets in (256, 4, 2):
-            # the salt's number of distinct values caps the useful task count
-            sink = _salted_exchange(pages, n_buckets, None, None, False, out)
-            assert planned_tasks(sink, "salt") == min(n_buckets, slots)
-        # num_partitions still overrides both
-        assert planned_tasks(extract_pages(pages, num_partitions=3), "xxhash64") == 3
-        assert planned_tasks(_salted_exchange(pages, 256, 3, None, False, out), "salt") == 3
+        # 2 only where it leaves a 1-split input short of one wave
+        for shuffle in (200, 2) if cores > 2 else (200,):
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+            pages = read_pages(spark, path)
+            assert pages.rdd.getNumPartitions() == 1
+            assert planned_tasks(extract_pages(pages), "xxhash64") == cores
+            for n_buckets in (256, 4, 2):
+                # the salt's number of distinct values caps the useful task count
+                sink = _salted_exchange(pages, n_buckets, None, None, False, out)
+                assert planned_tasks(sink, "salt") == min(n_buckets, max(shuffle, cores))
+            assert planned_tasks(extract_pages(pages, num_partitions=3), "xxhash64") == 3
+            assert planned_tasks(_salted_exchange(pages, 256, 3, None, False, out),
+                                 "salt") == 3
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 

@@ -213,6 +213,63 @@ def test_sink_refuses_another_bucket_count(spark, tmp_path):
     rows = spark.read.parquet(out)
     assert rows.count() == 40 and rows.select("url").distinct().count() == 40
     assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=16) == 0
+    # bucket files without a marker were written under an unknown B: refused
+    # for every B, the recorded one included
+    os.remove(os.path.join(out, "_BUCKETS"))
+    for n_buckets in (16, 4):
+        with pytest.raises(ValueError, match="no _BUCKETS marker"):
+            run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=n_buckets)
+    assert not os.path.exists(os.path.join(out, "_BUCKETS"))
+
+
+def test_sink_publishes_buckets_while_the_job_runs(spark, tmp_path):
+    """A sink task publishes its buckets and lineage rows when its input
+    ends, so the sink runs Spark's shuffle task count, not one task per
+    slot: with more shuffle partitions than cores the first buckets land
+    while later tasks still wait for a slot, and a job killed then
+    resumes from them. The job is cancelled at its first lineage file:
+    tasks still waiting never start, so the rerun has buckets left to
+    write, but not all of them, and the output holds every page once.
+    (With one task per slot every task is running at that point and
+    publishes before the cancel stops it: nothing is left to resume.)"""
+    import glob
+    import threading
+    import time
+
+    from go_readability_spark.plans import run_extraction_job_atomic
+    from go_readability_spark.sources import synth_pages_dataframe
+
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "articles")
+    n_pages, n_buckets = 320, 32
+    pages = synth_pages_dataframe(spark, n_pages, seed=31, skew=False)
+    stop = threading.Event()
+
+    def cancel_at_first_publish():
+        while not stop.is_set():
+            if glob.glob(os.path.join(ckpt, "ckpt-*.parquet")):
+                spark.sparkContext.cancelAllJobs()
+                return
+            time.sleep(0.005)
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
+    watcher = threading.Thread(target=cancel_at_first_publish, daemon=True)
+    watcher.start()
+    try:
+        with pytest.raises(Exception, match="(?i)cancel"):
+            run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=n_buckets)
+        published = {p.split("salt=")[1].split("/")[0]
+                     for p in glob.glob(os.path.join(out, "salt=*", "part-*.parquet"))}
+        assert 0 < len(published) < n_buckets
+        resumed = run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt,
+                                            n_buckets=n_buckets)
+        assert 0 < resumed < n_buckets
+    finally:
+        stop.set()
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    rows = spark.read.parquet(out)
+    assert rows.count() == n_pages and rows.select("url").distinct().count() == n_pages
 
 
 def test_extraction_partitioning_invariance(spark):
