@@ -36,26 +36,8 @@ from go_readability_spark.operators import (  # noqa: E402
     simhash_near_pairs,
     simhash_table,
 )
-from go_readability_spark.plans import extract_pages, with_salt  # noqa: E402
+from go_readability_spark.plans import extract_pages, ship_package, with_salt  # noqa: E402
 from go_readability_spark.sources import pages_from_documents  # noqa: E402
-
-
-_REPO = os.path.dirname(os.path.abspath(__file__))
-_shipped: set[int] = set()
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Make go_readability_spark importable on executors regardless of the
-    driver's CWD: build the --py-files zip and addPyFile it once per
-    session (the same artifact scripts/submit_extract.sh ships)."""
-    key = id(spark.sparkContext)
-    if key in _shipped:
-        return
-    sys.path.insert(0, os.path.join(_REPO, "scripts"))
-    from build_pyfiles import build  # noqa: E402
-
-    spark.sparkContext.addPyFile(build())
-    _shipped.add(key)
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -75,7 +57,7 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full readability extraction over a Common-Crawl-shaped
     `pages` table synthesized deterministically from sf0.001 documents."""
-    _ship_package(spark)
+    ship_package(spark)
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     articles = extract_pages(pages, num_partitions=8)
     return articles.select(
@@ -90,7 +72,7 @@ def _q_extract_articles(spark, sf_dir):
     against the pinned-golden oracle (sources/extract_articles_sf001.json
     — see _pinned_output_oracles; byte-level extraction correctness is
     separately proven by fixture_parity / tests/test_parity.py)."""
-    _ship_package(spark)
+    ship_package(spark)
     pages = pages_from_documents(spark, sf_dir)
     return extract_pages(pages, num_partitions=8).select(
         "url", "title", "length", "readerable", "error"
@@ -99,7 +81,7 @@ def _q_extract_articles(spark, sf_dir):
 
 def _q_extract_salted(spark, sf_dir):
     """Salted-repartition lineage counts: rows per salt bucket."""
-    _ship_package(spark)
+    ship_package(spark)
     pages = pages_from_documents(spark, sf_dir)
     return (
         with_salt(pages.select("url"), n_buckets=16)
@@ -111,7 +93,7 @@ def _q_extract_salted(spark, sf_dir):
 def _q_extract_salted_md5(spark, sf_dir):
     """Engine-portable twin of the salt distribution (md5-based bucket so
     DuckDB can verify the partitioning logic; production uses xxhash64)."""
-    _ship_package(spark)
+    ship_package(spark)
     pages = pages_from_documents(spark, sf_dir)
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long"),
@@ -130,7 +112,7 @@ def _q_fixture_parity(spark, sf_dir):
     (/root/reference/parser_test.go:34-111 semantics). Note sf_dir is
     unused by design — the fixture corpus is the reference's, not
     scale-factor data."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.sources.fixture_corpus import (
         ensure_parity_parquets,
         normalize_parity_col,
@@ -160,7 +142,7 @@ def _q_fixture_parity(spark, sf_dir):
 
 def _q_tpch_q1(spark, sf_dir):
     """TPC-H Q1 (pricing summary) — scan+filter+agg breadth check."""
-    _ship_package(spark)
+    ship_package(spark)
     li = _read(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= F.lit("2001-09-02"))
@@ -180,7 +162,7 @@ def _q_tpch_q1(spark, sf_dir):
 
 def _q_tpch_q3_like(spark, sf_dir):
     """Q3-style 3-way join: revenue of unshipped orders per order."""
-    _ship_package(spark)
+    ship_package(spark)
     cust = _read(spark, sf_dir, "customer")
     orders = _read(spark, sf_dir, "orders")
     li = _read(spark, sf_dir, "lineitem")
@@ -201,7 +183,7 @@ def _q_tpch_q3_like(spark, sf_dir):
 
 
 def _q_text_features(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     return with_text_features(docs, "text").select(
         "doc_id", "ws_tokens", "bpe_tokens", "punct_ratio",
@@ -236,7 +218,7 @@ def _q_latest_snapshot(spark, sf_dir):
     """Crawl-snapshot dedup: newest capture per canonical URL (ts is the
     doc_id, so winners are exactly the max doc_id of each canonical
     group — fully deterministic for the hash compare)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.snapshots import latest_snapshot
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -251,7 +233,7 @@ def _q_latest_snapshot(spark, sf_dir):
 
 def _q_snapshot_history(spark, sf_dir):
     """Per-canonical-URL capture audit (counts + first/last ts)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.snapshots import snapshot_history
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -264,7 +246,7 @@ def _q_snapshot_history(spark, sf_dir):
 
 def _q_host_stats(spark, sf_dir):
     """Host-level corpus roll-up over the messy-URL synthesis."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.hosts import host_stats
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -277,7 +259,7 @@ def _q_blocked_hosts(spark, sf_dir):
     """UT1-style blocklist gating: blocking 'example.net' must also drop
     every subdomain (mirror.example.net), keeping only docs.example.org
     rows."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.hosts import filter_blocked_hosts
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -290,7 +272,7 @@ def _q_sequence_packing(spark, sf_dir):
     """GPT-style corpus packing: exact global token offsets (two-phase
     distributed prefix sum — block_size=64 forces the multi-block path)
     and the seq_len=1000 sequence span of every document."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.packing import with_sequence_spans
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -303,7 +285,7 @@ def _q_sequence_packing(spark, sf_dir):
 
 def _q_sequence_manifest(spark, sf_dir):
     """Shard-builder work list: per (sequence, document) token slices."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.packing import sequence_manifest
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -321,7 +303,7 @@ def _q_line_dedup(spark, sf_dir):
     wrapped with two synthetic boilerplate lines (making them hot across
     the corpus), which the operator must strip while preserving content
     order. Output pins the exact cleaned text via md5."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.line_dedup import remove_boilerplate_lines
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -342,7 +324,7 @@ def _q_line_dedup(spark, sf_dir):
 def _q_shard_stats(spark, sf_dir):
     """Balanced output sharding: exact byte offsets (two-phase prefix
     sum) cut into ~64 KiB shards; per-shard manifest rows."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.sharding import shard_stats
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -357,7 +339,7 @@ def _q_stratified_sample(spark, sf_dir):
     """Deterministic stratified sample: the 20 smallest-md5-order docs
     per source, via the skew-safe two-phase top-k (no whole-group
     single-task window)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.sampling import stratified_sample
 
     docs = _read(spark, sf_dir, "documents")
@@ -369,7 +351,7 @@ def _q_stratified_sample(spark, sf_dir):
 def _q_global_shuffle(spark, sf_dir):
     """Deterministic training-order permutation: global rank by
     (md5 order, id) without a global sort (hash-block two-phase scan)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.sampling import global_shuffle
 
     docs = _read(spark, sf_dir, "documents").select("doc_id")
@@ -382,7 +364,7 @@ def _q_corpus_mixture(spark, sf_dir):
     """Deterministic per-source corpus mixing: src0 kept at 80%, src1 at
     30%, everything else dropped — membership is a pure md5 function of
     the key, so retries/resumes see the identical sample."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.sampling import mix_corpus
 
     docs = _read(spark, sf_dir, "documents")
@@ -398,7 +380,7 @@ def _q_bpe_merges(spark, sf_dir):
     argmax per round over the distributed word-frequency table). Not
     SQL-expressible (iterative) → rows-only; exactness vs a pure-Python
     reference with identical tie-breaking is pinned in tests/test_bpe.py."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.bpe import train_bpe
 
     docs = _read(spark, sf_dir, "documents")
@@ -415,7 +397,7 @@ def _q_decontamination(spark, sf_dir):
     (doc_id % 20 == 0). n=5 here so the small synthetic corpus produces
     hits; production uses n=13 — same plan, the benchmark n-gram set is
     broadcast and the corpus side never shuffles."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.decontamination import contaminated_doc_ids
 
     docs = _read(spark, sf_dir, "documents")
@@ -427,7 +409,7 @@ def _q_decontamination(spark, sf_dir):
 def _q_url_canonical(spark, sf_dir):
     """URL canonicalization over deterministically-messy urls (case,
     default ports, fragments, tracking params, shuffled query order)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.functions.urls import with_canonical_url
 
     docs = _read(spark, sf_dir, "documents").select(
@@ -438,7 +420,7 @@ def _q_url_canonical(spark, sf_dir):
 
 def _q_repetition_filters(spark, sf_dir):
     """Gopher/C4-style repetition + quality gate metrics per document."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.functions.quality_filters import gopher_quality_gate
 
     docs = _read(spark, sf_dir, "documents")
@@ -450,27 +432,27 @@ def _q_repetition_filters(spark, sf_dir):
 
 
 def _q_exact_dup_groups(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     return exact_duplicates(docs, "doc_id", "text")
 
 
 def _q_ngram_jaccard(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
 
 
 def _q_dup_clusters(spark, sf_dir):
     """Transitive duplicate clusters over n-gram-Jaccard pairs."""
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
     return duplicate_clusters(pairs)
 
 
 def _q_minhash_pairs(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     return minhash_dedup_pairs(
         docs, "doc_id", "text", n=3, num_hashes=32, num_bands=8, threshold=0.5
@@ -481,7 +463,7 @@ def _q_minhash_pairs_md5(spark, sf_dir):
     """Engine-portable twin of the MinHash+LSH pipeline: identical
     signature→band→bucket-join→verify logic, with md5-derived hash
     functions DuckDB can reproduce (production uses xxhash64)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.dedup import minhash_dedup_pairs_md5
 
     docs = _read(spark, sf_dir, "documents")
@@ -493,13 +475,13 @@ def _q_minhash_pairs_md5(spark, sf_dir):
 def _q_winnowing_pairs(spark, sf_dir):
     """Rolling-hash document fingerprinting (winnowing/MOSS): pairs of docs
     sharing fingerprint minima."""
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     return winnowing_overlap_pairs(docs, "doc_id", "text", k=8, window=4, min_overlap=3)
 
 
 def _q_simhash_pairs(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     return simhash_near_pairs(simhash_table(docs, "doc_id", "text"), max_hamming=8)
 
@@ -512,7 +494,7 @@ def _q_media_features(spark, sf_dir):
     (sources/media_features_sf001.json, see _pinned_output_oracles); the
     decoded values are independently pinned by tests/test_wav_media.py
     and tests/test_png.py."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.multimodal import (
         extract_media_features,
         synth_real_media_dataframe,
@@ -525,14 +507,14 @@ def _q_media_features(spark, sf_dir):
 
 
 def _q_ann_topk(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     return brute_force_topk(emb, queries, k=10, id_col="vec_id", vec_col="embedding")
 
 
 def _q_ann_lsh_topk(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     return lsh_bucketed_topk(
@@ -543,7 +525,7 @@ def _q_ann_lsh_topk(spark, sf_dir):
 def _q_embedding_near_pairs(spark, sf_dir):
     """Exact embedding-cosine near-duplicate pairs (ids only — membership
     at a threshold is engine-portable, float scores are not)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators import cosine_near_pairs_exact
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -554,7 +536,7 @@ def _q_embedding_near_pairs_lsh(spark, sf_dir):
     """Scale path for the same question: multi-band hyperplane LSH
     bucketing, rows-only (recall < 1 by design; the exact twin above is
     the hash-verified baseline)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators import cosine_near_pairs
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -571,7 +553,7 @@ def _q_ann_ivf_topk(spark, sf_dir):
     what a deployment does, and it makes the probe fully DuckDB-
     replayable: centroid literals ride into the oracle SQL, so bucket
     assignment, nprobe selection, scoring, and ranking hash-match."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators import ivf_topk
     from go_readability_spark.operators.ann_oracle import load_pinned_ivf_index
 
@@ -588,7 +570,7 @@ def _q_quality_classifier(spark, sf_dir):
     pyspark.ml; operators/classifier.py). Features and logit are pure
     column arithmetic over the hash-verified text_features columns, so
     the DuckDB oracle replays the float logits bit-for-bit."""
-    _ship_package(spark)
+    ship_package(spark)
     import json
     import os as _os
 
@@ -608,7 +590,7 @@ def _q_semantic_dedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): k-means cluster + within-cluster
     cosine prune, keep-lowest-id representatives. Uses the pinned IVF
     index so the DuckDB oracle replays assignment + prune exactly."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators import semantic_dedup
     from go_readability_spark.operators.ann_oracle import load_pinned_ivf_index
 
@@ -625,7 +607,7 @@ def _q_ann_recall(spark, sf_dir):
     (sources/ivf_index_sf001.json) ride into the oracle SQL as DOUBLE
     literals, so bucket assignment, candidate generation, and ranking are
     replayed step-for-step in both engines."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators import (
         brute_force_topk,
         ivf_topk,
@@ -667,7 +649,7 @@ def _q_ann_recall(spark, sf_dir):
 
 def _q_resume_antijoin(spark, sf_dir):
     """The checkpoint-resume anti-join pattern on the TPC-H tables."""
-    _ship_package(spark)
+    ship_package(spark)
     li = _read(spark, sf_dir, "lineitem")
     done = _read(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     remaining = li.join(
@@ -682,7 +664,7 @@ def _q_resume_antijoin(spark, sf_dir):
 
 def _q_partition_metrics(spark, sf_dir):
     """Per-bucket lineage metrics with an engine-portable bucket key."""
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents")
     bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     return docs.groupBy(bucket.alias("bucket")).agg(
@@ -693,7 +675,7 @@ def _q_partition_metrics(spark, sf_dir):
 
 def _q_quality_partition(spark, sf_dir):
     """Training-data curation: per-language doc counts above a quality bar."""
-    _ship_package(spark)
+    ship_package(spark)
     docs = with_text_features(_read(spark, sf_dir, "documents"), "text")
     return (
         docs.where(F.col("quality") >= 0.5)
@@ -708,7 +690,7 @@ def _q_pii_redaction(spark, sf_dir):
     construct the identical text from doc_id), then the masking operator
     runs; output pins the exact redacted text via md5 plus per-category
     counts. Map-only, no shuffle — the 100 TB plan is the sf0.01 plan."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.functions.pii import with_pii_redacted
 
     d = F.col("doc_id")
@@ -735,7 +717,7 @@ def _q_lm_perplexity(spark, sf_dir):
     deterministic 40% hash-sample, every doc scored by negative
     log-likelihood in integer micro-nats (order-independent sums → exact
     oracle despite float logs)."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.lm_score import bigram_lm_scores
 
     return bigram_lm_scores(_read(spark, sf_dir, "documents"))
@@ -752,7 +734,7 @@ def _q_substring_dedup(spark, sf_dir):
     is planted at the head of every 4th document (identically in both
     engines), so its 12-token windows occur corpus-wide and the operator
     must cut exactly those spans; md5 pins the surviving text."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.substring_dedup import (
         remove_duplicated_spans,
     )
@@ -775,7 +757,7 @@ def _q_substring_dedup(spark, sf_dir):
 
 def _q_events_windowed(spark, sf_dir):
     """Tumbling event-time windows (batch twin of the streaming metrics)."""
-    _ship_package(spark)
+    ship_package(spark)
     ev = _read(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -795,7 +777,7 @@ def _q_events_windowed(spark, sf_dir):
 def _q_events_sessionize(spark, sf_dir):
     """Sessionization: a new session starts after a >30 min gap per user
     (lag + cumulative flag — the standard window-function pattern)."""
-    _ship_package(spark)
+    ship_package(spark)
     from pyspark.sql import Window
 
     ev = _read(spark, sf_dir, "events")
@@ -1036,7 +1018,7 @@ def _q_pdf_extract(spark, sf_dir):
     string decode all exercised distributed). The oracle recomputes the
     expected text arithmetically from `documents`, so a hash match proves
     the parser recovered exactly what the writer embedded."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.sources import pdf_roundtrip
 
     return pdf_roundtrip(_read(spark, sf_dir, "documents"))
@@ -1132,7 +1114,7 @@ def _q_bloom_sharded(spark, sf_dir):
     The DuckDB oracle replays membership through the set-bit relation
     (a bit is set iff some insertion's probe lands on it), which is
     bit-for-bit the same verdict as the (word, bits) bitmap join."""
-    _ship_package(spark)
+    ship_package(spark)
     from go_readability_spark.operators.bloom import (
         bloom_build_sharded,
         bloom_maybe_seen_sharded,
@@ -1171,7 +1153,7 @@ def _q_wat_link_edges(spark, sf_dir):
         write_wat,
     )
 
-    _ship_package(spark)
+    ship_package(spark)
     docs = _read(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("i"))
 

@@ -107,7 +107,7 @@ def run_suite():
     shared host swing +-50%; medians + IQR separate host noise from real
     regressions. All repeats recompute from the source parquet (nothing
     is .cache()d); repeat 1 additionally pays Python-worker fork+import,
-    which the median naturally discards."""
+    which the median naturally discards and the IQR leaves out."""
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "5")))
     spark = _session(CPUS)
     try:
@@ -133,10 +133,13 @@ def run_suite():
 
         # a skipped leaf has no samples: null, never 0 s
         timings = {k: round(_median(v), 3) if v else None for k, v in samples.items()}
-        iqr = {
-            k: round(sorted(v)[(3 * len(v)) // 4] - sorted(v)[len(v) // 4], 3) if v else None
-            for k, v in samples.items()
-        }
+        def _iqr(xs):
+            # over repeats 2..n: repeat 1's worker forks and first imports
+            # are not run-to-run spread (with 3 repeats it would be max - min)
+            s = sorted(xs[1:] or xs)
+            return s[(3 * len(s)) // 4] - s[len(s) // 4]
+
+        iqr = {k: round(_iqr(v), 3) if v else None for k, v in samples.items()}
         total = round(sum(t for t in timings.values() if t is not None), 3)
         extract_rate = round(doc_counts["extract_synth"] / timings["extract_synth"], 2)
         print(json.dumps({

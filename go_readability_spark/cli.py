@@ -15,7 +15,7 @@ spark-submit:
   # cluster batch job (spark-submit --py-files go_readability_spark.zip)
   python -m go_readability_spark extract \
       --input /path/pages_parquet --output /path/articles \
-      --checkpoint /path/ckpt --buckets 256 [--partitions P] [--no-resume]
+      --checkpoint /path/ckpt --buckets 256 [--partitions P]
 
 With --checkpoint the extraction (extract, crawl-fetch --extract) is
 resumable: it writes task-committed per-bucket files, so a killed job
@@ -65,28 +65,23 @@ def _render_article(data: bytes, page_url: str, metadata_only: bool,
     """The shared tail of the reference's getContent (main.go:139-176):
     gate on the readerability Check (unreadable pages are an ERROR, not
     empty output), then emit content / text / the 5-key indented metadata
-    JSON — identical for file and URL sources, like the reference."""
-    from .dom import parse_html
-    from .readability import Parser, check_document
+    JSON — identical for file and URL sources, like the reference.  The
+    record comes from the batch kernel, ``extract_record``."""
+    from .readability.record import extract_record
 
-    doc = parse_html(data)
-    readerable = check_document(doc)
+    rec = extract_record(page_url, data, readerable_gate=True, debug=debug)
     if check_only:
-        return "true" if readerable else "false"
-    if not readerable:
+        return "false" if rec is None else "true"
+    if rec is None:
         raise ValueError("failed to parse page: the page is not readable")
-    art = Parser(debug=debug).parse_document(doc, page_url)
+    if rec["error"] is not None:
+        raise ValueError(f"failed to parse page: {rec['error']}")
     if metadata_only:
         return json.dumps(
-            {
-                "title": art.title, "byline": art.byline, "excerpt": art.excerpt,
-                "image": art.image, "favicon": art.favicon,
-            },
+            {k: rec[k] for k in ("title", "byline", "excerpt", "image", "favicon")},
             ensure_ascii=False, indent=4, sort_keys=True,
         )
-    if text_only:
-        return art.text_content
-    return art.content
+    return rec["text_content"] if text_only else rec["content"]
 
 
 def _get_url_content(url: str, metadata_only: bool, text_only: bool,
@@ -210,148 +205,103 @@ def cmd_serve(args) -> int:
     return 0
 
 
+def _read_input(spark, args, files: list[str] | None = None):
+    """The table ``--input`` holds, read by ``--input-format``: pages, or
+    for ``wet`` the pre-extracted articles.  ``files`` narrows a parquet
+    or warc input to those files (one segment of ``extract --segments``)."""
+    if args.input_format == "warc":
+        if args.resolve_revisits:
+            # full-fidelity record table: body-less revisit records
+            # (10-30% of a real snapshot) resolve to their stored
+            # payloads by digest before extraction
+            from .operators.revisits import resolve_revisits
+            from .sources.warc import records_from_warc
+
+            return resolve_revisits(records_from_warc(spark, args.input))
+        from .sources.warc import pages_from_warc
+
+        return pages_from_warc(spark, files or args.input, num_partitions=args.partitions)
+    if args.input_format == "wet":
+        # Common Crawl's text sidecar: extraction already happened
+        # upstream of the WET writer, so curation starts at the gates
+        from .plans.curate import articles_from_texts
+        from .sources.warc import docs_from_wet
+
+        return articles_from_texts(docs_from_wet(spark, args.input))
+    if files:
+        from .plans.schema import PAGES_SCHEMA
+
+        return spark.read.option("basePath", args.input).schema(PAGES_SCHEMA).parquet(*files)
+    from .sources.pages_table import read_pages
+
+    return read_pages(spark, args.input, format=args.input_format)
+
+
 def cmd_extract(args) -> int:
-    from .plans import build_session, run_extraction_job, ship_package
-    from .plans.schema import PAGES_SCHEMA
+    """extract [--segments K]: K file-aligned sub-jobs (plans/crawl.py).
 
-    if getattr(args, "segments", 1) > 1:
-        return _cmd_extract_segmented(args)
-    from .plans.crawl import check_segment_marker
-
-    check_segment_marker(args.output, 1, "file-hash")
-    spark = build_session(master=args.master)
-    try:
-        ship_package(spark)
-        if args.input_format == "warc":
-            if args.resolve_revisits:
-                # full-fidelity record table: body-less revisit records
-                # (10-30% of a real snapshot) resolve to their stored
-                # payloads by digest before extraction
-                from .operators.revisits import resolve_revisits
-                from .sources.warc import records_from_warc
-
-                pages = resolve_revisits(records_from_warc(spark, args.input))
-            else:
-                from .sources.warc import pages_from_warc
-
-                pages = pages_from_warc(
-                    spark, args.input, num_partitions=args.partitions)
-        else:
-            from .sources.pages_table import read_pages
-
-            pages = read_pages(spark, args.input, format=args.input_format)
-        n = run_extraction_job(
-            pages,
-            output_dir=args.output,
-            checkpoint_dir=args.checkpoint,
-            n_buckets=args.buckets,
-            num_partitions=args.partitions,
-            resume=not args.no_resume,
-            partition_by=tuple(args.partition_by.split(",")) if args.partition_by else None,
-        )
-        if n is not None:
-            print(f"atomic sink: {n} buckets written this run", file=sys.stderr)
-    finally:
-        spark.stop()
-    return 0
-
-
-def _cmd_extract_segmented(args) -> int:
-    """extract --segments K: file-aligned sub-jobs (plans/crawl.py).
-
-    Each segment reads only its own input files (scan AND shuffle are
-    ~1/K) and owns output/seg=i + checkpoint/seg=i, so a kill anywhere
-    restarts the loop with completed segments no-oping via their own
-    checkpoints. Refused for --resolve-revisits (digest resolution is
-    corpus-global: a revisit's stored payload can live in another
-    segment's archive) and for Iceberg inputs (split on snapshot
-    manifests instead)."""
+    With K > 1 each segment reads only its own input files (scan AND
+    shuffle are ~1/K) and owns output/seg=i + checkpoint/seg=i, so a kill
+    anywhere restarts the loop with completed segments no-oping via their
+    own checkpoints. K > 1 is refused for --resolve-revisits (digest
+    resolution is corpus-global: a revisit's stored payload can live in
+    another segment's archive) and for Iceberg inputs (split on snapshot
+    manifests instead). K = 1 is one segment over the whole input,
+    written to --output itself."""
     import os
 
-    from .plans import build_session, run_extraction_job, ship_package
-    from .plans.crawl import _release_job_state, segment_input_files
-    from .plans.schema import PAGES_SCHEMA
+    from .plans import build_session, run_extraction_job
+    from .plans.crawl import _release_job_state, check_segment_marker, segment_input_files
 
-    if args.input_format == "iceberg":
+    multi = args.segments > 1
+    if multi and args.input_format == "iceberg":
         raise SystemExit(
             "--segments with Iceberg input: split on the table's snapshot "
             "manifests (per-segment file lists) rather than a directory "
             "listing; directory segmentation is for parquet/warc dirs")
-    if getattr(args, "resolve_revisits", False):
+    if multi and args.resolve_revisits:
         raise SystemExit(
             "--segments cannot be combined with --resolve-revisits: "
             "revisit records resolve by digest across the WHOLE corpus, "
             "and a segment cannot see payloads stored in another "
             "segment's archives")
-    sufs = ((".warc", ".warc.gz") if args.input_format == "warc"
-            else (".parquet",))
-    from .plans.crawl import check_segment_marker
-
     check_segment_marker(args.output, args.segments, "file-hash")
     spark = build_session(master=args.master)
     try:
-        ship_package(spark)
-        groups = segment_input_files(args.input, args.segments, sufs)
-        for i, files in enumerate(groups):
-            if not files:
+        segments = [None]  # K = 1: the whole input, into --output itself
+        if multi:
+            sufs = ((".warc", ".warc.gz") if args.input_format == "warc"
+                    else (".parquet",))
+            segments = segment_input_files(args.input, args.segments, sufs)
+        for i, files in enumerate(segments):
+            if files == []:  # a hash group a small input left empty
                 continue
-            if args.input_format == "warc":
-                from .sources.warc import pages_from_warc
-
-                pages = pages_from_warc(
-                    spark, files, num_partitions=args.partitions)
-            else:
-                pages = (spark.read.option("basePath", args.input)
-                         .schema(PAGES_SCHEMA).parquet(*files))
-            seg_out = os.path.join(args.output, f"seg={i}")
-            seg_ckpt = (os.path.join(args.checkpoint, f"seg={i}")
-                        if args.checkpoint else None)
             n = run_extraction_job(
-                pages, output_dir=seg_out, checkpoint_dir=seg_ckpt,
-                n_buckets=args.buckets, num_partitions=args.partitions,
-                resume=not args.no_resume,
-                partition_by=(tuple(args.partition_by.split(","))
-                              if args.partition_by else None))
+                _read_input(spark, args, files),
+                output_dir=os.path.join(args.output, f"seg={i}") if multi else args.output,
+                checkpoint_dir=(os.path.join(args.checkpoint, f"seg={i}")
+                                if multi and args.checkpoint else args.checkpoint),
+                n_buckets=args.buckets,
+                num_partitions=args.partitions,
+                partition_by=tuple(args.partition_by.split(",")) if args.partition_by else None,
+            )
             if n is not None:
-                print(f"atomic sink: {n} buckets written this run "
-                      f"(seg {i}/{len(groups)}, {len(files)} files)",
-                      file=sys.stderr)
-            _release_job_state(spark)
+                tag = f" (seg {i}/{len(segments)}, {len(files)} files)" if multi else ""
+                print(f"atomic sink: {n} buckets written this run{tag}", file=sys.stderr)
+            if multi:
+                _release_job_state(spark)
     finally:
         spark.stop()
     return 0
 
 
 def cmd_curate(args) -> int:
-    from .plans import build_session, curate_corpus, ship_package
-    from .plans.schema import PAGES_SCHEMA
+    from .plans import build_session, curate_corpus
 
     spark = build_session(master=args.master)
     try:
-        ship_package(spark)
         pre_extracted = args.input_format == "wet"
-        if args.input_format == "warc":
-            if getattr(args, "resolve_revisits", False):
-                from .operators.revisits import resolve_revisits
-                from .sources.warc import records_from_warc
-
-                pages = resolve_revisits(records_from_warc(spark, args.input))
-            else:
-                from .sources.warc import pages_from_warc
-
-                pages = pages_from_warc(
-                    spark, args.input, num_partitions=args.partitions)
-        elif pre_extracted:
-            # Common Crawl's text sidecar: extraction already happened
-            # upstream of the WET writer, so curation starts at the gates
-            from .plans.curate import articles_from_texts
-            from .sources.warc import docs_from_wet
-
-            pages = articles_from_texts(docs_from_wet(spark, args.input))
-        else:
-            from .sources.pages_table import read_pages
-
-            pages = read_pages(spark, args.input, format=args.input_format)
+        pages = _read_input(spark, args)
         host_ranks = None
         if getattr(args, "wat_host_rank", None) and args.host_rank_floor is None:
             raise SystemExit(
@@ -550,7 +500,6 @@ def main(argv=None) -> int:
                         "--checkpoint")
     e.add_argument("--partitions", type=int, default=None)
     e.add_argument("--master", default=None, help="override spark master")
-    e.add_argument("--no-resume", action="store_true")
     e.add_argument("--partition-by", default=None,
                    help="comma-separated output partition columns (e.g. lang)")
     e.add_argument("--resolve-revisits", action="store_true",

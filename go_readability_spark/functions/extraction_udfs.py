@@ -5,7 +5,7 @@ Arrow UDFs so users can call it from Spark SQL directly:
 
 The heavy pipeline entry point remains plans.extract_pages (mapInArrow
 with lineage); these UDFs are the ad-hoc query surface over the same
-per-document kernel (plans/extract.py extract_record).
+per-document kernel (readability/record.py extract_record).
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ def readerable(html: pa.Array) -> pa.Array:
     """CheckDocument as a SQL boolean (parser-check.go:25-80); False when
     the page cannot be parsed."""
     from ..dom import parse_html
-    from ..plans.extract import _stat_checked_zip_importers, release_trees
+    from ..plans.extract import _stat_checked_zip_importers
     from ..readability import check_document
+    from ..readability.record import release_trees
 
     _stat_checked_zip_importers()
 

@@ -29,7 +29,8 @@ Design notes for 10^12-row scale:
   bucket sink (``run_extraction_job_atomic``), the one resumable writer.
   Each task publishes its bucket files by atomic rename and then records
   the buckets in the checkpoint table; a restart anti-joins pages against
-  the buckets whose output verifies. The checkpoint table is a parquet
+  the buckets whose lineage rows match their files' parquet footers
+  (``completed_buckets``, on the driver). The checkpoint table is a parquet
   directory written atomically per task (on a cluster with a remote
   filesystem, an Iceberg table with transactional appends takes its place).
 """
@@ -50,6 +51,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from ..readability.record import extract_record
 from .parallelism import shuffle_partitions, splits_fill_session
 from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA, SINK_STATS_SCHEMA
 
@@ -90,83 +92,6 @@ _ARTICLES_ARROW = _arrow_schema(ARTICLES_SCHEMA)
 # the files they wrote.
 _PANDAS_TIMESTAMP_RANGE = (datetime(1677, 9, 21, 0, 12, 43, 145225),
                            datetime(2262, 4, 11, 23, 47, 16, 854775))
-
-
-def _utc_naive(dt):
-    if dt is None:
-        return None
-    if dt.tzinfo is not None:
-        return dt.astimezone(timezone.utc).replace(tzinfo=None)
-    return dt
-
-
-def release_trees(*nodes) -> None:
-    """Unlink every distinct tree the given nodes belong to (None skipped).
-
-    The DOM is reference-cyclic, and leaving ~10^5 dead cyclic nodes per
-    document to Python's generational GC caused repeated full collections
-    that dominated per-doc latency (a measured 740 ms pause inside one
-    clone). Unlinked trees free by refcount and the cyclic collector
-    stays idle."""
-    from ..dom import unlink_tree
-
-    roots = []
-    for node in nodes:
-        if node is None:
-            continue
-        while node.parent is not None:
-            node = node.parent
-        if all(node is not r for r in roots):
-            roots.append(node)
-    for root in roots:
-        unlink_tree(root)
-
-
-def extract_record(url, html_bytes, readerable_gate=False):
-    """Run the full readability extraction for one page; never raises.
-
-    With ``readerable_gate`` a page whose parse or Check fails (returns
-    False or raises) yields None straight after Check, before any
-    scoring; a page that passes Check keeps its record, error rows
-    included. The parsed tree and every grab-attempt clone are torn down
-    (release_trees) before returning."""
-    from ..dom import parse_html
-    from ..readability import Parser, check_document
-
-    out = {
-        "url": url, "title": "", "byline": "", "content": "",
-        "text_content": "", "length": 0, "excerpt": "", "site_name": "",
-        "image": "", "favicon": "", "lang": "", "published_time": None,
-        "modified_time": None, "readerable": None, "error": None,
-    }
-    doc = None
-    art_node = None
-    ps = Parser()
-    try:
-        doc = parse_html(html_bytes if html_bytes is not None else b"")
-        out["readerable"] = check_document(doc)
-        if readerable_gate and not out["readerable"]:
-            return None
-        art = ps.parse_document(doc, url)
-        art_node = art.node
-        out.update(
-            title=art.title, byline=art.byline, content=art.content,
-            text_content=art.text_content, length=art.length,
-            excerpt=art.excerpt, site_name=art.site_name, image=art.image,
-            favicon=art.favicon, lang=art.language,
-            published_time=_utc_naive(art.published_time),
-            modified_time=_utc_naive(art.modified_time),
-        )
-    except Exception as exc:  # per-row error capture — never fail the task
-        if readerable_gate and not out["readerable"]:
-            return None
-        out["error"] = f"{type(exc).__name__}: {exc}"
-    finally:
-        # losing retry-sieve attempts keep whole document clones alive
-        # (parser.attempts holds their article nodes) — tear down every
-        # distinct attempt tree plus the winning clone and the source doc
-        release_trees(art_node, *(a for a, _ in ps.attempts), doc)
-    return out
 
 
 # HTML bytes a task reads between full sweeps of the cyclic collector,
@@ -294,59 +219,60 @@ def with_salt(pages: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame
     return pages.withColumn("salt", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)))
 
 
-def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str,
-                      n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame | None:
-    """Salt buckets safe to skip on resume.
+def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str) -> DataFrame | None:
+    """Salt buckets safe to skip on resume, decided on the driver from
+    the sink's own files: its lineage rows and its bucket files' parquet
+    footers.  No article column is read and no Spark job runs to decide.
 
-    A bucket only counts as done if the articles actually present in
-    `verify_output_dir` agree with the checkpoint's rows_out — closing the
-    failure window where a task wrote its lineage row but died before its
-    output landed. The bucket is recomputed from the output's url column
-    by ``with_salt``, the key the sink wrote it under, so no schema
-    change is needed.
-    (Iceberg: both writes share one transaction and this check is free.)"""
+    A bucket is done when the largest ``rows_out + parse_errors`` among
+    its lineage rows (a retried or speculative attempt appends another
+    row for the same bucket, so max, not sum) equals the ``num_rows`` its
+    ``salt=<n>`` files' footers record, summed across the hive dirs of
+    ``partition_by``.  A bucket with no file counts 0 rows, so one whose
+    every page was gated out is done and one whose file was lost is not.
+    A footer that cannot be read (a truncated or emptied file) leaves its
+    bucket not done, and a lineage file that cannot be read is skipped,
+    so the buckets it recorded are redone.
+    (Iceberg: manifest row counts play the footers' role.)"""
+    import pyarrow.parquet as pq
+
     if not checkpoint_dir or not os.path.isdir(checkpoint_dir):
         return None
-    try:
-        ckpt = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_dir)
-    except Exception:
-        return None
-    # max (not sum) per partition_key: retried/speculative attempts append
-    # duplicate 'done' rows for the same bucket; summing would inflate
-    # rows_out and break the verify comparison
-    done = (
-        ckpt.where(F.col("status") == "done")
-        .groupBy(F.col("partition_key").cast("long").alias("salt"))
-        .agg(F.max("rows_out").alias("rows_out"))
-    )
-    try:
-        out = spark.read.parquet(verify_output_dir)
-    except Exception:
-        # no output at all -> only buckets that owe no rows (every page
-        # errored or was gated out) are truly done
-        return done.where(F.col("rows_out") == 0).select("salt")
-    actual = (
-        with_salt(out.where(F.col("error").isNull()), n_buckets)
-        .groupBy("salt")
-        .agg(F.count("*").alias("actual_rows"))
-    )
-    # LEFT join: a bucket whose every page errored has rows_out == 0 and
-    # no output rows at all — an inner join would drop it from `done`,
-    # re-extracting it (and re-appending its error rows) on EVERY resume
-    return (
-        done.join(actual, "salt", "left")
-        .where(F.col("rows_out") == F.coalesce(F.col("actual_rows"), F.lit(0)))
-        .select("salt")
-    )
+    owed: dict[int, int] = {}
+    for path in glob.glob(os.path.join(glob.escape(checkpoint_dir), "*.parquet")):
+        try:
+            rows = pq.read_table(path, columns=["partition_key", "status", "rows_out",
+                                                "parse_errors"]).to_pylist()
+        except (OSError, pa.ArrowException):
+            continue
+        for r in rows:
+            if r["status"] == "done":
+                salt = int(r["partition_key"])
+                owed[salt] = max(owed.get(salt, 0), r["rows_out"] + r["parse_errors"])
+    found: dict[int, int] = {}
+    unreadable = set()
+    for path in glob.glob(os.path.join(glob.escape(verify_output_dir), "**", "salt=*",
+                                       "*.parquet"), recursive=True):
+        salt = int(os.path.basename(os.path.dirname(path))[len("salt="):])
+        try:
+            found[salt] = found.get(salt, 0) + pq.read_metadata(path).num_rows
+        except (OSError, pa.ArrowException):
+            unreadable.add(salt)
+    done = [salt for salt, n in sorted(owed.items())
+            if salt not in unreadable and found.get(salt, 0) == n]
+    # from an Arrow table Spark builds a local relation (LocalTableScan);
+    # from a list of rows it would build an RDD, and counting or
+    # broadcasting that took 0.4 s more on local[4]
+    return spark.createDataFrame(pa.table({"salt": pa.array(done, pa.int64())}))
 
 
 def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | None,
-                     checkpoint_dir: str | None, resume: bool,
-                     output_dir: str) -> DataFrame:
+                     checkpoint_dir: str | None, output_dir: str) -> DataFrame:
     """The sink's plan prelude: prune to (url, warc_ts, html), salt,
-    anti-join the buckets completed in ``output_dir`` on resume, and run
-    the one exchange keyed on the salt, into ``num_partitions`` tasks or
-    else min(n_buckets, max(``spark.sql.shuffle.partitions``, cores)).
+    anti-join the buckets ``checkpoint_dir`` records as completed in
+    ``output_dir``, and run the one exchange keyed on the salt, into
+    ``num_partitions`` tasks or else min(n_buckets,
+    max(``spark.sql.shuffle.partitions``, cores)).
 
     A sink task publishes its buckets and their lineage rows when its
     input ends, so the tasks are the unit a mid-job kill resumes from,
@@ -358,11 +284,9 @@ def _salted_exchange(pages: DataFrame, n_buckets: int, num_partitions: int | Non
     spark = pages.sparkSession
     df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
 
-    if resume and checkpoint_dir:
-        done = completed_buckets(spark, checkpoint_dir, verify_output_dir=output_dir,
-                                 n_buckets=n_buckets)
-        if done is not None:
-            df = df.join(F.broadcast(done), "salt", "left_anti")
+    done = completed_buckets(spark, checkpoint_dir, verify_output_dir=output_dir)
+    if done is not None:
+        df = df.join(F.broadcast(done), "salt", "left_anti")
 
     # bucket-level resume requires each salt bucket to live in exactly
     # one task: the checkpoint marks whole buckets done, so a bucket
@@ -629,7 +553,6 @@ def run_extraction_job_atomic(
     checkpoint_dir: str | None = None,
     n_buckets: int = DEFAULT_N_BUCKETS,
     num_partitions: int | None = None,
-    resume: bool = True,
     readerable_gate: bool = False,
     partition_by: tuple[str, ...] | None = None,
 ) -> int:
@@ -664,8 +587,7 @@ def run_extraction_job_atomic(
                              "partitions by string article columns only")
     check_layout_marker(output_dir, "_BUCKETS", {"n_buckets": n_buckets},
                         "**/salt=*")
-    df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir,
-                          resume, output_dir)
+    df = _salted_exchange(pages, n_buckets, num_partitions, checkpoint_dir, output_dir)
     os.makedirs(output_dir, exist_ok=True)
     stats = df.mapInArrow(
         make_sink_extractor(output_dir, checkpoint_dir, readerable_gate, partition_by),
@@ -680,7 +602,6 @@ def run_extraction_job(
     checkpoint_dir: str | None = None,
     n_buckets: int = DEFAULT_N_BUCKETS,
     num_partitions: int | None = None,
-    resume: bool = True,
     partition_by: tuple[str, ...] | None = None,
 ) -> int | None:
     """Batch job: extract and write a parquet articles table.
@@ -697,7 +618,7 @@ def run_extraction_job(
     if checkpoint_dir:
         return run_extraction_job_atomic(
             pages, output_dir, checkpoint_dir=checkpoint_dir, n_buckets=n_buckets,
-            num_partitions=num_partitions, resume=resume, partition_by=partition_by)
+            num_partitions=num_partitions, partition_by=partition_by)
     writer = extract_pages(pages, num_partitions=num_partitions).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

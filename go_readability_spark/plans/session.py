@@ -78,25 +78,15 @@ def build_session(master: str | None = None, app_name: str = "go-readability-spa
     return spark
 
 
-def ship_package(spark) -> None:
-    """Make this package importable on executors regardless of the driver's
-    CWD or install location: zip the package directory and addPyFile it.
-    No-op when already shipped to this context."""
-    import tempfile
+def write_package_zip(zip_path: str) -> str:
+    """Write this package's .py files, under ``go_readability_spark/``,
+    to the zip archive ``zip_path``: the --py-files artifact executors
+    import the package from.  Returns ``zip_path``."""
     import zipfile
 
     import go_readability_spark as pkg
 
-    sc = spark.sparkContext
-    if getattr(sc, "_grs_pkg_shipped", False):
-        return
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    # unique per-driver file: a fixed path races when two drivers on the
-    # same host overlap (addPyFile could ship a mid-overwrite zip)
-    fd, zip_path = tempfile.mkstemp(
-        prefix="go_readability_spark_shipped_", suffix=".zip"
-    )
-    os.close(fd)
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, dirnames, filenames in os.walk(pkg_dir):
             dirnames[:] = [d for d in dirnames if d != "__pycache__"]
@@ -107,7 +97,25 @@ def ship_package(spark) -> None:
                         "go_readability_spark", os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
-    sc.addPyFile(zip_path)  # Spark copies it into its own file-server dir
+    return zip_path
+
+
+def ship_package(spark) -> None:
+    """Make this package importable on executors regardless of the driver's
+    CWD or install location: zip the package directory and addPyFile it.
+    No-op when already shipped to this context."""
+    import tempfile
+
+    sc = spark.sparkContext
+    if getattr(sc, "_grs_pkg_shipped", False):
+        return
+    # unique per-driver file: a fixed path races when two drivers on the
+    # same host overlap (addPyFile could ship a mid-overwrite zip)
+    fd, zip_path = tempfile.mkstemp(
+        prefix="go_readability_spark_shipped_", suffix=".zip"
+    )
+    os.close(fd)
+    sc.addPyFile(write_package_zip(zip_path))  # Spark copies it into its own file-server dir
     sc._grs_pkg_shipped = True
     # don't leak one zip per driver into the temp dir (the pre-round-2
     # fixed path self-overwrote; the unique path needs explicit cleanup)

@@ -3,23 +3,17 @@
 
 import os
 import sys
-import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from go_readability_spark.plans.session import write_package_zip  # noqa: E402
 
 
 def build(out_path=None):
     out_path = out_path or os.path.join(ROOT, "dist", "go_readability_spark.zip")
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    pkg = os.path.join(ROOT, "go_readability_spark")
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, dirnames, filenames in os.walk(pkg):
-            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, ROOT))
-    return out_path
+    return write_package_zip(out_path)
 
 
 if __name__ == "__main__":

@@ -63,7 +63,7 @@ def main():
 
         out.append("## resumable sink prelude on resume (broadcast left_anti → "
                    "salt exchange)\n```")
-        out.append(formatted(_salted_exchange(pages, 16, 2, ckpt, True, articles)))
+        out.append(formatted(_salted_exchange(pages, 16, 2, ckpt, articles)))
         out.append("```\n")
 
         out.append("## filter pushdown into the pages scan\n```")

@@ -47,7 +47,7 @@ def test_resume_antijoin_is_broadcast(spark, pages_parquet, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     pages = spark.read.parquet(pages_parquet)
     run_extraction_job(pages, out, checkpoint_dir=ckpt, n_buckets=16, num_partitions=4)
-    plan = _plan(_salted_exchange(pages, 16, 4, ckpt, True, out))
+    plan = _plan(_salted_exchange(pages, 16, 4, ckpt, out))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -82,7 +82,7 @@ def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp
     assert "salt" not in no_resume, no_resume
     assert "pmod(" not in no_resume, no_resume
 
-    resumable = _plan(_salted_exchange(pages, 16, 4, str(tmp_path / "ckpt_key"), True,
+    resumable = _plan(_salted_exchange(pages, 16, 4, str(tmp_path / "ckpt_key"),
                                        str(tmp_path / "out_key")))
     m = re.search(r"hashpartitioning\(([^)]*)", resumable)
     assert m and m.group(1).startswith("salt"), resumable
@@ -244,7 +244,7 @@ def test_salted_exchange_keeps_one_salt_exchange(four_way_session, pages_parquet
     spark = four_way_session
     pages = spark.read.parquet(pages_parquet)
     plan, jobs = _built_plan(spark, lambda: _salted_exchange(
-        pages, 16, None, None, False, str(tmp_path / "out")))
+        pages, 16, None, None, str(tmp_path / "out")))
     assert plan.count("Exchange") == 1, plan
     m = re.search(r"hashpartitioning\(([^)]*)", plan)
     assert m and m.group(1).startswith("salt"), plan

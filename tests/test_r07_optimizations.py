@@ -189,10 +189,10 @@ def test_extraction_exchange_task_counts(spark, tmp_path):
             assert planned_tasks(extract_pages(pages), "xxhash64") == cores
             for n_buckets in (256, 4, 2):
                 # the salt's number of distinct values caps the useful task count
-                sink = _salted_exchange(pages, n_buckets, None, None, False, out)
+                sink = _salted_exchange(pages, n_buckets, None, None, out)
                 assert planned_tasks(sink, "salt") == min(n_buckets, max(shuffle, cores))
             assert planned_tasks(extract_pages(pages, num_partitions=3), "xxhash64") == 3
-            assert planned_tasks(_salted_exchange(pages, 256, 3, None, False, out),
+            assert planned_tasks(_salted_exchange(pages, 256, 3, None, out),
                                  "salt") == 3
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -175,7 +175,7 @@ def test_resume_verifies_output(spark, tmp_path):
     assert spark.read.parquet(out).count() == 40
 
     # all 8 buckets verified-done while output is intact
-    done = completed_buckets(spark, ckpt, verify_output_dir=out, n_buckets=8)
+    done = completed_buckets(spark, ckpt, verify_output_dir=out)
     assert done.count() == 8
 
     # simulate lost output: delete one bucket's parquet file
@@ -184,7 +184,7 @@ def test_resume_verifies_output(spark, tmp_path):
     survivors = spark.read.parquet(out).count()
     assert survivors < 40
 
-    done2 = completed_buckets(spark, ckpt, verify_output_dir=out, n_buckets=8)
+    done2 = completed_buckets(spark, ckpt, verify_output_dir=out)
     assert done2.count() < 8  # damaged buckets no longer count as done
 
     # resume re-runs exactly the damaged buckets
@@ -476,12 +476,15 @@ def test_cli_curate_from_warc(tmp_path):
 
 def test_resume_counts_all_error_bucket_as_done(spark, tmp_path):
     """Review finding: a bucket whose every page errored (rows_out=0,
-    no output rows) must verify as done — the inner join dropped it and
-    every resume re-extracted it forever."""
+    only error rows in its file) must verify as done — the inner join
+    dropped it and every resume re-extracted it forever."""
     from datetime import datetime
 
-    from go_readability_spark.plans.extract import completed_buckets
-    from go_readability_spark.plans.schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_readability_spark.plans.extract import _ARTICLES_ARROW, completed_buckets
+    from go_readability_spark.plans.schema import CHECKPOINT_SCHEMA
 
     now = datetime(2024, 1, 1)
     ck = [
@@ -490,23 +493,25 @@ def test_resume_counts_all_error_bucket_as_done(spark, tmp_path):
     ]
     ckpt_dir = str(tmp_path / "ck")
     spark.createDataFrame(ck, schema=CHECKPOINT_SCHEMA).write.parquet(ckpt_dir)
-    # output holds ONLY bucket 7's two good rows
+    # the sink's layout: bucket 3's file holds its 5 error rows, bucket
+    # 7's its two good rows
     from pyspark.sql import functions as F
 
     urls = [f"https://x{i}.org/p" for i in range(200)]
     pool = spark.createDataFrame([(u,) for u in urls], "url string").withColumn(
         "salt", F.pmod(F.xxhash64("url"), F.lit(16))
     )
-    two = [r.url for r in pool.where("salt = 7").limit(2).collect()]
-    assert len(two) == 2
-    rows = [
-        {**{f.name: None for f in ARTICLES_SCHEMA.fields}, "url": u}
-        for u in two
-    ]
     out_dir = str(tmp_path / "out")
-    spark.createDataFrame(rows, schema=ARTICLES_SCHEMA).write.parquet(out_dir)
+    for salt, n, error in ((3, 5, "RuntimeError: scoring failed"), (7, 2, None)):
+        picked = [r.url for r in pool.where(f"salt = {salt}").limit(n).collect()]
+        assert len(picked) == n
+        rows = [{**{f.name: None for f in _ARTICLES_ARROW}, "url": u, "error": error}
+                for u in picked]
+        os.makedirs(os.path.join(out_dir, f"salt={salt}"))
+        pq.write_table(pa.Table.from_pylist(rows, schema=_ARTICLES_ARROW),
+                       os.path.join(out_dir, f"salt={salt}", f"part-{salt:05d}.parquet"))
 
-    done = completed_buckets(spark, ckpt_dir, verify_output_dir=out_dir, n_buckets=16)
+    done = completed_buckets(spark, ckpt_dir, verify_output_dir=out_dir)
     salts = {r.salt for r in done.collect()}
     assert salts == {3, 7}, salts
 

@@ -154,7 +154,7 @@ def test_gated_atomic_restart_writes_nothing(spark, surfaces, tmp_path):
     for s in all_gated:
         assert not os.path.exists(os.path.join(out, f"salt={s}"))
     done = {r["salt"] for r in completed_buckets(
-        spark, ckpt, verify_output_dir=out, n_buckets=N_BUCKETS).collect()}
+        spark, ckpt, verify_output_dir=out).collect()}
     assert done == set(rows)
 
     # every counter of every bucket, on the gated corpus plus pages that
@@ -182,7 +182,7 @@ def test_gated_atomic_restart_writes_nothing(spark, surfaces, tmp_path):
                for i, r in enumerate(_corpus_rows()[:3])]
     pages = spark.createDataFrame(_corpus_rows() + failing, schema=PAGES_SCHEMA)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stats = _salted_exchange(pages, N_BUCKETS, 4, None, False, out).mapInArrow(
+    stats = _salted_exchange(pages, N_BUCKETS, 4, None, out).mapInArrow(
         scoring_fails(make_sink_extractor(out, ckpt, readerable_gate=True)),
         schema=SINK_STATS_SCHEMA).collect()
     ungated = pages.select("url", "warc_ts", "html").mapInArrow(
