@@ -14,6 +14,16 @@ sieve guard) followed by ``n`` seeded pages. ``SIEVE_PINS`` holds one md5
 per url over every ``extract_record`` field, ungated and gated. They are
 regression pins, frozen from the code that wrote them; they are not
 reference parity. Regenerate with ``python scripts/make_sieve_pins.py``.
+
+``long_corpus`` is the second pinned corpus (``LONG_PINS``): long pages
+with several scored candidates, where the decisions past the sieve are
+made. A main column sits among sibling ``div``s whose scores straddle the
+sibling-merge threshold (a fifth of the top score), some of them sharing
+its class, or among columns of similar score; link-heavy blocks with a
+positive class (weight >= 25) put link densities on both sides of
+``_clean_conditionally``'s 0.5 bound. A tail of ``synth_page`` pages with
+many paragraphs follows. Regenerate with
+``python scripts/make_sieve_pins.py long``.
 """
 
 from __future__ import annotations
@@ -29,6 +39,10 @@ from ..readability import regexps as rx
 SIEVE_PINS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "sieve_pins.json")
 SIEVE_SEED = 5
 SIEVE_PAGES = 3000
+LONG_PINS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "long_pins.json")
+LONG_SEED = 11
+LONG_PAGES = 400
+LONG_SYNTH_PAGES = 20
 
 
 def _alternatives(pattern) -> tuple:
@@ -202,6 +216,103 @@ def sieve_corpus(n: int = SIEVE_PAGES, seed: int = SIEVE_SEED) -> list[tuple[str
     return pages
 
 
+# class values with a class weight of +25, 0 and -25 that no unlikely
+# candidate pattern matches
+_MAIN_CLASSES = ("article-body", "post-content", "entry", "story", "main-text",
+                 "blog-post")
+_LINK_CLASSES = ("content-links", "story-more", "entry-refs", "post-index")
+_SIBLING_CLASSES = ("", "", "box", "column", "note", "card", "teaser", "lead",
+                    "meta", "promo", "story", "entry")
+
+
+def _exact(rng, n: int) -> str:
+    """Text of exactly ``n`` characters, no comma, that ``get_inner_text``
+    leaves as it is (no edge space, no double space)."""
+    out = ""
+    while len(out) < n:
+        out += rng.choice(_WORDS) + " "
+    out = out[:n]
+    return out[:-1] + "s" if out.endswith(" ") else out
+
+
+def _long_paragraph(rng) -> str:
+    """A paragraph of 40-480 characters with 0-6 commas: its score spans
+    1 + commas + min(len // 100, 3)."""
+    words = _exact(rng, rng.randint(40, 480)).split(" ")
+    for _ in range(rng.randint(0, 6)):
+        i = rng.randrange(len(words))
+        words[i] += ","
+    return "<p>" + " ".join(words).capitalize() + ".</p>"
+
+
+def _link_block(rng) -> str:
+    """A ``div`` with a positive class whose link density lands near 0.5:
+    n characters of text, round(n * r) of them link text."""
+    n = rng.randint(60, 260)
+    link = round(n * rng.uniform(0.46, 0.56))
+    tail = rng.randint(1, n - link - 3)
+    rest = n - link - 1 - tail
+    href = rng.choice(("/more", "/" + rng.choice(_WORDS), "https://elsewhere.example/x"))
+    return (f'<div class="{rng.choice(_LINK_CLASSES)}"><p><a href="{href}">'
+            f"{_exact(rng, link)}</a> {_exact(rng, tail)}</p><p>{_exact(rng, rest)}</p></div>")
+
+
+def _column(rng, cls: str, lo: int, hi: int) -> str:
+    attr = f' class="{cls}"' if cls else ""
+    paragraphs = [_long_paragraph(rng) for _ in range(rng.randint(lo, hi))]
+    if rng.random() < 0.25:
+        paragraphs.insert(rng.randrange(len(paragraphs) + 1), _link_block(rng))
+    return f"<div{attr}>{''.join(paragraphs)}</div>"
+
+
+def long_page(seed: int, idx: int) -> tuple[str, bytes]:
+    """One seeded multi-candidate page: (url, html bytes)."""
+    rng = _rng(seed, 100_000 + idx)
+    main_cls = rng.choice(_MAIN_CLASSES)
+    main = [_long_paragraph(rng) for _ in range(rng.randint(4, 12))]
+    for _ in range(rng.choice((0, 1, 1, 2, 3))):
+        main.insert(rng.randrange(len(main) + 1), _link_block(rng))
+    parts = [f'<div class="{main_cls}">{"".join(main)}</div>']
+    if rng.random() < 0.25:
+        # columns of similar score: the alternative-ancestor promotion
+        parts += [_column(rng, rng.choice(_SIBLING_CLASSES), 4, 10)
+                  for _ in range(rng.randint(2, 4))]
+    else:
+        for _ in range(rng.randint(1, 5)):
+            r = rng.random()
+            if r < 0.55:
+                cls = main_cls if rng.random() < 0.2 else rng.choice(_SIBLING_CLASSES)
+                parts.append(_column(rng, cls, 1, 4))
+            elif r < 0.75:
+                parts.append(_link_block(rng))
+            elif r < 0.9:
+                parts.append(_long_paragraph(rng))
+            else:
+                parts.append(f'<p><a href="/{rng.choice(_WORDS)}">{_sentence(rng, 2, 6)}</a></p>')
+    rng.shuffle(parts)
+    title = _sentence(rng, 3, 7)
+    heading = f"<h1>{title}</h1>" if rng.random() < 0.5 else ""
+    nav = ('<div class="menu">' + "".join(
+        f'<a href="/{w}">{w}</a> ' for w in rng.sample(_WORDS, 6)) + "</div>"
+        if rng.random() < 0.5 else "")
+    body = f'{nav}<div class="{rng.choice(_SIBLING_CLASSES)}">{heading}{"".join(parts)}</div>'
+    html = f"<html><head><title>{title}</title></head><body>{body}</body></html>"
+    return f"http://long.example/{seed}/{idx}.html", html.encode("utf-8")
+
+
+def long_corpus(n: int = LONG_PAGES, seed: int = LONG_SEED,
+                n_synth: int = LONG_SYNTH_PAGES) -> list[tuple[str, bytes]]:
+    """``n`` seeded multi-candidate pages, then ``n_synth`` ``synth_page``
+    pages of 20-80 paragraphs: [(url, html bytes)]."""
+    from .synthetic import synth_page
+
+    pages = [long_page(seed, i) for i in range(n)]
+    for i in range(n_synth):
+        row = synth_page(seed, i, "long.example.org", 20 + (i * 37) % 61)
+        pages.append((row["url"], row["html"]))
+    return pages
+
+
 def _canon(v) -> str:
     if v is None:
         return "␀"
@@ -231,6 +342,6 @@ def corpus_digests(pages) -> dict:
     }
 
 
-def load_sieve_pins() -> dict:
-    with open(SIEVE_PINS) as f:
+def load_sieve_pins(path: str = SIEVE_PINS) -> dict:
+    with open(path) as f:
         return json.load(f)
