@@ -14,6 +14,7 @@ driver oracles verify bit-for-bit.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 # host = authority minus userinfo and port, lowercased. RE2-compatible
@@ -68,7 +69,7 @@ def filter_blocked_hosts(
         return df
     norm = sorted({b.strip().lower().lstrip(".") for b in blocked if b.strip()})
     spark = df.sparkSession
-    bl = spark.createDataFrame([(b,) for b in norm], "blocked_host string")
+    bl = spark.createDataFrame(pa.table({"blocked_host": pa.array(norm, pa.string())}))
     staged = df.withColumn("_bh_host", host_of_url(F.col(url_col)))
     cond = (F.col("_bh_host") == F.col("blocked_host")) | F.col(
         "_bh_host"

@@ -37,6 +37,7 @@ cumsum.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -69,12 +70,13 @@ def with_token_offsets(
         .agg(F.sum(tokens_col).alias("_pk_sum"))
         .collect()
     )
-    running, offsets = 0, []
+    running, blocks, starts = 0, [], []
     for row in sorted(totals, key=lambda r: r["_pk_blk"]):
-        offsets.append((row["_pk_blk"], running))
+        blocks.append(row["_pk_blk"])
+        starts.append(running)
         running += row["_pk_sum"]
-    spark = df.sparkSession
-    off = spark.createDataFrame(offsets, "_pk_blk bigint, _pk_off bigint")
+    off = df.sparkSession.createDataFrame(pa.table({
+        "_pk_blk": pa.array(blocks, pa.int64()), "_pk_off": pa.array(starts, pa.int64())}))
 
     order = [F.col(id_col).asc()]
     if tiebreak_col is not None:

@@ -12,6 +12,7 @@ from the same keys. Map-only: no shuffle, prunes with the scan."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.text import md5_prefix_long
@@ -61,11 +62,13 @@ def global_shuffle(
         "_gs_blk", F.expr(f"_gs_h div {block_span}")
     )
     totals = staged.groupBy("_gs_blk").agg(F.count(F.lit(1)).alias("_gs_n")).collect()
-    running, offsets = 0, []
+    running, blocks, starts = 0, [], []
     for row in sorted(totals, key=lambda r: r["_gs_blk"]):
-        offsets.append((row["_gs_blk"], running))
+        blocks.append(row["_gs_blk"])
+        starts.append(running)
         running += row["_gs_n"]
-    off = df.sparkSession.createDataFrame(offsets, "_gs_blk bigint, _gs_off bigint")
+    off = df.sparkSession.createDataFrame(pa.table({
+        "_gs_blk": pa.array(blocks, pa.int64()), "_gs_off": pa.array(starts, pa.int64())}))
     w = Window.partitionBy("_gs_blk").orderBy("_gs_h", key_col)
     return (
         staged.join(F.broadcast(off), "_gs_blk")

@@ -8,6 +8,7 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -166,10 +167,8 @@ def with_hyperplane_bands(
         raise ValueError(f"n_planes={len(planes)} not divisible by n_bands={n_bands}")
     per_band = len(planes) // n_bands
     spark = df.sparkSession
-    planes_df = spark.createDataFrame(
-        [([list(map(float, p)) for p in planes],)],
-        "hp_planes array<array<double>>",
-    )
+    planes_df = spark.createDataFrame(pa.table({"hp_planes": pa.array(
+        [[list(map(float, p)) for p in planes]], pa.list_(pa.list_(pa.float64())))}))
     staged = df.withColumn("_hp_vec", F.col(vec_col).cast("array<double>"))
     joined = staged.join(F.broadcast(planes_df))
     bands = F.posexplode(

@@ -232,7 +232,10 @@ def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str) -> Dat
     every page was gated out is done and one whose file was lost is not.
     A footer that cannot be read (a truncated or emptied file) leaves its
     bucket not done, and a lineage file that cannot be read is skipped,
-    so the buckets it recorded are redone.
+    so the buckets it recorded are redone.  That file is renamed to a
+    dot-prefixed name, which Spark and pyarrow skip, so the checkpoint
+    dir reads as a table again once the restart has rewritten the
+    buckets' lineage.
     (Iceberg: manifest row counts play the footers' role.)"""
     import pyarrow.parquet as pq
 
@@ -244,6 +247,9 @@ def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str) -> Dat
             rows = pq.read_table(path, columns=["partition_key", "status", "rows_out",
                                                 "parse_errors"]).to_pylist()
         except (OSError, pa.ArrowException):
+            with contextlib.suppress(OSError):
+                os.replace(path, os.path.join(checkpoint_dir,
+                                              f".{os.path.basename(path)}.unreadable"))
             continue
         for r in rows:
             if r["status"] == "done":

@@ -18,6 +18,8 @@ Each sieve flag has one reader, and an attempt records which of them
 decided something. A retry whose flag decided nothing, in an attempt that
 left the byline unchanged, would run the same operations on the same clone,
 so it is skipped; the output is the same bytes (see ``_grab_article``).
+The sieve also skips the retries left once an attempt holds all of the
+body's text, which no later attempt can exceed.
 """
 
 from __future__ import annotations
@@ -745,7 +747,27 @@ class Parser:
         until a flag that fired. With no flag left it selects as before;
         the sort is stable, so a skipped replay could only have tied an
         earlier attempt, which wins the tie. ``self.attempts`` holds the
-        attempts actually run."""
+        attempts actually run.
+
+        The sieve also stops at an upper bound: the body's own text. At a
+        retry it skips every retry left when (a) the attempt's length
+        equals ``B``, the normalized length of ``<body>``'s text; (b) the
+        byline is set or ``strip_unlikelys`` did not fire, since that
+        flag alone changes which nodes the walk visits and so it alone
+        can let a later attempt find a byline; and (c) no element the
+        walk can score (a ``div`` or a tag in ``tags_to_score``) lies
+        outside ``<body>`` (``_body_text_length``). Given (c), every
+        attempt's article holds the body's text nodes in document order,
+        some of them removed, and removing characters never raises the
+        normalized length: after the ends are trimmed it counts each
+        character once and each run of ASCII whitespace once, and a removal
+        neither adds a character nor splits a run. So no later attempt is
+        longer than ``B``; it
+        could only tie, and the earlier attempt wins a tie. ``B`` is under
+        ``char_thresholds``, so no later attempt returns early either.
+        ``B`` is computed at most once per document, at the first retry
+        that passes (b)."""
+        body_length = None
         while True:
             self.fired.clear()
             byline_before = self.article_byline
@@ -1028,19 +1050,49 @@ class Parser:
             if text_length < self.char_thresholds:
                 self.attempts.append((article_content, text_length))
                 replay = self.article_byline == byline_before
+                retry = False
                 for name in _SIEVE_FLAGS:
                     if getattr(self.flags, name):
                         setattr(self.flags, name, False)
                         if not replay or name in self.fired:
+                            retry = True
                             break
                         self._logf("skipping retry without %s: it decided nothing", name)
-                else:
-                    self.attempts.sort(key=lambda a: a[1], reverse=True)
-                    if self.attempts[0][1] == 0:
-                        return None
-                    return self.attempts[0][0]
-                continue
+                if retry and (self.article_byline
+                              or "strip_unlikelys" not in self.fired):
+                    if body_length is None:
+                        body_length = self._body_text_length()
+                    if text_length == body_length:
+                        self._logf("skipping retries: the article holds all %d "
+                                   "characters of the body", text_length)
+                        retry = False
+                if retry:
+                    continue
+                self.attempts.sort(key=lambda a: a[1], reverse=True)
+                if self.attempts[0][1] == 0:
+                    return None
+                return self.attempts[0][0]
             return article_content
+
+    def _body_text_length(self) -> float:
+        """The retry bound of ``_grab_article``: the normalized length of
+        the body's text, or no bound (infinity) when an element the walk
+        can score lies outside ``<body>`` (as in a ``<template>`` in the
+        head), where an article could hold text the body does not."""
+        body = body_element(self.doc)
+        scorable = {"div", *self.tags_to_score}
+        stack = [self.doc]
+        while stack:
+            node = stack.pop()
+            if node is body:
+                continue
+            if node.type == ELEMENT and node.tag in scorable:
+                return math.inf
+            child = node.first_child
+            while child is not None:
+                stack.append(child)
+                child = child.next
+        return char_count(get_inner_text(body, True))
 
     # ------------------------------------------------------------ prepArticle
 

@@ -128,3 +128,31 @@ def test_restart_redoes_exactly_the_damaged_buckets(spark, one_shot, tmp_path, s
     assert _recorded_buckets(_lineage_files(ckpt) - before) == redo
     assert written == len(redo)
     assert _by_url(spark, out) == want
+
+
+def test_restart_sets_an_unreadable_lineage_file_aside(spark, one_shot, tmp_path):
+    """A restart renames a lineage file it cannot read to a dot-prefixed
+    name, so the checkpoint dir reads as a table again: the buckets that
+    file recorded are redone, and their new lineage rows replace it."""
+    import pyarrow.parquet as pq
+
+    from go_readability_spark.plans import run_extraction_job_atomic
+
+    pages, runs = one_shot
+    src_out, src_ckpt, partition_by, want = runs["flat"]
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    shutil.copytree(src_out, out)
+    shutil.copytree(src_ckpt, ckpt)
+    damaged = sorted(_lineage_files(ckpt))[0]
+    redo = _recorded_buckets([damaged])
+    _truncate(damaged, 0.5)
+
+    assert run_extraction_job_atomic(pages, out, checkpoint_dir=ckpt, n_buckets=N_BUCKETS,
+                                     num_partitions=4, partition_by=partition_by) == len(redo)
+    name = os.path.basename(damaged)
+    assert not os.path.exists(damaged)
+    assert os.path.exists(os.path.join(ckpt, f".{name}.unreadable"))
+    recorded = {int(k) for k in pq.read_table(ckpt).column("partition_key").to_pylist()}
+    assert recorded == _recorded_buckets(_lineage_files(src_ckpt))
+    assert spark.read.parquet(ckpt).count() == pq.read_table(ckpt).num_rows
+    assert _by_url(spark, out) == want
