@@ -232,10 +232,13 @@ def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str) -> Dat
     every page was gated out is done and one whose file was lost is not.
     A footer that cannot be read (a truncated or emptied file) leaves its
     bucket not done, and a lineage file that cannot be read is skipped,
-    so the buckets it recorded are redone.  That file is renamed to a
-    dot-prefixed name, which Spark and pyarrow skip, so the checkpoint
-    dir reads as a table again once the restart has rewritten the
-    buckets' lineage.
+    so the buckets it recorded are redone.  This call changes the
+    checkpoint dir: a lineage file that is damaged (pyarrow finds no
+    valid footer, ``ArrowInvalid``) is renamed to a dot-prefixed name,
+    which Spark and pyarrow skip, so the dir reads as a table again once
+    the restart has rewritten the buckets' lineage.  A file that fails
+    to read for another reason (an ``OSError`` such as EMFILE or EIO) is
+    only skipped, so a good file stays visible to the next restart.
     (Iceberg: manifest row counts play the footers' role.)"""
     import pyarrow.parquet as pq
 
@@ -246,10 +249,12 @@ def completed_buckets(spark, checkpoint_dir: str, verify_output_dir: str) -> Dat
         try:
             rows = pq.read_table(path, columns=["partition_key", "status", "rows_out",
                                                 "parse_errors"]).to_pylist()
-        except (OSError, pa.ArrowException):
+        except pa.ArrowInvalid:
             with contextlib.suppress(OSError):
                 os.replace(path, os.path.join(checkpoint_dir,
                                               f".{os.path.basename(path)}.unreadable"))
+            continue
+        except (OSError, pa.ArrowException):
             continue
         for r in rows:
             if r["status"] == "done":

@@ -4,11 +4,9 @@ Each mutant edits one line of ``readability/parser.py`` in a temporary
 copy of the repository; the pin and bound tests then run in that copy. A
 mutant is *killed* when a test fails and *survives* when every test
 passes. The unmutated copy runs first and must pass. Prints a markdown
-table (mutant, line, result, seconds).
+table (mutant, line, result, seconds). To run a subset, edit MUTANTS.
 
-    python scripts/kernel_mutants.py                 # every mutant
-    python scripts/kernel_mutants.py sibling_0.21    # the named ones
-    python scripts/kernel_mutants.py --tests tests/test_long_pages.py
+    python scripts/kernel_mutants.py
 
 Exit status 1 when the unmutated copy fails or a mutant's line is not
 found exactly once.
@@ -16,7 +14,6 @@ found exactly once.
 
 from __future__ import annotations
 
-import argparse
 import os
 import shutil
 import subprocess
@@ -71,11 +68,11 @@ def _apply(root: str, path: str, anchor: str, old: str, new: str) -> int:
     return i + 1
 
 
-def _run_tests(root: str, tests) -> tuple[bool, float]:
+def _run_tests(root: str) -> tuple[bool, float]:
     env = dict(os.environ, PYTHONPATH=root, PYTHONDONTWRITEBYTECODE="1")
     t0 = time.perf_counter()
     proc = subprocess.run(
-        [sys.executable, "-m", "pytest", "-x", "-q", "-p", "no:cacheprovider", *tests],
+        [sys.executable, "-m", "pytest", "-x", "-q", "-p", "no:cacheprovider", *TESTS],
         cwd=root, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
     if proc.returncode not in (0, 1):
         print(proc.stdout[-3000:], file=sys.stderr)
@@ -84,30 +81,20 @@ def _run_tests(root: str, tests) -> tuple[bool, float]:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("names", nargs="*", help="mutants to run (default: all)")
-    ap.add_argument("--tests", nargs="+", default=list(TESTS))
-    args = ap.parse_args()
-    names = args.names or list(MUTANTS)
-    unknown = [n for n in names if n not in MUTANTS]
-    if unknown:
-        ap.error(f"unknown mutants: {unknown}; known: {list(MUTANTS)}")
-
     with tempfile.TemporaryDirectory(prefix="kernel-mutants-") as tmp:
         clean = os.path.join(tmp, "clean")
         _copy_repo(clean)
-        ok, secs = _run_tests(clean, args.tests)
+        ok, secs = _run_tests(clean)
         if not ok:
             print("the unmutated copy fails its tests", file=sys.stderr)
             return 1
         print(f"unmutated: pass ({secs:.0f} s)\n")
         print("| mutant | line | result | s |\n|---|---|---|---|")
-        for name in names:
-            path, anchor, old, new = MUTANTS[name]
+        for name, (path, anchor, old, new) in MUTANTS.items():
             work = os.path.join(tmp, name)
             shutil.copytree(clean, work)
             line = _apply(work, path, anchor, old, new)
-            survived, secs = _run_tests(work, args.tests)
+            survived, secs = _run_tests(work)
             print(f"| `{name}`: `{old.strip()}` → `{new.strip()}` | {path}:{line} "
                   f"| {'survived' if survived else 'killed'} | {secs:.0f} |", flush=True)
             shutil.rmtree(work)

@@ -156,3 +156,33 @@ def test_restart_sets_an_unreadable_lineage_file_aside(spark, one_shot, tmp_path
     assert recorded == _recorded_buckets(_lineage_files(src_ckpt))
     assert spark.read.parquet(ckpt).count() == pq.read_table(ckpt).num_rows
     assert _by_url(spark, out) == want
+
+
+def test_restart_keeps_a_lineage_file_it_failed_to_open(spark, one_shot, tmp_path,
+                                                        monkeypatch):
+    """A lineage file that fails to open with an OSError (here EMFILE) is
+    skipped, its buckets left not done, and not renamed: only a file
+    pyarrow finds damaged is set aside."""
+    import errno
+
+    import pyarrow.parquet as pq
+
+    from go_readability_spark.plans.extract import completed_buckets
+
+    _pages, runs = one_shot
+    src_out, src_ckpt, _partition_by, _want = runs["flat"]
+    ckpt = str(tmp_path / "ckpt")
+    shutil.copytree(src_ckpt, ckpt)
+    busy = sorted(_lineage_files(ckpt))[0]
+    read_table = pq.read_table
+
+    def failing(path, *args, **kwargs):
+        if path == busy:
+            raise OSError(errno.EMFILE, "Too many open files", path)
+        return read_table(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", failing)
+    before = sorted(os.listdir(ckpt))
+    done = {r.salt for r in completed_buckets(spark, ckpt, src_out).collect()}
+    assert sorted(os.listdir(ckpt)) == before
+    assert done == _recorded_buckets(_lineage_files(ckpt) - {busy})

@@ -121,14 +121,6 @@ def test_article_holding_the_whole_body_grabs_once(name, monkeypatch):
     assert unbounded_attempts > 1
 
 
-def test_doc_pages_shape_grabs_once():
-    html = (b'<html><head><title>doc 12 | src3</title></head><body>'
-            b'<div class="article-content"><h1>Document 12</h1><p>merge table.</p>'
-            b"<p>hash customer sort order slow line part fast row the agg key.</p>"
-            b"</div></body></html>")
-    assert _parse(html)[1] == 1
-
-
 def test_bound_skip_is_logged(caplog):
     html = EDGE_PAGES["doc_page"][0].encode()
     with caplog.at_level(logging.INFO, "go_readability_spark.readability"):
