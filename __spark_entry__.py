@@ -486,26 +486,6 @@ def _q_simhash_pairs(spark, sf_dir):
     return simhash_near_pairs(simhash_table(docs, "doc_id", "text"), max_hamming=8)
 
 
-def _q_media_features(spark, sf_dir):
-    """Multimodal decode leg: REAL PNG / WAV-PCM / motion-PNG payloads
-    (synthesized deterministically with the repo's own codecs) through the
-    Arrow-batched feature extractor. Binary decode is not expressible in
-    SQL, so the oracle is the pinned-golden artifact
-    (sources/media_features_sf001.json, see _pinned_output_oracles); the
-    decoded values are independently pinned by tests/test_wav_media.py
-    and tests/test_png.py."""
-    ship_package(spark)
-    from go_readability_spark.operators.multimodal import (
-        extract_media_features,
-        synth_real_media_dataframe,
-    )
-
-    media = synth_real_media_dataframe(spark, n=24, seed=42)
-    return extract_media_features(media, fake=True).select(
-        "media_id", "kind", "n_bytes", "frames"
-    )
-
-
 def _q_ann_topk(spark, sf_dir):
     ship_package(spark)
     emb = _read(spark, sf_dir, "embeddings")
@@ -1235,7 +1215,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_clusters": _q_dup_clusters,
         "minhash_pairs_md5": _q_minhash_pairs_md5,
         "simhash_pairs": _q_simhash_pairs,
-        "media_features": _q_media_features,
         "ann_topk": _q_ann_topk,
         "ann_recall": _q_ann_recall,
         "semantic_dedup": _q_semantic_dedup,
@@ -1599,14 +1578,15 @@ def _ann_oracles() -> dict[str, str]:
 
 
 def _pinned_output_oracles() -> dict[str, str]:
-    """Pinned-golden oracles for the two queries whose computation is not
-    ANSI-SQL-expressible (the full extractor; binary media decode): the
-    expected output is frozen as a committed JSON artifact
-    (scripts/generate_output_pins.py) and the oracle just reads it. The
-    VALUES are independently verified elsewhere — fixture_parity +
-    tests/test_parity.py byte-checks for extraction, tests/test_png.py /
-    test_wav_media.py pinned decodes for media — so the pin turns a
-    rows-only driver check into a full hash match without circularity:
+    """Pinned-golden oracles for the queries whose computation is not
+    ANSI-SQL-expressible (the full extractor, the iterative BPE trainer,
+    the xxhash64-keyed rows): the expected output is frozen as a
+    committed JSON artifact (scripts/generate_output_pins.py) and the
+    oracle just reads it. The VALUES are independently verified
+    elsewhere — fixture_parity + tests/test_parity.py byte-checks for
+    extraction, tests/test_bpe.py's pure-Python reference for BPE, the
+    md5 twins for the xxhash64 rows — so the pin turns a rows-only
+    check into a full hash match without circularity:
     regenerating a pin is an explicit, reviewable behavior change."""
     import os as _os
 
@@ -1615,7 +1595,6 @@ def _pinned_output_oracles() -> dict[str, str]:
         "go_readability_spark", "sources",
     )
     arts = _os.path.join(src, "extract_articles_sf001.json")
-    media = _os.path.join(src, "media_features_sf001.json")
     bpe = _os.path.join(src, "bpe_merges_sf001.json")
     salted = _os.path.join(src, "extract_salted_sf001.json")
     mh = _os.path.join(src, "minhash_pairs_sf001.json")
@@ -1643,12 +1622,6 @@ def _pinned_output_oracles() -> dict[str, str]:
             SELECT url, title, CAST(length AS BIGINT) AS length,
                    readerable, CAST(error AS VARCHAR) AS error
             FROM read_json_auto('{arts}')
-        """,
-        "media_features": f"""
-            SELECT CAST(media_id AS BIGINT) AS media_id, kind,
-                   CAST(n_bytes AS BIGINT) AS n_bytes,
-                   CAST(frames AS INTEGER) AS frames
-            FROM read_json_auto('{media}')
         """,
     }
 

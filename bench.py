@@ -105,9 +105,12 @@ def run_suite():
     """Per-query MEDIANS over $BENCH_REPEATS runs (default 5) in one
     session — the r2 verdict flagged that single-shot numbers on this
     shared host swing +-50%; medians + IQR separate host noise from real
-    regressions. All repeats recompute from the source parquet (nothing
-    is .cache()d); repeat 1 additionally pays Python-worker fork+import,
-    which the median naturally discards and the IQR leaves out."""
+    regressions. All repeats recompute from the source parquet: each one
+    starts by clearing the session's cache, so a relation an operator
+    persisted in an earlier repeat (minhash_dedup_pairs' shingles and
+    signatures) is not a cache hit; repeat 1 additionally pays
+    Python-worker fork+import, which the median naturally discards and
+    the IQR leaves out."""
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "5")))
     spark = _session(CPUS)
     try:
@@ -115,6 +118,7 @@ def run_suite():
         skipped: dict[str, str] = {}
         doc_counts = {}
         for i in range(repeats):
+            spark.catalog.clearCache()
             for name, (fn, n_docs) in bench_queries(spark).items():
                 times = samples.setdefault(name, [])
                 t0 = time.time()

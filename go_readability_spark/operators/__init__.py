@@ -14,26 +14,7 @@ from .dedup import (  # noqa: F401
     simhash_table,
     word_shingles,
 )
-from .multimodal import (  # noqa: F401
-    decode_audio,
-    decode_image,
-    extract_media_features,
-    resize_images,
-    synth_media_dataframe,
-    synth_real_media_dataframe,
-)
-from .wav import decode_wav, encode_wav, is_wav, wav_features  # noqa: F401
-from .image_ops import (  # noqa: F401
-    count_frames,
-    encode_motion_png,
-    frame_sample,
-    resize_box,
-    resize_nearest,
-    resize_png,
-    split_frames,
-)
 from .hosts import filter_blocked_hosts, host_of_url, host_stats  # noqa: F401
-from .png import decode_png, encode_png, is_png  # noqa: F401
 from .snapshots import latest_snapshot, snapshot_history  # noqa: F401
 from .sharding import shard_assignments, shard_stats, write_sharded  # noqa: F401
 from .sampling import hash_sample, mix_corpus, stratified_sample  # noqa: F401
@@ -51,7 +32,6 @@ from .similarity import (  # noqa: F401
     lsh_bucketed_topk,
     with_unit_vectors,
 )
-from .media_probe import probe_image, probe_media_dimensions  # noqa: F401
 from .linkgraph import (  # noqa: F401
     anchor_text_stats,
     anchor_text_stats_from_wat,

@@ -20,17 +20,16 @@ similarity.with_hyperplane_bands: no O(k x dim) literal expression trees).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .similarity import _dot, with_unit_vectors
 
 
 def _with_matrix(df: DataFrame, matrix, col_name: str) -> DataFrame:
-    spark = df.sparkSession
-    mdf = spark.createDataFrame(
-        [([list(map(float, row)) for row in matrix],)],
-        f"{col_name} array<array<double>>",
-    )
+    mdf = df.sparkSession.createDataFrame(pa.table({col_name: pa.array(
+        [[list(map(float, row)) for row in matrix]],
+        pa.list_(pa.list_(pa.float64())))}))
     return df.join(F.broadcast(mdf))
 
 

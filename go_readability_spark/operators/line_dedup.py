@@ -41,21 +41,6 @@ def _exploded_lines(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def line_document_frequency(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(fingerprint, df): how many DISTINCT documents contain each
-    non-blank (trimmed) line."""
-    return (
-        _exploded_lines(df, id_col, text_col)
-        .where(F.col("fingerprint").isNotNull())
-        .select("id", "fingerprint")
-        .distinct()
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("df"))
-    )
-
-
 def remove_boilerplate_lines(
     df: DataFrame,
     max_df: int = 10,

@@ -78,7 +78,9 @@ def semantic_dedup(
         assign_buckets(df, centroids, id_col, vec_col), max_cluster_size
     )
     a = assigned.alias("a")
-    b = assigned.alias("b")
+    # a sort-merge join on (bucket, sub) by choice: left to its size
+    # estimate, Spark broadcasts one whole side when the input is small
+    b = assigned.alias("b").hint("merge")
     dup_ids = (
         a.join(
             b,

@@ -998,7 +998,10 @@ class Parser:
             top_candidate_class = class_name(top_candidate)
 
             parent_of_top = top_candidate.parent
-            siblings = parent_of_top.children()
+            # the only-child climb ends at the document node, which has no
+            # parent, when <body> was removed (role="navigation") and only
+            # <head> holds text: there are no siblings to merge
+            siblings = parent_of_top.children() if parent_of_top is not None else []
             for sibling in siblings:
                 append_node = False
                 if sibling is top_candidate:

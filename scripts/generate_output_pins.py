@@ -1,4 +1,4 @@
-"""Regenerate the pinned-output oracle artifacts for the two driver
+"""Regenerate the pinned-output oracle artifacts for the contract
 queries whose computation is not expressible in ANSI SQL:
 
   * sources/extract_articles_sf001.json — (url, title, length,
@@ -7,10 +7,6 @@ queries whose computation is not expressible in ANSI SQL:
     byte-level text checks in tests/test_parity.py); the pin freezes the
     sf0.01 corpus run so the driver can hash-compare instead of
     row-counting.
-  * sources/media_features_sf001.json — (media_id, kind, n_bytes,
-    frames) of _q_media_features (deterministic synthetic media,
-    seed=42). Decoded values are independently pinned by
-    tests/test_png.py / tests/test_wav_media.py.
   * sources/bpe_merges_sf001.json — (rank, left, right, merged) of
     _q_bpe_merges at sf0.01. The iterative trainer is independently
     verified against a pure-Python BPE reference with identical
@@ -27,7 +23,7 @@ queries whose computation is not expressible in ANSI SQL:
     hashes' candidate set.
 
 Run from the repo root: python scripts/generate_output_pins.py
-Regenerating invalidates the driver oracles if extraction/decoding
+Regenerating invalidates the pinned oracles if extraction
 behavior changed — that is the point: a pin diff IS a behavior diff and
 must be reviewed like one.
 """
@@ -59,15 +55,6 @@ def main():
         with open(os.path.join(OUT_DIR, "extract_articles_sf001.json"), "w") as f:
             json.dump([r.asDict() for r in arts], f, ensure_ascii=False, indent=1)
         print(f"extract_articles_sf001.json: {len(arts)} rows")
-
-        media = (
-            entry.queries()["media_features"](spark, "/root/testdata/sf0.01")
-            .orderBy("media_id")
-            .collect()
-        )
-        with open(os.path.join(OUT_DIR, "media_features_sf001.json"), "w") as f:
-            json.dump([r.asDict() for r in media], f, ensure_ascii=False, indent=1)
-        print(f"media_features_sf001.json: {len(media)} rows")
 
         bpe = (
             entry.queries()["bpe_merges"](spark, "/root/testdata/sf0.01")

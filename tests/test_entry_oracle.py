@@ -68,7 +68,7 @@ def test_every_query_runs(spark, entry_mod):
     "events_windowed", "events_sessionize", "resume_antijoin", "partition_metrics", "quality_partition",
     "extract_salted_md5", "tpch_q1", "tpch_q3_like",
     "minhash_pairs_md5", "simhash_pairs", "fixture_parity",
-    "extract_articles", "media_features", "bpe_merges",
+    "extract_articles", "bpe_merges",
     "extract_salted", "minhash_pairs",
     "ann_lsh_topk", "ann_recall", "ann_ivf_topk", "semantic_dedup", "embedding_near_pairs_lsh",
     "quality_classifier",

@@ -1,30 +1,6 @@
-"""Multimodal plumbing, streaming wrapper, and operator edge cases."""
+"""Streaming wrapper and operator edge cases."""
 
 import pytest
-
-
-def test_multimodal_features(spark):
-    from go_readability_spark.operators import extract_media_features, synth_media_dataframe
-
-    media = synth_media_dataframe(spark, n=18, seed=5)
-    feats = extract_media_features(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 18
-    by_id = {r["media_id"]: r for r in rows}
-    assert all(len(r["feat"]) == 8 for r in rows)
-    assert all(r["n_bytes"] > 0 for r in rows)
-    # deterministic across runs
-    rows2 = {r["media_id"]: r for r in extract_media_features(media, fake=True).collect()}
-    assert all(rows2[k]["feat"] == by_id[k]["feat"] for k in by_id)
-    # video frame sampling stub caps at 32
-    assert all(1 <= r["frames"] <= 32 for r in rows if r["kind"] != "other")
-
-
-def test_multimodal_real_decode_is_stubbed():
-    from go_readability_spark.operators import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"xx", fake=False)
 
 
 def test_streaming_extraction(spark, tmp_path):

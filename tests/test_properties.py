@@ -61,25 +61,6 @@ def test_parity_normalization_idempotent(s):
     assert not re.search(r"[\t\n\x0b\x0c\r]| {2,}", once)
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(1, 10), st.integers(1, 10), st.sampled_from([1, 2, 3, 4]),
-    st.sampled_from([0, 1, 2, 3, 4]), st.randoms(use_true_random=False),
-)
-def test_png_round_trip_property(w, h, ch, filter_type, rnd):
-    import numpy as np
-
-    from go_readability_spark.operators.png import decode_png, encode_png
-
-    arr = np.array(
-        [[[rnd.randrange(256) for _ in range(ch)] for _ in range(w)] for _ in range(h)],
-        dtype=np.uint8,
-    )
-    ww, hh, px = decode_png(encode_png(arr, filter_type=filter_type))
-    assert (ww, hh) == (w, h)
-    assert np.array_equal(px, arr)
-
-
 def _py_jaccard_pairs(docs, n=3, threshold=0.5):
     """Independent pure-Python reference for ngram_jaccard_pairs."""
     shingles = {}

@@ -12,7 +12,7 @@ import math
 from dataclasses import fields
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from go_readability_spark.dom import parse_html
 from go_readability_spark.plans.extract import extract_record
@@ -189,6 +189,10 @@ def _short_pages(draw) -> bytes:
 @settings(max_examples=150, deadline=None, suppress_health_check=[HealthCheck.too_slow,
                                                                   HealthCheck.function_scoped_fixture])
 @given(html=_short_pages())
+# <body role="navigation"> is removed, so the only-child climb from the
+# <head> text reaches the document node, which has no parent
+@example(html=b'<html><head><template><div><p>aaaaaaaaaaaaaaword word a</p></div>'
+              b'</template></head><body role="navigation"></body></html>')
 def test_bound_changes_no_article_on_generated_short_pages(html, monkeypatch):
     bounded = _parse(html)[0]
     with monkeypatch.context() as m:
