@@ -11,7 +11,6 @@ from .text import (  # noqa: F401
 from .mojibake import (  # noqa: F401
     fix_mojibake_text,
     mojibake_flag,
-    repair_mojibake,
     with_fixed_text,
     with_mojibake_repaired,
     with_normalized_text,

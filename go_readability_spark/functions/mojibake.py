@@ -54,15 +54,6 @@ def mojibake_flag(text: Column) -> Column:
     return latin1 & marker & valid
 
 
-def repair_mojibake(text: Column) -> Column:
-    """The repaired text column: exact inverse decode where the guards
-    hold, byte-identical passthrough everywhere else."""
-    return F.when(
-        mojibake_flag(text),
-        F.decode(F.encode(text, "ISO-8859-1"), "UTF-8"),
-    ).otherwise(text)
-
-
 def with_mojibake_repaired(df: DataFrame, text_col: str = "text",
                            out_col: str | None = None,
                            flag_col: str = "was_mojibake") -> DataFrame:

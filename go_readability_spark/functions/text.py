@@ -177,46 +177,3 @@ def with_text_features(df, text_col: str = "text"):
         .withColumn("fingerprint", fingerprint(c))
         .drop("_tf_ws", "_tf_punct", "_tf_best", *[f"_tf_{lang}" for lang in langs])
     )
-
-
-def with_compression_ratio(df, text_col: str = "text",
-                           out_col: str = "compression_ratio"):
-    """Per-document zlib compression ratio (compressed/raw bytes) — the
-    classic cheap redundancy signal: near-duplicate boilerplate and
-    keyword-stuffed spam compress far better than prose, and pipelines
-    gate on it alongside the Gopher heuristics.
-
-    zlib has no JVM column-expression equivalent, so this is an
-    Arrow-batched mapInPandas (iterator form, partition-local, no
-    shuffle). Empty docs get ratio 1.0 (nothing to judge)."""
-    import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    fields = df.schema.fieldNames()
-    if out_col in fields:
-        raise ValueError(f"column {out_col!r} already exists")
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    # a NEW StructType — StructType.add mutates in place, and df.schema
-    # is cached on the DataFrame, so add() would corrupt df itself
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, DoubleType())]
-    )
-
-    def add_ratio(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            ratios = []
-            for t in texts:
-                raw = (t or "").encode("utf-8", "surrogatepass")
-                if not raw:
-                    ratios.append(1.0)
-                    continue
-                ratios.append(len(zlib.compress(raw, 6)) / len(raw))
-            pdf = pdf.copy()
-            pdf[out_col] = ratios
-            yield pdf
-
-    return df.mapInPandas(add_ratio, schema=out_schema)

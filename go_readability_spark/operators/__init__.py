@@ -1,7 +1,6 @@
 from .clusters import duplicate_clusters  # noqa: F401
 from .dedup import (  # noqa: F401
     compact_index,
-    deduplicate_exact,
     exact_duplicates,
     minhash_dedup_pairs,
     minhash_index,
@@ -17,7 +16,7 @@ from .dedup import (  # noqa: F401
 from .hosts import filter_blocked_hosts, host_of_url, host_stats  # noqa: F401
 from .snapshots import latest_snapshot, snapshot_history  # noqa: F401
 from .sharding import shard_assignments, shard_stats, write_sharded  # noqa: F401
-from .sampling import hash_sample, mix_corpus, stratified_sample  # noqa: F401
+from .sampling import mix_corpus, stratified_sample  # noqa: F401
 from .ivf import assign_buckets, ivf_topk, train_ivf_centroids  # noqa: F401
 from .classifier import (  # noqa: F401
     score_with_weights,
@@ -34,7 +33,6 @@ from .similarity import (  # noqa: F401
 )
 from .linkgraph import (  # noqa: F401
     anchor_text_stats,
-    anchor_text_stats_from_wat,
     edges_from_wat,
     extract_anchor_texts,
     extract_links,
@@ -44,12 +42,10 @@ from .linkgraph import (  # noqa: F401
     resolve_links,
 )
 from .dsir import (  # noqa: F401
-    dsir_resample,
     dsir_weights,
 )
 from .sitemaps import (  # noqa: F401
     parse_sitemap,
-    sitemap_index,
 )
 from .robots import (  # noqa: F401
     crawl_delays,
@@ -57,24 +53,19 @@ from .robots import (  # noqa: F401
     frontier_schedule,
     robots_rules,
     robots_verdicts,
-    sitemap_urls,
 )
 from .revisits import (  # noqa: F401
     resolve_revisits,
-    revisit_stats,
 )
 from .bloom import (  # noqa: F401
     bloom_build,
     bloom_build_sharded,
-    bloom_maybe_seen,
     bloom_maybe_seen_sharded,
-    bloom_merge,
     bloom_merge_sharded,
     bloom_store_exists,
     bloom_store_prune,
     bloom_store_read,
     bloom_store_record,
     bloom_store_write,
-    filter_unseen,
     filter_unseen_sharded,
 )

@@ -95,52 +95,6 @@ def bloom_build(df: DataFrame, key_col: str = "url",
     )
 
 
-def bloom_maybe_seen(df: DataFrame, bloom: DataFrame, key_col: str = "url",
-                     n_bits: int = 1 << 22, k: int = 5) -> DataFrame:
-    """df + `maybe_seen:boolean`: true iff ALL k probe bits are set.
-    One explode + one equi-join on word (broadcast when the filter
-    fits) + one groupBy on the key — never a join against the history
-    table itself.  Rows with a NULL key are kept with
-    maybe_seen = false (a NULL key was never inserted, so it is
-    definitely unseen)."""
-    key = F.col(key_col)
-    probes = df.select(
-        key.alias("_bf_key"),
-        F.explode(F.array(*[
-            F.struct(w.alias("word"), m.alias("mask"))
-            for w, m in _probes(key, n_bits, k)
-        ])).alias("p"),
-    ).select("_bf_key", F.col("p.word").alias("word"),
-             F.col("p.mask").alias("mask"))
-    hit = probes.join(bloom, "word", "left").select(
-        "_bf_key",
-        (F.col("bits").isNotNull()
-         & (F.col("bits").bitwiseAND(F.col("mask")) == F.col("mask"))
-         ).alias("_bf_hit"),
-    )
-    verdict = hit.groupBy("_bf_key").agg(
-        F.min(F.col("_bf_hit").cast("int")).alias("_bf_all"))
-    # left join + coalesce: a NULL key never equi-matches, so it falls
-    # through as "definitely unseen" instead of being dropped
-    return df.join(
-        verdict.select(F.col("_bf_key").alias(key_col),
-                       (F.col("_bf_all") == 1).alias("maybe_seen")),
-        key_col, "left",
-    ).withColumn("maybe_seen", F.coalesce(F.col("maybe_seen"), F.lit(False)))
-
-
-def filter_unseen(df: DataFrame, bloom: DataFrame, key_col: str = "url",
-                  n_bits: int = 1 << 22, k: int = 5) -> DataFrame:
-    """Rows whose key is DEFINITELY not in the filter (no false
-    negatives: every truly-seen key is dropped; ~FP-rate of unseen keys
-    are wrongly dropped too — the crawl-side trade)."""
-    return (
-        bloom_maybe_seen(df, bloom, key_col, n_bits, k)
-        .where(~F.col("maybe_seen"))
-        .drop("maybe_seen")
-    )
-
-
 def _shard_of(key: Column, n_shards: int) -> Column:
     """Engine-portable shard assignment: the first 8 md5 hex chars of
     "bfshard:{key}" (an unsigned 32-bit value) mod n_shards.  Same
@@ -214,6 +168,8 @@ def bloom_maybe_seen_sharded(df: DataFrame, bloom: DataFrame,
     )
     verdict = hit.groupBy("_bf_key").agg(
         F.min(F.col("_bf_hit").cast("int")).alias("_bf_all"))
+    # left join + coalesce: a NULL key never equi-matches, so it falls
+    # through as "definitely unseen" instead of being dropped
     return df.join(
         verdict.select(F.col("_bf_key").alias(key_col),
                        (F.col("_bf_all") == 1).alias("maybe_seen")),
@@ -225,9 +181,10 @@ def filter_unseen_sharded(df: DataFrame, bloom: DataFrame,
                           key_col: str = "url", n_shards: int = 16,
                           bits_per_shard: int = 1 << 22,
                           k: int = 5) -> DataFrame:
-    """Rows definitely absent from a sharded filter (same no-false-
-    negative contract as `filter_unseen`; NULL keys pass through as
-    unseen)."""
+    """Rows whose key is DEFINITELY not in a sharded filter (no false
+    negatives: every truly-seen key is dropped; ~FP-rate of unseen keys
+    are wrongly dropped too — the crawl-side trade).  Every other
+    column of df is kept; NULL keys pass through as unseen."""
     return (
         bloom_maybe_seen_sharded(df, bloom, key_col, n_shards,
                                  bits_per_shard, k)
@@ -238,9 +195,11 @@ def filter_unseen_sharded(df: DataFrame, bloom: DataFrame,
 
 def bloom_merge_sharded(*filters: DataFrame) -> DataFrame:
     """Shard-wise union of sharded filters built with the SAME
-    (n_shards, bits_per_shard, k): bitwise OR per (shard, word).  Exact,
-    like the flat merge — the merged filter equals the filter of the
-    merged key sets."""
+    (n_shards, bits_per_shard, k): bitwise OR per (shard, word) — one
+    groupBy over the (tiny) filter relations.  The incremental-crawl
+    composition: yesterday's filter ∪ today's newly crawled keys without
+    touching either history table.  Bloom unions are exact: the merged
+    filter equals the filter of the merged key sets."""
     if not filters:
         raise ValueError("bloom_merge_sharded needs at least one filter")
     merged = filters[0]
@@ -349,18 +308,3 @@ def bloom_store_record(spark, path: str, df: DataFrame,
     return bloom_store_write(
         bloom_build_sharded(df, key_col, n_shards, bits_per_shard, k),
         path, n_shards=n_shards, bits_per_shard=bits_per_shard, k=k)
-
-
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """Union of Bloom filters built with the SAME (n_bits, k): bitwise OR
-    per word — one groupBy over the (tiny) filter relations.  The
-    incremental-crawl composition: yesterday's filter ∪ today's newly
-    crawled keys without touching either history table.  (Bloom unions
-    are exact: the merged filter equals the filter of the merged key
-    sets.)"""
-    if not filters:
-        raise ValueError("bloom_merge needs at least one filter")
-    merged = filters[0]
-    for f in filters[1:]:
-        merged = merged.unionByName(f)
-    return merged.groupBy("word").agg(F.bit_or("bits").alias("bits"))

@@ -13,7 +13,6 @@ large to count words on one machine:
 Each round is two shuffles over the ~|vocab|-row word table (NOT the
 corpus — the corpus is touched exactly once). The word table is persisted
 per round and localCheckpoint-ed periodically to bound plan lineage.
-Encoding applies the learned merges by rank (mapInPandas).
 """
 
 from __future__ import annotations
@@ -127,178 +126,3 @@ def train_bpe(
         prev.unpersist()
     words.unpersist()
     return merges
-
-
-def train_bpe_fast(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 50,
-    min_pair_count: int = 2,
-    max_vocab_rows: int | None = 50_000_000,
-) -> list[tuple[str, str]]:
-    """Scale path for REAL vocab sizes (10k-100k merges): the corpus-
-    scale work — one shuffle over the whole corpus to build the word-
-    frequency table — stays distributed, and the merge loop runs DRIVER-
-    LOCAL over that table with incremental pair counts + a lazy heap.
-
-    Rationale: per-round Spark jobs cost ~100ms of scheduling each, so
-    50k all-Spark rounds (train_bpe) are hours of pure overhead; the
-    word table itself is |distinct words| rows (~10^7 even at 100 TB —
-    hundreds of MB), which is exactly the artifact real tokenizer
-    trainers (Sennrich's learn_bpe, HuggingFace tokenizers) train from
-    in memory. The incremental update touches only the words containing
-    the merged pair, so each merge is O(occurrences), not O(vocab) —
-    1,000 merges over the sf0.01 corpus run in seconds where the
-    all-Spark loop takes minutes (BENCH/BASELINE.md round 4).
-
-    Produces BIT-IDENTICAL merges to train_bpe (same count-desc /
-    left-asc / right-asc argmax, same within-word sequential merge rule
-    — locked by tests/test_bpe.py equality tests). train_bpe remains
-    for the contract-breaking case where the vocab table itself exceeds
-    driver memory (`max_vocab_rows` guards the collect the same way the
-    ANN exact baselines guard all-pairs inputs)."""
-    words_df = word_freq_table(df, text_col)
-    if max_vocab_rows is not None:
-        n = words_df.limit(max_vocab_rows + 1).count()
-        if n > max_vocab_rows:
-            raise ValueError(
-                f"word table exceeds max_vocab_rows={max_vocab_rows}; "
-                "use train_bpe (all-Spark rounds) or raise the bound"
-            )
-    rows = words_df.collect()
-    words = [list(r["symbols"]) for r in rows]
-    freqs = [int(r["freq"]) for r in rows]
-    return _merge_loop_incremental(words, freqs, num_merges, min_pair_count)
-
-
-def _merge_loop_incremental(
-    words: list, freqs: list, num_merges: int, min_pair_count: int
-) -> list[tuple[str, str]]:
-    """Classic fast BPE: pair->count and pair->containing-words indexes
-    maintained incrementally; argmax via a lazily-invalidated heap
-    (entries are (-count, left, right), so pop order IS the
-    count-desc/left-asc/right-asc rule; stale entries re-verify against
-    the live count on pop)."""
-    import heapq
-    from collections import Counter, defaultdict
-
-    pair_counts: dict = defaultdict(int)
-    pair_words: dict = defaultdict(set)
-    for wi, syms in enumerate(words):
-        f = freqs[wi]
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            pair_counts[p] += f
-            pair_words[p].add(wi)
-    heap = [(-c, p[0], p[1]) for p, c in pair_counts.items()]
-    heapq.heapify(heap)
-
-    merges: list[tuple[str, str]] = []
-    while len(merges) < num_merges and heap:
-        negc, left, right = heapq.heappop(heap)
-        cur = pair_counts.get((left, right), 0)
-        if -negc != cur:
-            # stale entry (counts only DECREASE between pushes, so the
-            # heap top is always >= the true max): refresh and retry
-            if cur > 0:
-                heapq.heappush(heap, (-cur, left, right))
-            continue
-        if cur < min_pair_count:
-            break
-        merges.append((left, right))
-        # deltas are computed only at the merge-site BOUNDARIES (the two
-        # pairs flanking each site plus the site itself — everything else
-        # in the word is unchanged) and aggregated over the whole round,
-        # so the heap gets one push per net-increased pair per merge, not
-        # one per occurrence. Both matter on html-scale vocabularies: the
-        # first version spent its time in heappush, the second in
-        # per-word Counter rebuilds.
-        delta: Counter = Counter()
-        for wi in pair_words[(left, right)]:
-            syms = words[wi]
-            f = freqs[wi]
-            out: list = []
-            append = out.append
-            pending_after = False
-            changed = False
-            i, n = 0, len(syms)
-            while i < n:
-                s = syms[i]
-                if s == left and i + 1 < n and syms[i + 1] == right:
-                    changed = True
-                    if out and not pending_after:
-                        delta[(out[-1], left)] -= f
-                    pending_after = False
-                    delta[(left, right)] -= f
-                    append(left + right)
-                    if len(out) >= 2:
-                        p = (out[-2], out[-1])
-                        delta[p] += f
-                        pair_words[p].add(wi)
-                    if i + 2 < n:
-                        delta[(right, syms[i + 2])] -= f
-                        pending_after = True
-                    i += 2
-                else:
-                    append(s)
-                    if pending_after:
-                        p = (out[-2], s)
-                        delta[p] += f
-                        pair_words[p].add(wi)
-                        pending_after = False
-                    i += 1
-            if changed:
-                words[wi] = out
-        for p, d in delta.items():
-            if d == 0:
-                continue
-            pair_counts[p] += d
-            if d > 0:
-                heapq.heappush(heap, (-pair_counts[p], p[0], p[1]))
-        del pair_words[(left, right)]
-        pair_counts.pop((left, right), None)
-    return merges
-
-
-def bpe_encode_counts(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, bpe_tokens): token count per document under the learned
-    merges, applied in rank order per word (greedy lowest-rank-first,
-    the standard BPE encode)."""
-    import pandas as pd
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-
-    def encode(batches):
-        cache: dict[str, int] = {}
-
-        def count_word(word: str) -> int:
-            got = cache.get(word)
-            if got is not None:
-                return got
-            syms = list(word) + [END_OF_WORD]
-            while len(syms) > 1:
-                best_rank, best_i = None, -1
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_rank is None:
-                    break
-                syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-            cache[word] = len(syms)
-            return len(syms)
-
-        for pdf in batches:
-            counts = [
-                sum(count_word(w) for w in (t or "").lower().split())
-                for t in pdf["t"]
-            ]
-            yield pd.DataFrame({"id": pdf["id"], "bpe_tokens": counts})
-
-    return src.mapInPandas(encode, schema="id long, bpe_tokens long")

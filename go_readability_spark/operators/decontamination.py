@@ -8,7 +8,7 @@ side's distinct n-grams are SMALL (millions) — broadcast them and
 semi-join the exploded training n-grams, so the big side never shuffles:
 
   train → shingles (staged, persisted) → explode → broadcast-semi-join
-        → distinct doc ids → left-anti back onto the corpus
+        → distinct doc ids (drop them with a broadcast left-anti join)
 
 Reuses the dedup shingle machinery (same short-doc guards)."""
 
@@ -61,16 +61,3 @@ def contaminated_doc_ids(
         .select(F.col("id").alias(id_col))
         .distinct()
     )
-
-
-def decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str | None = None,
-) -> DataFrame:
-    """Training corpus minus contaminated docs (broadcast left-anti)."""
-    bad = contaminated_doc_ids(train, benchmark, n, id_col, text_col, bench_text_col)
-    return train.join(F.broadcast(bad), id_col, "left_anti")

@@ -37,15 +37,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def deduplicate_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the min-id representative of every exact-duplicate group."""
-    w = df.select(
-        F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint")
-    )
-    keep = w.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    return df.join(keep, id_col, "left_semi")
-
-
 def word_shingles(col, n: int = 3):
     """Distinct word n-grams from a *token array column*. IMPORTANT: pass a
     staged column (see shingle_table), not a raw expression — Catalyst does

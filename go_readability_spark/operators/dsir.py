@@ -11,9 +11,8 @@ importance weights
 with both feature distributions estimated over a fixed number of hash
 buckets (the paper's hashed n-gram parameterization — bucket counts,
 not vocabularies, so the estimator's size is INDEPENDENT of corpus
-size), then resample the raw corpus toward the target by taking the
-top-k under Gumbel perturbation (the standard trick that turns
-weighted sampling WITHOUT replacement into a deterministic top-k).
+size).  A caller resamples the raw corpus toward the target by a top-k
+over these weights.
 
 Scale shape (sf0.01 plan = 100 TB plan):
 - features are unigram+bigram buckets via the repo's portable 32-bit
@@ -23,15 +22,12 @@ Scale shape (sf0.01 plan = 100 TB plan):
   matter the corpus size, so the joined log-ratio table BROADCASTS;
 - per-doc weights: explode features -> broadcast-join the ratio table
   -> groupBy(doc) sum.  ONE real shuffle (the per-doc agg); the raw
-  corpus is never joined against itself;
-- resampling is a TakeOrdered top-k (per-partition heads, no global
-  sort shuffle).
+  corpus is never joined against itself.
 
 Exactness: per-bucket log-ratios are quantized to integer micro-nats
 (round(ln(r)*1e6) BIGINT) BEFORE summing, so sums are order-independent
 and the DuckDB oracle matches bit-for-bit (same discipline as
-operators/lm_score.py).  Gumbel keys derive from the portable md5 hash,
-so the resample is reproducible in any engine and across retries.
+operators/lm_score.py).
 """
 
 from __future__ import annotations
@@ -122,35 +118,4 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
             F.count("*").alias("n_feats"),
             F.sum("lr_micro").alias("w_micro"),
         )
-    )
-
-
-def dsir_resample(raw: DataFrame, target: DataFrame, k: int,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  n_buckets: int = 10_000, alpha: float = 1.0,
-                  salt: str = "dsir", length_normalize: bool = True
-                  ) -> DataFrame:
-    """Top-k raw docs under Gumbel-perturbed DSIR weights — weighted
-    sampling without replacement, deterministic given `salt`.
-
-    length_normalize divides the weight by the feature count (the raw
-    sum favors long documents; the per-feature mean is the standard
-    correction).  The Gumbel key is -ln(-ln(u)) with u derived from the
-    portable md5 hash of (salt, id) — reproducible anywhere.  Returns
-    (doc_id, n_feats, w_micro, key); `key` descending is the selection
-    order, so ties and reruns are stable."""
-    w = dsir_weights(raw, target, id_col, text_col, n_buckets, alpha)
-    u = (
-        (md5_prefix_long(
-            F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-        ) + 1).cast("double")
-        / F.lit(float(2 ** 32 + 1))
-    )
-    score = (F.col("w_micro") / F.col("n_feats") if length_normalize
-             else F.col("w_micro").cast("double"))
-    key = score / MICRO + (-F.log(-F.log(u)))
-    return (
-        w.withColumn("key", F.round(key * MICRO).cast("long"))
-        .orderBy(F.col("key").desc(), F.col(id_col))
-        .limit(k)
     )

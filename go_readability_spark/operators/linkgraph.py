@@ -162,23 +162,6 @@ def edges_from_wat(wat: DataFrame,
         picked.select("src", F.col("l.href").alias("href"), "base"))
 
 
-def anchor_text_stats_from_wat(wat: DataFrame,
-                               paths: tuple = DEFAULT_WAT_PATHS,
-                               max_texts: int = 64,
-                               text_subkeys: int = 16) -> DataFrame:
-    """anchor_text_stats from a WAT sidecar: same bounded two-phase
-    aggregation, anchors' inner text taken from Links[].text (whitespace
-    collapsed like extract_anchor_texts renders it; absent text = '')."""
-    picked = _wat_exploded(wat, paths)
-    text = F.trim(F.regexp_replace(
-        F.coalesce(F.col("l.text"), F.lit("")), "\\s+", " "))
-    resolved = resolve_links(
-        picked.select("src", F.col("l.href").alias("href"),
-                      text.alias("text"), "base"),
-        carry=("text",))
-    return _anchor_stats_from_resolved(resolved, max_texts, text_subkeys)
-
-
 # Whole quoted-href anchor element, inner markup included ((?s): anchors
 # may span lines). Non-greedy body stops at the first </a> — nested <a>
 # is invalid HTML and the HTML5 parser would auto-close it the same way.
@@ -257,15 +240,6 @@ def anchor_text_stats(pages: DataFrame, url_col: str = "url",
     rewrites to an expand + two-phase agg, never a buffered set)."""
     at = extract_anchor_texts(pages, url_col, html_col)
     resolved = resolve_links(at, carry=("text",))
-    return _anchor_stats_from_resolved(resolved, max_texts, text_subkeys)
-
-
-def _anchor_stats_from_resolved(resolved: DataFrame, max_texts: int,
-                                text_subkeys: int) -> DataFrame:
-    """Shared aggregation of anchor_text_stats / anchor_text_stats_from_wat
-    over resolved (src, dst, text, ...) edges — the bounded two-phase
-    top-k shape documented above, independent of where the anchors came
-    from (HTML regex extraction or a WAT sidecar)."""
     stats = resolved.groupBy("dst").agg(
         F.count("*").alias("n_anchors"),
         F.countDistinct("src").alias("n_srcs"),

@@ -61,13 +61,3 @@ def resolve_revisits(records: DataFrame,
     return responses.select(
         "url", "warc_ts", "html", null_s.alias("text"), null_s.alias("lang")
     ).unionByName(resolved)
-
-
-def revisit_stats(records: DataFrame) -> DataFrame:
-    """(record_type, n, n_digests) — the dedup profile of a record set,
-    the number a crawl operator checks first (what share of the snapshot
-    is pointers?).  One aggregation."""
-    return records.groupBy("record_type").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("digest").alias("n_digests"),
-    )

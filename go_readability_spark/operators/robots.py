@@ -115,7 +115,7 @@ def robots_rules(robots: DataFrame, host_col: str = "host",
     goodbot / Disallow:` correctly shields goodbot from the `*` group
     (RFC 9309 §2.2.1: the matching specific group wins even when empty).
     Unknown fields (Sitemap, ...) are ignored per RFC §2.2.3;
-    `sitemap_urls` / `crawl_delays` recover those separately."""
+    `crawl_delays` recovers Crawl-delay separately."""
     grouped, agents, is_ua = _grouped_fields(
         robots, ("allow", "disallow"), host_col, txt_col)
     has_anchor = F.col("value").endswith("$")
@@ -142,21 +142,6 @@ def robots_rules(robots: DataFrame, host_col: str = "host",
     # left join: agent groups with zero surviving rules become no-op
     # marker rows (NULL path_regex never matches in robots_verdicts).
     return agents.join(rules, ["host", "group_id"], "left")
-
-
-def sitemap_urls(robots: DataFrame, host_col: str = "host",
-                 txt_col: str = "robots_txt") -> DataFrame:
-    """(host, sitemap) for every Sitemap: line (any case, any group —
-    the field is group-independent per the sitemaps.org protocol)."""
-    return robots.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(F.col(txt_col), "\n")).alias("line"),
-    ).select(
-        "host",
-        F.trim(F.regexp_extract(
-            F.trim(F.regexp_replace("line", "#.*$", "")),
-            r"(?i)^sitemap\s*:(.*)$", 1)).alias("sitemap"),
-    ).where(F.col("sitemap") != "")
 
 
 def crawl_delays(robots: DataFrame, agent: str = "*",

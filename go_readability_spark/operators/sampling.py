@@ -2,9 +2,10 @@
 
 Training pipelines never use rand() sampling: runs must be reproducible,
 resumable, and consistent across retries — so membership is a pure
-function of the row key. `hash_sample` keeps a row iff a hash of its key
-falls under the rate; `mix_corpus` applies per-source rates (the standard
-source-weighting step when blending crawl slices).
+function of the row key. `mix_corpus` keeps a row iff a hash of its key
+falls under its source's rate (the standard source-weighting step when
+blending crawl slices); `stratified_sample` and `global_shuffle` order
+rows by the same hash.
 
 The hash is an md5 prefix (engine-portable — the DuckDB oracle reproduces
 membership bit-for-bit); a `salt` decorrelates independent samples drawn
@@ -25,15 +26,6 @@ def hash_bucket(key: Column, salt: str = "") -> Column:
     engine-portable (32-bit prefix, same formula as the oracle twins)."""
     keyed = F.concat(F.lit(f"{salt}:"), key.cast("string"))
     return F.pmod(md5_prefix_long(keyed), F.lit(_BUCKETS))
-
-
-def hash_sample(
-    df: DataFrame, rate: float, key_col: str = "doc_id", salt: str = ""
-) -> DataFrame:
-    """Keep ~rate of rows, decided per-key (stable across runs/retries)."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    return df.where(hash_bucket(F.col(key_col), salt) < int(rate * _BUCKETS))
 
 
 def global_shuffle(

@@ -23,7 +23,6 @@ from .warc import (  # noqa: F401
 )
 from .cdx import (  # noqa: F401
     cdx_fetch_plan,
-    cdx_host_coverage,
     parse_cdxj,
     surt_key,
 )

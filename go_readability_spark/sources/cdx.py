@@ -113,23 +113,3 @@ def cdx_fetch_plan(cdx: DataFrame, mime: str = "text/html",
         .where(F.col("_rn") == 1)
         .drop("_rn", "mime", "status")
     )
-
-
-def cdx_host_coverage(cdx: DataFrame) -> DataFrame:
-    """(host, n_captures, n_ok_html, first_ts, last_ts) — per-host crawl
-    coverage from the index alone (no WARC bytes).  host is recovered
-    from the SURT key prefix (segments before `)` re-reversed), so this
-    works even when the JSON url field is absent."""
-    rev_host = F.regexp_extract("urlkey", r"^([^)]*)\)", 1)
-    host = F.array_join(F.reverse(F.split(rev_host, ",")), ".")
-    ok = (F.col("status") == 200) & (F.col("mime") == "text/html")
-    return (
-        cdx.where(F.col("urlkey").isNotNull())
-        .groupBy(host.alias("host"))
-        .agg(
-            F.count("*").alias("n_captures"),
-            F.sum(ok.cast("int")).alias("n_ok_html"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-    )

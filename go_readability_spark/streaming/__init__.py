@@ -1,14 +1,5 @@
 from .extract_stream import (  # noqa: F401
     extract_pages_stream,
     read_pages_stream,
-    read_pages_stream_warc,
-    run_discovery_stream,
     run_stream_to_parquet,
-)
-from .metrics_stream import pages_ingest_metrics  # noqa: F401
-from .stateful_dedup import streaming_exact_dedup  # noqa: F401
-from .stateful_near_dedup import (  # noqa: F401
-    finalize_near_dedup_batch,
-    run_near_dedup_stream,
-    streaming_simhash_votes,
 )

@@ -7,11 +7,7 @@ import math
 
 import pytest
 
-from go_readability_spark.operators.bloom import (
-    bloom_build,
-    bloom_maybe_seen,
-    filter_unseen,
-)
+from go_readability_spark.operators.bloom import bloom_build
 
 N_BITS, K = 1 << 14, 5
 
@@ -51,72 +47,7 @@ def test_bitmap_bit_exact_vs_pure_python(bloom, seen_urls):
     got = {r.word: r.bits for r in bloom.collect()}
     exp = {w: _signed64(b) for w, b in _py_bitmap(seen_urls).items()}
     assert got == exp
-
-
-def test_zero_false_negatives(spark, bloom, seen_urls):
-    df = spark.createDataFrame([(u,) for u in seen_urls], "url string")
-    out = bloom_maybe_seen(df, bloom, n_bits=N_BITS, k=K)
-    assert out.where("NOT maybe_seen").count() == 0
-    assert filter_unseen(df, bloom, n_bits=N_BITS, k=K).count() == 0
-
-
-def test_false_positive_rate_near_theory(spark, bloom, seen_urls):
-    """FP rate on fresh URLs ~ (1 - e^(-kn/m))^k, within 3x at this
-    sample size (and nonzero capacity head-room sanity)."""
-    fresh = [f"https://new{i}.example.net/x/{i}" for i in range(3000)]
-    df = spark.createDataFrame([(u,) for u in fresh], "url string")
-    kept = filter_unseen(df, bloom, n_bits=N_BITS, k=K).count()
-    fp = 1.0 - kept / len(fresh)
-    theory = (1.0 - math.exp(-K * len(seen_urls) / N_BITS)) ** K
-    assert fp <= max(3 * theory, 0.02), (fp, theory)
-
-
-def test_filter_carries_all_columns(spark, bloom):
-    df = spark.createDataFrame(
-        [("https://newx.example.net/1", 42)], "url string, payload int")
-    rows = filter_unseen(df, bloom, n_bits=N_BITS, k=K).collect()
-    assert rows and rows[0].payload == 42
-
-
-def test_relational_shape(spark, bloom):
-    """No cartesian product; the membership test joins on `word` — the
-    filter relation, never the history table."""
-    df = spark.createDataFrame([("https://q.example.org/1",)], "url string")
-    plan = bloom_maybe_seen(df, bloom, n_bits=N_BITS, k=K) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "bit_or" in bloom._jdf.queryExecution().executedPlan().toString()
-
-
-def test_null_key_is_definitely_unseen(spark, bloom):
-    """ADVICE r5: NULL keys must not be dropped by the verdict join —
-    a NULL key was never inserted, so it is definitely unseen."""
-    df = spark.createDataFrame(
-        [("https://newx.example.net/1", 1), (None, 2)],
-        "url string, payload int")
-    out = {r.payload: r.maybe_seen
-           for r in bloom_maybe_seen(df, bloom, n_bits=N_BITS, k=K).collect()}
-    assert out == {1: False, 2: False}
-    kept = filter_unseen(df, bloom, n_bits=N_BITS, k=K)
-    assert sorted(r.payload for r in kept.collect()) == [1, 2]
-
-
-def test_bloom_merge_equals_filter_of_union(spark, seen_urls):
-    """bloom_merge(A, B) is bit-identical to building one filter over
-    A ∪ B (Bloom unions are exact), and lookups behave accordingly."""
-    from go_readability_spark.operators.bloom import bloom_merge
-
-    a_urls, b_urls = seen_urls[:150], seen_urls[150:]
-    a = bloom_build(spark.createDataFrame([(u,) for u in a_urls],
-                                          "url string"), n_bits=N_BITS, k=K)
-    b = bloom_build(spark.createDataFrame([(u,) for u in b_urls],
-                                          "url string"), n_bits=N_BITS, k=K)
-    merged = {r.word: r.bits for r in bloom_merge(a, b).collect()}
-    union = {r.word: r.bits for r in bloom_build(
-        spark.createDataFrame([(u,) for u in seen_urls], "url string"),
-        n_bits=N_BITS, k=K).collect()}
-    assert merged == union
 
 
 # ---------------------------------------------------------------- sharded
@@ -199,7 +130,13 @@ def test_sharded_false_positive_rate_near_theory(spark, sharded_bloom,
 
 
 def test_sharded_null_key_unseen(spark, sharded_bloom):
-    from go_readability_spark.operators.bloom import bloom_maybe_seen_sharded
+    """A NULL key was never inserted, so it is definitely unseen: the
+    verdict join keeps it.  The filter keeps every column of its input
+    (`crawl-plan --seen-bloom` carries the whole plan through it)."""
+    from go_readability_spark.operators.bloom import (
+        bloom_maybe_seen_sharded,
+        filter_unseen_sharded,
+    )
 
     df = spark.createDataFrame(
         [("https://newx.example.net/1", 1), (None, 2)],
@@ -209,6 +146,11 @@ def test_sharded_null_key_unseen(spark, sharded_bloom):
                df, sharded_bloom, n_shards=N_SHARDS,
                bits_per_shard=N_BITS, k=K).collect()}
     assert out == {1: False, 2: False}
+    kept = filter_unseen_sharded(df, sharded_bloom, n_shards=N_SHARDS,
+                                 bits_per_shard=N_BITS, k=K)
+    assert kept.columns == df.columns
+    assert sorted(kept.collect(), key=lambda r: r.payload) == [
+        ("https://newx.example.net/1", 1), (None, 2)]
 
 
 def test_sharded_merge_equals_filter_of_union(spark, seen_urls,

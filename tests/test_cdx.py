@@ -4,7 +4,6 @@ import pytest
 
 from go_readability_spark.sources import (
     cdx_fetch_plan,
-    cdx_host_coverage,
     parse_cdxj,
     surt_key,
 )
@@ -102,20 +101,6 @@ def test_fetch_plan_same_second_deterministic(spark):
     a = cdx_fetch_plan(_mk_cdx(spark, rows)).collect()[0]
     b = cdx_fetch_plan(_mk_cdx(spark, list(reversed(rows))).repartition(7)).collect()[0]
     assert a.digest == b.digest == "dB"  # fA < fB
-
-
-def test_host_coverage(spark):
-    cdx = _mk_cdx(spark, [
-        ("org,example)/a", "20240101000000", "u", "text/html", 200, "d", 1, 0, "f"),
-        ("org,example)/b", "20240301000000", "u", "text/html", 404, "d", 1, 0, "f"),
-        ("com,other)/", "20240201000000", "u", "application/pdf", 200, "d", 1, 0, "f"),
-    ])
-    cov = {r.host: r for r in cdx_host_coverage(cdx).collect()}
-    assert cov["example.org"].n_captures == 2
-    assert cov["example.org"].n_ok_html == 1
-    assert cov["example.org"].first_ts == "20240101000000"
-    assert cov["example.org"].last_ts == "20240301000000"
-    assert cov["other.com"].n_ok_html == 0
 
 
 def test_planted_roundtrip_matches_closed_form(spark):

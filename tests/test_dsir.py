@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from go_readability_spark.operators import dsir_resample, dsir_weights
+from go_readability_spark.operators import dsir_weights
 
 N_BUCKETS = 50
 ALPHA = 1.0
@@ -83,19 +83,6 @@ def test_empty_doc_absent(spark, dfs):
     raw, tgt = dfs
     ids = {r.doc_id for r in dsir_weights(raw, tgt, n_buckets=N_BUCKETS).collect()}
     assert 5 not in ids and ids == {0, 1, 2, 3, 4}
-
-
-def test_resample_deterministic_topk(spark, dfs):
-    raw, tgt = dfs
-    a = [r.doc_id for r in dsir_resample(raw, tgt, k=3, n_buckets=N_BUCKETS).collect()]
-    b = [r.doc_id
-         for r in dsir_resample(raw.repartition(5), tgt, k=3,
-                                n_buckets=N_BUCKETS).collect()]
-    assert a == b and len(a) == 3
-    # different salt -> possibly different order, still deterministic
-    c = [r.doc_id for r in dsir_resample(raw, tgt, k=3, n_buckets=N_BUCKETS,
-                                         salt="other").collect()]
-    assert len(c) == 3
 
 
 def test_plan_shape(spark, dfs):

@@ -6,7 +6,6 @@ from go_readability_spark.operators import (
     filter_by_robots,
     robots_rules,
     robots_verdicts,
-    sitemap_urls,
 )
 
 TXT = """# comment line
@@ -98,14 +97,6 @@ def test_filter_by_robots_semi_join(spark, rules):
     out = filter_by_robots(pages, rules, agent="graftbot").collect()
     assert [(r.url, r.payload) for r in out] \
         == [("https://a.example.org/docs/pub.html", "k2")]
-
-
-def test_sitemap_urls(spark):
-    robots = spark.createDataFrame(
-        [("a.example.org", TXT)], "host string, robots_txt string"
-    )
-    assert sitemap_urls(robots).collect()[0].sitemap \
-        == "https://a.example.org/sitemap.xml"
 
 
 def test_planted_closed_form(spark):

@@ -1,6 +1,6 @@
 """Sitemap protocol parse (operators/sitemaps.py)."""
 
-from go_readability_spark.operators import parse_sitemap, sitemap_index
+from go_readability_spark.operators import parse_sitemap
 
 URLSET = """<?xml version="1.0" encoding="UTF-8"?>
 <urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
@@ -19,14 +19,6 @@ PREFIXED = """<sm:urlset xmlns:sm="http://www.sitemaps.org/schemas/sitemap/0.9">
 <sm:url><sm:loc>https://b.example.org/1</sm:loc>
 <sm:lastmod>2024-02-02</sm:lastmod></sm:url>
 </sm:urlset>"""
-
-INDEX = """<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-  <sitemap><loc>https://a.example.org/sitemap-1.xml</loc>
-           <lastmod>2024-03-03</lastmod></sitemap>
-  <sitemap><loc>https://a.example.org/sitemap-2.xml</loc></sitemap>
-  <sitemap><lastmod>no-loc-dropped</lastmod></sitemap>
-</sitemapindex>"""
-
 
 def _df(spark, xml, host="a.example.org"):
     return spark.createDataFrame(
@@ -51,13 +43,6 @@ def test_parse_namespace_prefix(spark):
     assert len(rows) == 1
     assert rows[0].loc == "https://b.example.org/1"
     assert rows[0].lastmod == "2024-02-02"
-
-
-def test_sitemap_index(spark):
-    rows = sitemap_index(_df(spark, INDEX)).collect()
-    locs = {r.loc: r.lastmod for r in rows}
-    assert locs == {"https://a.example.org/sitemap-1.xml": "2024-03-03",
-                    "https://a.example.org/sitemap-2.xml": None}
 
 
 def test_planted_closed_form(spark):

@@ -8,7 +8,7 @@ comparison is two Spark actions."""
 import random
 import xml.etree.ElementTree as ET
 
-from go_readability_spark.operators import parse_sitemap, sitemap_index
+from go_readability_spark.operators import parse_sitemap
 
 
 def _ref_parse_urlset(xml_text):
@@ -77,35 +77,3 @@ def test_differential_urlset_random(spark):
     for host, xml_text in docs.items():
         exp = _ref_parse_urlset(xml_text)
         assert sorted(got.get(host, [])) == sorted(exp), (host, xml_text)
-
-
-def test_differential_sitemapindex(spark):
-    rng = random.Random(99)
-    rows = []
-    expect = {}
-    for j in range(40):
-        host = f"i{j}.example.org"
-        n = rng.randint(1, 5)
-        entries = "".join(
-            f"<sitemap><loc>https://{host}/s{k}.xml</loc>"
-            + (f"<lastmod>2025-01-0{k % 9 + 1}</lastmod>"
-               if rng.random() < 0.5 else "")
-            + "</sitemap>"
-            for k in range(n))
-        xml_text = ('<?xml version="1.0"?><sitemapindex xmlns='
-                    '"http://www.sitemaps.org/schemas/sitemap/0.9">'
-                    + entries + "</sitemapindex>")
-        rows.append((host, xml_text))
-        root = ET.fromstring(xml_text)
-        exp = []
-        for el in root:
-            fields = {c.tag.rsplit("}", 1)[-1]: (c.text or "").strip()
-                      for c in el}
-            exp.append((fields["loc"], fields.get("lastmod") or None))
-        expect[host] = exp
-    df = spark.createDataFrame(rows, "host string, sitemap_xml string")
-    got = {}
-    for r in sitemap_index(df).collect():
-        got.setdefault(r.host, []).append((r.loc, r.lastmod))
-    for host in expect:
-        assert sorted(got.get(host, [])) == sorted(expect[host]), host

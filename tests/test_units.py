@@ -226,34 +226,6 @@ def test_word_count_and_index_of_reference_table():
         assert word_count(sentence) == expected, sentence
 
 
-def test_compression_ratio(spark):
-    import zlib
-
-    from go_readability_spark.functions.text import with_compression_ratio
-
-    rows = [
-        (1, "word " * 500),                      # highly redundant
-        (2, "".join(
-            __import__("hashlib").sha256(str(i).encode()).hexdigest()[:8]
-            for i in range(250)
-        )),  # incompressible-ish hash soup
-        (3, ""),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r["compression_ratio"]
-           for r in with_compression_ratio(df).collect()}
-    assert got[1] < 0.05 < 0.5 < got[2]
-    assert got[3] == 1.0 and got[4] == 1.0
-    # exact vs direct zlib
-    raw = ("word " * 500).encode()
-    assert abs(got[1] - len(zlib.compress(raw, 6)) / len(raw)) < 1e-12
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        with_compression_ratio(df.withColumnRenamed("doc_id", "compression_ratio"))
-
-
 def test_env_confs_parsing():
     """SPARK_GRAFT_CONF grammar: 'k=v;k=v', malformed segments skipped,
     values may contain '=' (only the first splits)."""

@@ -1,5 +1,5 @@
 """WAT sidecar source (sources/wat.py) + the HTML-free link-graph route
-(operators/linkgraph.py edges_from_wat / anchor_text_stats_from_wat).
+(operators/linkgraph.py edges_from_wat).
 
 The load-bearing test is differential: the SAME planted corpus goes
 through (a) HTML regex extraction + resolution (link_edges) and (b) WAT
@@ -179,19 +179,3 @@ def test_edges_differential_html_vs_wat(spark, wat_dir):
     # ...unless asked for: the IMG kind is selectable
     imgs = edges_from_wat(wat, paths=("IMG@/src",))
     assert imgs.count() == len(pages)
-
-
-def test_anchor_stats_differential_html_vs_wat(spark, wat_dir):
-    from go_readability_spark.operators import (
-        anchor_text_stats,
-        anchor_text_stats_from_wat,
-    )
-    from go_readability_spark.sources import links_from_wat
-
-    d, pages = wat_dir
-    html_pages = spark.createDataFrame(
-        [(u, h.encode()) for u, h, _, _ in pages], "url string, html binary")
-    via_html = sorted(map(tuple, anchor_text_stats(html_pages).collect()))
-    via_wat = sorted(map(tuple, anchor_text_stats_from_wat(
-        links_from_wat(spark, d)).collect()))
-    assert via_wat == via_html  # incl. the whitespace-collapsed "sib N"
